@@ -11,7 +11,7 @@ No Python UDFs — every data-path function returns a native Column.
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta
+from datetime import timedelta
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -102,18 +102,3 @@ def end_of_day(ts: Column | str) -> Column:
     """23:59:59 of the same day (diurnal.py:774-775 ``make_end_of_day``)."""
     c = F.col(ts) if isinstance(ts, str) else ts
     return day_start(c) + F.expr("INTERVAL 23 HOURS 59 MINUTES 59 SECONDS")
-
-
-def floor_to_resolution(ts: datetime, resolution_seconds: float) -> datetime:
-    """Driver-side: floor a timestamp to the series' sampling resolution
-    (window-spec snapping, diurnal.py:717-775). Naive inputs are
-    treated as UTC on EVERY machine: ``.timestamp()`` interprets a
-    naive datetime in the process's LOCAL zone, so the old
-    timestamp()+utcfromtimestamp round-trip shifted naive wall clocks
-    by the machine's UTC offset on non-UTC hosts."""
-    from datetime import timezone
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=timezone.utc)
-    epoch = ts.timestamp()
-    return datetime.fromtimestamp(epoch - (epoch % resolution_seconds),
-                                  tz=timezone.utc).replace(tzinfo=None)

@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
+
 __all__ = ["update_component_store", "read_components",
            "compact_component_store", "snapshot_component_store",
            "ComponentStoreSnapshot"]
@@ -65,22 +67,12 @@ def _merges_path(path: str) -> str:
     return f"{path}/merges"
 
 
-def _fs(spark: SparkSession, p: str):
-    jp = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
-
-
-def _exists(spark: SparkSession, p: str) -> bool:
-    fs, jp = _fs(spark, p)
-    return fs.exists(jp)
-
-
 def _merge_map(spark: SparkSession, path: str) -> dict:
     """Driver-side closure of the merge log: ``{stale_root: true_root}``.
     Sized by merge events since compaction (see module docstring), with
     path compression so chained merges across batches resolve in one
     lookup."""
-    if not _exists(spark, _merges_path(path)):
+    if not storage.exists(spark, _merges_path(path)):
         return {}
     rows = spark.read.parquet(_merges_path(path)).collect()
     parent: dict = {}
@@ -132,7 +124,7 @@ def snapshot_component_store(spark: SparkSession,
     lesson) and the driver-side merge-log closure, once. ``members`` is
     None when the store does not exist yet (first ingest)."""
     members = None
-    if _exists(spark, _members_path(path)):
+    if storage.exists(spark, _members_path(path)):
         members = spark.read.parquet(_members_path(path)) \
             .localCheckpoint(eager=True)
     return ComponentStoreSnapshot(path, members, _merge_map(spark, path))
@@ -221,7 +213,7 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
         members = store_snap.members
         have_store = members is not None
     else:
-        have_store = _exists(spark, _members_path(path))
+        have_store = storage.exists(spark, _members_path(path))
         # localCheckpoint, not a cached plan: the members APPEND below
         # must not recache/recompute anything reading the members path
         # (the sigstore recache lesson, r4)
@@ -357,7 +349,7 @@ def compact_component_store(spark: SparkSession, path: str,
     future resolution maps. Returns the number of member rows written.
     The source store is untouched (swap directories at the catalog
     level, the standard metadata flip)."""
-    fs, jp = _fs(spark, out_path)
+    fs, jp = storage.fs(spark, out_path)
     if fs.exists(jp) and len(fs.listStatus(jp)) > 0:
         raise ValueError(
             f"compact_component_store: out_path {out_path} is not empty "

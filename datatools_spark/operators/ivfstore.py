@@ -15,9 +15,7 @@ two-overwrite protocol had a torn-index crash window (data reflecting
 the NEW model under the OLD centroids: searches probe with geometry
 the assignments no longer match, silently losing recall; and a crash
 mid-overwrite destroyed the previous index outright). Same
-marker-gated pattern as the merge-store log and the KMV snapshots.
-Pre-generation stores (bare ``{path}/data``+``{path}/centroids``) are
-still readable; the first rebuild migrates them.
+marker-gated pattern as every other store (``storage``).
 
 A search resolves its probe cells driver-side (model-sized centroid
 collect, like every kmeans/codebook sync in similarity.py) and scans
@@ -31,52 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import storage
 from .similarity import cosine_expr, ivf_assign
 
 __all__ = ["build_ivf_index", "update_ivf_index", "ivf_index_search",
            "ivf_index_stats"]
-
-
-def _fs(spark: SparkSession, p: str):
-    jp = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
-
-
-def _gen_numbers(spark: SparkSession, path: str,
-                 committed_only: bool) -> list[int]:
-    fs, jp = _fs(spark, path)
-    if not fs.exists(jp):
-        return []
-    gens = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("gen-"):
-            try:
-                n = int(name[4:])
-            except ValueError:
-                continue
-            # visible ⟺ the marker exists — a crashed build leaves a
-            # markerless orphan readers never resolve
-            if committed_only and not fs.exists(
-                    spark._jvm.org.apache.hadoop.fs.Path(
-                        f"{path}/{name}/_COMMIT")):
-                continue
-            gens.append(n)
-    return sorted(gens)
-
-
-def _committed_gens(spark: SparkSession, path: str) -> list[int]:
-    return _gen_numbers(spark, path, committed_only=True)
-
-
-def _resolve_root(spark: SparkSession, path: str) -> str:
-    """Directory holding the live ``data``/``centroids`` pair: the
-    latest committed generation, or the bare path for pre-generation
-    stores."""
-    gens = _committed_gens(spark, path)
-    if gens:
-        return f"{path}/gen-{gens[-1]:06d}"
-    return path
 
 
 def build_ivf_index(spark: SparkSession, df: DataFrame,
@@ -93,17 +50,13 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
     visible by ONE ``_COMMIT`` marker after both writes succeed —
     readers (search/stats/update) keep resolving the previous committed
     generation through any crash of this build. Superseded generations
-    are pruned after the commit, RETAINING the previous committed one
-    (only older generations are deleted — the two-snapshot policy the
-    KMV/value-sample stores use): a reader that resolved its root just
-    before this rebuild committed (the streaming ingest loops resolve
-    per micro-batch) still finds its generation on disk; the next
-    rebuild retires it. Returns the number of indexed vectors."""
-    gens = _committed_gens(spark, path)
-    # number past EVERY existing generation dir, committed or orphaned —
-    # never write into a crashed build's leftovers
-    all_gens = _gen_numbers(spark, path, committed_only=False)
-    gen = f"{path}/gen-{(all_gens[-1] + 1 if all_gens else 0):06d}"
+    are retired after the commit, RETAINING the previous committed one
+    (r7 ADVICE: the ingest loops resolve the root per micro-batch, so
+    an immediate delete raced an in-flight reader of the just-retired
+    generation into FileNotFound); the next rebuild retires it.
+    Returns the number of indexed vectors."""
+    gen = storage.GEN.dir(path, storage.next_number(spark, path,
+                                                    storage.GEN))
     assigned = ivf_assign(df, centroids, vec_col, id_col, centroid_id_col,
                           keep_vec=True) \
         .select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col))
@@ -121,29 +74,8 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
         .join(baseline, centroid_id_col, "left") \
         .write.mode("overwrite").parquet(f"{gen}/centroids")
     n = data.count()
-    fs, _ = _fs(spark, path)
-    fs.create(spark._jvm.org.apache.hadoop.fs.Path(
-        f"{gen}/_COMMIT")).close()
-    # prune superseded state only AFTER the new generation is live —
-    # and keep the MOST RECENT superseded generation (r7 ADVICE: the
-    # ingest loops resolve the root per micro-batch, so an immediate
-    # delete raced an in-flight reader of the just-retired generation
-    # into FileNotFound; one retained snapshot closes the window). A
-    # crash mid-prune leaves ignorable garbage, never a torn index.
-    for old in gens[:-1]:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/gen-{old:06d}"), True)
-    # legacy bare tables follow the SAME retention policy as
-    # generations: on the migrating (first) build they are kept — an
-    # in-flight reader that resolved the bare root just before this
-    # commit is still scanning {path}/data, the exact race the
-    # retained-snapshot rule above closes — and are dropped on the
-    # next build, when no reader can still resolve them
-    if gens:
-        for legacy in ("data", "centroids"):
-            lp = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{legacy}")
-            if fs.exists(lp):
-                fs.delete(lp, True)
+    storage.commit(spark, gen, storage.GEN.marker)
+    storage.retire(spark, path, storage.GEN)
     return n
 
 
@@ -161,7 +93,7 @@ def update_ivf_index(spark: SparkSession, batch: DataFrame, path: str,
     materialized once, so the count and the write do not each re-run
     the anti-join + assignment plan. Returns the number of newly
     indexed vectors."""
-    root = _resolve_root(spark, path)
+    root = storage.live_dir(spark, path, storage.GEN)
     cents = spark.read.parquet(f"{root}/centroids")
     new = batch
     if not batch_is_new:
@@ -191,7 +123,7 @@ def ivf_index_search(spark: SparkSession, path: str, query: DataFrame,
     probed cells. Identical results to `similarity.ivf_search` run over
     the same centroids (equality-tested).
     Output: ``query_id, vec_id, cosine, rank``."""
-    root = _resolve_root(spark, path)
+    root = storage.live_dir(spark, path, storage.GEN)
     cents = spark.read.parquet(f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))
@@ -273,7 +205,7 @@ def ivf_index_stats(spark: SparkSession, path: str,
     re-clustering on ``needs_recluster``/``needs_retrain``.
     Output: ``centroid_id, n_vectors, mean_residual, fill_skew,
     drift_ratio, needs_recluster, needs_retrain``."""
-    root = _resolve_root(spark, path)
+    root = storage.live_dir(spark, path, storage.GEN)
     cents = spark.read.parquet(f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))

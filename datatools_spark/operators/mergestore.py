@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
 from .skipping import build_file_stats
 
 __all__ = ["init_merge_store", "merge_into", "read_merge_store",
@@ -63,56 +64,30 @@ _CKPT = "_ckpt"          # consolidated live-manifest snapshots
 _ROSTER = "_ckpt_roster"  # committed-generation roster ≤ each snapshot
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _gen_numbers(spark: SparkSession, root: str, sub: str = "") -> list[int]:
-    """Generation numbers present under ``root/sub`` (data dirs when sub
-    is empty, commit records under ``_log``)."""
-    base = f"{root}/{sub}" if sub else root
-    fs, jpath = _fs(spark, base)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(_GEN):
-            try:
-                out.append(int(name[len(_GEN):]))
-            except ValueError:
-                # foreign gen-* dirs (gen-4.bak, gen-tmp — operator
-                # snapshots/tooling) must not brick the store; the
-                # ivfstore twin guards this same parse
-                continue
-    return sorted(out)
+# every numbered dir of the store (data, _log, _stats, _ckpt,
+# _ckpt_roster) is gen-<n>; log and checkpoint records commit with the
+# _SUCCESS marker
+_GENS = storage.Layout(_GEN, "_SUCCESS")
 
 
 def _committed_gens(spark: SparkSession, root: str) -> list[int]:
     """Generations visible to readers: data dir AND a COMPLETE commit
-    record exist. Completeness is gated on the log write's _SUCCESS
-    marker (Spark writes it last) AND its parquet payload — bare
+    record exist. Completeness is gated on the log's _SUCCESS marker
+    (written last, by :func:`_commit`) AND its parquet payload — bare
     directory existence is NOT commit: Spark creates the output dir at
     job start, so a crash mid-log-write would otherwise leave a
     generation whose data is reader-visible while its tombstones are
     lost, and every rewritten row double-counts forever (the exact
-    failure the module contract rules out). Same gate the rollup
-    snapshots use (:func:`_rollup_gens`). Orphan data dirs (crash before
-    the log write starts) are likewise invisible."""
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    out = []
-    for g in _gen_numbers(spark, root):
-        log_dir = f"{root}/_log/{_GEN}{g}"
-        if fs.exists(jvm_path(f"{log_dir}/_SUCCESS")) \
-                and _parquet_files(spark, log_dir):
-            out.append(g)
-    return out
+    failure the module contract rules out). Orphan data dirs (crash
+    before the log write starts) are likewise invisible."""
+    logs = f"{root}/_log"
+    done = {g for g in storage.committed(spark, logs, _GENS)
+            if _parquet_files(spark, _GENS.dir(logs, g))}
+    return [g for g in storage.numbers(spark, root, _GENS) if g in done]
 
 
 def _parquet_files(spark: SparkSession, path: str) -> list[str]:
-    fs, jpath = _fs(spark, path)
+    fs, jpath = storage.fs(spark, path)
     if not fs.exists(jpath):
         return []
     return sorted(str(st.getPath()) for st in fs.listStatus(jpath)
@@ -136,13 +111,14 @@ def _write_gen_stats(spark: SparkSession, root: str, gen: int,
 def _commit(spark: SparkSession, root: str, gen: int,
             tombstones: list[str]) -> None:
     """The commit point: tombstoned source paths (possibly none) land at
-    ``_log/gen-<n>``; the generation becomes visible atomically with
-    this directory's appearance."""
+    ``_log/gen-<n>``; the generation becomes visible when the log's
+    _SUCCESS marker is written after them."""
     rows = [(f,) for f in tombstones]
     df = spark.createDataFrame(rows, "file string") if rows \
         else spark.createDataFrame([], "file string")
-    df.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{root}/_log/{_GEN}{gen}")
+    log = _GENS.dir(f"{root}/_log", gen)
+    storage.write_unmarked(df.coalesce(1), log)
+    storage.commit(spark, log, _GENS.marker)
 
 
 def _tombstoned(spark: SparkSession, root: str,
@@ -154,24 +130,11 @@ def _tombstoned(spark: SparkSession, root: str,
     return spark.read.parquet(*paths).select("file")
 
 
-def _ckpt_gen(spark: SparkSession, root: str) -> int | None:
-    """Latest COMMITTED manifest checkpoint (``_ckpt/gen-<n>`` with a
-    complete write), or None. Commit gate = _SUCCESS + payload, same as
-    generation logs; the roster is written BEFORE the manifest, so a
-    committed checkpoint always has its roster."""
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    done = [g for g in _gen_numbers(spark, root, _CKPT)
-            if fs.exists(jvm_path(f"{root}/{_CKPT}/{_GEN}{g}/_SUCCESS"))
-            and _parquet_files(spark, f"{root}/{_CKPT}/{_GEN}{g}")]
-    return max(done) if done else None
-
-
 def _latest_gen(spark: SparkSession, root: str) -> int | None:
     """Latest committed generation, whether its own log still exists or
     it has been consolidated into a checkpoint."""
     gens = _committed_gens(spark, root)
-    ck = _ckpt_gen(spark, root)
+    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
     cands = gens + ([ck] if ck is not None else [])
     return max(cands) if cands else None
 
@@ -183,7 +146,7 @@ def _vacuum_watermark(spark: SparkSession, root: str) -> int:
     below it), so checkpoints don't append to ``_vacuum`` — a
     1e3-batch auto-checkpoint loop would otherwise accrete one tiny
     parquet file per batch here and every read would reopen them all."""
-    ck = _ckpt_gen(spark, root)
+    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
     wm = ck if ck is not None else 0
     p = f"{root}/_vacuum"
     if _parquet_files(spark, p):
@@ -202,7 +165,7 @@ def merge_store_stats(spark: SparkSession, root: str,
     exact state (a file tombstoned later is live again; a file written
     later never existed)."""
     gens = _committed_gens(spark, root)
-    ck = _ckpt_gen(spark, root)
+    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
     latest = _latest_gen(spark, root)
     if at_generation is not None:
         wm = _vacuum_watermark(spark, root)
@@ -261,9 +224,8 @@ def read_merge_store(spark: SparkSession, root: str,
         gens = _committed_gens(spark, root)
         dead = [r["file"] for r in
                 _tombstoned(spark, root, gens).collect()]
-        fs, _ = _fs(spark, root)
         for f in sorted(dead):
-            if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(f)):
+            if storage.exists(spark, f):
                 return spark.read.parquet(f).where(F.lit(False))
         raise ValueError(f"merge store at {root} is empty and every "
                          "historical file was vacuumed — nothing to "
@@ -296,7 +258,7 @@ def vacuum_merge_store(spark: SparkSession, root: str,
     dead_old = [r["file"] for r in _tombstoned(
         spark, root, [g for g in gens if g <= wm]).collect()]
     dead_all = _tombstoned(spark, root, gens).count()
-    fs, _ = _fs(spark, root)
+    fs, _ = storage.fs(spark, root)
     deleted = 0
     for f in sorted(dead_old):
         p = spark._jvm.org.apache.hadoop.fs.Path(f)
@@ -347,7 +309,7 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     if latest is None:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — nothing to checkpoint")
-    ck_old = _ckpt_gen(spark, root)
+    ck_old = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
     wm = latest - retain_generations
     # min_advance amortizes the pass for per-batch callers: merge_into
     # passes retain_generations here, so a merge loop consolidates once
@@ -362,10 +324,10 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     # debris from a crashed prior attempt at this watermark: the
     # checkpoint was never committed (ck_old < wm), so anything already
     # at gen-<wm> is invisible garbage blocking errorifexists
-    fs0, _ = _fs(spark, root)
-    jp = spark._jvm.org.apache.hadoop.fs.Path
+    fs, _ = storage.fs(spark, root)
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     for sub in (_CKPT, _ROSTER):
-        fs0.delete(jp(f"{root}/{sub}/{_GEN}{wm}"), True)
+        fs.delete(jvm_path(f"{root}/{sub}/{_GEN}{wm}"), True)
     # roster BEFORE manifest: a committed checkpoint must always be able
     # to answer "was generation g <= wm committed" for the change feed
     roster = sorted(set(covered)
@@ -375,21 +337,19 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
      .parquet(f"{root}/{_ROSTER}/{_GEN}{wm}"))
     snapshot = merge_store_stats(spark, root, at_generation=wm)
     ck_dir = f"{root}/{_CKPT}/{_GEN}{wm}"
-    snapshot.coalesce(1).write.mode("errorifexists").parquet(ck_dir)
+    storage.write_unmarked(snapshot.coalesce(1), ck_dir, "errorifexists")
     if not _parquet_files(spark, ck_dir):
-        # _ckpt_gen gates commit on payload files existing; if this
-        # write produced none the checkpoint is NOT committed and the
-        # cleanup below would delete the only remaining representation
+        # a checkpoint without payload must never commit: the cleanup
+        # below would delete the only remaining representation
         raise RuntimeError(
             f"checkpoint_merge_store: snapshot write at {ck_dir} "
             "produced no parquet part files — refusing to reclaim the "
             "history it was meant to replace")
+    storage.commit(spark, ck_dir, _GENS.marker)
 
     # physically reclaim dead files <= wm (the vacuum semantics)
     dead_old = [r["file"] for r in _tombstoned(
         spark, root, covered).collect()]
-    fs, _ = _fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     deleted = 0
     for f in sorted(dead_old):
         p = jvm_path(f)
@@ -405,7 +365,7 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     for g in covered:
         fs.delete(jvm_path(f"{root}/_stats/{_GEN}{g}"), True)
         fs.delete(jvm_path(f"{root}/_log/{_GEN}{g}"), True)
-    for g in _gen_numbers(spark, root):
+    for g in storage.numbers(spark, root, _GENS):
         # drained data dirs: only generations the committed checkpoint
         # covers (g <= wm). An all-delete merge legitimately commits an
         # EMPTY generation (no parquet files, only _log tombstones);
@@ -413,8 +373,8 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
         # applying its tombstones — deleting it would resurrect rows.
         if g <= wm and not _parquet_files(spark, f"{root}/{_GEN}{g}"):
             fs.delete(jvm_path(f"{root}/{_GEN}{g}"), True)
-    for old in (_gen_numbers(spark, root, _CKPT)
-                + _gen_numbers(spark, root, _ROSTER)):
+    for old in (storage.numbers(spark, f"{root}/{_CKPT}", _GENS)
+                + storage.numbers(spark, f"{root}/{_ROSTER}", _GENS)):
         if old < wm:
             fs.delete(jvm_path(f"{root}/{_CKPT}/{_GEN}{old}"), True)
             fs.delete(jvm_path(f"{root}/{_ROSTER}/{_GEN}{old}"), True)
@@ -441,7 +401,7 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
     Refuses a root that already holds generations (same contract as
     ``apply_compaction``: mixing runs corrupts the log's meaning).
     Returns the number of data files written."""
-    if _gen_numbers(spark, root):
+    if storage.numbers(spark, root, _GENS):
         raise ValueError(f"init_merge_store: {root} already holds "
                          "generations — point each store at a fresh root")
     _check_keys(df, key_cols, "init_merge_store")
@@ -505,9 +465,9 @@ def read_change_feed(spark: SparkSession, root: str,
     # removes a generation's log but its _changes are data (never
     # reclaimed), and the roster preserves which gens ≤ ckpt were
     # actually committed (an orphaned crash dir must stay invisible)
+    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
     committed = sorted(set(_committed_gens(spark, root))
-                       | set(_roster_gens(spark, root,
-                                          _ckpt_gen(spark, root))))
+                       | set(_roster_gens(spark, root, ck)))
     gens = [g for g in committed
             if g >= max(1, from_generation)
             and (to_generation is None or g <= to_generation)]
@@ -637,10 +597,10 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
     touched_rows = sum(int(r["n_rows"]) for r in cand_rows)
     files_live_before = stats.count()
 
-    ck_anchor = _ckpt_gen(spark, root)
-    gen = max(_gen_numbers(spark, root) +
-              _gen_numbers(spark, root, "_log") +
-              ([ck_anchor] if ck_anchor is not None else [])) + 1
+    ck_anchor = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
+    gen = max(storage.next_number(spark, root, _GENS),
+              storage.next_number(spark, f"{root}/_log", _GENS),
+              ck_anchor + 1 if ck_anchor is not None else 0)
     gen_dir = f"{root}/{_GEN}{gen}"
 
     u_count = int(chk["n"]) if when_matched == "update" else 0
@@ -734,34 +694,26 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
 
 # ------------------------------------------------- incremental rollup
 
-def _rollup_gens(spark: SparkSession, state_dir: str) -> list[int]:
-    """COMMITTED rollup snapshots: ``rollup-g<gen>`` dirs whose
-    _SUCCESS marker exists (Spark writes it last, so its appearance is
-    the atomic commit point — a crashed refresh leaves a markerless
-    orphan that is never read and is overwritten by the retry)."""
-    fs, jpath = _fs(spark, state_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("rollup-g"):
-            ok = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{state_dir}/{name}/_SUCCESS")
-            if fs.exists(ok):
-                try:
-                    out.append(int(name[len("rollup-g"):]))
-                except ValueError:  # foreign rollup-g* dirs: skip
-                    continue
-    return sorted(out)
+# rollup snapshots: rollup-g<gen>, named by the merge generation they
+# have applied through and committed by a _SUCCESS marker written last —
+# a crashed refresh leaves a markerless orphan that is never read and
+# is overwritten by the retry
+_ROLLUP = storage.Layout("rollup-g", "_SUCCESS")
+
+
+def _write_rollup(spark: SparkSession, df: DataFrame, state_dir: str,
+                  gen: int) -> None:
+    snap = _ROLLUP.dir(state_dir, gen)
+    storage.write_unmarked(df, snap)
+    storage.commit(spark, snap, _ROLLUP.marker)
 
 
 def _applied_through(spark: SparkSession, state_dir: str) -> int:
-    gens = _rollup_gens(spark, state_dir)
-    if not gens:
+    g = storage.latest(spark, state_dir, _ROLLUP)
+    if g is None:
         raise ValueError(f"feed rollup at {state_dir} not initialized — "
                          "init_feed_rollup first")
-    return gens[-1]
+    return g
 
 
 def _rollup_agg(df: DataFrame, group_cols: list[str],
@@ -784,20 +736,19 @@ def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     read avg off them) — min/max cannot be maintained under deletes
     without a recompute, so they are deliberately absent."""
     group_cols = list(group_cols)
-    if _rollup_gens(spark, state_dir):
+    if storage.committed(spark, state_dir, _ROLLUP):
         raise ValueError(f"feed rollup at {state_dir} already "
                          "initialized — point each view at a fresh dir")
     g_now = _latest_gen(spark, root)
     base = read_merge_store(spark, root).withColumn("_sign", F.lit(1))
     # overwrite, not errorifexists: a crashed init leaves a markerless
-    # orphan dir that _rollup_gens correctly treats as uninitialized —
-    # but an errorifexists retry then failed with PATH_ALREADY_EXISTS
-    # and there was no recovery path; the _rollup_gens() guard above
-    # already protects committed snapshots from clobbering (same
-    # rationale as refresh_feed_rollup's overwrite)
-    _rollup_agg(base, group_cols, val_col) \
-        .write.mode("overwrite") \
-        .parquet(f"{state_dir}/rollup-g{g_now}")
+    # orphan dir that reads as uninitialized — but an errorifexists
+    # retry then failed with PATH_ALREADY_EXISTS and there was no
+    # recovery path; the committed-snapshot guard above already
+    # protects committed snapshots from clobbering (same rationale as
+    # refresh_feed_rollup's overwrite)
+    _write_rollup(spark, _rollup_agg(base, group_cols, val_col),
+                  state_dir, g_now)
     return {"applied_through": g_now}
 
 
@@ -811,8 +762,8 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     instead of silently corrupting the view).
 
     CRASH-SAFE by construction: the snapshot's watermark is its
-    directory name and its commit point is the _SUCCESS marker Spark
-    writes last — there is no separate watermark record to fall out of
+    directory name and its commit point is the _SUCCESS marker written
+    last — there is no separate watermark record to fall out of
     sync with the data (an earlier draft updated a watermark file after
     overwriting the rollup; a crash between the two steps would have
     double-counted the feed on retry). A crashed refresh leaves a
@@ -830,7 +781,8 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
         F.when(F.col("_change_type").isin("insert", "update_postimage"),
                F.lit(1)).otherwise(F.lit(-1)))
     delta = _rollup_agg(signed, group_cols, val_col)
-    cur = spark.read.parquet(f"{state_dir}/rollup-g{applied}").alias("_cur")
+    cur = spark.read.parquet(_ROLLUP.dir(state_dir, applied)) \
+        .alias("_cur")
     d = delta.select(*group_cols, F.col("s").alias("_ds"),
                      F.col("n").alias("_dn")).localCheckpoint(eager=True) \
         .alias("_d")
@@ -856,11 +808,8 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     # overwrite handles a markerless orphan from a crashed prior try;
     # the source snapshot (rollup-g<applied>) is a DIFFERENT directory,
     # so this write never reads the path it replaces
-    merged.write.mode("overwrite").parquet(f"{state_dir}/rollup-g{g_now}")
-    fs, _ = _fs(spark, state_dir)
-    for g in _rollup_gens(spark, state_dir)[:-2]:   # keep last two
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{state_dir}/rollup-g{g}"), True)
+    _write_rollup(spark, merged, state_dir, g_now)
+    storage.retire(spark, state_dir, _ROLLUP)
     return {"applied_from": applied + 1, "applied_through": g_now,
             "groups_touched": int(d.count())}
 
@@ -870,7 +819,7 @@ def read_feed_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
     ``n_rows``, ``avg_val`` — derived off the retraction-safe
     partials, read from the newest committed snapshot."""
     g = _applied_through(spark, state_dir)
-    r = spark.read.parquet(f"{state_dir}/rollup-g{g}")
+    r = spark.read.parquet(_ROLLUP.dir(state_dir, g))
     gcols = [c for c in r.columns if c not in ("s", "n")]
     return r.select(*gcols,
                     F.col("s").cast("double").alias("sum_val"),

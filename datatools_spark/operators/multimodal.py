@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 __all__ = [
-    "MEDIA_SCHEMA", "attach_media_metadata", "extract_features",
+    "MEDIA_SCHEMA", "extract_features",
     "extract_features_expr", "sample_frames", "resize_plan", "patch_grid",
     "decode_raw8", "decode_pcm16", "raw8_stats", "raw8_pool",
     "raw8_resize_nearest", "raw8_frame_stats", "pcm16_stats",
@@ -58,17 +58,6 @@ MEDIA_SCHEMA = StructType([
         StructField("sample_rate", LongType(), True),
     ]), True),
 ])
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload",
-                          kind: str = "image") -> DataFrame:
-    """Derive cheap metadata JVM-side (no decode): payload length, kind,
-    content fingerprint. Deep metadata (width/height/duration) requires the
-    decode path below."""
-    return (df
-            .withColumn("kind", F.lit(kind))
-            .withColumn("n_bytes", F.length(F.col(payload_col)).cast("long"))
-            .withColumn("content_md5", F.md5(F.col(payload_col))))
 
 
 def _fake_feature(payload: bytes | None, dim: int) -> list[float]:

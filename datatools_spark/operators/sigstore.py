@@ -6,11 +6,11 @@ signs ONLY its new docs. The expensive part of MinHash-LSH (shingle
 explode + k hash mins over every document) becomes a one-time cost per
 document instead of a per-run cost over the corpus.
 
-Layout: ``{path}/`` parquet with columns ``(id_col, _sig array<bigint>)``,
-written partitioned by ``_band0_prefix`` (first band key's low bits) so a
-band-join against a fresh batch prunes to matching partitions. Appends
-are idempotent per doc id: ``update_signature_store`` anti-joins the
-batch against stored ids before signing.
+Layout: parquet with columns ``(id_col, _sig array<bigint>, _pp)`` in
+the live generation (below), ``_pp`` being the band-0 prefix bucket as
+a plain column. Appends are idempotent per doc id:
+``update_signature_store`` anti-joins the batch against stored ids
+before signing.
 
 Typical loop:
     update_signature_store(spark, new_docs, path)      # sign only new
@@ -22,14 +22,14 @@ The image twin (``update_image_signature_store`` /
 ``ahash_pairs_against_store``) keeps aHash signatures the same way, so
 incremental IMAGE dedup never re-decodes a stored payload.
 
-r8 adds ``compact_signature_store``: appends leave one file per
-touched ``_pp`` partition per update, so a long ingest loop accrues
-tiny files without bound; compaction rewrites the table as one file
-per partition inside a committed ``gen-N`` directory (the ivfstore
-generation protocol — crash leaves readers on the old root, previous
-generation retained on prune). All store functions resolve the live
-root per call; legacy bare-path stores keep working and migrate on
-their first compaction.
+Every store is generational from its first write: the table lives in
+``{path}/gen-N`` dirs made visible by a ``_COMMIT`` marker (the
+``storage`` protocol). The first update writes and commits ``gen-000000``;
+later updates append flat files into the live generation, and
+``compact_signature_store`` rewrites it into right-sized files in the
+next generation (crash leaves readers on the old one, previous
+generation retained on retire). All store functions resolve the live
+generation per call.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
 from .dedup import minhash_signature
 
 __all__ = ["update_signature_store", "lsh_pairs_against_store",
@@ -56,48 +57,20 @@ _PARTS = 16  # signature-table partition fan-out (band-0 prefix buckets)
 _ROWS_PER_FILE = 4_000_000
 
 
-def _has_pp_dirs(spark: SparkSession, root: str) -> bool:
-    """True when the live table at ``root`` uses the LEGACY
-    hive-partitioned ``_pp=*`` layout (pre-r12 stores). Appends must
-    then keep that shape — mixing flat data files into a partitioned
-    directory breaks Spark's partition discovery ("Conflicting
-    directory structures") for every reader, permanently."""
-    from .ivfstore import _fs
-    try:
-        fs, jp = _fs(spark, root)
-        if not fs.exists(jp):
-            return False
-        for st in fs.listStatus(jp):
-            if (st.isDirectory()
-                    and st.getPath().getName().startswith("_pp=")):
-                return True
-    except Exception:  # noqa: BLE001 — layout probe only
-        return False
-    return False
-
-
-def _append_store_rows(df: DataFrame, root: str, n_rows: int,
-                       legacy_pp: bool) -> None:
-    """Append ``df`` (carrying a ``_pp`` column) to the store.
-
-    FLAT layout (r12 default): ``_pp`` stays a plain data column and
-    the append coalesces to ceil(n/_ROWS_PER_FILE) right-sized files.
-    No reader ever partition-prunes on ``_pp`` (every consumer scans
-    the whole store projection), so the old hive-partitioned layout
-    bought nothing and fanned each corpus seed into one tiny file PER
-    DISTINCT ``_pp`` VALUE (253 files × ~13 KB at sf0.1) — after which
-    every snapshot/update/pair call paid directory discovery + per-file
-    open over all of them (~0.55 s per store scan at sf0.1, the largest
-    fixed term of the warm store-twin queries; guide §6 small-files).
-    LEGACY stores on disk keep receiving partitioned appends."""
-    if legacy_pp:
-        # one file per touched partition value per update — see the
-        # measured (task × value) blowup note in update_signature_store
-        df.repartition("_pp").write.mode("append") \
-            .partitionBy("_pp").parquet(root)
-    else:
-        nf = max(1, -(-int(n_rows) // _ROWS_PER_FILE))
-        df.coalesce(nf).write.mode("append").parquet(root)
+def _append_store_rows(spark: SparkSession, df: DataFrame, root: str,
+                       n_rows: int, first: bool) -> None:
+    """Append ``df`` (carrying a ``_pp`` column) to the live generation
+    as ceil(n/_ROWS_PER_FILE) right-sized FLAT files; a first write then
+    commits the generation it created. ``_pp`` stays a plain data
+    column: no reader ever partition-prunes on it (every consumer scans
+    the whole store projection), while partitioning by it would fan a
+    corpus seed into one tiny file PER DISTINCT ``_pp`` VALUE (253
+    files × ~13 KB at sf0.1), each store scan paying per-file open over
+    all of them (~0.55 s at sf0.1; guide §6 small-files)."""
+    nf = max(1, -(-int(n_rows) // _ROWS_PER_FILE))
+    df.coalesce(nf).write.mode("append").parquet(root)
+    if first:
+        storage.commit(spark, root, storage.GEN.marker)
 
 
 def _sig_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -108,83 +81,41 @@ def _sig_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         .withColumn("_pp", (F.element_at("_sig", 1) % _PARTS).cast("int"))
 
 
-def _is_path_missing(exc: AnalysisException) -> bool:
-    """True only for the path-does-not-exist flavor of AnalysisException.
-    Everything else it can carry — empty/partially-written store dir
-    ('Unable to infer schema'), a parquet table missing the id column,
-    permission failures — must PROPAGATE: silently treating those as
-    first-write would skip the anti-join and append duplicate/foreign
-    signatures."""
-    try:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return True
-    except Exception:  # noqa: BLE001 — condition absent on legacy forms
-        pass
-    msg = str(exc)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
-# ------------------------------------------------------------- layout
-# A signature store is either LEGACY (the parquet table lives directly
-# at {path}) or GENERATIONAL ({path}/gen-N/ dirs, the newest one with a
-# _COMMIT marker is live — the ivfstore protocol). Updates append into
-# the RESOLVED root either way; compact_signature_store migrates a
-# legacy store to generations on its first run. Readers resolve once
-# per call, so a compaction committed mid-session is picked up on the
-# next call, and the previous generation is retained on prune (the
-# two-snapshot policy) for in-flight readers of the just-retired root.
-
 def resolve_signature_root(spark: SparkSession, path: str) -> str:
     """Directory holding the live signature table: the latest committed
-    ``gen-N`` under ``path``, or ``path`` itself for legacy stores."""
-    from .ivfstore import _committed_gens
-    gens = _committed_gens(spark, path)
-    if gens:
-        return f"{path}/gen-{gens[-1]:06d}"
-    return path
+    ``gen-N`` under ``path``. A store with no committed generation
+    resolves to the (absent) generation its first update will write,
+    so a read fails with PATH_NOT_FOUND as for a missing store. Readers
+    resolve once per call, so a compaction committed mid-session is
+    picked up on the next call."""
+    return storage.live_dir(spark, path, storage.GEN)
 
 
 def compact_signature_store(spark: SparkSession, path: str,
                             partition_col: str = "_pp") -> dict:
     """Rewrite the store into right-sized FLAT files
-    (ceil(rows/_ROWS_PER_FILE)) in a fresh committed generation — this
-    is also how a pre-r12 hive-partitioned (``_pp=*``) store migrates
-    to the flat layout, safely, because a generation is always a fresh
-    directory (no layout mixing). Every ``update_*_signature_store``
-    call appends at least one file, so a long-running
-    ingest loop (one update per micro-batch) accrues files without
-    bound and every later store scan pays per-file open/schedule cost —
-    the tiny-file decay every append-only parquet layout suffers; this
-    is the maintenance op that bounds it (Delta/Iceberg ``OPTIMIZE``,
-    re-expressed on the plain-parquet store). ``partition_col`` is kept
-    for API compatibility; the compacted generation is flat.
+    (ceil(rows/_ROWS_PER_FILE)) in a fresh committed generation. Every
+    ``update_*_signature_store`` call appends at least one file, so a
+    long-running ingest loop (one update per micro-batch) accrues files
+    without bound and every later store scan pays per-file open/schedule
+    cost — the tiny-file decay every append-only parquet layout suffers;
+    this is the maintenance op that bounds it (Delta/Iceberg
+    ``OPTIMIZE``, re-expressed on the plain-parquet store).
+    ``partition_col`` is kept for API compatibility; the compacted
+    generation is flat.
 
     Crash-safe, never in place: the compacted table lands in the next
     ``gen-N`` dir and becomes visible only with its ``_COMMIT`` marker,
     written AFTER a read-back row-count equality check against the
-    source; a crash at any point leaves readers on the old root. The
-    FIRST compaction of a legacy (bare-path) store must not write the
-    gen dir beneath the live table — Spark's partition discovery then
-    sees leaf files under both ``{path}/_pp=*`` and ``{path}/gen-0/
-    _pp=*`` and every bare-path read dies with "Conflicting directory
-    structures", permanently (r9 self-review, repro'd). Legacy
-    migration therefore STAGES the generation in a dot-prefixed dir
-    (invisible to Spark's discovery), writes ``_COMMIT`` inside, and
-    atomically RENAMES it into place — the rename is the commit point;
-    a crash before it leaves only an invisible orphan and the bare
-    store intact. The legacy table files are RETAINED until the next
-    compaction (the two-snapshot policy applied to the legacy root —
-    in-flight readers of the just-retired bare path keep working).
+    source; a crash at any point leaves readers on the old generation.
     Single writer assumed (the stores' standing contract).
     Returns ``{"rows", "files_before", "files_after", "generation"}``.
     """
-    from .ivfstore import _committed_gens, _fs, _gen_numbers
-
     root = resolve_signature_root(spark, path)
     src = spark.read.parquet(root)
 
     def _count_files(p: str) -> int:
-        fs, jp = _fs(spark, p)
+        fs, jp = storage.fs(spark, p)
         n = 0
         it = fs.listFiles(jp, True)
         while it.hasNext():
@@ -194,57 +125,21 @@ def compact_signature_store(spark: SparkSession, path: str,
         return n
 
     files_before = _count_files(root)
-    all_gens = _gen_numbers(spark, path, committed_only=False)
-    gen = f"{path}/gen-{(all_gens[-1] + 1 if all_gens else 0):06d}"
-    legacy = root == path
-    jvm = spark._jvm
-    fs, _ = _fs(spark, path)
-    write_to = f"{path}/.staging-{gen.rsplit('/', 1)[-1]}" if legacy \
-        else gen
+    gen = storage.GEN.dir(path, storage.next_number(spark, path,
+                                                    storage.GEN))
     n_src = src.count()
-    # flat sized files; if the source generation was hive-partitioned
-    # (pre-r12), _pp comes back as the partition column and is written
-    # out as a plain column — the migration point to the flat layout
     nf = max(1, -(-int(n_src) // _ROWS_PER_FILE))
-    src.coalesce(nf).write.mode("overwrite").parquet(write_to)
+    src.coalesce(nf).write.mode("overwrite").parquet(gen)
     # equality gate BEFORE the commit point: a short write must never
     # become the live store
-    n_new = spark.read.parquet(write_to).count()
+    n_new = spark.read.parquet(gen).count()
     if n_src != n_new:
         raise RuntimeError(
             f"compact_signature_store: compacted generation holds "
             f"{n_new} rows, source holds {n_src} — refusing to commit "
-            f"(orphan left at {write_to} for inspection)")
-    if legacy:
-        # marker INSIDE the staging dir, then one atomic dir rename: a
-        # committed generation appears under path in a single FS op
-        fs.create(jvm.org.apache.hadoop.fs.Path(
-            f"{write_to}/_COMMIT")).close()
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(write_to),
-                         jvm.org.apache.hadoop.fs.Path(gen)):
-            raise RuntimeError(
-                f"compact_signature_store: rename {write_to} -> {gen} "
-                "failed (concurrent writer?) — staging left intact")
-    else:
-        fs.create(jvm.org.apache.hadoop.fs.Path(
-            f"{gen}/_COMMIT")).close()
-        # deferred legacy cleanup: with >= 2 committed generations the
-        # bare-path table (if this store was migrated) has no readers
-        # left — drop the old top-level partition dirs/data files,
-        # keeping gen-*/ and caller-level marker files (_SEEDED)
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if not (name.startswith("gen-")
-                        or name.startswith(".staging-")):
-                    fs.delete(st.getPath(), True)
-            elif (name == "_SUCCESS" or name.endswith(".parquet")
-                  or name.startswith("part-")):
-                fs.delete(st.getPath(), False)
-        # retain the previous committed generation (two-snapshot policy)
-        for old in _committed_gens(spark, path)[:-2]:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(
-                f"{path}/gen-{old:06d}"), True)
+            f"(orphan left at {gen} for inspection)")
+    storage.commit(spark, gen, storage.GEN.marker)
+    storage.retire(spark, path, storage.GEN)
     return {"rows": int(n_src), "files_before": int(files_before),
             "files_after": _count_files(gen),
             "generation": gen.rsplit("/", 1)[-1]}
@@ -265,7 +160,7 @@ def update_signature_store(spark: SparkSession, batch: DataFrame,
     # batch-sized shuffle; id is assumed to identify content, so which
     # duplicate survives is immaterial.
     batch = batch.dropDuplicates([id_col])
-    new = batch
+    new, first = batch, False
     try:
         existing = spark.read.parquet(root).select(id_col)
         # id-only anti-join first (same warm-run pruning as the image
@@ -280,14 +175,13 @@ def update_signature_store(spark: SparkSession, batch: DataFrame,
         new_ids = new_ids.localCheckpoint(eager=True)
         new = batch.join(new_ids, id_col, "left_semi")
     except AnalysisException as exc:
-        if not _is_path_missing(exc):   # first write ONLY; see helper
+        if not storage.is_path_missing(exc):   # first write ONLY
             raise
+        first = True
     out = _sig_frame(new, text_col, id_col)
     n = out.count()
     if n:
-        # flat sized files for new stores; partitioned append only into
-        # pre-r12 hive-layout stores (see _append_store_rows)
-        _append_store_rows(out, root, n, _has_pp_dirs(spark, root))
+        _append_store_rows(spark, out, root, n, first)
     return n
 
 
@@ -459,7 +353,7 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     with ``bit_count``; ``_nbits = grid²`` rides along (RLE ≈ free) so
     the pair reader derives band geometry AND layout from the DATA, not
     a constant that could drift from the writer's grid (mixed widths in
-    one store raise at read). Partitioned by ``_pp`` (band-0 low byte).
+    one store raise at read). ``_pp`` is the band-0 low byte.
     Idempotent per image id; decode runs once per image ever.
     ``batch_is_new=True`` skips the internal stored-id anti-join for
     callers that ALREADY filtered the batch against the store (the
@@ -492,14 +386,13 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     # same guard as update_signature_store (the anti-join only screens
     # against the STORE)
     batch = batch.dropDuplicates([id_col])
-    new = batch
+    new, first = batch, False
     n_in = None          # new-id count, when the anti-join derives it
     try:
         # ONE store scan per update: the layout audit (distinct _nbits)
         # and the seen-id anti-join both read this materialized
         # two-column projection — separately they each paid the store's
-        # full per-file open cost (the _pp layout fans a seed into one
-        # file per touched partition value). read.parquet is called
+        # full per-file open cost. read.parquet is called
         # exactly once: every call runs a schema-inference job over the
         # store's file listing. A caller-held snapshot removes even
         # that: the projection is already materialized.
@@ -535,8 +428,9 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
             new_ids = new_ids.localCheckpoint(eager=True)
             new = batch.join(new_ids, id_col, "left_semi")
     except AnalysisException as exc:
-        if not _is_path_missing(exc):   # first write ONLY; see helper
+        if not storage.is_path_missing(exc):   # first write ONLY
             raise
+        first = True
     raw = raw8_ahash(new, width=width, grid=grid, payload_col=payload_col,
                      id_col=id_col)
     if nbits <= 64:
@@ -585,10 +479,7 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
                          F.lit(-1).cast("int").alias("_pp")))
         out = sig.unionByName(undec)
     if n or n_undec:
-        # flat sized files for new stores; partitioned append only into
-        # pre-r12 hive-layout stores (see _append_store_rows)
-        _append_store_rows(out, root, n + n_undec,
-                           _has_pp_dirs(spark, root))
+        _append_store_rows(spark, out, root, n + n_undec, first)
     return n
 
 
@@ -636,7 +527,7 @@ def snapshot_image_store(spark: SparkSession, path: str,
     try:
         raw = spark.read.parquet(root)
     except AnalysisException as exc:
-        if _is_path_missing(exc):
+        if storage.is_path_missing(exc):
             return None
         raise
     proj = [c for c in (id_col, "ahash64", "ahash_w", "_nbits")

@@ -28,9 +28,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import storage
+
 __all__ = ["cms_bucket_col", "cms_build", "cms_estimate",
            "cms_inner_product",
-           "hll_bucket_rho", "hll_registers", "hll_estimate_sql_terms",
+           "hll_bucket_rho", "hll_registers",
            "hll_estimate", "hll_estimate_from_registers", "hll_merge",
            "kmv_hash52", "kmv_sketch", "kmv_estimate_col",
            "kmv_merge_col", "kmv_jaccard_col",
@@ -221,15 +223,6 @@ def hll_estimate(items: DataFrame, item_col: str, b: int = 8,
     2^b−touched buckets contributing 2^0 each."""
     return hll_estimate_from_registers(
         hll_registers(items, item_col, b, salt), b)
-
-
-def hll_estimate_sql_terms(b: int = 8, salt: str = "hll") -> dict:
-    """Constants for building the identical estimator in an external SQL
-    engine (oracle parity): m, alpha, and the rho comparison ladder are
-    fully determined by (b, salt)."""
-    m = 1 << b
-    return {"m": m, "alpha": 0.7213 / (1.0 + 1.079 / m),
-            "nbits": 32 - b, "salt": salt}
 
 
 # ------------------------------------------- KMV (bottom-k / theta-style)
@@ -491,23 +484,22 @@ def kmv_jaccard_col(a: Column, b: Column, k: int) -> Column:
 
 # ------------------------------------------- incremental KMV store
 
-def _kmv_snapshots(spark, path: str, prefix: str = "kmv-b") -> list[int]:
-    """Committed ``<prefix><batch>`` snapshot numbers (the _SUCCESS
-    marker is the atomic commit point — same pattern as the merge
-    store's feed rollup). Shared by the KMV and value-sample stores."""
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            ok = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{path}/{name}/_SUCCESS")
-            if fs.exists(ok):
-                out.append(int(name[len(prefix):]))
-    return sorted(out)
+# snapshot dirs committed by a _SUCCESS marker (storage protocol); the
+# next snapshot number is latest committed + 1, so a retry overwrites
+# a crashed update's markerless orphan
+_KMV = storage.Layout("kmv-b", "_SUCCESS")
+_VS = storage.Layout("vs-b", "_SUCCESS")
+_CMS = storage.Layout("cms-b", "_SUCCESS")
+
+
+def _write_snapshot(spark, merged: DataFrame, path: str,
+                    layout: storage.Layout, nxt: int) -> None:
+    """Write one single-file snapshot table, commit it, retire the
+    superseded ones."""
+    snap = layout.dir(path, nxt)
+    storage.write_unmarked(merged.coalesce(1), snap)
+    storage.commit(spark, snap, layout.marker)
+    storage.retire(spark, path, layout)
 
 
 def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
@@ -533,10 +525,10 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
     estimate (the r9 CMS-geometry fix, applied to the whole sketch
     store family). Returns ``{"batch", "groups"}``."""
     group_cols = _group_cols_list(group_cols)
-    snaps = _kmv_snapshots(spark, path)
+    last = storage.latest(spark, path, _KMV)
     bsk = kmv_sketch(batch, group_cols, item_col, k=k, salt=salt)
-    if snaps:
-        cur = spark.read.parquet(f"{path}/kmv-b{snaps[-1]}")
+    if last is not None:
+        cur = spark.read.parquet(_KMV.dir(path, last))
         _check_sketch_geometry(cur, path, k=k, salt=salt)
         cur = cur.drop("_k", "_salt") \
             .withColumnRenamed("hs", "_old").alias("_c")
@@ -557,18 +549,12 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
                           .otherwise(kmv_merge_col(F.col("_old"),
                                                    F.col("_new"), k))
                           .alias("hs")))
-        nxt = snaps[-1] + 1
+        nxt = last + 1
     else:
         merged, nxt = bsk, 0
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
-    merged.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/kmv-b{nxt}")
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    for b in _kmv_snapshots(spark, path)[:-2]:     # keep last two
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/kmv-b{b}"), True)
+    _write_snapshot(spark, merged, path, _KMV, nxt)
     n = merged.count()
     return {"batch": nxt, "groups": int(n)}
 
@@ -608,11 +594,11 @@ def read_kmv_store(spark, path: str, k: int | None = None,
     """The newest committed sketch table: ``<group_cols>, hs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry matches what
     the reader's estimates assume."""
-    snaps = _kmv_snapshots(spark, path)
-    if not snaps:
+    last = storage.latest(spark, path, _KMV)
+    if last is None:
         raise ValueError(f"KMV store at {path} has no committed "
                          "snapshots — update_kmv_store first")
-    out = spark.read.parquet(f"{path}/kmv-b{snaps[-1]}")
+    out = spark.read.parquet(_KMV.dir(path, last))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -640,11 +626,11 @@ def update_value_sample_store(spark, batch: DataFrame, path: str,
     mismatched update raises — same guard as the KMV/CMS stores (r9).
     Returns ``{"batch", "groups"}``."""
     group_cols = _group_cols_list(group_cols)
-    snaps = _kmv_snapshots(spark, path, prefix="vs-b")
+    last = storage.latest(spark, path, _VS)
     bsk = value_sample_sketch(batch, group_cols, key_col, value_col,
                               k=k, salt=salt).drop("n_rows")
-    if snaps:
-        cur = spark.read.parquet(f"{path}/vs-b{snaps[-1]}")
+    if last is not None:
+        cur = spark.read.parquet(_VS.dir(path, last))
         _check_sketch_geometry(cur, path, k=k, salt=salt)
         cur = cur.drop("_k", "_salt") \
             .withColumnRenamed("vs", "_old").alias("_c")
@@ -663,18 +649,12 @@ def update_value_sample_store(spark, batch: DataFrame, path: str,
                           .otherwise(value_sample_merge_col(
                               F.col("_old"), F.col("_new"), k))
                           .alias("vs")))
-        nxt = snaps[-1] + 1
+        nxt = last + 1
     else:
         merged, nxt = bsk, 0
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
-    merged.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/vs-b{nxt}")
-    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    for b in _kmv_snapshots(spark, path, prefix="vs-b")[:-2]:
-        fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/vs-b{b}"), True)
+    _write_snapshot(spark, merged, path, _VS, nxt)
     n = merged.count()
     return {"batch": nxt, "groups": int(n)}
 
@@ -683,11 +663,11 @@ def read_value_sample_store(spark, path: str, k: int | None = None,
                             salt: str | None = None) -> DataFrame:
     """The newest committed sample table: ``<group_cols>, vs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry."""
-    snaps = _kmv_snapshots(spark, path, prefix="vs-b")
-    if not snaps:
+    last = storage.latest(spark, path, _VS)
+    if last is None:
         raise ValueError(f"value-sample store at {path} has no committed "
                          "snapshots — update_value_sample_store first")
-    out = spark.read.parquet(f"{path}/vs-b{snaps[-1]}")
+    out = spark.read.parquet(_VS.dir(path, last))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -763,9 +743,9 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
             f"update_cms_store: batch_id must be an integer monotonic "
             f"per app_id (got {batch_id!r}) — a counter store cannot be "
             "made replay-safe without one; use the set sketches")
-    snaps = _kmv_snapshots(spark, path, prefix="cms-b")
-    if snaps:
-        base = f"{path}/cms-b{snaps[-1]}"
+    last = storage.latest(spark, path, _CMS)
+    if last is not None:
+        base = _CMS.dir(path, last)
         # pre-watermark snapshots have no state/ table at all (bare
         # batches/ id set), so the layout check must catch the missing
         # path — reading first would surface an opaque PATH_NOT_FOUND
@@ -796,14 +776,14 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
                 "folding mismatched (row,bucket) spaces corrupts counts")
         prev = [r["last_id"] for r in rows if r["app_id"] == app_id]
         if prev and bid <= prev[0]:
-            return {"batch": snaps[-1], "skipped": True}
+            return {"batch": last, "skipped": True}
         merged = (spark.read.parquet(f"{base}/sketch")
                   .unionByName(_cms_batch_cells(batch, item_col, depth,
                                                 width, salt))
                   .groupBy("row", "bucket").agg(F.sum("c").alias("c")))
         others = [(r["app_id"], r["last_id"]) for r in rows
                   if r["app_id"] != app_id]
-        nxt = snaps[-1] + 1
+        nxt = last + 1
     else:
         merged = _cms_batch_cells(batch, item_col, depth, width, salt)
         others = []
@@ -821,17 +801,13 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
             F.lit(width).cast("int").alias("width"),
             F.lit(salt).alias("salt"))
         for a, i in others + [(app_id, bid)]])
-    gen = f"{path}/cms-b{nxt}"
+    gen = _CMS.dir(path, nxt)
     merged.coalesce(1).write.mode("overwrite").parquet(f"{gen}/sketch")
     ledger.coalesce(1).write.mode("overwrite").parquet(f"{gen}/state")
     # the tables' own _SUCCESS files live inside the subdirs; the
     # SNAPSHOT-level marker lands only after both tables committed
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration())
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{gen}/_SUCCESS")).close()
-    for b in _kmv_snapshots(spark, path, prefix="cms-b")[:-2]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/cms-b{b}"), True)
+    storage.commit(spark, gen, _CMS.marker)
+    storage.retire(spark, path, _CMS)
     return {"batch": nxt, "skipped": False}
 
 
@@ -844,11 +820,11 @@ def read_cms_store(spark, path: str, depth: int | None = None,
     geometry matches what the reader's probe hashing assumes — a
     mismatched reader computes probe buckets in a different space and
     silently breaks the never-undercount guarantee (r8 ADVICE)."""
-    snaps = _kmv_snapshots(spark, path, prefix="cms-b")
-    if not snaps:
+    last = storage.latest(spark, path, _CMS)
+    if last is None:
         raise ValueError(f"CMS store at {path} has no committed "
                          "snapshots — update_cms_store first")
-    base = f"{path}/cms-b{snaps[-1]}"
+    base = _CMS.dir(path, last)
     if depth is not None or width is not None or salt is not None:
         from pyspark.errors import AnalysisException
         try:

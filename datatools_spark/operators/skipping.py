@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
+
 __all__ = ["build_file_stats", "update_file_stats", "prune_files",
            "skipping_read", "plan_compaction", "apply_compaction",
            "refresh_manifest_after_compaction"]
@@ -244,8 +246,7 @@ def apply_compaction(spark: SparkSession, plan: DataFrame,
     directory-glob rescan — and the ``coalesce(1)`` single task is
     bounded: multi-file groups are < target + one file's rows by the
     next-fit construction."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = storage.fs(spark, out_path)
     if fs.exists(jpath) and len(fs.listStatus(jpath)) > 0:
         raise ValueError(
             f"apply_compaction: out_path {out_path} is not empty — group "
@@ -296,9 +297,7 @@ def refresh_manifest_after_compaction(spark: SparkSession,
     the ``cg=`` files — one stats pass over the compacted bytes only.
     ``prune_files`` / ``skipping_read`` over the result read the
     compacted table with no duplicated and no stale rows."""
-    rp = spark._jvm.org.apache.hadoop.fs.Path(f"{out_path}/_replaced")
-    fs = rp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(rp):
+    if not storage.exists(spark, f"{out_path}/_replaced"):
         return manifest   # nothing was rewritten (all-singleton plan)
     replaced = spark.read.parquet(f"{out_path}/_replaced").select("file")
     kept = manifest.join(replaced, "file", "left_anti")

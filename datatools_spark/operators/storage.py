@@ -1,0 +1,157 @@
+"""Generation commit protocol shared by every at-rest store.
+
+A store keeps its state in numbered generation directories under one
+prefix (``gen-000003``, ``kmv-b7``, ``rollup-g12`` …). A generation is
+visible to readers only once its MARKER file exists, and the marker is
+written last — after every table of the generation has landed — so a
+crash at any earlier step leaves a markerless orphan that no reader
+resolves. The newest committed generation is the live one. After a
+commit, :func:`retire` deletes everything older than the two newest
+committed generations: a reader that resolved the previous one just
+before the commit (the streaming loops resolve per micro-batch) still
+finds it on disk, and the next commit retires it.
+
+This module is the only place that talks to the Hadoop FileSystem API
+for the stores. Each store declares its :class:`Layout` (prefix,
+marker, zero-pad width) and owns its numbering rule; the on-disk names
+are the stores' own and unchanged.
+"""
+
+from __future__ import annotations
+
+from typing import NamedTuple
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+
+__all__ = ["Layout", "GEN", "RETAIN", "fs", "exists", "numbers",
+           "is_committed", "committed", "latest", "next_number",
+           "live_dir", "commit", "retire", "write_unmarked",
+           "is_path_missing"]
+
+RETAIN = 2   # committed generations kept by retire: live + previous
+
+# Spark's job-level _SUCCESS file. write_unmarked suppresses it for
+# stores whose marker is a file of that name, so the marker is written
+# by commit() — after the store's own checks — and never by Spark.
+_MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+
+class Layout(NamedTuple):
+    prefix: str       # generation dir name = prefix + number
+    marker: str       # commit marker file inside a generation dir
+    width: int = 0    # zero-pad width of the number (0 = none)
+
+    def dir(self, path: str, n: int) -> str:
+        return f"{path}/{self.prefix}{n:0{self.width}d}"
+
+
+# the signature stores and the IVF index: gen-%06d committed by _COMMIT
+GEN = Layout("gen-", "_COMMIT", 6)
+
+
+def fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``."""
+    jp = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    f, jp = fs(spark, path)
+    return f.exists(jp)
+
+
+def numbers(spark: SparkSession, path: str, layout: Layout) -> list[int]:
+    """Sorted numbers of every generation dir under ``path``, committed
+    or orphaned. Names whose suffix is not an integer (``kmv-b0.bak``,
+    ``gen-tmp`` — operator copies, tooling) are not generations and are
+    skipped: a foreign dir must never brick the store."""
+    f, jp = fs(spark, path)
+    if not f.exists(jp):
+        return []
+    out = []
+    for st in f.listStatus(jp):
+        name = st.getPath().getName()
+        suffix = name[len(layout.prefix):]
+        if (st.isDirectory() and name.startswith(layout.prefix)
+                and suffix.isdecimal()):
+            out.append(int(suffix))
+    return sorted(out)
+
+
+def is_committed(spark: SparkSession, gen_dir: str, marker: str) -> bool:
+    return exists(spark, f"{gen_dir}/{marker}")
+
+
+def committed(spark: SparkSession, path: str, layout: Layout) -> list[int]:
+    """Sorted numbers of the generations readers may resolve."""
+    return [n for n in numbers(spark, path, layout)
+            if is_committed(spark, layout.dir(path, n), layout.marker)]
+
+
+def latest(spark: SparkSession, path: str, layout: Layout) -> int | None:
+    gens = committed(spark, path, layout)
+    return gens[-1] if gens else None
+
+
+def next_number(spark: SparkSession, path: str, layout: Layout) -> int:
+    """One past EVERY generation dir, committed or orphaned — a writer
+    using it never writes into a crashed attempt's leftovers."""
+    gens = numbers(spark, path, layout)
+    return gens[-1] + 1 if gens else 0
+
+
+def live_dir(spark: SparkSession, path: str, layout: Layout) -> str:
+    """The newest committed generation dir. A store with none resolves
+    to the dir its first write will create — absent, so reading it
+    fails with PATH_NOT_FOUND exactly like reading a missing store."""
+    n = latest(spark, path, layout)
+    return layout.dir(path, n if n is not None
+                      else next_number(spark, path, layout))
+
+
+def commit(spark: SparkSession, gen_dir: str, marker: str) -> None:
+    """The commit point: write the marker that makes ``gen_dir``
+    visible. Call it only after every table of the generation landed
+    and passed the store's checks."""
+    f, jp = fs(spark, f"{gen_dir}/{marker}")
+    f.create(jp).close()
+
+
+def retire(spark: SparkSession, path: str, layout: Layout) -> None:
+    """Delete every generation dir older than the ``RETAIN`` newest
+    committed ones — superseded generations and orphans of crashed
+    attempts below them. A crash mid-retire leaves only garbage the
+    next retire removes."""
+    gens = numbers(spark, path, layout)
+    keep = [n for n in gens if is_committed(
+        spark, layout.dir(path, n), layout.marker)][-RETAIN:]
+    if len(keep) < RETAIN:
+        return
+    f, _ = fs(spark, path)
+    for n in gens:
+        if n < keep[0]:
+            f.delete(spark._jvm.org.apache.hadoop.fs.Path(
+                layout.dir(path, n)), True)
+
+
+def write_unmarked(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write ``df`` as parquet at ``path`` without Spark's ``_SUCCESS``
+    file (for stores whose :func:`commit` marker carries that name)."""
+    df.write.mode(mode).option(_MARK_SUCCESS, "false").parquet(path)
+
+
+def is_path_missing(exc: AnalysisException) -> bool:
+    """True only for the path-does-not-exist flavor of AnalysisException.
+    Everything else it can carry — an empty or partially written
+    generation ('Unable to infer schema'), a table missing the id
+    column, permission failures — must PROPAGATE: silently treating
+    those as a first write would skip the anti-join and append
+    duplicate or foreign rows."""
+    try:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return True
+    except Exception:  # noqa: BLE001 — condition absent on older forms
+        pass
+    msg = str(exc)
+    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg

@@ -9358,9 +9358,9 @@ def _mm_store_root(sf_dir: str, kind: str) -> str:
 
 
 # kinds renamed by a store-layout change: the new kind reseeds under a
-# fresh root (old-layout stores keep working through the writers'
-# legacy branch, but the bench twins should measure the current layout)
-_MM_STALE_KINDS = {"ahash16f": ("ahash16",)}
+# fresh root and its predecessors' roots are reclaimed (the writers
+# read only the current layout, so an old-layout store is never reused)
+_MM_STALE_KINDS = {"ahash16g": ("ahash16", "ahash16f")}
 
 
 def _mm_store_seeded(root: str) -> bool:
@@ -9408,7 +9408,7 @@ def mm_ahash_pairs_store(spark, sf_dir):
     completeness (equality vs the batch engine is pinned in
     tests/test_sigstore.py::test_image_store_equals_full_ahash_pairs)."""
     from .operators import sigstore as SS
-    root = _mm_store_root(sf_dir, "ahash16f")
+    root = _mm_store_root(sf_dir, "ahash16g")
     payload = _mm_payload(spark, sf_dir)
     # seed: sign the historical corpus once (the cost the store
     # amortizes away — first bench sample pays it, min-of-N doesn't).
@@ -9457,7 +9457,7 @@ def mm_ahash_pairs_store_incr(spark, sf_dir):
     measured, not asserted from the full-corpus twins' trend. Oracle:
     the all-pairs scan restricted to pairs touching the batch."""
     from .operators import sigstore as SS
-    root = _mm_store_root(sf_dir, "ahash16f")
+    root = _mm_store_root(sf_dir, "ahash16g")
     payload = _mm_payload(spark, sf_dir)
     _mm_store_seed(root, lambda: SS.update_image_signature_store(
         spark, payload, root))
@@ -9486,7 +9486,7 @@ def mm_image_dedup_store(spark, sf_dir):
     (tests/test_compstore.py invariant)."""
     from .operators import compstore as CS
     from .operators import sigstore as SS
-    sig_root = _mm_store_root(sf_dir, "ahash16f")
+    sig_root = _mm_store_root(sf_dir, "ahash16g")
     comp_root = _mm_store_root(sf_dir, "imgcomp")
     payload = _mm_payload(spark, sf_dir)
     # both seeds marker-gated (r7 ADVICE medium): a partial seed — e.g.

@@ -22,30 +22,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-__all__ = ["write_partitioned", "write_bucketed_table",
+__all__ = ["write_bucketed_table",
            "write_corpus", "read_corpus"]
-
-
-def write_partitioned(df: DataFrame, path: str,
-                      partition_by: Sequence[str] = (),
-                      sort_by: Sequence[str] = ("ts",),
-                      mode: str = "overwrite") -> None:
-    """Write hive-partitioned parquet with in-file sort.
-
-    ``repartition(partition_by)`` puts each hive partition's rows in one
-    task (one file per partition instead of tasks×partitions small
-    files); ``sortWithinPartitions(sort)`` orders rows so row-group stats
-    are tight for time-range pruning.
-    """
-    work = df
-    if partition_by:
-        work = work.repartition(*partition_by)
-    if sort_by:
-        work = work.sortWithinPartitions(*partition_by, *sort_by)
-    writer = work.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def write_bucketed_table(df: DataFrame, table: str,

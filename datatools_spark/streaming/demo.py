@@ -428,19 +428,17 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
     Returns the started query (availableNow trigger; caller awaits)."""
     from pyspark.errors import AnalysisException
 
+    from ..operators import storage
     from ..operators.ivfstore import ivf_index_search, update_ivf_index
-    from ..operators.sigstore import _is_path_missing
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
         try:
-            # resolve the committed generation (r7 ivfstore protocol);
-            # pre-generation bare layouts resolve to index_path itself
-            from ..operators.ivfstore import _resolve_root
-            stored = sess.read.parquet(
-                f"{_resolve_root(sess, index_path)}/data").select(id_col)
+            # resolve the committed generation (storage protocol)
+            root = storage.live_dir(sess, index_path, storage.GEN)
+            stored = sess.read.parquet(f"{root}/data").select(id_col)
         except AnalysisException as exc:
-            if not _is_path_missing(exc):
+            if not storage.is_path_missing(exc):
                 raise
             raise ValueError(
                 f"streaming_embedding_ingest: no index at {index_path} — "
@@ -488,8 +486,8 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
     from pyspark.errors import AnalysisException
 
     from ..operators.compstore import update_component_store
+    from ..operators import storage
     from ..operators.ivfstore import ivf_index_search, update_ivf_index
-    from ..operators.sigstore import _is_path_missing
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
@@ -497,13 +495,11 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
         if batch_df.isEmpty():
             return
         try:
-            # resolve the committed generation (r7 ivfstore protocol);
-            # pre-generation bare layouts resolve to index_path itself
-            from ..operators.ivfstore import _resolve_root
-            stored = sess.read.parquet(
-                f"{_resolve_root(sess, index_path)}/data").select(id_col)
+            # resolve the committed generation (storage protocol)
+            root = storage.live_dir(sess, index_path, storage.GEN)
+            stored = sess.read.parquet(f"{root}/data").select(id_col)
         except AnalysisException as exc:
-            if not _is_path_missing(exc):
+            if not storage.is_path_missing(exc):
                 raise
             raise ValueError(
                 f"streaming_embedding_ingest_components: no index at "
@@ -685,9 +681,6 @@ def streaming_kmv_ingest(items: DataFrame, store_dir: str,
     caller awaits)."""
     from ..operators.sketches import update_kmv_store
 
-    from ..operators.sketches import _group_cols_list
-    group_cols = _group_cols_list(group_cols)
-
     def _fold(batch_df: DataFrame, batch_id: int):
         update_kmv_store(batch_df.sparkSession, batch_df, store_dir,
                          group_cols, item_col, k=k, salt=salt)
@@ -754,9 +747,6 @@ def streaming_value_sample_ingest(rows: DataFrame, store_dir: str,
     ``sample_quantile_col`` — no corpus rescan, no global sort.
     Returns the started query (availableNow trigger; caller awaits)."""
     from ..operators.sketches import update_value_sample_store
-
-    from ..operators.sketches import _group_cols_list
-    group_cols = _group_cols_list(group_cols)
 
     def _fold(batch_df: DataFrame, batch_id: int):
         update_value_sample_store(batch_df.sparkSession, batch_df,

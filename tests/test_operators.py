@@ -832,6 +832,13 @@ class TestKMV:
         got3 = {r["g"]: r["vs"] for r in
                 read_value_sample_store(spark, path).collect()}
         assert got3 == want
+        # a foreign dir under the store (an operator's copy) is not a
+        # snapshot: the read and the next update still succeed
+        shutil.copytree(f"{path}/{snaps[-1]}", f"{path}/{snaps[-1]}-tmp")
+        update_value_sample_store(spark, b2, path, ["g"], "id", "v", k=k)
+        got4 = {r["g"]: r["vs"] for r in
+                read_value_sample_store(spark, path).collect()}
+        assert got4 == want
 
     def test_kmv_store_incremental_equals_full(self, spark, tmp_path):
         """Three batch updates (overlapping items, new groups mid-way)
@@ -865,6 +872,18 @@ class TestKMV:
         again = {r["g"]: r["hs"]
                  for r in read_kmv_store(spark, path).collect()}
         assert again == got
+        # a foreign dir under the store (an operator's copy) is not a
+        # snapshot: the read and the next update still succeed
+        import os
+        import shutil
+        last = max(int(d[5:]) for d in os.listdir(path)
+                   if d[5:].isdigit())
+        shutil.copytree(f"{path}/kmv-b{last}", f"{path}/kmv-b{last}.bak")
+        assert {r["g"]: r["hs"]
+                for r in read_kmv_store(spark, path).collect()} == got
+        update_kmv_store(spark, b3, path, ["g"], "item", k=k)
+        assert {r["g"]: r["hs"]
+                for r in read_kmv_store(spark, path).collect()} == got
 
     def test_kmv_store_null_group_key_merges_not_forks(self, spark,
                                                        tmp_path):
@@ -978,6 +997,18 @@ class TestKMV:
         got2 = {(r["row"], r["bucket"]): r["c"]
                 for r in read_cms_store(spark, path).collect()}
         assert got2 == want
+        # a foreign dir under the store (an operator's copy) is not a
+        # snapshot: the read and the next update still succeed
+        shutil.copytree(f"{path}/{snaps[-1]}", f"{path}/{snaps[-1]}.bak")
+        b4 = mk(1500, 1600)
+        assert update_cms_store(spark, b4, path, "item", 4)["skipped"] \
+            is False
+        got3 = {(r["row"], r["bucket"]): r["c"]
+                for r in read_cms_store(spark, path).collect()}
+        assert got3 == {(r["row"], r["bucket"]): r["c"]
+                        for r in cms_build(
+                            b1.unionByName(b2).unionByName(b3)
+                            .unionByName(b4), "item").collect()}
 
     def test_cms_store_writer_scoping_geometry_and_flat_ledger(
             self, spark, tmp_path):

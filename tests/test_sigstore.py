@@ -18,6 +18,13 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def _read_store(spark, path):
+    """The live signature table (a store is generational from its first
+    write, so the table is under a committed gen-N, not at ``path``)."""
+    from datatools_spark.operators.sigstore import resolve_signature_root
+    return spark.read.parquet(resolve_signature_root(spark, path))
+
+
 def _corpus(tag, base, n, dup_of=None):
     out = []
     for i in range(n):
@@ -114,7 +121,7 @@ def test_image_store_tombstones_undecodable_ids(spark, tmp_path,
     b = mk(rows)
     path = str(tmp_path / "imgstore")
     assert update_image_signature_store(spark, b, path) == 7
-    df = spark.read.parquet(path)
+    df = _read_store(spark, path)
     assert df.count() == 11               # 7 signatures + 4 tombstones
     tomb = df.where("ahash64 is null")
     assert tomb.count() == 4
@@ -145,7 +152,7 @@ def test_image_store_tombstones_undecodable_ids(spark, tmp_path,
     p3 = str(tmp_path / "imgstore3")
     b3 = mk([(0, full[0]), (1, b"q")])
     assert update_image_signature_store(spark, b3, p3, grid=16) == 1
-    d3 = spark.read.parquet(p3)
+    d3 = _read_store(spark, p3)
     assert d3.where("ahash_w is null").count() == 1
     assert dict(d3.dtypes)["ahash_w"] == "array<bigint>"
 
@@ -227,13 +234,15 @@ def test_snapshot_stats_serve_audit_and_pair_corners(spark, tmp_path):
 
 
 def test_store_empty_dir_propagates_not_first_write(spark, tmp_path):
-    # an empty (partially-written) store dir must RAISE, not be silently
-    # treated as first write (which would append duplicate signatures)
+    # a committed generation holding no data files (partially written or
+    # emptied) must RAISE, not be silently treated as first write (which
+    # would append duplicate signatures)
     import os
     import pytest
     from pyspark.errors import AnalysisException
     path = str(tmp_path / "emptystore")
-    os.makedirs(path)
+    os.makedirs(f"{path}/gen-000000")
+    open(f"{path}/gen-000000/_COMMIT", "w").close()
     b = _docs(spark, _corpus("w", 0, 3))
     with pytest.raises(AnalysisException):
         update_signature_store(spark, b, path)
@@ -251,7 +260,7 @@ def test_image_store_is_packed_and_width_checked(spark, tmp_path):
              for i in range(5)])
     path = str(tmp_path / "imgstore")
     assert update_image_signature_store(spark, b1, path) == 5
-    df = spark.read.parquet(path)
+    df = _read_store(spark, path)
     assert dict(df.dtypes)["ahash64"] == "bigint"   # packed, not string
     # a second geometry is rejected at WRITE time (r4: fail before the
     # store is poisoned, not on the next read)
@@ -290,7 +299,7 @@ def test_image_store_wide_256bit_equals_full_pairs(spark, tmp_path):
     assert update_image_signature_store(spark, b1, path, grid=16) == 12
     assert update_image_signature_store(spark, b1, path, grid=16) == 0
     assert update_image_signature_store(spark, b2, path, grid=16) == 9
-    df = spark.read.parquet(path)
+    df = _read_store(spark, path)
     assert dict(df.dtypes)["ahash_w"] == "array<bigint>"
 
     got = {(r["a_id"], r["b_id"]): r["hamming"]
@@ -329,12 +338,13 @@ def test_store_rejects_bad_geometry_and_mixed_append(spark, tmp_path):
 
 def test_compact_image_store_preserves_pairs_and_bounds_files(
         spark, tmp_path):
-    """compact_signature_store: N updates leave ~N files per touched
-    partition; compaction rewrites ONE file per partition in a fresh
-    committed generation, pair results are identical, later updates
-    append into the new generation, a second compaction retains the
-    previous generation (two-snapshot policy), and a markerless
-    (crashed) generation stays invisible."""
+    """compact_signature_store: N updates leave ~N files in the live
+    generation; compaction rewrites them into right-sized files in a
+    fresh committed generation, pair results are identical, later
+    updates append into the new generation, a second compaction retains
+    the previous generation (two-snapshot policy), and a markerless
+    (crashed) generation stays invisible. The first update already
+    wrote gen-000000, so compactions number from gen-000001."""
     import os
     import random
     from datatools_spark.operators.sigstore import (
@@ -372,17 +382,9 @@ def test_compact_image_store_preserves_pairs_and_bounds_files(
                         ahash_pairs_against_store(spark, allb, path)
                         .collect()))
     res = compact_signature_store(spark, path)
-    assert res["generation"] == "gen-000000"
+    assert res["generation"] == "gen-000001"
     assert res["files_after"] < res["files_before"]
-    assert resolve_signature_root(spark, path).endswith("gen-000000")
-    # legacy top-level table RETAINED one compaction (two-snapshot
-    # policy — an in-flight reader of the just-retired bare root keeps
-    # working; writing gen-0 beneath a bare table it replaces used to
-    # happen in place, where a crash pre-commit bricked every read
-    # with 'Conflicting directory structures'). r12 flat layout: the
-    # retired bare table is flat part- files, not _pp=* dirs
-    assert [f for f in os.listdir(path) if f.startswith("part-")]
-    assert not [d for d in os.listdir(path) if d.startswith(".staging")]
+    assert resolve_signature_root(spark, path).endswith("gen-000001")
     after = sorted(map(tuple,
                        ahash_pairs_against_store(spark, allb, path)
                        .collect()))
@@ -393,15 +395,14 @@ def test_compact_image_store_preserves_pairs_and_bounds_files(
     assert update_image_signature_store(spark, nb, path) == 0
     assert ahash_pairs_against_store(spark, nb, path).count() >= 0
     # second compaction: new generation, previous one retained, the
-    # legacy bare table now pruned (no reader can still resolve it)
+    # one before it retired
     res2 = compact_signature_store(spark, path)
-    assert res2["generation"] == "gen-000001"
-    assert os.path.isdir(f"{path}/gen-000000")
-    assert not [f for f in os.listdir(path) if f.startswith("part-")
-                or f.startswith("_pp=")]
+    assert res2["generation"] == "gen-000002"
+    assert os.path.isdir(f"{path}/gen-000001")
+    assert not os.path.isdir(f"{path}/gen-000000")
     # crashed compaction: a markerless newer generation is invisible
     os.makedirs(f"{path}/gen-000005")
-    assert resolve_signature_root(spark, path).endswith("gen-000001")
+    assert resolve_signature_root(spark, path).endswith("gen-000002")
     assert sorted(map(tuple,
                       ahash_pairs_against_store(spark, allb, path)
                       .collect())) == before
@@ -443,13 +444,15 @@ def test_mm_store_twin_reseeds_partial_store(spark, tmp_path, monkeypatch):
     sf = "/root/testdata/sf0.001"
     r1 = sorted(map(tuple,
                     Q.QUERIES["mm_ahash_pairs_store"](spark, sf).collect()))
-    root = Q._mm_store_root(sf, "ahash16f")
+    root = Q._mm_store_root(sf, "ahash16g")
     assert os.path.isfile(os.path.join(root, "_SEEDED"))
-    # crash injection: marker gone + a signature data file lost
-    # (r12 flat layout: data files live at the root, no _pp=* dirs)
+    # crash injection: marker gone + a signature data file lost (data
+    # files live in the live generation under the root)
+    from datatools_spark.operators.sigstore import resolve_signature_root
+    live = resolve_signature_root(spark, root)
     os.remove(os.path.join(root, "_SEEDED"))
-    part = [f for f in os.listdir(root) if f.startswith("part-")][0]
-    os.remove(os.path.join(root, part))
+    part = [f for f in os.listdir(live) if f.startswith("part-")][0]
+    os.remove(os.path.join(live, part))
     r2 = sorted(map(tuple,
                     Q.QUERIES["mm_ahash_pairs_store"](spark, sf).collect()))
     assert r2 == r1
@@ -468,11 +471,11 @@ def test_mm_corpus_fingerprint_changes_on_regeneration(tmp_path):
     shutil.copy2("/root/testdata/sf0.001/documents.parquet",
                  corpus / "documents.parquet")
     f1 = Q._mm_corpus_fingerprint(str(corpus))
-    root1 = Q._mm_store_root(str(corpus), "ahash16f")
+    root1 = Q._mm_store_root(str(corpus), "ahash16g")
     os.utime(corpus / "documents.parquet", None)   # regenerated: new mtime
     f2 = Q._mm_corpus_fingerprint(str(corpus))
     assert f1 != f2
-    assert Q._mm_store_root(str(corpus), "ahash16f") != root1
+    assert Q._mm_store_root(str(corpus), "ahash16g") != root1
 
 
 def test_ivf_index_search_equals_inline_and_prunes(spark, tmp_path):
@@ -514,17 +517,17 @@ def test_ivf_index_search_equals_inline_and_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "centroid_id" in plan
 
 
-def test_ivf_index_crashed_rebuild_invisible_and_legacy_migrates(
-        spark, tmp_path):
+def test_ivf_index_crashed_rebuild_invisible(spark, tmp_path):
     """Generation protocol: a rebuild that dies before its _COMMIT
     marker leaves readers on the previous committed index (the old
-    two-overwrite layout made the torn state silently readable), a
-    committed rebuild supersedes and prunes, and a pre-generation
-    (bare data/+centroids/) store stays readable until migrated."""
+    two-overwrite layout made the torn state silently readable), and a
+    committed rebuild supersedes and retires."""
+    import os
     import random
+    from datatools_spark.operators import storage
     from datatools_spark.operators.ivfstore import (
-        _resolve_root, build_ivf_index, ivf_index_search,
-        ivf_index_stats, update_ivf_index)
+        build_ivf_index, ivf_index_search, ivf_index_stats,
+        update_ivf_index)
     rnd = random.Random(7)
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(4)])
             for i in range(60)]
@@ -534,32 +537,6 @@ def test_ivf_index_crashed_rebuild_invisible_and_legacy_migrates(
         "centroid_id long, embedding array<double>")
     q = emb.where("vec_id = 0").select(
         F.col("vec_id").alias("query_id"), "embedding")
-
-    # legacy layout: tables at the bare path, no generation dirs
-    legacy = str(tmp_path / "legacy")
-    from datatools_spark.operators.similarity import ivf_assign
-    ivf_assign(emb, cents, keep_vec=True) \
-        .select("vec_id", "embedding", "centroid_id") \
-        .write.partitionBy("centroid_id").parquet(f"{legacy}/data")
-    cents.write.parquet(f"{legacy}/centroids")
-    assert _resolve_root(spark, legacy) == legacy
-    baseline = {(r["rank"], r["vec_id"]) for r in
-                ivf_index_search(spark, legacy, q, k=3).collect()}
-    assert baseline
-    # first build over the legacy store migrates it into gen-000000;
-    # the bare tables are RETAINED one build (two-snapshot policy — an
-    # in-flight reader of the bare root keeps working) and pruned on
-    # the next build
-    build_ivf_index(spark, emb, cents, legacy)
-    assert _resolve_root(spark, legacy).endswith("gen-000000")
-    import os
-    assert os.path.isdir(f"{legacy}/data")          # retained one build
-    assert {(r["rank"], r["vec_id"]) for r in
-            ivf_index_search(spark, legacy, q, k=3).collect()} == baseline
-    build_ivf_index(spark, emb, cents, legacy)
-    assert not os.path.isdir(f"{legacy}/data")      # pruned on the next
-    assert {(r["rank"], r["vec_id"]) for r in
-            ivf_index_search(spark, legacy, q, k=3).collect()} == baseline
 
     # crashed rebuild: a newer generation WITHOUT the marker must be
     # invisible to search, stats, and update
@@ -573,7 +550,7 @@ def test_ivf_index_crashed_rebuild_invisible_and_legacy_migrates(
     emb.where("vec_id >= 58").select(
         "vec_id", "embedding", F.lit(0).alias("centroid_id")) \
         .write.partitionBy("centroid_id").parquet(f"{torn}/data")
-    assert _resolve_root(spark, path).endswith("gen-000000")
+    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000000")
     assert {(r["rank"], r["vec_id"]) for r in
             ivf_index_search(spark, path, q, k=3).collect()} == good
     assert ivf_index_stats(spark, path).count() == 3
@@ -585,55 +562,25 @@ def test_ivf_index_crashed_rebuild_invisible_and_legacy_migrates(
     # loops resolve the root per micro-batch, so an in-flight reader
     # of the just-retired generation must still find it (r7 ADVICE)
     build_ivf_index(spark, emb, cents, path)
-    assert _resolve_root(spark, path).endswith("gen-000002")
+    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000002")
     assert os.path.isdir(f"{path}/gen-000000")          # retained
     # the NEXT rebuild retires it: only (new, previous) remain
     build_ivf_index(spark, emb, cents, path)
-    assert _resolve_root(spark, path).endswith("gen-000003")
+    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000003")
     assert not os.path.isdir(f"{path}/gen-000000")
     assert os.path.isdir(f"{path}/gen-000002")
 
 
-def test_compact_legacy_crash_leaves_store_readable(spark, tmp_path):
-    """A compaction that dies before its commit RENAME leaves only an
-    invisible dot-prefixed staging orphan: bare-path reads, updates and
-    a retried compaction all keep working. (The old in-place gen write
-    put data-bearing gen-0/_pp=* beneath the live bare table — Spark's
-    partition discovery then failed every read with 'Conflicting
-    directory structures', permanently.)"""
-    import os
-
-    from datatools_spark.operators.sigstore import (
-        compact_signature_store, lsh_pairs_against_store,
-        resolve_signature_root, update_signature_store)
-    path = str(tmp_path / "txtstore")
-    docs = spark.createDataFrame(
-        [(i, f"shared prefix words {i % 4} tail {i}") for i in range(20)],
-        "doc_id long, text string")
-    update_signature_store(spark, docs, path)
-    # simulate the crash window: a staged, uncommitted generation
-    os.makedirs(f"{path}/.staging-gen-000000/_pp=1", exist_ok=True)
-    with open(f"{path}/.staging-gen-000000/_pp=1/part-0.parquet", "wb") as fh:
-        fh.write(b"torn")
-    assert resolve_signature_root(spark, path) == path
-    assert update_signature_store(spark, docs, path) == 0   # still reads
-    assert lsh_pairs_against_store(spark, docs, path).count() >= 0
-    res = compact_signature_store(spark, path)              # retry works
-    assert res["generation"] == "gen-000000"
-    assert resolve_signature_root(spark, path).endswith("gen-000000")
-
-
-def test_image_store_flat_layout_and_legacy_append(spark, tmp_path):
-    """r12 store layout: new image stores write FLAT right-sized files
+def test_image_store_flat_layout(spark, tmp_path):
+    """r12 store layout: image stores write FLAT right-sized files
     (_pp as a plain column — no reader ever partition-prunes on it, and
     the hive fan-out cost every scan ~0.55 s of per-file opens at
-    sf0.1); a pre-r12 hive-partitioned store keeps receiving
-    partitioned appends (mixing layouts breaks partition discovery)."""
+    sf0.1) into the live generation."""
     import os
     import random
-    from pyspark.sql import functions as F
     from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, update_image_signature_store)
+        ahash_pairs_against_store, resolve_signature_root,
+        update_image_signature_store)
 
     def img(seed):
         r = random.Random(seed)
@@ -642,35 +589,23 @@ def test_image_store_flat_layout_and_legacy_append(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(  # noqa: E731
         rows, "media_id long, payload binary")
 
-    # NEW store: flat — one data file per small update, no _pp= dirs,
-    # _pp present as a data column
-    flat = str(tmp_path / "flatstore")
+    # flat — one data file per small update, no _pp= dirs, _pp present
+    # as a data column
+    store = str(tmp_path / "flatstore")
     assert update_image_signature_store(
-        spark, mk([(i, img(i)) for i in range(8)]), flat) == 8
+        spark, mk([(i, img(i)) for i in range(8)]), store) == 8
+    flat = resolve_signature_root(spark, store)
+    assert flat.endswith("gen-000000")
     assert not [d for d in os.listdir(flat) if d.startswith("_pp=")]
     assert len([f for f in os.listdir(flat)
                 if f.startswith("part-")]) == 1
     assert "_pp" in spark.read.parquet(flat).columns
     assert update_image_signature_store(
-        spark, mk([(8, img(8))]), flat) == 1
+        spark, mk([(8, img(8))]), store) == 1
     assert len([f for f in os.listdir(flat)
                 if f.startswith("part-")]) == 2
     assert ahash_pairs_against_store(
-        spark, mk([(8, img(8))]).select("media_id"), flat).count() >= 0
-
-    # LEGACY store: simulate the pre-r12 hive layout, then append — the
-    # update must keep the partitioned shape
-    leg = str(tmp_path / "legacystore")
-    (spark.range(4).select(
-        F.col("id").alias("media_id"),
-        (F.col("id") * 7 + 1).alias("ahash64"),
-        F.lit(64).alias("_nbits"),
-        (F.col("id") % 3).cast("int").alias("_pp"))
-     .write.partitionBy("_pp").parquet(leg))
-    assert update_image_signature_store(
-        spark, mk([(100, img(100))]), leg) == 1
-    assert [d for d in os.listdir(leg) if d.startswith("_pp=")]
-    assert not [f for f in os.listdir(leg) if f.startswith("part-")]
+        spark, mk([(8, img(8))]).select("media_id"), store).count() >= 0
 
 
 def test_warm_batch_job_floor_pinned(spark, tmp_path):

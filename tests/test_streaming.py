@@ -453,9 +453,10 @@ def test_streaming_embedding_ingest_finds_cross_batch_neardups(spark, tmp_path):
     q = streaming_embedding_ingest(stream, idx, matches, ckpt,
                                    threshold=0.95)
     q.awaitTermination(180)
-    from datatools_spark.operators.ivfstore import _resolve_root
+    from datatools_spark.operators import storage
     idx_ids = {r["vec_id"] for r in
-               spark.read.parquet(f"{_resolve_root(spark, idx)}/data")
+               spark.read.parquet(
+                   f"{storage.live_dir(spark, idx, storage.GEN)}/data")
                .select("vec_id").collect()}
     assert idx_ids == {i for i, _ in b1} | {i for i, _ in b2}
     got = spark.read.parquet(matches).collect()
@@ -928,8 +929,8 @@ def test_streaming_cms_restart_replays_uncommitted_batch_exactly_once(
     build of A ∪ B, and the ledger watermark advanced to 1."""
     import os
 
-    from datatools_spark.operators.sketches import (
-        _kmv_snapshots, cms_build, read_cms_store)
+    from datatools_spark.operators import storage
+    from datatools_spark.operators.sketches import cms_build, read_cms_store
     from datatools_spark.streaming.demo import streaming_cms_ingest
 
     schema = "item string"
@@ -980,7 +981,8 @@ def test_streaming_cms_restart_replays_uncommitted_batch_exactly_once(
            for r in read_cms_store(spark, store).collect()}
     assert got == want  # replayed batch 0 skipped, batch 1 folded once
 
-    last = _kmv_snapshots(spark, store, prefix="cms-b")[-1]
+    last = storage.latest(spark, store,
+                          storage.Layout("cms-b", "_SUCCESS"))
     state = spark.read.parquet(f"{store}/cms-b{last}/state").collect()
     assert [(r["app_id"], r["last_id"]) for r in state] == [(ck, 1)]
 
