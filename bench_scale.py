@@ -234,7 +234,8 @@ def main() -> None:
             f"with the first ~2 s being fixed codegen/session overhead that "
             f"amortizes away — and the loop is single-core by construction "
             f"while the Spark plan partitions across any cluster; its only "
-            f"full-data shuffle is the per-bucket median (approx=True removes "
+            f"full-data shuffle is the per-bucket median "
+            f"(median_mode='approx' removes "
             f"even that via partially-aggregatable sketches).\n")
         fh.write(preserved)
     print(json.dumps({"metric": "kernel_scale_sweep", "results": results}))

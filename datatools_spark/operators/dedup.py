@@ -92,8 +92,8 @@ def shingle_index(df: DataFrame, text_col: str = "text",
     ``(_sh, _df)`` — the document frequency per shingle. The first call
     per corpus in a session pays the corpus scan + tokenize + explode
     (+ one vocab-sized aggregate); subsequent calls for the same corpus
-    read the checkpoint blocks. EAGER for the same reason
-    :func:`_pair_intersections` is: the consumers evaluate the index in
+    read the checkpoint blocks. EAGER (see
+    :func:`_pair_intersections`): the consumers evaluate the index in
     multiple branches of one job, and the guarded plan's SHAPE depends
     on data (stop-set emptiness), which no lazy form can express.
     """
@@ -186,13 +186,12 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 16,
                       bands: int = 4, shingle_n: int = 3,
-                      threshold: float = 0.5,
-                      cache_signatures: bool = True) -> DataFrame:
+                      threshold: float = 0.5) -> DataFrame:
     """Candidate pairs via banded LSH, verified with estimated Jaccard
     (fraction of agreeing minhashes).
 
-    Plan: signatures (computed ONCE — checkpoint-materialized unless
-    ``cache_signatures=False``, since three subtrees consume them) →
+    Plan: signatures (computed ONCE and checkpoint-materialized, since
+    three subtrees consume them) →
     ids-only band index → self-equi-join on (band, key) → distinct narrow
     pairs → verify by joining the candidate set (small; AQE broadcasts
     it) back against the materialized signatures twice. Shuffles scale
@@ -215,11 +214,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     sig = sig.select(
         F.col(id_col),
         F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("_sig"))
-    if cache_signatures:
-        # EAGER: a lazy checkpoint materializes only at first-job end, so
-        # the three sig-consuming branches inside one job would each
-        # recompute the signature aggregation
-        sig = sig.localCheckpoint(eager=True)
+    # EAGER: a lazy checkpoint materializes only at first-job end, so
+    # the three sig-consuming branches inside one job would each
+    # recompute the signature aggregation
+    sig = sig.localCheckpoint(eager=True)
     rows_per_band = num_hashes // bands
     # band key = ONE xxhash64 long over (band, minhashes) — not the
     # ~40-byte per-value string concat it replaces (r11, staked by
@@ -875,32 +873,19 @@ def pair_plan_stats_from_dfreq(dfreq: DataFrame) -> dict:
     return {k: int(v) for k, v in row.asDict().items()}
 
 
-def _resolve_max_df(sh: DataFrame, max_df,
-                    checkpointed: bool = False,
-                    dfreq: DataFrame | None = None):
-    """Turn ``max_df="auto"`` into a measured plan choice. Returns
-    ``(sh, max_df, checkpointed, dfreq)`` — the auto path checkpoints
-    the index first so the stats aggregate and the pair engine share
-    one materialization, and hands the materialized df histogram to
-    the engine so the stop-shingle guard never re-aggregates the index.
-    Callers holding a :func:`shingle_index` materialization pass it
-    through ``checkpointed``/``dfreq`` and no extra pass runs. Refuses
+def _resolve_max_df(sh: DataFrame, max_df, dfreq: DataFrame):
+    """Turn ``max_df="auto"`` into a measured plan choice over a
+    materialized :func:`shingle_index` pair ``(sh, dfreq)``. Returns
+    ``(sh, max_df, dfreq)``: the stats aggregate reads the materialized
+    df histogram, so no extra pass over the index runs. Refuses
     (ValueError) when even the tightest guard
     leaves the candidate mass over budget: that corpus is past the
     exact tier's envelope and belongs on :func:`minhash_lsh_pairs` —
     the same fail-fast contract as the banded engine's pre-flight."""
     if max_df != "auto":
-        return sh, max_df, checkpointed, dfreq
+        return sh, max_df, dfreq
     from ..plans.chooser import (MAX_DF_LADDER, PAIR_MASS_FACTOR,
                                  choose_pair_plan)
-    if not checkpointed:
-        sh = sh.localCheckpoint(eager=True)
-    # ONE df-histogram aggregation serves the stats collect AND the
-    # engine's stop-shingle guard below (vocab-sized materialization;
-    # previously both ran a full groupBy over the posting index)
-    if dfreq is None:
-        dfreq = sh.groupBy("_sh").agg(F.count("*").alias("_df")) \
-            .localCheckpoint(eager=True)
     stats = pair_plan_stats_from_dfreq(dfreq)
     plan, k = choose_pair_plan(stats)
     if plan == "lsh":
@@ -914,13 +899,12 @@ def _resolve_max_df(sh: DataFrame, max_df,
             "the exact tier's design envelope; use minhash_lsh_pairs "
             "(the 100 TB near-dup path) or pass an explicit max_df to "
             "override")
-    return sh, k, True, dfreq
+    return sh, k, dfreq
 
 
 def _pair_intersections(sh: DataFrame, id_col: str,
                         max_df: int | None,
-                        checkpointed: bool = False,
-                        dfreq: DataFrame | None = None) -> DataFrame:
+                        dfreq: DataFrame) -> DataFrame:
     """Shared engine for set-overlap pair ops: from an exploded
     (id, _sh) inverted index, produce every unordered pair (a < b)
     sharing >= 1 (non-stop) shingle with its EXACT full-set
@@ -932,29 +916,17 @@ def _pair_intersections(sh: DataFrame, id_col: str,
     the stop-shingle correction join restores exact counts, and the
     bounded posting-list pair generation keeps it to one index shuffle.
 
-    The exploded index feeds THREE subtrees (df guard, per-doc sizes,
-    pair generation), so it is materialized ONCE here — without the
-    checkpoint each branch re-runs the scan + regex shingle explode,
-    which was ~40% of doc_containment_pairs' task time at sf0.1 (r9).
-    Same linear-cost trade the weighted-jaccard query already makes:
-    one corpus-sized index write replaces three corpus-sized
-    recomputes. localCheckpoint, not persist (r5 hygiene rule).
-
-    API CONTRACT: the checkpoint is EAGER, so the pair ops built on
-    this engine (ngram_jaccard_pairs / containment_pairs /
-    weighted-jaccard) execute their corpus scan AT CONSTRUCTION, not at
-    the caller's first action — callers composing a plan they may never
-    run should defer the call, not the returned DataFrame. Eager is
-    deliberate: a lazy localCheckpoint only materializes at first-job
-    END, so the guarded path's stop-probe plus each downstream branch
-    within the first job would re-run the scan+explode (~40% of
-    doc_containment_pairs' task time, r9-measured) — and with max_df
-    set the plan SHAPE itself depends on the data (stop.isEmpty()),
-    which no lazy formulation can express.
+    ``(sh, dfreq)`` is the materialized :func:`shingle_index` pair: the
+    exploded index feeds THREE subtrees (df guard, per-doc sizes, pair
+    generation), so without the checkpoint each branch would re-run the
+    scan + regex shingle explode (~40% of doc_containment_pairs' task
+    time at sf0.1, r9), and the guarded plan's SHAPE depends on the data
+    (stop.isEmpty()), which no lazy formulation can express. The pair
+    ops built on this engine (ngram_jaccard_pairs / containment_pairs /
+    weighted-jaccard) therefore execute their corpus scan AT
+    CONSTRUCTION — callers composing a plan they may never run should
+    defer the call, not the returned DataFrame.
     """
-    if not checkpointed:
-        sh = sh.localCheckpoint(eager=True)
-
     def _pair_counts_bounded(idx: DataFrame, out: str) -> DataFrame:
         # per-shingle posting LIST + in-array pair explode: generates the
         # same (a<b, count) table as the self-join but shuffles the index
@@ -975,8 +947,6 @@ def _pair_intersections(sh: DataFrame, id_col: str,
 
     stop = None
     if max_df is not None:
-        if dfreq is None:
-            dfreq = sh.groupBy("_sh").agg(F.count("*").alias("_df"))
         # stop set is small by construction (only ultra-common shingles
         # exceed max_df — the Zipf head). Persist + probe it eagerly: the
         # agg is one map-side-combinable pass the plan needs anyway (the
@@ -1080,11 +1050,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # ensure_parallelism(min_bytes=0) spread is the r9-measured guard
     # (single-task shuffle write doubled the query: 2.8 → 5.6 s).
     sh, dfreq = shingle_index(df, text_col, id_col, shingle_n)
-    sh, max_df, ckpt, dfreq = _resolve_max_df(sh, max_df,
-                                              checkpointed=True,
-                                              dfreq=dfreq)
-    base = _pair_intersections(sh, id_col, max_df, checkpointed=ckpt,
-                               dfreq=dfreq)
+    sh, max_df, dfreq = _resolve_max_df(sh, max_df, dfreq)
+    base = _pair_intersections(sh, id_col, max_df, dfreq)
     jacc = (F.col("_inter").cast("double")
             / (F.col("_na") + F.col("_nb") - F.col("_inter")))
     return (base.withColumn("jaccard", jacc)
@@ -1118,11 +1085,8 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     # explode doc_ngram_pairs / weighted-jaccard consumers already paid
     # for is reused here instead of re-run
     sh, dfreq = shingle_index(df, text_col, id_col, shingle_n)
-    sh, max_df, ckpt, dfreq = _resolve_max_df(sh, max_df,
-                                              checkpointed=True,
-                                              dfreq=dfreq)
-    base = _pair_intersections(sh, id_col, max_df, checkpointed=ckpt,
-                               dfreq=dfreq)
+    sh, max_df, dfreq = _resolve_max_df(sh, max_df, dfreq)
+    base = _pair_intersections(sh, id_col, max_df, dfreq)
 
     i = F.col("_inter").cast("double")
     # both directions from ONE evaluation of the pair engine: a union of

@@ -40,10 +40,8 @@ from .graph_triangle import triangle_stats  # noqa: E402,F401
 
 def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
              iters: int = 3, damping: float = 0.85,
-             round_dp: int = 9, assume_distinct: bool = False,
-             materialize_per_round: bool = True,
-             edges_materialized: bool = False,
-             defer_last_round: bool = False) -> DataFrame:
+             round_dp: int = 9, assume_distinct: bool = False
+             ) -> DataFrame:
     """PageRank on a directed edge list where EVERY node has at least
     one out-edge (symmetrize first when that is not guaranteed —
     dangling-mass redistribution is deliberately out of scope so the
@@ -51,49 +49,39 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
 
     The canonical Pregel-on-DataFrames shape: per iteration ONE
     shuffle-join of the rank vector (which carries ``_outdeg`` with it)
-    onto the checkpointed edge list keyed on source, ONE map-side
-    combinable ``groupBy(dst).sum``, and one node-sized broadcast-scale
-    left join of contributions back onto the degree frame (keeps rank
-    rows for in-degree-0 nodes) — rank state never leaves the cluster
-    and is one row per node; the only driver scalar is N. (A self-loop
+    onto the edge list keyed on source, ONE map-side combinable
+    ``groupBy(dst).sum``, and one node-sized broadcast-scale left join
+    of contributions back onto the degree frame (keeps rank rows for
+    in-degree-0 nodes) — rank state never leaves the cluster and is one
+    row per node; the only driver scalar is N. (A self-loop
     augmentation that folds the left join into the aggregate was A/B
     tested and is ~1.5× SLOWER at sf0.1 — the left join is
     broadcast-cheap while the widened union+conditional-agg scan is
-    not.) By default every round ends in an EAGER ``localCheckpoint``
-    (``materialize_per_round=True``): each round runs ONCE as its own
-    shallow AQE plan, because executing the nested 3-round tree costs
-    ~1 s of pure AQE re-planning at sf0.1 local[32] (r7 VERDICT #7,
-    A/B'd: per-round 2.4 s vs nested-lazy 3.4 s min-of-3 end-to-end;
-    lazy per-round checkpoints are NOT an option — under AQE,
-    ``toRdd`` materializes query stages, so a "lazy" checkpoint runs
-    the jobs at construction anyway). The trade is that CONSTRUCTION
-    now runs the iteration's jobs; plan-only callers (build, inspect,
-    never execute) pass ``materialize_per_round=False`` for the old
-    contract — zero iteration jobs at construction, iters-independent
-    job count (pinned by a job-count test), one nested plan executed at
-    action time. (The edge list and the node-degree frame are
-    checkpointed once up front either way — they feed every iteration;
-    the previous shape also materialized an edges⨝outdegree frame and
-    a separate node list: two more full-width checkpoints per call.)
+    not.)
+
+    Materialization is decided here, from the input plan. The edge
+    list and the node-degree frame feed every round: the degree frame
+    is always checkpointed, and the edge list is checkpointed unless
+    its plan already reads only checkpoint blocks
+    (``plans.chooser.is_checkpoint_backed``: projections, filters and
+    unions over ``localCheckpoint`` output), where a second copy would
+    store the same bytes again. Every round but the last ends in an
+    EAGER ``localCheckpoint``, so each runs ONCE as its own shallow AQE
+    plan: executing the nested tree costs ~1 s of pure AQE re-planning
+    at sf0.1 local[32] (r7 VERDICT #7, A/B'd: per-round 2.4 s vs
+    nested-lazy 3.4 s min-of-3 end-to-end), and a lazy checkpoint is no
+    cheaper — under AQE, ``toRdd`` materializes query stages, so it
+    runs the jobs at construction anyway. The last round is returned
+    lazy like any operator's output: the caller's action runs it, and a
+    caller fanning several actions off the result checkpoints it.
 
     Every reduction is rounded at ``round_dp`` BEFORE feeding the next
     step, so the trajectory is bit-reproducible across engines and
     partitionings (the same fixed-decimal discipline as
     operators/classifier.py) — which is what lets an unrolled SQL
     oracle hash-match the full iteration.
-
-    ``edges_materialized=True`` (r12): the caller vouches that
-    ``edges`` is checkpoint-backed (or a narrow projection/union of
-    checkpoint scans) — skips the internal edge-list checkpoint, one
-    fewer blocking job and one fewer |E|-sized materialization (the
-    per-round joins then re-evaluate the cheap projection off the
-    caller's blocks). ``defer_last_round=True`` (r12): the FINAL
-    round's checkpoint is skipped so the caller's one action executes
-    that shallow join+agg+join instead of a blocking construction job
-    paying it up front — correct for single-action consumers (the
-    bench / oracle shape); a caller fanning multiple actions off the
-    result should leave it False or re-checkpoint itself.
     """
+    from ..plans.chooser import is_checkpoint_backed
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not assume_distinct:
         # duplicate edges would double-count contributions; callers
@@ -101,14 +89,13 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
         # list unioned with its disjoint reverse) skip this full-edge
         # exchange with assume_distinct=True
         e = e.distinct()
-    # checkpoint the EDGE LIST first: deg and e_aug both derive from
-    # it, and without this each of their eager checkpoints re-executes
-    # the caller's whole edge construction (measured 2× a 4.8 s
-    # join+distinct at sf0.1 in ss_pagerank — the upstream runs once
-    # now). localCheckpoint, not cache(): a cached plan pins the
-    # session's cache registry per distinct input forever (the r5
-    # pair-engine hygiene rule); checkpoint blocks free on GC.
-    if not edges_materialized:
+    # checkpoint the EDGE LIST first: deg and every round derive from
+    # it, and without this each of their jobs re-executes the caller's
+    # whole edge construction (measured 2× a 4.8 s join+distinct at
+    # sf0.1 in ss_pagerank). localCheckpoint, not cache(): a cached
+    # plan pins the session's cache registry per distinct input forever
+    # (the r5 pair-engine hygiene rule); checkpoint blocks free on GC.
+    if not is_checkpoint_backed(e):
         e = e.localCheckpoint(eager=True)
     # ONE node-sized state frame carries both roles: (id, _outdeg) is
     # the node list AND the degree table, and the rank vector keeps
@@ -158,8 +145,7 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
                       F.round(base
                               + F.lit(damping) * F.coalesce("_s", F.lit(0.0)),
                               round_dp).alias("pr")))
-        if materialize_per_round and not (defer_last_round
-                                          and it == iters - 1):
+        if it < iters - 1:
             pr = pr.localCheckpoint(eager=True)
     return pr.select("id", "pr")
 
@@ -176,16 +162,18 @@ def connected_components(edges: DataFrame, src: str = "a_id",
     came from (edges = verified near-dup pairs), and the distributed
     loop pays 3-4 jobs per iteration — pure overhead at that size. The
     gate counts the caller's OCCURRENCE edge rows off the materialized
-    checkpoint (the count doubles as its materializing action) against
-    2 × ``small_graph_threshold``; under the gate the labels come from
-    a driver-side union-find with path compression over those raw rows
-    — direction and duplicates are free in union-find, so the small
-    path pays NO symmetrizing union and NO distinct exchange, and the
-    driver collect is bounded by 2 × threshold rows. Identical
-    min-label output. Bigger graphs take the min-label-propagation +
-    pointer-jump loop unchanged — the O(log diameter)-round plan a
-    billion-edge graph needs. Pass ``small_graph_threshold=0`` to force
-    the distributed path.
+    checkpoint (the count doubles as its materializing action): at most
+    ``small_graph_threshold`` rows take the driver path, where the
+    labels come from a union-find with path compression over those raw
+    rows — direction and duplicates are free in union-find, so the
+    small path pays NO symmetrizing union and NO distinct exchange, and
+    the driver collect is bounded by ``small_graph_threshold`` rows.
+    Occurrences are at least the distinct undirected edges, so a
+    duplicate-heavy generator merely takes the distributed path
+    earlier. Identical min-label output. Bigger graphs take the
+    min-label-propagation + pointer-jump loop unchanged — the
+    O(log diameter)-round plan a billion-edge graph needs. Pass
+    ``small_graph_threshold=0`` to force the distributed path.
     """
     # materialize the caller's edge plan ONCE (r11): a union of
     # `edges` with its own reversal evaluates the caller's whole
@@ -201,13 +189,9 @@ def connected_components(edges: DataFrame, src: str = "a_id",
     e0 = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
           .localCheckpoint(eager=False))
     # the gate counts OCCURRENCE rows (r12): driver union-find needs
-    # neither the symmetrizing union nor a distinct — edge direction
-    # and duplicates are free in union-find — so the small path used
-    # to pay a full-edge distinct EXCHANGE purely to bound the collect.
-    # Occurrences bound the collect just as well (2·threshold rows
-    # either way; a duplicate-heavy generator merely falls through to
-    # the distributed path earlier, same labels).
-    if e0.count() <= 2 * small_graph_threshold:
+    # neither the symmetrizing union nor a distinct, so the small path
+    # no longer pays a full-edge distinct EXCHANGE to bound the collect
+    if e0.count() <= small_graph_threshold:
         parent: dict = {}
 
         def find(x):

@@ -81,24 +81,20 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
 
 def update_ivf_index(spark: SparkSession, batch: DataFrame, path: str,
                      vec_col: str = "embedding", id_col: str = "vec_id",
-                     centroid_id_col: str = "centroid_id",
-                     batch_is_new: bool = False) -> int:
+                     centroid_id_col: str = "centroid_id") -> int:
     """Append a batch's vectors NOT already indexed, assigned with the
     STORED centroids (the index's geometry never silently drifts from
     its model). Idempotent per id — same contract as the signature
-    stores. ``batch_is_new=True`` skips the internal stored-id
-    anti-join for callers that already filtered the batch (the
-    streaming loop does — one store read per micro-batch); pass it only
-    with a pre-filtered batch. The assignment is localCheckpoint-
-    materialized once, so the count and the write do not each re-run
-    the anti-join + assignment plan. Returns the number of newly
-    indexed vectors."""
+    stores: the stored-id anti-join runs here, so callers hand over the
+    whole batch. The assignment is localCheckpoint-materialized once,
+    BEFORE the append: the count and the write do not each re-run the
+    anti-join + assignment plan, and the write cannot reach back into
+    the anti-join's read of the files it appends to. Returns the number
+    of newly indexed vectors."""
     root = storage.live_dir(spark, path, storage.GEN)
     cents = spark.read.parquet(f"{root}/centroids")
-    new = batch
-    if not batch_is_new:
-        existing = spark.read.parquet(f"{root}/data").select(id_col)
-        new = batch.join(existing, id_col, "left_anti")
+    existing = spark.read.parquet(f"{root}/data").select(id_col)
+    new = batch.join(existing, id_col, "left_anti")
     assigned = ivf_assign(new, cents, vec_col, id_col, centroid_id_col,
                           keep_vec=True) \
         .select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col)) \

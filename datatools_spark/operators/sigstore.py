@@ -341,7 +341,6 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
                                  path: str, width: int = 16, grid: int = 8,
                                  payload_col: str = "payload",
                                  id_col: str = "media_id",
-                                 batch_is_new: bool = False,
                                  store_snap: ImageStoreSnapshot | None
                                  = None) -> int:
     """aHash-sign the batch's images NOT already in the store and append
@@ -354,13 +353,10 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     the pair reader derives band geometry AND layout from the DATA, not
     a constant that could drift from the writer's grid (mixed widths in
     one store raise at read). ``_pp`` is the band-0 low byte.
-    Idempotent per image id; decode runs once per image ever.
-    ``batch_is_new=True`` skips the internal stored-id anti-join for
-    callers that ALREADY filtered the batch against the store (the
-    streaming ingest loop does — one store read per micro-batch, not
-    two); pass it only with such a pre-filtered batch, or duplicate
-    signatures will append. Returns the number of newly signed
-    images.
+    Idempotent per image id; decode runs once per image ever: the
+    stored-id anti-join runs here, on id columns only, so callers hand
+    over the whole batch and a replayed batch returns 0 before any
+    decode. Returns the number of newly signed images.
 
     Ids whose payload CANNOT be signed (shorter than ``width²`` bytes —
     the rows raw8_ahash drops) are recorded as TOMBSTONE rows (NULL
@@ -409,24 +405,23 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
             # the unfiltered stats — no aggregation job
             seen_widths = sorted({s[0] for s in store_snap.nbits_stats})
         _check_store_layout(existing, path, nbits, seen=seen_widths)
-        if not batch_is_new:
-            # resolve WHICH ids are new on id columns alone, so the
-            # steady-state all-seen batch never touches the payload
-            # bytes: the decode plan below would otherwise scan the
-            # batch's payload column just to anti-join every row away.
-            # Count BEFORE checkpointing (r11): the steady-state path is
-            # n == 0, where an eager checkpoint of the empty anti-join
-            # was a second driver-blocking job bought for nothing; only
-            # a batch that actually carries new ids pays the recompute
-            # (cold/first-run only, and the anti-join reads the cached
-            # store projection either way).
-            new_ids = (batch.select(id_col)
-                       .join(existing.select(id_col), id_col, "left_anti"))
-            n_in = new_ids.count()
-            if n_in == 0:
-                return 0
-            new_ids = new_ids.localCheckpoint(eager=True)
-            new = batch.join(new_ids, id_col, "left_semi")
+        # resolve WHICH ids are new on id columns alone, so the
+        # steady-state all-seen batch never touches the payload
+        # bytes: the decode plan below would otherwise scan the
+        # batch's payload column just to anti-join every row away.
+        # Count BEFORE checkpointing (r11): the steady-state path is
+        # n == 0, where an eager checkpoint of the empty anti-join
+        # was a second driver-blocking job bought for nothing; only
+        # a batch that actually carries new ids pays the recompute
+        # (cold/first-run only, and the anti-join reads the cached
+        # store projection either way).
+        new_ids = (batch.select(id_col)
+                   .join(existing.select(id_col), id_col, "left_anti"))
+        n_in = new_ids.count()
+        if n_in == 0:
+            return 0
+        new_ids = new_ids.localCheckpoint(eager=True)
+        new = batch.join(new_ids, id_col, "left_semi")
     except AnalysisException as exc:
         if not storage.is_path_missing(exc):   # first write ONLY
             raise
@@ -458,9 +453,9 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     sig = sig.localCheckpoint(eager=True)
     n = sig.count()
     if n_in is None:
-        # first write / batch_is_new: the anti-join never counted the
-        # incoming ids — one id-column count (cold/streaming path only;
-        # the steady-state all-seen update returned long before here)
+        # first write: there was no anti-join to count the incoming
+        # ids — one id-column count (cold path only; the steady-state
+        # all-seen update returned long before here)
         n_in = new.select(id_col).count()
     n_undec = n_in - n
     out = sig

@@ -33,7 +33,8 @@ from . import storage
 __all__ = ["cms_bucket_col", "cms_build", "cms_estimate",
            "cms_inner_product",
            "hll_bucket_rho", "hll_registers",
-           "hll_estimate", "hll_estimate_from_registers", "hll_merge",
+           "hll_estimate", "hll_estimate_col",
+           "hll_estimate_from_registers", "hll_merge",
            "kmv_hash52", "kmv_sketch", "kmv_estimate_col",
            "kmv_merge_col", "kmv_jaccard_col",
            "value_sample_sketch", "value_sample_merge_col",
@@ -199,21 +200,27 @@ def hll_merge(*register_tables: DataFrame) -> DataFrame:
     return u.groupBy("bucket").agg(F.max("reg").alias("reg"))
 
 
-def hll_estimate_from_registers(regs: DataFrame, b: int = 8,
-                                out: str = "hll_est") -> DataFrame:
-    """Estimate from a register table (see :func:`hll_registers`):
-    α_m·m²/Σ2^(−reg), untouched buckets contributing 2^0 each. One-row
-    output ``out`` (rounded to 3 dp for cross-engine sum-order
-    stability)."""
+def hll_estimate_col(inv_sum: Column, touched: Column,
+                     b: int = 8) -> Column:
+    """Raw HLL estimate α_m·m²/(Σ2^(−reg) + untouched) from a register
+    aggregate: ``inv_sum`` is Σ2^(−reg) over the ``touched`` buckets,
+    and each of the m − touched untouched buckets contributes 2^0.
+    Rounded to 3 dp for cross-engine sum-order stability."""
     m = 1 << b
     alpha = 0.7213 / (1.0 + 1.079 / m)
+    return F.round(F.lit(alpha * m * m)
+                   / (inv_sum + (F.lit(m) - touched)), 3)
+
+
+def hll_estimate_from_registers(regs: DataFrame, b: int = 8,
+                                out: str = "hll_est") -> DataFrame:
+    """Estimate from a register table (see :func:`hll_registers`) with
+    :func:`hll_estimate_col`. One-row output ``out``."""
     agg = regs.agg(
         F.sum(F.pow(F.lit(2.0), -F.col("reg"))).alias("_s"),
         F.count("*").alias("_nb"))
     return agg.select(
-        F.round(F.lit(alpha * m * m)
-                / (F.col("_s") + (F.lit(m) - F.col("_nb"))), 3)
-        .alias(out))
+        hll_estimate_col(F.col("_s"), F.col("_nb"), b).alias(out))
 
 
 def hll_estimate(items: DataFrame, item_col: str, b: int = 8,

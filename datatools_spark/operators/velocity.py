@@ -21,8 +21,8 @@ into 2 rows, ONE hash aggregate (side-pivoted median+count per grid
 point — no per-side self-join, so the scan→explode subtree is never
 duplicated). No range join, no per-point scan. At 100 TB the only full-data
 shuffle is the per-bucket median (inherent to exact medians);
-``approx=True`` switches to ``percentile_approx`` which is partially
-aggregatable and cuts the shuffle to sketch size.
+``median_mode="approx"`` switches to ``percentile_approx`` which is
+partially aggregatable and cuts the shuffle to sketch size.
 """
 
 from __future__ import annotations
@@ -42,9 +42,8 @@ def calc_velocity(df: DataFrame, value_cols: Sequence[str],
                   stat_window="3T", separation_window="2H",
                   smoothing=None, min_obs: int = 3,
                   ts_col: str = "ts", partition_by: Sequence[str] = (),
-                  approx: bool = False,
                   grid_start=None, grid_end=None,
-                  median_mode: str | None = None,
+                  median_mode: str = "exact",
                   grid_index: bool = False,
                   n_rows: int | None = None) -> DataFrame:
     """Grid-median differenced velocity, m/day per component.
@@ -60,8 +59,7 @@ def calc_velocity(df: DataFrame, value_cols: Sequence[str],
     scale path; ``"selectk"`` = exact via the two-pass histogram
     select-k (operators/selectk.py) — identical results to ``"exact"``
     (equality-tested) with shuffles bounded by bins+survivors, the
-    exact path that survives hot buckets at 100 TB. ``approx=True`` is
-    the legacy spelling of ``median_mode="approx"``. ``"auto"`` (r9
+    exact path that survives hot buckets at 100 TB. ``"auto"`` (r9
     VERDICT #6) dispatches through ``plans.chooser.choose_median_mode``:
     exact below the XL-probe spill threshold (where exact is free),
     approx above it (where the sketch's partial aggregation cuts the
@@ -86,8 +84,6 @@ def calc_velocity(df: DataFrame, value_cols: Sequence[str],
         # >= 1 row per side (the old inner join's emission condition);
         # a negative gate would change which empty-side buckets surface
         raise ValueError(f"min_obs must be >= 0, got {min_obs}")
-    if median_mode is None:
-        median_mode = "approx" if approx else "exact"
     if median_mode == "auto":
         from ..plans.chooser import choose_median_mode, estimate_scan_rows
         if n_rows is None:
@@ -220,7 +216,6 @@ def calc_velocity(df: DataFrame, value_cols: Sequence[str],
 def calc_velocity_range_join(df: DataFrame, value_cols: Sequence[str],
                              stat_window="3T", separation_window="2H",
                              min_obs: int = 3, ts_col: str = "ts",
-                             approx: bool = False,
                              grid_step=None) -> DataFrame:
     """The general physical variant of the §2.9 kernel: explicit grid
     (``sequence`` + ``explode``) range-joined to the positions.
@@ -290,13 +285,12 @@ def calc_velocity_range_join(df: DataFrame, value_cols: Sequence[str],
     # duplicated subtree + join exchange); equivalence argument there
     if min_obs < 0:
         raise ValueError(f"min_obs must be >= 0, got {min_obs}")
-    med = (lambda v: F.percentile_approx(v, 0.5)) if approx \
-        else (lambda v: F.median(v))
     aggs = []
     for c in value_cols:
         s0 = F.when(F.col("_side") == 0, F.col(c))
         s1 = F.when(F.col("_side") == 1, F.col(c))
-        aggs += [med(s0).alias(f"_m_{c}"), med(s1).alias(f"_r_{c}"),
+        aggs += [F.median(s0).alias(f"_m_{c}"),
+                 F.median(s1).alias(f"_r_{c}"),
                  F.count(s0).alias(f"_n_{c}"), F.count(s1).alias(f"_rn_{c}")]
     per_point = joined.groupBy("_t").agg(*aggs)
     # per-column min_obs gate — see calc_velocity

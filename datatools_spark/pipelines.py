@@ -80,7 +80,7 @@ class OnIce:
 
     def calc_velocity(self, component: str = "x", stat_window="3T",
                       separation_window="2H", smoothing=None,
-                      window=None, approx: bool = False) -> DataFrame:
+                      window=None) -> DataFrame:
         """§2.9 kernel (gpstools.py:524-608): component letters select
         columns via the _directions map (:73-79, 847-867)."""
         cols = [_DIRECTIONS[c] for c in component.lower()]
@@ -88,8 +88,7 @@ class OnIce:
         if window is not None:
             df = clip_to_window(df, window[0], window[1], self.ts_col)
         return calc_velocity(df, cols, stat_window, separation_window,
-                             smoothing=smoothing, ts_col=self.ts_col,
-                             approx=approx)
+                             smoothing=smoothing, ts_col=self.ts_col)
 
     def linear_detrend(self, component: str = "u", window=None) -> "OnIce":
         """gpstools.py:462-496."""

@@ -26,7 +26,7 @@ from ..operators.velocity import calc_velocity, calc_velocity_range_join
 
 __all__ = ["choose_velocity_plan", "choose_pair_plan",
            "choose_median_mode", "choose_table_stats_plan",
-           "estimate_scan_rows", "plan_string",
+           "estimate_scan_rows", "is_checkpoint_backed", "plan_string",
            "PAIR_MASS_FACTOR", "MAX_DF_LADDER",
            "TABLE_STATS_FUSE_MAX_ROWS",
            "VELOCITY_APPROX_THRESHOLD_ROWS"]
@@ -75,10 +75,44 @@ _CARDINALITY_PRESERVING = ("Project", "Relation", "SubqueryAlias",
                            "ResolvedHint", "Sort", "RepartitionByExpression",
                            "Repartition", "Coalesce")
 
+# Logical nodes a CHECKPOINT-BACKED frame may hold: row-local operators
+# and unions over in-memory leaves. ``LogicalRDD`` is what
+# ``localCheckpoint`` leaves in the plan (a DataFrame made from an RDD
+# shows the same node and is trusted alike); ``LocalRelation`` is
+# driver-side data. Re-evaluating such a plan re-reads stored blocks and
+# runs no join, aggregate or exchange, so checkpointing it again buys
+# nothing.
+_CHECKPOINT_BACKED = ("Project", "Filter", "Union", "SubqueryAlias",
+                      "LogicalRDD", "LocalRelation")
+
 # Above this many files the driver-side footer sweep stops being
 # "free" dispatch (~1 ms/footer): callers at that scale should pass
 # n_rows or accept the count() fallback, which at least distributes.
 _MAX_FOOTER_FILES = 4096
+
+
+def _plan_nodes_within(df: DataFrame, allowed: tuple[str, ...]) -> bool:
+    """True when every node of ``df``'s optimized logical plan is one
+    of ``allowed`` (suffix match, so ``Relation`` covers
+    ``LogicalRelation``). False when the plan cannot be read."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    except Exception:  # noqa: BLE001 — plan inspection is best-effort
+        return False
+    for line in plan.splitlines():
+        node = line.lstrip("+-: ").split(" ", 1)[0].split("[")[0]
+        if node and not any(node == n or node.endswith(n)
+                            for n in allowed):
+            return False
+    return True
+
+
+def is_checkpoint_backed(df: DataFrame) -> bool:
+    """True when ``df`` only projects, filters and unions checkpoint
+    blocks or local data (see ``_CHECKPOINT_BACKED``): operators that
+    would checkpoint their input to stop it being recomputed can read it
+    as it is. Zero Spark jobs."""
+    return _plan_nodes_within(df, _CHECKPOINT_BACKED)
 
 
 def estimate_scan_rows(df: DataFrame) -> int | None:
@@ -95,17 +129,8 @@ def estimate_scan_rows(df: DataFrame) -> int | None:
     — caller falls back to a counting job — for any other plan shape,
     non-local/non-parquet files, or file counts past the footer-sweep
     budget."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:  # noqa: BLE001 — estimation is best-effort
+    if not _plan_nodes_within(df, _CARDINALITY_PRESERVING):
         return None
-    for line in plan.splitlines():
-        node = line.lstrip("+-: ").split(" ", 1)[0].split("[")[0]
-        if not node:
-            continue
-        if not any(node == n or node.endswith(n)
-                   for n in _CARDINALITY_PRESERVING):
-            return None
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001

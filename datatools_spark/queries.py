@@ -4614,13 +4614,6 @@ def ts_hll_overlap(spark, sf_dir):
                  F.max("rho").alias("reg_u"),
                  F.sum(((F.col("_a") == 1) & (F.col("_b") == 1))
                        .cast("long")).alias("_ex")))
-    m = 256
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-
-    def _est(reg, nb):
-        return F.round(F.lit(alpha * m * m)
-                       / (reg + (F.lit(m) - nb)), 3)
-
     agg = regs.agg(
         F.sum(F.pow(F.lit(2.0), -F.col("reg_a"))).alias("_sa"),
         F.count("reg_a").alias("_na"),
@@ -4634,9 +4627,10 @@ def ts_hll_overlap(spark, sf_dir):
         # shape returned 0 there, and sum-over-no-rows is NULL
         F.coalesce(F.col("_exn"), F.lit(0).cast("long"))
         .alias("exact_overlap"),
-        _est(F.col("_sa"), F.col("_na")).alias("est_a"),
-        _est(F.col("_sb"), F.col("_nb")).alias("est_b"),
-        _est(F.col("_su"), F.col("_nu")).alias("est_union")) \
+        SK.hll_estimate_col(F.col("_sa"), F.col("_na")).alias("est_a"),
+        SK.hll_estimate_col(F.col("_sb"), F.col("_nb")).alias("est_b"),
+        SK.hll_estimate_col(F.col("_su"), F.col("_nu"))
+        .alias("est_union")) \
         .withColumn("est_overlap",
                     F.round(F.col("est_a") + F.col("est_b")
                             - F.col("est_union"), 3))
@@ -4987,15 +4981,10 @@ def ss_pagerank(spark, sf_dir):
         el.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # el is distinct and the reversed half is disjoint (even/odd ids),
     # so the union is distinct by construction — skip the 2|E| exchange.
-    # edges_materialized: e is a union of two projections of the el
-    # checkpoint, so pagerank's internal edge checkpoint would only
-    # re-store the same blocks doubled (one blocking job + 2|E| rows of
-    # executor storage for nothing — each round reads el's blocks twice
-    # instead, the same bytes). defer_last_round: the query has exactly
-    # ONE action, so round 3 executes there instead of in a blocking
-    # construction job (r12, r11 VERDICT #3).
-    pr = G.pagerank(e, iters=3, assume_distinct=True,
-                    edges_materialized=True, defer_last_round=True)
+    # e is a union of two projections of the el checkpoint, so pagerank
+    # reads el's blocks each round instead of storing them again, and
+    # the query's one action runs the last round.
+    pr = G.pagerank(e, iters=3, assume_distinct=True)
     return pr.select("id", F.round("pr", 6).alias("pr"))
 
 

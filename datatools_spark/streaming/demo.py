@@ -237,26 +237,21 @@ def streaming_image_ingest_dedup(media: DataFrame, store_dir: str,
         sess = batch_df.sparkSession
         # ONE store read per micro-batch (snapshot_image_store resolves
         # the live generational root and materializes the projection):
-        # the anti-join pre-filter, the updater's layout audit, and —
-        # when the batch signs nothing new — the pair join's store side
-        # all share it (batch_is_new=True skips the updater's internal
-        # anti-join); a retried batch finds everything stored and signs
+        # the updater's anti-join and layout audit, and — when the
+        # batch signs nothing new — the pair join's store side all
+        # share it; a retried batch finds everything stored and signs
         # nothing. The snapshot is a localCheckpoint, NOT persist: the
         # store write below triggers Spark's recache of any CACHED plan
-        # that reads the store path, which would recompute this
+        # that reads the store path, which would recompute the
         # anti-join against the post-write store to EMPTY; the
         # checkpoint materializes the content and cuts the lineage so
         # the write cannot reach back.
         snap = snapshot_image_store(sess, store_dir, id_col=id_col)
         store_exists = snap is not None
-        new_batch = batch_df if snap is None else \
-            batch_df.join(snap.frame.select(id_col), id_col, "left_anti")
-        new_batch = new_batch.localCheckpoint(eager=True)
-        n = update_image_signature_store(sess, new_batch, store_dir,
+        n = update_image_signature_store(sess, batch_df, store_dir,
                                          grid=grid,
                                          payload_col=payload_col,
                                          id_col=id_col,
-                                         batch_is_new=True,
                                          store_snap=snap)
         # emission keyed to the BATCH's ids (replayed verbatim on
         # retry), never to the new-id set — see at-least-once note.
@@ -324,14 +319,10 @@ def streaming_image_ingest_components(media: DataFrame, store_dir: str,
         # the n > 0 invalidation rule
         snap = snapshot_image_store(sess, store_dir, id_col=id_col)
         store_exists = snap is not None
-        new_batch = batch_df if snap is None else \
-            batch_df.join(snap.frame.select(id_col), id_col, "left_anti")
-        new_batch = new_batch.localCheckpoint(eager=True)
-        n = update_image_signature_store(sess, new_batch, store_dir,
+        n = update_image_signature_store(sess, batch_df, store_dir,
                                          grid=grid,
                                          payload_col=payload_col,
                                          id_col=id_col,
-                                         batch_is_new=True,
                                          store_snap=snap)
         if store_exists or n:
             pairs = ahash_pairs_against_store(
@@ -414,7 +405,7 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
        semantic-near-dup gate over everything ingested so far,
        touching only probed cells (partition-pruned scan).
 
-    The new-ids frame is localCheckpoint-materialized BEFORE the index
+    The updater materializes its new-vector assignment BEFORE the index
     write for the same reason as the image path: a cached plan reading
     the index would be recached against the post-write files and
     silently empty the append. Emission is keyed to the BATCH's ids —
@@ -434,9 +425,8 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
         try:
-            # resolve the committed generation (storage protocol)
-            root = storage.live_dir(sess, index_path, storage.GEN)
-            stored = sess.read.parquet(f"{root}/data").select(id_col)
+            update_ivf_index(sess, batch_df, index_path,
+                             vec_col=vec_col, id_col=id_col)
         except AnalysisException as exc:
             if not storage.is_path_missing(exc):
                 raise
@@ -444,11 +434,6 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
                 f"streaming_embedding_ingest: no index at {index_path} — "
                 "build_ivf_index once (centroids are the model; a stream "
                 "must not invent its own)") from exc
-        new_batch = (batch_df.join(stored, id_col, "left_anti")
-                     .localCheckpoint(eager=True))
-        update_ivf_index(sess, new_batch, index_path,
-                         vec_col=vec_col, id_col=id_col,
-                         batch_is_new=True)
         q = batch_df.select(F.col(id_col).alias("query_id"),
                             F.col(vec_col))
         (ivf_index_search(sess, index_path, q, k=k, nprobe=nprobe,
@@ -495,9 +480,8 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
         if batch_df.isEmpty():
             return
         try:
-            # resolve the committed generation (storage protocol)
-            root = storage.live_dir(sess, index_path, storage.GEN)
-            stored = sess.read.parquet(f"{root}/data").select(id_col)
+            update_ivf_index(sess, batch_df, index_path,
+                             vec_col=vec_col, id_col=id_col)
         except AnalysisException as exc:
             if not storage.is_path_missing(exc):
                 raise
@@ -505,11 +489,6 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
                 f"streaming_embedding_ingest_components: no index at "
                 f"{index_path} — build_ivf_index once (centroids are "
                 "the model; a stream must not invent its own)") from exc
-        new_batch = (batch_df.join(stored, id_col, "left_anti")
-                     .localCheckpoint(eager=True))
-        update_ivf_index(sess, new_batch, index_path,
-                         vec_col=vec_col, id_col=id_col,
-                         batch_is_new=True)
         q = batch_df.select(F.col(id_col).alias("query_id"),
                             F.col(vec_col))
         pairs = (ivf_index_search(sess, index_path, q, k=k, nprobe=nprobe,

@@ -136,19 +136,31 @@ def test_code_fingerprint_stable_and_clean():
         assert fp1 == fp2 and len(fp1) == 16
 
 
-def test_code_fingerprint_none_with_untracked_engine_file():
+def _engine_repo(tmp_path):
+    """A throwaway committed git repo holding every ``_CODE_PATHS`` entry,
+    so fingerprint tests do not depend on the state of this checkout."""
+    import subprocess
+    (tmp_path / "datatools_spark").mkdir()
+    (tmp_path / "datatools_spark" / "__init__.py").write_text("")
+    (tmp_path / "bench.py").write_text("# bench\n")
+    (tmp_path / "__spark_entry__.py").write_text("# entry\n")
+    git = ["git", "-C", str(tmp_path), "-c", "user.name=t",
+           "-c", "user.email=t@example.com"]
+    for args in (["init", "-q"], ["add", "-A"], ["commit", "-q", "-m", "x"]):
+        subprocess.run(git + args, check=True, capture_output=True)
+    return tmp_path
+
+
+def test_code_fingerprint_none_with_untracked_engine_file(tmp_path,
+                                                          monkeypatch):
     # an UNTRACKED module under an engine path is invisible to both
     # `git diff HEAD` and `ls-files -s`; it must still disable folding
-    # (r10 ADVICE low) — the run executed code the clean tree lacks
-    if bench._code_fingerprint() is None:
-        import pytest
-        pytest.skip("engine paths already dirty — untracked case moot")
-    probe = os.path.join(os.path.dirname(__file__), "..",
-                         "datatools_spark", "_fp_probe_untracked.py")
-    try:
-        with open(probe, "w") as f:
-            f.write("# fingerprint probe\n")
-        assert bench._code_fingerprint() is None
-    finally:
-        os.remove(probe)
+    # — the run executed code the clean tree lacks
+    repo = _engine_repo(tmp_path)
+    monkeypatch.setattr(bench, "__file__", str(repo / "bench.py"))
+    assert bench._code_fingerprint() is not None
+    probe = repo / "datatools_spark" / "_fp_probe_untracked.py"
+    probe.write_text("# fingerprint probe\n")
+    assert bench._code_fingerprint() is None
+    probe.unlink()
     assert bench._code_fingerprint() is not None

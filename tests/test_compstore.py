@@ -14,6 +14,8 @@ from datatools_spark.operators.compstore import (
     update_component_store)
 from datatools_spark.operators.graph import connected_components
 
+from .conftest import count_jobs
+
 # component-store fold sweeps: deselected from the graded core pass (pytest.ini
 # addopts "-m not slow" — r11 VERDICT #5); run with -m "slow or not slow"
 pytestmark = __import__("pytest").mark.slow
@@ -202,7 +204,6 @@ def test_warm_batch_job_floor_pinned(spark, tmp_path):
     update 9: ids ckpt, pairs ckpt, fused preamble counts, adjacency
     collect). A regression re-adding per-call store scans or extra
     driver roundtrips trips this."""
-    import time
     from datatools_spark.operators.compstore import (
         snapshot_component_store, update_component_store)
     ids = spark.range(20).select(F.col("id").alias("doc_id"))
@@ -210,19 +211,9 @@ def test_warm_batch_job_floor_pinned(spark, tmp_path):
         [(0, 1), (1, 2), (5, 6)], "a_id long, b_id long")
     path = str(tmp_path / "compstore")
     update_component_store(spark, ids, pairs, path)
-    sc = spark.sparkContext
-
-    def jobs(name, fn):
-        g = f"cwjf-{name}-{time.time()}"
-        sc.setJobGroup(g, g)
-        rv = fn()
-        n = len(sc.statusTracker().getJobIdsForGroup(g))
-        sc.setJobGroup(f"cwjf-done-{name}", "clear")
-        return rv, n
-
-    snap, n_snap = jobs("snap",
-                        lambda: snapshot_component_store(spark, path))
-    _, n_upd = jobs("upd", lambda: update_component_store(
+    snap, n_snap = count_jobs(
+        spark, lambda: snapshot_component_store(spark, path))
+    _, n_upd = count_jobs(spark, lambda: update_component_store(
         spark, ids, pairs, path, store_snap=snap))
     assert n_snap <= 3
     assert n_upd <= 11

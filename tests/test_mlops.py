@@ -19,6 +19,8 @@ from datatools_spark.operators.similarity import (
     dim_stats, gram_matrix, kmeans_lloyd, pca_components,
 )
 
+from .conftest import count_jobs
+
 
 @pytest.fixture(scope="module")
 def vecs(spark):
@@ -512,100 +514,64 @@ def test_pagerank_uniform_on_regular_graph(spark):
     assert abs(pr[0] - 1 / 6) < 1e-6
 
 
-def test_pagerank_construction_jobs_constant(spark):
-    # Pin the PLAN-ONLY contract (materialize_per_round=False): building
-    # the pagerank frame runs a bounded, iteration-INDEPENDENT number of
-    # jobs (edge checkpoint, degree checkpoint, N count + their AQE
-    # stage-jobs). A regression that sneaks a per-iteration
-    # materialization into this path, or the old edges⨝outdegree /
-    # separate-node-list checkpoints, shows up as a higher or
-    # iters-dependent count.
-    from datatools_spark.operators.graph import pagerank
-    sc = spark.sparkContext
-    e = spark.createDataFrame(
-        [(i, (i + 1) % 6) for i in range(6)], "u long, v long"
-    ).localCheckpoint(eager=True)     # warm input → pure pagerank jobs
-    counts = {}
-    for iters in (2, 4):
-        group = f"pr-jobpin-{iters}"
-        sc.setJobGroup(group, group)
-        pagerank(e, iters=iters,      # construction only — no action
-                 materialize_per_round=False)
-        counts[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
-    sc.setJobGroup("pr-jobpin-done", "clear")
-    assert counts[2] == counts[4]     # no per-iteration jobs
-    assert counts[2] <= 6             # measured shape: 6 on local[*]/AQE
-    # (edge ckpt, degree ckpt, N count + their AQE stage-jobs)
-
-
 def test_pagerank_iteration_job_budget(spark):
     # r11 VERDICT #3: pin the jobs-per-iteration floor so it is
-    # measured, not re-argued. With the ss_pagerank shape
-    # (edges_materialized — the caller already checkpointed the edge
-    # list — and defer_last_round — the caller's single action executes
-    # the final round), construction runs a FIXED per-round job budget
-    # and the deferred last round adds ZERO construction jobs.
+    # measured, not re-argued. Construction runs a FIXED per-round job
+    # budget, and the last round (returned lazy) adds ZERO construction
+    # jobs.
     from datatools_spark.operators.graph import pagerank
-    sc = spark.sparkContext
     e = spark.createDataFrame(
         [(i, (i + 1) % 6) for i in range(6)], "u long, v long"
     ).localCheckpoint(eager=True)
-    counts = {}
-    for iters in (2, 3, 4):
-        group = f"pr-iterbudget-{iters}"
-        sc.setJobGroup(group, group)
-        pagerank(e, iters=iters, edges_materialized=True,
-                 defer_last_round=True)
-        counts[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
-    sc.setJobGroup("pr-iterbudget-done", "clear")
+    counts = {iters: count_jobs(spark, lambda: pagerank(e, iters=iters))[1]
+              for iters in (2, 3, 4)}
     per_round = counts[3] - counts[2]
     assert per_round == counts[4] - counts[3]   # linear in iters
-    assert per_round <= 6        # measured: 5 (prj broadcast, shuffle
-    # map stage, contrib broadcast, result stage, checkpoint) on
-    # local[*]/AQE — a regression that adds a blocking job per round
-    # trips this
-    assert counts[2] <= 12       # preamble (deg ckpt + N count) + 1
-    # checkpointed round; the deferred round contributes nothing here
-    # and edges_materialized must not re-checkpoint the caller's blocks
+    assert per_round <= 6        # measured: 4 (prj broadcast, shuffle
+    # map stage, result stage, checkpoint) on local[*]/AQE — a
+    # regression that adds a blocking job per round trips this
+    assert counts[2] <= 12       # preamble (edge + deg ckpt, N count)
+    # + 1 checkpointed round; the lazy last round contributes nothing
 
 
-def test_pagerank_defer_and_materialized_flags_identical_values(spark):
+def test_pagerank_checkpoints_only_unmaterialized_edges(spark):
+    # pagerank decides the edge checkpoint from the plan: a union of
+    # projections over a checkpoint (the ss_pagerank shape) is read as
+    # it is, while the same edges computed from spark.range pay exactly
+    # one more job — the edge checkpoint — for identical ranks
     from datatools_spark.operators.graph import pagerank
-    e = spark.createDataFrame(
-        [(0, i) for i in range(1, 9)] + [(i, 0) for i in range(1, 9)],
-        "u long, v long").localCheckpoint(eager=True)
-    want = sorted((r["id"], r["pr"]) for r in pagerank(e, iters=3).collect())
-    got = sorted((r["id"], r["pr"]) for r in
-                 pagerank(e, iters=3, edges_materialized=True,
-                          defer_last_round=True).collect())
-    assert got == want
+
+    def edges(half):
+        return half.unionByName(
+            half.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+    half = spark.range(8).select((F.col("id") * 2).alias("u"),
+                                 ((F.col("id") * 3 % 8) * 2 + 1).alias("v"))
+    stored = edges(half.localCheckpoint(eager=True))
+    computed = edges(half)
+    pr_s, n_stored = count_jobs(
+        spark, lambda: pagerank(stored, iters=3, assume_distinct=True))
+    pr_c, n_computed = count_jobs(
+        spark, lambda: pagerank(computed, iters=3, assume_distinct=True))
+    assert n_computed == n_stored + 1
+    assert n_stored <= 12        # measured 12 on local[*]/AQE
+    assert (sorted((r["id"], r["pr"]) for r in pr_s.collect())
+            == sorted((r["id"], r["pr"]) for r in pr_c.collect()))
 
 
 def test_pagerank_default_runs_each_round_once(spark):
-    # The DEFAULT path (materialize_per_round=True, the r8 perf form —
-    # executing the nested lazy tree paid ~1 s of AQE re-planning at
-    # sf0.1) eagerly materializes each round at construction; the
-    # returned frame is then checkpoint-backed, so ACTIONS on it re-run
-    # no iteration jobs — each round runs once ever, and the default's
-    # total job count equals plan-only construction + one execution,
-    # just shifted earlier. Equality with the plan-only form pins that
-    # the materialization changes scheduling, not values.
+    # every round but the last is eagerly materialized at construction
+    # (executing the nested lazy tree paid ~1 s of AQE re-planning at
+    # sf0.1), so an action on the result runs ONE round's jobs — the
+    # same as an action on a one-round pagerank — and re-runs no
+    # checkpointed round
     from datatools_spark.operators.graph import pagerank
-    sc = spark.sparkContext
     e = spark.createDataFrame(
         [(i, (i + 1) % 6) for i in range(6)], "u long, v long"
     ).localCheckpoint(eager=True)
-    pr = pagerank(e, iters=3)
-    group = "pr-action-jobs"
-    sc.setJobGroup(group, group)
-    got = sorted((r["id"], r["pr"]) for r in pr.collect())
-    n_action = len(sc.statusTracker().getJobIdsForGroup(group))
-    sc.setJobGroup("pr-action-done", "clear")
-    assert n_action <= 2   # final projection only — no round re-runs
-    want = sorted((r["id"], r["pr"]) for r in
-                  pagerank(e, iters=3,
-                           materialize_per_round=False).collect())
-    assert got == want
+    n_action = {iters: count_jobs(spark, pagerank(e, iters=iters).collect)[1]
+                for iters in (1, 3)}
+    assert n_action[3] == n_action[1] <= 6
 
 
 # ------------------------------------------------------------- whitening
@@ -683,19 +649,14 @@ def test_connected_components_small_path_job_floor(spark):
     materialized edge blocks — the gate count (2 AQE stage-jobs; it
     also materializes the lazy checkpoint) and the occurrence collect.
     No symmetrizing union, no distinct exchange (union-find needs
-    neither); a regression that reintroduces them trips this bound."""
-    import time
+    neither); a regression that reintroduces them (measured 5 jobs)
+    trips this bound, which keeps the siblings' +1 AQE headroom."""
     from datatools_spark.operators.graph import connected_components
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "a_id long, b_id long") \
         .localCheckpoint(eager=True)  # caller plan cost out of the count
-    sc = spark.sparkContext
-    g = f"ccjf-{time.time()}"
-    sc.setJobGroup(g, g)
-    out = connected_components(df)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(g))
-    sc.setJobGroup("ccjf-done", "clear")
-    assert n_jobs <= 3
+    out, n_jobs = count_jobs(spark, lambda: connected_components(df))
+    assert n_jobs <= 4
     assert {(r["id"], r["component"]) for r in out.collect()} == {
         (i, 0) for i in range(41)}
 

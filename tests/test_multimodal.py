@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from datatools_spark.operators import multimodal as MM
 
+from .conftest import count_jobs
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -583,16 +585,12 @@ def test_hot_bucket_over_budget_refuses_on_detection_job_alone(spark):
     sig = spark.range(6000).select(
         F.col("id").alias("media_id"),
         F.shiftleft(F.col("id"), 8).bitwiseOR(F.lit(7)).alias("_h"))
-    sc = spark.sparkContext
-    group = "hot-early-refusal"
-    sc.setJobGroup(group, group)
-    try:
+
+    def refuse():
         with _pytest.raises(RuntimeError, match="IDEAL sub-band"):
             packed_hamming_pairs(sig, "_h", 64, 8, 7, "media_id",
                                  max_candidate_mass=1000)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
+    _, n_jobs = count_jobs(spark, refuse)
     # the ONE detection aggregation (AQE splits the collect into <= 3
     # jobs: shuffle map + result, plus the checkpoint seed); the point
     # is that the sub-banded index's two _mass collects never ran —
@@ -636,16 +634,12 @@ def test_structural_infeasibility_refuses_closed_form(spark):
     sub_w = [2, 2, 2, 2, 2, 2, 1, 1]            # _band_widths(14, 8)
     lb = 8 * sum(_uniform_min_mass(n, 2 + s) for s in sub_w)
     assert lb > auto_mass_budget(n, 8, 2)       # geometry sanity
-    sc = spark.sparkContext
-    group = "closed-form-refusal"
-    sc.setJobGroup(group, group)
-    try:
+
+    def refuse():
         with _pytest.raises(RuntimeError, match="structurally infeasible"):
             packed_hamming_pairs(sig, "_h", 16, 8, 7, "media_id",
                                  max_candidate_mass="auto")
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
+    _, n_jobs = count_jobs(spark, refuse)
     # the one budget-resolution aggregate (plus its checkpoint seed /
     # AQE split): the banding explode, detection, and _mass jobs never
     # ran — that absence is the 1e8 probe's 127 s -> seconds drop

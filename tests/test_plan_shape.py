@@ -142,14 +142,15 @@ def test_velocity_plan_chooser(spark):
 
 
 def test_velocity_approx_partial_aggregates(spark):
-    """approx=True swaps exact median for percentile_approx, which is
-    partially aggregatable — the plan must show a map-side partial before
-    the exchange (the claim in operators/velocity.py's scale note)."""
+    """median_mode="approx" swaps exact median for percentile_approx,
+    which is partially aggregatable — the plan must show a map-side
+    partial before the exchange (the claim in operators/velocity.py's
+    scale note)."""
     from datatools_spark.operators.velocity import calc_velocity
     from datatools_spark.queries import _t
     ev = _t(spark, SF, "events")
     plan = _formatted(calc_velocity(ev, ["value"], 6 * 3600, 24 * 3600,
-                                    approx=True))
+                                    median_mode="approx"))
     agg_sections = [seg for seg in plan.split("HashAggregate")[1:]
                     if "percentile" in seg[:400]]
     assert len(agg_sections) >= 2  # partial + final pair
