@@ -45,6 +45,14 @@ Scale audit of one ``update_component_store`` call:
   ≤ pairs, typically ≪ (near-dup clusters touched per batch);
 - appends: one members write (new ids) + one merges write (lost roots).
 Nothing in the loop scales with corpus size.
+
+Store state — the members scan (checkpointed) and the merge-log
+closure — is read once per batch and shared through the session memo
+(``operators.memo``), keyed on the ``members/`` and ``merges/``
+listings. ``update_component_store`` always reads afresh and memoizes
+the read; a following ``read_components`` reuses it when the update
+appended nothing. An append changes a listing, so the next read sees
+the new state; no caller holds or invalidates a handle.
 """
 
 from __future__ import annotations
@@ -52,11 +60,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import storage
+from . import memo, storage
 
 __all__ = ["update_component_store", "read_components",
-           "compact_component_store", "snapshot_component_store",
-           "ComponentStoreSnapshot"]
+           "compact_component_store"]
 
 
 def _members_path(path: str) -> str:
@@ -97,70 +104,40 @@ def _find(parent: dict, x):
     return r
 
 
-class ComponentStoreSnapshot:
-    """One materialized read of a component store, shared across the
-    calls of ONE batch (``update_component_store`` + a following
-    ``read_components``) — each otherwise pays its own members scan and
-    merge-log collect, and on the warm steady-state path those were the
-    only corpus-sized jobs left (the sigstore ``ImageStoreSnapshot``
-    pattern). The snapshot is valid only while the store is unwritten:
-    any call that appends through it sets ``stale`` and consumers REFUSE
-    a stale snapshot — re-snapshot after a cold batch. Never reuse one
-    across batches or bench iterations; it is a per-invocation handle,
-    not a cache."""
+def _state(spark: SparkSession, path: str, fresh: bool = False):
+    """``(members, merge_map)``: the members table (None when the store
+    does not exist yet) and the driver-side merge-log closure, memoized
+    on the ``members/`` and ``merges/`` listings. ``fresh`` is the
+    updater's read: always taken (a batch never runs off an earlier
+    batch's read) and with members eagerly localCheckpointed — the
+    members APPEND must never recompute through the members path (the
+    r4 recache lesson). A reader's miss keeps the plain lazy scan."""
+    mp, gp = _members_path(path), _merges_path(path)
+    key = ("compstore", path, storage.listing(spark, mp, gp))
 
-    def __init__(self, path: str, members: DataFrame | None,
-                 merge_map: dict):
-        self.path = path
-        self.members = members        # eagerly checkpointed, or None
-        self.merge_map = merge_map
-        self.stale = False
+    def build():
+        members = None
+        if storage.exists(spark, mp):
+            members = spark.read.parquet(mp)
+            if fresh:
+                members = members.localCheckpoint(eager=True)
+        return members, _merge_map(spark, path)
 
-
-def snapshot_component_store(spark: SparkSession,
-                             path: str) -> ComponentStoreSnapshot:
-    """Materialize the store's members (eager localCheckpoint — appends
-    below must never recompute through the members path, the r4 recache
-    lesson) and the driver-side merge-log closure, once. ``members`` is
-    None when the store does not exist yet (first ingest)."""
-    members = None
-    if storage.exists(spark, _members_path(path)):
-        members = spark.read.parquet(_members_path(path)) \
-            .localCheckpoint(eager=True)
-    return ComponentStoreSnapshot(path, members, _merge_map(spark, path))
+    return memo.put(spark, key, build()) if fresh \
+        else memo.get(spark, key, build)
 
 
-def _use_snapshot(store_snap: ComponentStoreSnapshot | None,
-                  path: str, who: str) -> ComponentStoreSnapshot | None:
-    if store_snap is None:
-        return None
-    if store_snap.path != path:
-        raise ValueError(
-            f"{who}: snapshot was taken at {store_snap.path}, not "
-            f"{path} — one snapshot, one store")
-    if store_snap.stale:
-        raise ValueError(
-            f"{who}: snapshot is stale (the store was written through "
-            "it) — take a fresh snapshot_component_store after a batch "
-            "that registered ids or appended merges")
-    return store_snap
-
-
-def read_components(spark: SparkSession, path: str,
-                    store_snap: ComponentStoreSnapshot | None = None
-                    ) -> DataFrame:
+def read_components(spark: SparkSession, path: str) -> DataFrame:
     """Current ``(id, component)`` labels: members with the merge-log
     closure applied as ONE broadcast join — the log is merge-event-sized
     (compaction keeps it small), the members scan is the only
-    corpus-sized input, and no shuffle is needed. ``store_snap`` (see
-    :class:`ComponentStoreSnapshot`) serves both inputs without a job;
-    a stale or wrong-path snapshot raises."""
-    store_snap = _use_snapshot(store_snap, path, "read_components")
-    if store_snap is not None and store_snap.members is not None:
-        members, mm = store_snap.members, store_snap.merge_map
-    else:
+    corpus-sized input, and no shuffle is needed. Both inputs come from
+    the memoized store state (module docstring): after an update that
+    appended nothing, this runs no job."""
+    members, mm = _state(spark, path)
+    if members is None:
+        # raise the missing-store error a plain read raises
         members = spark.read.parquet(_members_path(path))
-        mm = _merge_map(spark, path)
     remap = [(c, r) for c, r in mm.items() if c != r]
     if not remap:
         return members.select("id", F.col("comp").alias("component"))
@@ -172,9 +149,7 @@ def read_components(spark: SparkSession, path: str,
 
 def update_component_store(spark: SparkSession, ids: DataFrame,
                            pairs: DataFrame, path: str,
-                           id_col: str = "doc_id",
-                           store_snap: ComponentStoreSnapshot | None = None
-                           ) -> int:
+                           id_col: str = "doc_id") -> int:
     """Register a batch and fold its near-dup pairs into the store.
 
     ``ids``: this batch's corpus ids (singletons welcome — every id gets
@@ -187,10 +162,9 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
     merge: a checkpoint-retried batch registers nothing new and derives
     no new merges. Returns the number of newly registered ids.
 
-    ``store_snap`` (see :class:`ComponentStoreSnapshot`) serves the
-    members scan and the merge-log collect without re-reading; when this
-    call appends anything it marks the snapshot stale, so the caller
-    re-snapshots before the post-update ``read_components``.
+    The store state is read afresh (one members checkpoint, one
+    merge-log collect) and memoized, so a following
+    :func:`read_components` reuses it when this call appended nothing.
     """
     # try_cast, not cast: under ANSI mode a malformed id would abort the
     # checkpoint with an opaque JVM NumberFormatException mid-plan; under
@@ -208,19 +182,9 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
                       F.col("b_id").try_cast("long").alias("b")).distinct() \
         .localCheckpoint(eager=True)
 
-    store_snap = _use_snapshot(store_snap, path, "update_component_store")
-    if store_snap is not None:
-        members = store_snap.members
-        have_store = members is not None
-    else:
-        have_store = storage.exists(spark, _members_path(path))
-        # localCheckpoint, not a cached plan: the members APPEND below
-        # must not recache/recompute anything reading the members path
-        # (the sigstore recache lesson, r4)
-        members = spark.read.parquet(_members_path(path)) \
-            .localCheckpoint(eager=True) if have_store else None
+    members, mm = _state(spark, path, fresh=True)
     new_ids = ids.join(members.select("id"), "id", "left_anti") \
-        if have_store else ids
+        if members is not None else ids
 
     # ONE job serves all three preamble counts (r11: three sequential
     # driver-blocking jobs — two malformed-id audits + the new-id
@@ -259,9 +223,6 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
     # checkpoint of the empty anti-join was a blocking job for nothing
     if n_new:
         new_ids = new_ids.localCheckpoint(eager=True)
-
-    mm = store_snap.merge_map if store_snap is not None else \
-        (_merge_map(spark, path) if have_store else {})
 
     # endpoint → current component label (stale ok — resolved through
     # the merge map driver-side below): member label for registered ids,
@@ -318,17 +279,12 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
                                    "child", "left_semi").collect()}
         merges = [(x, group_root[x]) for x in losers if x in existing]
         if merges:
-            if store_snap is not None:   # stale BEFORE the write: a
-                store_snap.stale = True  # crash mid-append must not
-                                         # leave a reusable snapshot
             (spark.createDataFrame(merges, "child long, parent long")
              .coalesce(1).write.mode("append")
              .parquet(_merges_path(path)))
 
     # member rows for new ids, labeled with their FINAL root
     if n_new:
-        if store_snap is not None:
-            store_snap.stale = True
         bmap = [(x, r) for x, r in group_root.items() if x != r]
         if bmap:
             remap = F.broadcast(spark.createDataFrame(

@@ -15,11 +15,10 @@ cross join anywhere; Python never touches row data (JVM expressions only).
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import memo
 from .partitioning import ensure_parallelism
 from .text import fingerprint_col, word_shingles, words_col
 
@@ -27,8 +26,7 @@ __all__ = [
     "exact_dedup", "minhash_signature", "minhash_lsh_pairs",
     "simhash_col", "simhash_pairs", "packed_hamming_pairs",
     "packed_wide_pairs",
-    "ngram_jaccard_pairs", "ngram_jaccard_pairs_prefix",
-    "pair_plan_stats", "shingle_index", "clear_shingle_index_cache",
+    "ngram_jaccard_pairs", "pair_plan_stats", "shingle_index",
     "embedding_dup_pairs", "span_dup_stats", "fuzzy_pairs_edit_distance",
     "segment_dedup",
 ]
@@ -48,44 +46,23 @@ __all__ = [
 # session builds and eagerly localCheckpoints it and later consumers
 # reuse the blocks: ONE explode feeds all three.
 #
-# Scope and invalidation — deliberately narrow:
-# - keyed on the Spark application id: checkpoint blocks die with the
-#   session, so nothing ever persists across bench/oracle invocations
-#   (every run still computes the index from the parquet inputs);
-# - keyed on the SEMANTIC HASH of the input plan (Spark's canonicalized
-#   plan equality, the same notion CacheManager uses), so two reads of
-#   different corpora or different projections never collide;
-# - LRU-capped: entries beyond the cap drop their reference and the
-#   localCheckpoint blocks free on GC.
+# The index lives in the session memo (``operators.memo``: keyed on the
+# Spark application id, so checkpoint blocks never outlive the session,
+# and LRU-capped). Its key names what was read: the SEMANTIC HASH of the
+# input plan (Spark's canonicalized plan equality, the notion
+# CacheManager uses — two reads of different corpora or projections
+# never collide), the plan's sorted input files (an overwritten corpus
+# path lists new files, so a re-read never meets the old index;
+# ``inputFiles`` runs no Spark job), and ``shingle_n``.
 # ---------------------------------------------------------------------------
-
-_SHINGLE_INDEX_CACHE: OrderedDict = OrderedDict()
-_SHINGLE_INDEX_CAP = 4
-
-
-def clear_shingle_index_cache() -> None:
-    """Drop every cached posting index (tests; or to force a rebuild
-    after overwriting a corpus path in-session)."""
-    _SHINGLE_INDEX_CACHE.clear()
-
-
-def _shingle_index_key(work: DataFrame, shingle_n: int):
-    """(app_id, semantic plan hash, shingle_n) — None disables sharing
-    (the builder then materializes an unshared index, the pre-r12
-    behavior)."""
-    try:
-        app = work.sparkSession.sparkContext.applicationId
-        h = work._jdf.queryExecution().analyzed().semanticHash()
-        return (app, h, shingle_n)
-    except Exception:  # noqa: BLE001 — sharing is an optimization only
-        return None
 
 
 def shingle_index(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", shingle_n: int = 3,
                   ) -> tuple[DataFrame, DataFrame]:
     """Shared (id, shingle) posting index + df histogram, both eagerly
-    localCheckpointed and cached per (session, corpus plan, shingle_n).
+    localCheckpointed and memoized per (session, corpus plan and input
+    files, shingle_n).
 
     Returns ``(sh, dfreq)``: ``sh`` has columns ``(id_col, _sh)`` —
     distinct word shingles per doc, exploded; ``dfreq`` has
@@ -99,27 +76,25 @@ def shingle_index(df: DataFrame, text_col: str = "text",
     """
     work = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)),
                               min_bytes=0)
-    key = _shingle_index_key(work, shingle_n)
-    if key is not None and key in _SHINGLE_INDEX_CACHE:
-        _SHINGLE_INDEX_CACHE.move_to_end(key)
-        sh, dfreq = _SHINGLE_INDEX_CACHE[key]
+
+    def build():
+        sh = (work.withColumn("_words", words_col(text_col))
+              .select(F.col(id_col),
+                      F.explode(word_shingles(text_col, shingle_n,
+                                              from_words_col="_words"))
+                      .alias("_sh"))
+              .localCheckpoint(eager=True))
+        # the histogram is vocabulary-sized and every consumer needs it
+        # (stop-shingle guard, auto planner stats, idf weights) — one
+        # aggregate over the cached blocks, materialized alongside
+        dfreq = sh.groupBy("_sh").agg(F.count("*").alias("_df")) \
+            .localCheckpoint(eager=True)
         return sh, dfreq
-    sh = (work.withColumn("_words", words_col(text_col))
-          .select(F.col(id_col),
-                  F.explode(word_shingles(text_col, shingle_n,
-                                          from_words_col="_words"))
-                  .alias("_sh"))
-          .localCheckpoint(eager=True))
-    # the histogram is vocabulary-sized and every consumer needs it
-    # (stop-shingle guard, auto planner stats, idf weights) — one
-    # aggregate over the cached blocks, materialized alongside
-    dfreq = sh.groupBy("_sh").agg(F.count("*").alias("_df")) \
-        .localCheckpoint(eager=True)
-    if key is not None:
-        _SHINGLE_INDEX_CACHE[key] = (sh, dfreq)
-        while len(_SHINGLE_INDEX_CACHE) > _SHINGLE_INDEX_CAP:
-            _SHINGLE_INDEX_CACHE.popitem(last=False)
-    return sh, dfreq
+
+    key = ("dedup.shingle_index",
+           work._jdf.queryExecution().analyzed().semanticHash(),
+           tuple(sorted(work.inputFiles())), shingle_n)
+    return memo.get(work.sparkSession, key, build)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -792,54 +767,6 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
                                 id_col)
 
 
-def ngram_jaccard_pairs_prefix(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", shingle_n: int = 3,
-                               threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via **prefix filtering**
-    (AllPairs / PPJoin family — Bayardo et al., WWW'07).
-
-    One pass builds each doc's sorted distinct shingle array; only the
-    first ``|A| − ceil(t·|A|) + 1`` shingles are indexed (under the
-    lexicographic global order). Theorem: J(A,B) ≥ t ⟹ |A∩B| ≥
-    t·max(|A|,|B|), so the two prefixes must intersect — candidates from
-    the prefix index have NO false negatives. Candidates are verified
-    exactly with ``array_intersect``.
-
-    Regime: pays off at high thresholds (t ≥ 0.5) over large natural
-    corpora where prefixes are selective. On high-overlap corpora or low
-    t the candidate set degenerates toward all shared-shingle pairs and
-    the narrow-row :func:`ngram_jaccard_pairs` (default) wins — measured
-    14× faster on the synthetic small-vocabulary testdata. The true
-    100 TB near-dup path is :func:`minhash_lsh_pairs`.
-    Output: ``a_id, b_id, jaccard`` with a<b.
-    """
-    sets = (ensure_parallelism(df.select(F.col(id_col), F.col(text_col)),
-                               min_bytes=0)  # heavy explode: always spread
-            .withColumn("_words", words_col(text_col))
-            .select(F.col(id_col),
-                    F.sort_array(word_shingles(
-                        text_col, shingle_n,
-                        from_words_col="_words")).alias("_shs"))
-            .where(F.size("_shs") > 0))
-    plen = (F.size("_shs")
-            - F.ceil(F.lit(float(threshold)) * F.size("_shs")).cast("int") + 1)
-    idx = sets.select(F.col(id_col),
-                      F.explode(F.slice("_shs", F.lit(1), plen)).alias("_sh"))
-    cands = (idx.alias("a").join(idx.alias("b"), on="_sh")
-             .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .select(F.col(f"a.{id_col}").alias("a_id"),
-                     F.col(f"b.{id_col}").alias("b_id"))
-             .distinct())
-    sa = sets.select(F.col(id_col).alias("a_id"), F.col("_shs").alias("_sa"))
-    sb = sets.select(F.col(id_col).alias("b_id"), F.col("_shs").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    jacc = inter / (F.size("_sa") + F.size("_sb") - inter)
-    return (cands.join(sa, "a_id").join(sb, "b_id")
-            .withColumn("jaccard", jacc)
-            .where(F.col("jaccard") >= threshold)
-            .select("a_id", "b_id", "jaccard"))
-
-
 def pair_plan_stats(sh: DataFrame) -> dict:
     """Measured inputs for the exact-pair auto-planner
     (``plans.chooser.choose_pair_plan``): one combinable aggregate over
@@ -1014,8 +941,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     docs → distinct shingles (explode) → self-join on shingle (the
     inverted index: only docs sharing ≥1 shingle ever meet) → per-pair
     intersection count (narrow rows, map-side partial agg) → Jaccard
-    with |A|+|B| from per-doc counts. Same exact result as
-    :func:`ngram_jaccard_pairs_prefix` (cross-checked in tests).
+    with |A|+|B| from per-doc counts (cross-checked against a
+    pure-Python Jaccard in tests).
     Output: ``a_id, b_id, jaccard`` with a<b.
 
     ``max_df``: the 100 TB skew guard — shingles appearing in more than

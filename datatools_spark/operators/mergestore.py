@@ -398,14 +398,19 @@ def _roster_gens(spark: SparkSession, root: str,
 def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
                      key_cols: list[str]) -> int:
     """Write ``df`` as generation 0 and stat its files on ``key_cols``.
-    Refuses a root that already holds generations (same contract as
-    ``apply_compaction``: mixing runs corrupts the log's meaning).
+    Refuses a root that already holds a committed generation (same
+    contract as ``apply_compaction``: mixing runs corrupts the log's
+    meaning). An uncommitted generation 0 — left by a failed or crashed
+    init — is deleted first, so the init can simply be retried.
     Returns the number of data files written."""
-    if storage.numbers(spark, root, _GENS):
+    if _latest_gen(spark, root) is not None:
         raise ValueError(f"init_merge_store: {root} already holds "
                          "generations — point each store at a fresh root")
     _check_keys(df, key_cols, "init_merge_store")
     gen_dir = f"{root}/{_GEN}0"
+    for orphan in (gen_dir, f"{root}/_stats/{_GEN}0", f"{root}/_log/{_GEN}0"):
+        f, jp = storage.fs(spark, orphan)
+        f.delete(jp, True)
     df.write.mode("errorifexists").parquet(gen_dir)
     if not _parquet_files(spark, gen_dir):
         raise ValueError("init_merge_store: the frame wrote no data "

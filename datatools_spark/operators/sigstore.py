@@ -30,6 +30,16 @@ later updates append flat files into the live generation, and
 next generation (crash leaves readers on the old one, previous
 generation retained on retire). All store functions resolve the live
 generation per call.
+
+The image store's readers share one materialized projection of the
+live generation, ``(id, hash, _nbits)`` plus its per-width row counts,
+through the session memo (``operators.memo``), keyed on the generation
+dir and its file listing. ``update_image_signature_store`` — a batch's
+first touch of the store — always takes a fresh read and memoizes it;
+``signed_image_ids`` and ``ahash_pairs_against_store`` reuse that read
+while the listing is unchanged. Any append or compaction changes the
+listing, so the next reader reads again: one store read per batch, and
+no caller ever holds or invalidates a handle.
 """
 
 from __future__ import annotations
@@ -38,13 +48,13 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import storage
+from . import memo, storage
 from .dedup import minhash_signature
 
 __all__ = ["update_signature_store", "lsh_pairs_against_store",
            "update_image_signature_store", "ahash_pairs_against_store",
            "compact_signature_store", "resolve_signature_root",
-           "snapshot_image_store", "signed_image_ids"]
+           "signed_image_ids"]
 
 _NUM_HASHES = 16
 _BANDS = 4
@@ -313,36 +323,66 @@ def _check_ahash_geometry(nbits: int) -> None:
                 "straddle a word boundary")
 
 
-def _check_store_layout(existing: DataFrame, path: str, nbits: int,
-                        seen: list | None = None) -> None:
-    """The store being appended to must carry the packed layout at the
-    SAME width — appending a second geometry (or appending packed rows
-    into a legacy string-hash store) would poison every later read with
-    no repair path short of re-decoding the corpus. ``seen`` lets a
-    caller holding the store's distinct widths already (a snapshot's
-    stats) skip the aggregation job."""
-    if "_nbits" not in existing.columns:
-        raise ValueError(
-            f"store at {path} has no _nbits column — it predates the "
-            "packed layout (or is not an image signature store); "
-            "rebuild it from payloads once with "
-            "update_image_signature_store on an empty path")
-    if seen is None:
-        seen = [r[0] for r in
-                existing.select("_nbits").distinct().collect()]
+def _check_store_layout(path: str, nbits: int, stats: list) -> None:
+    """The store being appended to must hold ONE geometry, this one —
+    appending a second width would poison every later read with no
+    repair path short of re-decoding the corpus. ``stats`` are the
+    projection's per-``(_nbits, tombstone)`` counts, tombstones included
+    (an all-tombstone grid-A store must still refuse grid-B rows)."""
+    seen = sorted({s[0] for s in stats})
     if seen and (len(seen) != 1 or seen[0] != nbits):
         raise ValueError(
-            f"store at {path} holds {sorted(seen)}-bit signatures; "
+            f"store at {path} holds {seen}-bit signatures; "
             f"refusing to append {nbits}-bit rows — one store, one "
             "geometry")
+
+
+def _read_projection(spark: SparkSession, root: str, id_col: str):
+    """``(frame, stats)`` of the image store's live generation ``root``:
+    ``frame`` is the ``(id_col, ahash64|ahash_w, _nbits)`` projection,
+    localCheckpointed; ``stats`` its ``(_nbits, is_tombstone, count)``
+    rows. The checkpoint is lazy and the stats aggregation is its
+    materializing action, so both cost ONE job (plus the parquet schema
+    job). A checkpoint, not a cached plan: a store append triggers
+    Spark's recache of any cached plan reading the store path, which
+    would recompute the updater's anti-join against the post-write
+    store. Raises PATH_NOT_FOUND for a missing store, and ValueError for
+    a dir that is not a packed image signature store."""
+    raw = spark.read.parquet(root)
+    if "_nbits" not in raw.columns:
+        raise ValueError(
+            f"store at {root} has no _nbits column — it is not a packed "
+            "image signature store; rebuild it from payloads once with "
+            "update_image_signature_store on an empty path")
+    hcol = "ahash64" if "ahash64" in raw.columns else "ahash_w"
+    frame = raw.select(id_col, hcol, "_nbits").localCheckpoint(eager=False)
+    stats = [(r["_nbits"], r["_tomb"], r["count"]) for r in
+             frame.groupBy("_nbits", F.col(hcol).isNull().alias("_tomb"))
+             .count().collect()]
+    return frame, stats
+
+
+def _projection(spark: SparkSession, path: str, id_col: str,
+                fresh: bool = False):
+    """``(root, frame, stats)`` of the live generation (see
+    :func:`_read_projection`), memoized on the generation dir and its
+    file listing. ``fresh`` always reads and memoizes the read — the
+    updater's rule, so a batch never runs off an earlier batch's read;
+    readers reuse the memoized read while the listing is unchanged."""
+    root = resolve_signature_root(spark, path)
+    key = ("sigstore.image", root, id_col, storage.listing(spark, root))
+
+    def build():
+        return (root, *_read_projection(spark, root, id_col))
+
+    return memo.put(spark, key, build()) if fresh \
+        else memo.get(spark, key, build)
 
 
 def update_image_signature_store(spark: SparkSession, batch: DataFrame,
                                  path: str, width: int = 16, grid: int = 8,
                                  payload_col: str = "payload",
-                                 id_col: str = "media_id",
-                                 store_snap: ImageStoreSnapshot | None
-                                 = None) -> int:
+                                 id_col: str = "media_id") -> int:
     """aHash-sign the batch's images NOT already in the store and append
     them. Layout: ``(id_col, ahash64 BIGINT, _nbits, _pp)`` for
     ``grid² <= 64``, or ``(id_col, ahash_w ARRAY<BIGINT>, _nbits, _pp)``
@@ -369,15 +409,15 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     (:func:`signed_image_ids`); ``ahash_pairs_against_store`` does so
     internally.
 
-    ``store_snap``: a :class:`ImageStoreSnapshot` taken by the caller —
-    the update then runs entirely off the snapshot's materialized
-    projection (no root resolve, no schema-inference job, no second
-    store scan). See the snapshot class for the validity contract."""
+    The update always reads the store afresh — one materialized
+    projection serves the geometry audit and the seen-id anti-join —
+    and memoizes that read, so the batch's following
+    :func:`signed_image_ids` / :func:`ahash_pairs_against_store` calls
+    reuse it when this update appended nothing (see the module
+    docstring)."""
     from .multimodal import pack_bits_expr, pack_bits_words_expr, raw8_ahash
     nbits = grid * grid
     _check_ahash_geometry(nbits)
-    root = store_snap.root if store_snap is not None \
-        else resolve_signature_root(spark, path)
     # one-signature-per-id invariant vs intra-batch duplicate ids —
     # same guard as update_signature_store (the anti-join only screens
     # against the STORE)
@@ -385,26 +425,9 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     new, first = batch, False
     n_in = None          # new-id count, when the anti-join derives it
     try:
-        # ONE store scan per update: the layout audit (distinct _nbits)
-        # and the seen-id anti-join both read this materialized
-        # two-column projection — separately they each paid the store's
-        # full per-file open cost. read.parquet is called
-        # exactly once: every call runs a schema-inference job over the
-        # store's file listing. A caller-held snapshot removes even
-        # that: the projection is already materialized.
-        existing = store_snap.frame if store_snap is not None \
-            else spark.read.parquet(root)
-        if "_nbits" in existing.columns:
-            existing = existing.select(id_col, "_nbits")
-        if store_snap is None:
-            existing = existing.localCheckpoint(eager=True)
-        seen_widths = None
-        if store_snap is not None and store_snap.nbits_stats is not None:
-            # the audit must see TOMBSTONE widths too (an all-tombstone
-            # grid-A store must still refuse grid-B rows), so it reads
-            # the unfiltered stats — no aggregation job
-            seen_widths = sorted({s[0] for s in store_snap.nbits_stats})
-        _check_store_layout(existing, path, nbits, seen=seen_widths)
+        root, existing, stats = _projection(spark, path, id_col,
+                                            fresh=True)
+        _check_store_layout(path, nbits, stats)
         # resolve WHICH ids are new on id columns alone, so the
         # steady-state all-seen batch never touches the payload
         # bytes: the decode plan below would otherwise scan the
@@ -413,8 +436,8 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
         # n == 0, where an eager checkpoint of the empty anti-join
         # was a second driver-blocking job bought for nothing; only
         # a batch that actually carries new ids pays the recompute
-        # (cold/first-run only, and the anti-join reads the cached
-        # store projection either way).
+        # (cold/first-run only, and the anti-join reads the
+        # checkpointed store projection either way).
         new_ids = (batch.select(id_col)
                    .join(existing.select(id_col), id_col, "left_anti"))
         n_in = new_ids.count()
@@ -425,7 +448,7 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     except AnalysisException as exc:
         if not storage.is_path_missing(exc):   # first write ONLY
             raise
-        first = True
+        root, first = resolve_signature_root(spark, path), True
     raw = raw8_ahash(new, width=width, grid=grid, payload_col=payload_col,
                      id_col=id_col)
     if nbits <= 64:
@@ -478,99 +501,23 @@ def update_image_signature_store(spark: SparkSession, batch: DataFrame,
     return n
 
 
-class ImageStoreSnapshot:
-    """One materialized read of the image signature store, shareable
-    across the store calls of a SINGLE batch invocation (update → pairs
-    → component registration). Each of those calls otherwise pays its
-    own root resolve + parquet schema-inference job + full store scan
-    into a checkpoint — at 100 TB the scan is the corpus-linear term,
-    so one snapshot per batch halves it (measured locally: ~0.9 s of
-    duplicated driver-blocking jobs per warm store query at sf0.1).
-
-    Validity contract (single-writer stores, same as compaction): the
-    snapshot reflects the store at construction time. Take it right
-    before the update, and REFRESH (or pass ``store_snap=None``) for
-    any reader that must see rows the update appended — i.e. whenever
-    ``update_image_signature_store`` returned n > 0. A warm update
-    (n == 0) never appends signatures, so the snapshot stays valid for
-    pairing; tombstone appends don't invalidate it either (readers
-    filter them out). Never reuse a snapshot across batches or bench
-    iterations — it is a per-invocation handle, not a cache.
-
-    ``nbits_stats``: per-``(_nbits, is-tombstone)`` row counts, computed
-    in ONE aggregation job over the materialized projection at snapshot
-    time — the updater's geometry audit and the pair reader's
-    geometry/row-count job both read it instead of re-aggregating
-    (``None`` for a pre-packed-layout store; consumers then run their
-    own jobs)."""
-
-    def __init__(self, root: str, frame: DataFrame,
-                 nbits_stats: list | None = None):
-        self.root = root
-        self.frame = frame
-        self.nbits_stats = nbits_stats
-
-
-def snapshot_image_store(spark: SparkSession, path: str,
-                         id_col: str = "media_id"
-                         ) -> ImageStoreSnapshot | None:
-    """Materialize the live image-store projection
-    ``(id_col, ahash64|ahash_w, _nbits)`` once for sharing via the
-    ``store_snap`` parameter of the image-store functions. Returns
-    ``None`` when the store does not exist yet (first write)."""
-    root = resolve_signature_root(spark, path)
-    try:
-        raw = spark.read.parquet(root)
-    except AnalysisException as exc:
-        if storage.is_path_missing(exc):
-            return None
-        raise
-    proj = [c for c in (id_col, "ahash64", "ahash_w", "_nbits")
-            if c in raw.columns]
-    frame = raw.select(*proj)
-    hcol = "ahash64" if "ahash64" in frame.columns else \
-        ("ahash_w" if "ahash_w" in frame.columns else None)
-    stats = None
-    if "_nbits" in frame.columns and hcol is not None:
-        # lazy checkpoint: the stats aggregation right below is its
-        # materializing action — checkpoint + stats cost ONE blocking
-        # job per snapshot instead of two (r12)
-        frame = frame.localCheckpoint(eager=False)
-        stats = [(r["_nbits"], r["_tomb"], r["count"]) for r in
-                 frame.groupBy("_nbits",
-                               F.col(hcol).isNull().alias("_tomb"))
-                 .count().collect()]
-    else:
-        # pre-packed-layout store: no stats job runs, so materialize
-        # here — consumers would otherwise each evaluate the raw scan
-        frame = frame.localCheckpoint(eager=True)
-    return ImageStoreSnapshot(root, frame, stats)
-
-
 def signed_image_ids(spark: SparkSession, path: str,
-                     id_col: str = "media_id",
-                     store_snap: ImageStoreSnapshot | None = None
-                     ) -> DataFrame:
+                     id_col: str = "media_id") -> DataFrame:
     """Ids holding an actual signature in the image store — excludes the
     undecodable-id tombstones ``update_image_signature_store`` records
     (NULL hash rows). Use this, not a raw store read, wherever "is this
     id signed" is the question (e.g. restricting a dedup batch to
     pairable ids); a raw read answers "was this id ever PRESENTED",
-    which is what the updater's own anti-join wants."""
-    df = store_snap.frame if store_snap is not None else \
-        spark.read.parquet(resolve_signature_root(spark, path))
-    hcol = "ahash64" if "ahash64" in df.columns else \
-        ("ahash_w" if "ahash_w" in df.columns else None)
-    if hcol is not None:
-        df = df.where(F.col(hcol).isNotNull())
-    return df.select(id_col)
+    which is what the updater's own anti-join wants. Reads the store's
+    memoized projection (module docstring)."""
+    _, frame, _ = _projection(spark, path, id_col)
+    return frame.where(F.col(frame.columns[1]).isNotNull()).select(id_col)
 
 
 def ahash_pairs_against_store(spark: SparkSession, batch: DataFrame,
                               path: str,
                               id_col: str = "media_id",
                               max_candidate_mass: int | str | None = "auto",
-                              store_snap: ImageStoreSnapshot | None = None
                               ) -> DataFrame:
     """Near-dup image pairs between ``batch`` ids and the WHOLE store
     (batch included, after ``update_image_signature_store``) without
@@ -597,52 +544,25 @@ def ahash_pairs_against_store(spark: SparkSession, batch: DataFrame,
     buckets, one small aggregation pass — before shuffling any
     candidate. Pass an int for an explicit budget or None to skip (e.g.
     a tight streaming loop that already pre-flighted the store)."""
-    # ONE store scan per pair call: geometry audit, batch semi-join,
-    # store_n, the mass pre-flight's store bucket counts and the real
-    # join's store side all read this materialized projection — as
-    # separate scans each paid the store's per-file open cost ~4×.
-    # read.parquet is called exactly once (each call runs a
-    # schema-inference job over the store's file listing). A caller-held
-    # snapshot (store_snap — see ImageStoreSnapshot's validity contract)
-    # removes even that single scan: the same materialized projection
-    # that served the batch's update serves its pairing.
-    if store_snap is not None:
-        raw_all = store_snap.frame
-    else:
-        raw = spark.read.parquet(resolve_signature_root(spark, path))
-        proj = [c for c in (id_col, "ahash64", "ahash_w", "_nbits")
-                if c in raw.columns]
-        raw_all = raw.select(*proj).localCheckpoint(eager=True)
+    # ONE store read per batch: the geometry audit, store_n, the batch
+    # semi-join, the mass pre-flight's store bucket counts and the real
+    # join's store side all read the memoized projection — the one the
+    # batch's update just took when it appended nothing, else a fresh
+    # one whose stats job also serves the audit and the row count
+    _, raw_all, stats = _projection(spark, path, id_col)
     # drop undecodable-id tombstones (NULL hash — see the updater's
     # docstring): they exist so updates never re-decode, and must be
     # invisible to pairing — the geometry audit, store_n, and both join
     # sides below therefore read the filtered frame
-    hcol = "ahash64" if "ahash64" in raw_all.columns else \
-        ("ahash_w" if "ahash_w" in raw_all.columns else None)
-    raw = raw_all.where(F.col(hcol).isNotNull()) \
-        if hcol is not None else raw_all
-    # ONE job serves the geometry audit AND the store row count the
-    # auto-budget needs below (r11: they were two sequential collects —
-    # each a driver-blocking roundtrip over the cached projection); a
-    # snapshot carrying its stats needs NO job at all here
-    if store_snap is not None and store_snap.nbits_stats is not None:
-        signed = [s for s in store_snap.nbits_stats if not s[1]]
-        nbits_seen = sorted({s[0] for s in signed})
-        store_rows = sum(s[2] for s in signed)
-        raw_any = bool(store_snap.nbits_stats)
-    else:
-        nbits_rows = raw.groupBy("_nbits").count().collect()
-        nbits_seen = [r["_nbits"] for r in nbits_rows]
-        store_rows = sum(r["count"] for r in nbits_rows)
-        raw_any = None
+    raw = raw_all.where(F.col(raw_all.columns[1]).isNotNull())
+    signed = [st for st in stats if not st[1]]
+    nbits_seen = sorted({st[0] for st in signed})
+    store_rows = sum(st[2] for st in signed)
     if not nbits_seen:
-        has_rows = raw_any if raw_any is not None \
-            else bool(raw_all.limit(1).count())
-        if has_rows:
+        if stats:
             # every row is a tombstone: a VALID store that has signed
             # nothing pairable yet (e.g. an all-sub-width first batch) —
-            # zero pairs, not an error (the extra limit-1 job runs only
-            # in this corner)
+            # zero pairs, not an error
             idt = dict(raw_all.dtypes)[id_col]
             return spark.createDataFrame(
                 [], f"a_id {idt}, b_id {idt}, hamming long")

@@ -33,7 +33,7 @@ __all__ = [
     "knn_brute_matmul",
     "hard_negatives", "hard_negatives_ivf", "hard_negatives_matmul",
     "hyperplane_bucket_col", "md5_plane", "md5_bucket_col", "probe_masks",
-    "knn_lsh", "knn_lsh_multi", "ivf_assign", "ivf_search",
+    "knn_lsh_multi", "ivf_assign", "ivf_search",
     "quantize_uint8", "random_projection", "pq_codebook", "pq_codes",
     "pq_adc_knn", "pq_train_codebook", "semantic_dedup",
     "kmeans_lloyd", "dim_stats", "gram_matrix", "pca_components",
@@ -539,36 +539,6 @@ def probe_masks(num_planes: int, probe_hamming: int) -> list[int]:
     itself). For H planes, Σ_{d≤r} C(H,d) masks — e.g. H=4, r=1 → 5."""
     return [m for m in range(1 << num_planes)
             if bin(m).count("1") <= probe_hamming]
-
-
-def knn_lsh(df: DataFrame, query: DataFrame, k: int = 10,
-            vec_col: str = "embedding", id_col: str = "vec_id",
-            query_id_col: str = "query_id", num_planes: int = 4,
-            probe_hamming: int = 1) -> DataFrame:
-    """Approximate top-k via MULTI-PROBE hyperplane LSH (Lv et al.,
-    VLDB'07 idea): each query scores corpus vectors in its own bucket
-    plus every bucket within Hamming distance ``probe_hamming`` — the
-    near-miss buckets where a vector lands when one hyperplane's sign
-    flips. Candidate fan-out is bounded: Σ_{d≤r} C(H,d) · n/2^H per
-    query (H=4, r=1 → 5/16 of the corpus), each corpus vector matched
-    at most once per query (probe buckets are distinct).
-    ``probe_hamming=0`` = single-probe. Same output schema as brute
-    force; recall@10 floor pinned in tests/test_properties.py."""
-    corpus = (ensure_parallelism(df.select(F.col(id_col), F.col(vec_col)))
-              .withColumn("_bkt", hyperplane_bucket_col(vec_col, num_planes)))
-    masks = probe_masks(num_planes, probe_hamming)
-    qb = query.withColumn("_qbkt", hyperplane_bucket_col(vec_col, num_planes))
-    probes = F.array(*[F.col("_qbkt").bitwiseXOR(F.lit(m)) for m in masks])
-    q = F.broadcast(qb
-                    .withColumn("_bkt", F.explode(probes))
-                    .select(F.col(query_id_col), F.col(vec_col).alias("_qv"),
-                            F.col("_bkt")))
-    scored = (corpus.join(q, on="_bkt")
-              .withColumn("cosine", cosine_expr(F.col(vec_col), F.col("_qv"))))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_id_col, id_col, "cosine", "rank"))
 
 
 def knn_lsh_multi(df: DataFrame, query: DataFrame, k: int = 10,

@@ -25,9 +25,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["Layout", "GEN", "RETAIN", "fs", "exists", "numbers",
-           "is_committed", "committed", "latest", "next_number",
-           "live_dir", "commit", "retire", "write_unmarked",
-           "is_path_missing"]
+           "listing", "is_committed", "committed", "latest",
+           "next_number", "live_dir", "commit", "retire",
+           "write_unmarked", "is_path_missing"]
 
 RETAIN = 2   # committed generations kept by retire: live + previous
 
@@ -77,6 +77,24 @@ def numbers(spark: SparkSession, path: str, layout: Layout) -> list[int]:
                 and suffix.isdecimal()):
             out.append(int(suffix))
     return sorted(out)
+
+
+def listing(spark: SparkSession, *dirs: str) -> tuple:
+    """``(path, length, mtime)`` of every file under each of ``dirs``,
+    recursively and sorted; a missing dir contributes nothing. A write
+    into any of them adds or changes a file, so the listing names the
+    state a reader would see (the session memo keys on it)."""
+    out = []
+    for d in dirs:
+        f, jp = fs(spark, d)
+        if not f.exists(jp):
+            continue
+        it = f.listFiles(jp, True)
+        while it.hasNext():
+            st = it.next()
+            out.append((str(st.getPath()), st.getLen(),
+                        st.getModificationTime()))
+    return tuple(sorted(out))
 
 
 def is_committed(spark: SparkSession, gen_dir: str, marker: str) -> bool:

@@ -9411,15 +9411,11 @@ def mm_ahash_pairs_store(spark, sf_dir):
     # already seen — the updater's internal id-only anti-join runs off
     # its checkpointed store projection; an external pre-filter was
     # A/B'd 0.5 s SLOWER at sf0.1, r8) and paired against the band index.
-    # ONE store snapshot serves both calls (r11: each paid its own root
-    # resolve + schema job + store scan); a cold update (n > 0) appends
-    # signatures the snapshot lacks, so pairing then re-reads.
-    snap = SS.snapshot_image_store(spark, root)
-    n = SS.update_image_signature_store(spark, batch_payload, root,
-                                        store_snap=snap)
+    # The update's store read serves the pairing too when it appended
+    # nothing (the store's own memo); a cold update makes pairing re-read.
+    SS.update_image_signature_store(spark, batch_payload, root)
     return SS.ahash_pairs_against_store(
-        spark, batch_payload.select("media_id"), root,
-        store_snap=None if n else snap)
+        spark, batch_payload.select("media_id"), root)
 
 
 @query("mm_ahash_pairs_store_incr", sql=_AHASH_SQL + """
@@ -9451,14 +9447,9 @@ def mm_ahash_pairs_store_incr(spark, sf_dir):
     _mm_store_seed(root, lambda: SS.update_image_signature_store(
         spark, payload, root))
     batch_payload = payload.where(F.col("media_id") < 400)
-    # shared snapshot, invalidated on a cold (n > 0) update — see
-    # mm_ahash_pairs_store
-    snap = SS.snapshot_image_store(spark, root)
-    n = SS.update_image_signature_store(spark, batch_payload, root,
-                                        store_snap=snap)
+    SS.update_image_signature_store(spark, batch_payload, root)
     return SS.ahash_pairs_against_store(
-        spark, batch_payload.select("media_id"), root,
-        store_snap=None if n else snap)
+        spark, batch_payload.select("media_id"), root)
 
 
 @query("mm_image_dedup_store", sql=_IMG_DEDUP_SQL)
@@ -9499,31 +9490,18 @@ def mm_image_dedup_store(spark, sf_dir):
 
     _mm_store_seed(comp_root, _seed_components)
     # steady state: sign + pair + fold ONLY the arriving batch slice.
-    # One store snapshot serves the update, the signed-id restriction
-    # AND the pairing (r11: three separate root resolves + schema jobs
-    # + store scans); refreshed if the update actually appended.
-    snap = SS.snapshot_image_store(spark, sig_root)
+    # Each store is read once per batch: the update's read serves the
+    # signed-id restriction, the pairing and the component read-back
+    # while the update appended nothing (each store's own memo).
     batch_payload = payload.where(F.col("media_id") % 10 == 7)
-    if SS.update_image_signature_store(spark, batch_payload, sig_root,
-                                       store_snap=snap):
-        snap = SS.snapshot_image_store(spark, sig_root)
+    SS.update_image_signature_store(spark, batch_payload, sig_root)
     batch = batch_payload.select("media_id") \
-        .join(SS.signed_image_ids(spark, sig_root, store_snap=snap),
-              "media_id", "left_semi")
-    pairs = SS.ahash_pairs_against_store(spark, batch, sig_root,
-                                         store_snap=snap)
-    # ONE component-store snapshot serves the fold AND the read-back
-    # (r11: update_component_store and read_components each paid their
-    # own members scan + merge-log collect); a cold batch that appends
-    # marks it stale, so the read-back re-snapshots the post-fold store
-    csnap = CS.snapshot_component_store(spark, comp_root)
+        .join(SS.signed_image_ids(spark, sig_root), "media_id", "left_semi")
+    pairs = SS.ahash_pairs_against_store(spark, batch, sig_root)
     CS.update_component_store(spark, batch,
                               pairs.select("a_id", "b_id"),
-                              comp_root, id_col="media_id",
-                              store_snap=csnap)
-    if csnap.stale:
-        csnap = CS.snapshot_component_store(spark, comp_root)
-    comp = CS.read_components(spark, comp_root, store_snap=csnap)
+                              comp_root, id_col="media_id")
+    comp = CS.read_components(spark, comp_root)
     return comp.select(F.col("id").alias("media_id"),
                        F.col("component"),
                        (F.col("component") == F.col("id"))

@@ -31,6 +31,19 @@ __all__ = ["streaming_window_counts", "streaming_daily_extrema",
            "streaming_distinct_users", "run_file_stream"]
 
 
+def _run_batches(stream: DataFrame, fn, checkpoint_dir: str,
+                 mode: str = "append"):
+    """Start ``stream`` through ``fn(batch_df, batch_id)`` with the
+    loops' shared sink: foreachBatch, a checkpoint at ``checkpoint_dir``
+    and the availableNow trigger. Returns the started query."""
+    return (stream.writeStream
+            .outputMode(mode)
+            .foreachBatch(fn)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
 def streaming_window_counts(events: DataFrame, window: str = "1 hour",
                             watermark: str = "2 hours") -> DataFrame:
     """Tumbling event-time counts/sums per event_type with late-data drop
@@ -191,12 +204,7 @@ def streaming_upsert(spark: SparkSession, changes: DataFrame,
         for d in _retired():   # incl. this batch's + any stale leftovers
             shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
-    return (changes.writeStream
-            .outputMode("append")
-            .foreachBatch(_merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(changes, _merge, checkpoint_dir)
 
 
 def streaming_image_ingest_dedup(media: DataFrame, store_dir: str,
@@ -228,41 +236,31 @@ def streaming_image_ingest_dedup(media: DataFrame, store_dir: str,
     band buckets, never corpus size — the ingest-gate shape a
     100 TB/day image crawl needs.
     Returns the started query (availableNow trigger; caller awaits)."""
+    from ..operators import storage
     from ..operators.sigstore import (ahash_pairs_against_store,
                                       compact_signature_store,
-                                      snapshot_image_store,
                                       update_image_signature_store)
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
-        # ONE store read per micro-batch (snapshot_image_store resolves
-        # the live generational root and materializes the projection):
-        # the updater's anti-join and layout audit, and — when the
-        # batch signs nothing new — the pair join's store side all
-        # share it; a retried batch finds everything stored and signs
-        # nothing. The snapshot is a localCheckpoint, NOT persist: the
-        # store write below triggers Spark's recache of any CACHED plan
-        # that reads the store path, which would recompute the
-        # anti-join against the post-write store to EMPTY; the
-        # checkpoint materializes the content and cuts the lineage so
-        # the write cannot reach back.
-        snap = snapshot_image_store(sess, store_dir, id_col=id_col)
-        store_exists = snap is not None
+        # a listing check, no store scan
+        had_store = storage.latest(sess, store_dir, storage.GEN) is not None
+        # ONE store read per micro-batch: the updater's read serves its
+        # anti-join and layout audit and, when the batch signs nothing
+        # new (a retried batch finds everything stored), the pair
+        # join's store side too; a batch that appended makes the pair
+        # reader re-read the POST-update store (the store's own memo)
         n = update_image_signature_store(sess, batch_df, store_dir,
                                          grid=grid,
                                          payload_col=payload_col,
-                                         id_col=id_col,
-                                         store_snap=snap)
+                                         id_col=id_col)
         # emission keyed to the BATCH's ids (replayed verbatim on
         # retry), never to the new-id set — see at-least-once note.
         # Skip only when the store STILL does not exist (empty first
-        # batch): there is nothing to join. A batch that appended
-        # signatures (n > 0) must pair against the POST-update store,
-        # so the snapshot is only reused on the all-seen (retry) path.
-        if store_exists or n:
+        # batch): there is nothing to join.
+        if had_store or n:
             (ahash_pairs_against_store(sess, batch_df.select(id_col),
-                                       store_dir, id_col=id_col,
-                                       store_snap=None if n else snap)
+                                       store_dir, id_col=id_col)
              .write.mode("append").parquet(pairs_dir))
         if compact_every and (batch_id + 1) % compact_every == 0:
             # bound tiny-file growth in-loop: the loop is the store's
@@ -270,12 +268,7 @@ def streaming_image_ingest_dedup(media: DataFrame, store_dir: str,
             # commit marker) — a retried batch just re-compacts
             compact_signature_store(sess, store_dir)
 
-    return (media.writeStream
-            .outputMode("append")
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(media, _process, checkpoint_dir)
 
 
 def streaming_image_ingest_components(media: DataFrame, store_dir: str,
@@ -304,41 +297,32 @@ def streaming_image_ingest_components(media: DataFrame, store_dir: str,
     maintenance job runs ``compact_component_store`` when the merge log
     grows. Returns the started query (availableNow trigger; caller
     awaits)."""
+    from ..operators import storage
     from ..operators.compstore import update_component_store
     from ..operators.sigstore import (ahash_pairs_against_store,
                                       compact_signature_store,
-                                      snapshot_image_store,
                                       update_image_signature_store)
 
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
         if batch_df.isEmpty():
             return   # an empty trigger must not pay the store scans
-        # one shared store read per micro-batch — see
-        # streaming_image_ingest_dedup for the snapshot rationale and
-        # the n > 0 invalidation rule
-        snap = snapshot_image_store(sess, store_dir, id_col=id_col)
-        store_exists = snap is not None
+        # one store read per micro-batch — see
+        # streaming_image_ingest_dedup
+        had_store = storage.latest(sess, store_dir, storage.GEN) is not None
         n = update_image_signature_store(sess, batch_df, store_dir,
                                          grid=grid,
                                          payload_col=payload_col,
-                                         id_col=id_col,
-                                         store_snap=snap)
-        if store_exists or n:
+                                         id_col=id_col)
+        if had_store or n:
             pairs = ahash_pairs_against_store(
-                sess, batch_df.select(id_col), store_dir, id_col=id_col,
-                store_snap=None if n else snap)
+                sess, batch_df.select(id_col), store_dir, id_col=id_col)
             update_component_store(sess, batch_df.select(id_col), pairs,
                                    comp_dir, id_col=id_col)
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_signature_store(sess, store_dir)
 
-    return (media.writeStream
-            .outputMode("append")
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(media, _process, checkpoint_dir)
 
 
 def streaming_text_ingest_components(docs: DataFrame, store_dir: str,
@@ -378,12 +362,7 @@ def streaming_text_ingest_components(docs: DataFrame, store_dir: str,
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_signature_store(sess, store_dir)
 
-    return (docs.writeStream
-            .outputMode("append")
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(docs, _process, checkpoint_dir)
 
 
 def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
@@ -442,12 +421,7 @@ def streaming_embedding_ingest(vectors: DataFrame, index_path: str,
                 & (F.col("query_id") != F.col(id_col)))
          .write.mode("append").parquet(matches_dir))
 
-    return (vectors.writeStream
-            .outputMode("append")
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(vectors, _process, checkpoint_dir)
 
 
 def streaming_embedding_ingest_components(vectors: DataFrame,
@@ -501,12 +475,7 @@ def streaming_embedding_ingest_components(vectors: DataFrame,
         update_component_store(sess, batch_df.select(id_col), pairs,
                                comp_dir, id_col=id_col)
 
-    return (vectors.writeStream
-            .outputMode("append")
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(vectors, _process, checkpoint_dir)
 
 
 def run_file_stream(spark: SparkSession, src_dir: str, schema,
@@ -520,12 +489,7 @@ def run_file_stream(spark: SparkSession, src_dir: str, schema,
     def _sink(batch_df: DataFrame, batch_id: int):
         batch_df.write.mode("overwrite").parquet(out_dir)
 
-    return (out.writeStream
-            .outputMode("complete")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(out, _sink, checkpoint_dir, "complete")
 
 
 def streaming_distinct_users(events: DataFrame, window: str = "1 hour",
@@ -636,12 +600,7 @@ def streaming_merge_store_apply(changes: DataFrame, root: str,
             refresh_feed_rollup(sess, root, rollup_state_dir,
                                 list(rollup_group_cols), rollup_val_col)
 
-    return (changes.writeStream
-            .outputMode("append")
-            .foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(changes, _apply, checkpoint_dir)
 
 
 def streaming_kmv_ingest(items: DataFrame, store_dir: str,
@@ -664,12 +623,7 @@ def streaming_kmv_ingest(items: DataFrame, store_dir: str,
         update_kmv_store(batch_df.sparkSession, batch_df, store_dir,
                          group_cols, item_col, k=k, salt=salt)
 
-    return (items.writeStream
-            .outputMode("append")
-            .foreachBatch(_fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(items, _fold, checkpoint_dir)
 
 
 def streaming_cms_ingest(items: DataFrame, store_dir: str,
@@ -703,12 +657,7 @@ def streaming_cms_ingest(items: DataFrame, store_dir: str,
                          item_col, batch_id, depth=depth, width=width,
                          salt=salt, app_id=writer)
 
-    return (items.writeStream
-            .outputMode("append")
-            .foreachBatch(_fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(items, _fold, checkpoint_dir)
 
 
 def streaming_value_sample_ingest(rows: DataFrame, store_dir: str,
@@ -732,9 +681,4 @@ def streaming_value_sample_ingest(rows: DataFrame, store_dir: str,
                                   store_dir, group_cols, key_col,
                                   value_col, k=k, salt=salt)
 
-    return (rows.writeStream
-            .outputMode("append")
-            .foreachBatch(_fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _run_batches(rows, _fold, checkpoint_dir)

@@ -9,9 +9,9 @@ incremental store is indistinguishable from a full recompute.
 import pytest
 from pyspark.sql import functions as F
 
+from datatools_spark.operators import memo
 from datatools_spark.operators.compstore import (
-    compact_component_store, read_components, snapshot_component_store,
-    update_component_store)
+    compact_component_store, read_components, update_component_store)
 from datatools_spark.operators.graph import connected_components
 
 from .conftest import count_jobs
@@ -120,57 +120,34 @@ def test_non_numeric_id_raises_type_error_not_unregistered(spark, tmp_path):
     assert len(set(_store_labels(spark, path).values())) == 1
 
 
-def test_snapshot_shares_one_read_and_goes_stale_on_append(spark, tmp_path):
-    """One ComponentStoreSnapshot serves update + read_components with
-    outputs identical to the snapshot-free path; any append through it
-    marks it stale, and consumers refuse a stale or wrong-path one."""
-    path = str(tmp_path / "cs_snap")
+def test_read_components_shares_the_update_read(spark, tmp_path):
+    """After a warm update, read_components reuses the update's
+    memoized store read — no job — with labels identical to a cold
+    read; an append changes the members/merges listings, so the next
+    read sees the fold."""
+    path = str(tmp_path / "cs_memo")
     update_component_store(spark, _ids(spark, [1, 2, 3, 4]),
                            _pairs(spark, [(1, 2), (3, 4)]), path)
-    # warm batch (re-ingest, no new ids, no merges): snapshot stays
-    # valid and both consumers read through it
-    snap = snapshot_component_store(spark, path)
-    n = update_component_store(spark, _ids(spark, [1, 2]),
-                               _pairs(spark, [(1, 2)]), path,
-                               store_snap=snap)
-    assert n == 0 and not snap.stale
-    with_snap = {r["id"]: r["component"] for r in
-                 read_components(spark, path, store_snap=snap).collect()}
-    assert with_snap == _store_labels(spark, path)
+    # warm batch (re-ingest, no new ids, no merges)
+    assert update_component_store(spark, _ids(spark, [1, 2]),
+                                  _pairs(spark, [(1, 2)]), path) == 0
+    comp, n_jobs = count_jobs(spark, lambda: read_components(spark, path))
+    warm = {r["id"]: r["component"] for r in comp.collect()}
+    memo.clear()
+    assert n_jobs == 0 and warm == _store_labels(spark, path)
     # unknown endpoints still raise through the fused audit
     with pytest.raises(ValueError, match="neither registered"):
         update_component_store(spark, _ids(spark, []),
-                               _pairs(spark, [(1, 777)]), path,
-                               store_snap=snap)
-    assert not snap.stale   # the refused batch wrote nothing
-    # cold batch: new id + an old-old merge -> snapshot goes stale,
-    # both consumers refuse it, and a fresh one sees the fold
-    n = update_component_store(spark, _ids(spark, [9]),
-                               _pairs(spark, [(9, 1), (2, 3)]), path,
-                               store_snap=snap)
-    assert n == 1 and snap.stale
-    with pytest.raises(ValueError, match="stale"):
-        read_components(spark, path, store_snap=snap)
-    with pytest.raises(ValueError, match="stale"):
-        update_component_store(spark, _ids(spark, []),
-                               _pairs(spark, []), path, store_snap=snap)
-    snap2 = snapshot_component_store(spark, path)
-    labels = {r["id"]: r["component"] for r in
-              read_components(spark, path, store_snap=snap2).collect()}
-    assert labels == _batch_truth(spark, {1, 2, 3, 4, 9},
-                                  [(1, 2), (3, 4), (9, 1), (2, 3)])
-    with pytest.raises(ValueError, match="one snapshot, one store"):
-        read_components(spark, str(tmp_path / "elsewhere"),
-                        store_snap=snap2)
-    # first-ingest snapshot (store absent): members is None, the update
-    # falls back to first-write semantics and marks it stale
-    p2 = str(tmp_path / "cs_snap_fresh")
-    snap3 = snapshot_component_store(spark, p2)
-    assert snap3.members is None
+                               _pairs(spark, [(1, 777)]), path)
+    # cold batch: new id + an old-old merge; the next read sees the fold
+    assert update_component_store(spark, _ids(spark, [9]),
+                                  _pairs(spark, [(9, 1), (2, 3)]), path) == 1
+    assert _store_labels(spark, path) == _batch_truth(
+        spark, {1, 2, 3, 4, 9}, [(1, 2), (3, 4), (9, 1), (2, 3)])
+    # first ingest (store absent) takes first-write semantics
+    p2 = str(tmp_path / "cs_memo_fresh")
     assert update_component_store(spark, _ids(spark, [7, 8]),
-                                  _pairs(spark, [(7, 8)]), p2,
-                                  store_snap=snap3) == 2
-    assert snap3.stale
+                                  _pairs(spark, [(7, 8)]), p2) == 2
     assert _store_labels(spark, p2) == {7: 7, 8: 7}
 
 
@@ -200,20 +177,17 @@ def test_compaction_resolves_and_refuses_nonempty(spark, tmp_path):
 def test_warm_batch_job_floor_pinned(spark, tmp_path):
     """r11 VERDICT #4 (component side): a warm batch — every id
     registered, every pair already folded — runs a bounded number of
-    blocking jobs (snapshot 2: members ckpt + merge-log read;
-    update 9: ids ckpt, pairs ckpt, fused preamble counts, adjacency
-    collect). A regression re-adding per-call store scans or extra
-    driver roundtrips trips this."""
-    from datatools_spark.operators.compstore import (
-        snapshot_component_store, update_component_store)
+    blocking jobs. Measured with a caller-held snapshot before (local[4],
+    AQE): snapshot 2 (schema job + members ckpt), update 11 (ids ckpt,
+    pairs ckpt, fused preamble counts, adjacency collect). The update
+    now takes the store read itself (measured 13): bound = 2 + 11 + 1,
+    the AQE headroom its siblings carry. A regression re-adding
+    per-call store scans or extra driver roundtrips trips this."""
     ids = spark.range(20).select(F.col("id").alias("doc_id"))
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6)], "a_id long, b_id long")
     path = str(tmp_path / "compstore")
     update_component_store(spark, ids, pairs, path)
-    snap, n_snap = count_jobs(
-        spark, lambda: snapshot_component_store(spark, path))
     _, n_upd = count_jobs(spark, lambda: update_component_store(
-        spark, ids, pairs, path, store_snap=snap))
-    assert n_snap <= 3
-    assert n_upd <= 11
+        spark, ids, pairs, path))
+    assert n_upd <= 2 + 11 + 1

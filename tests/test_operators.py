@@ -1505,6 +1505,75 @@ def test_ngram_pairs_auto_equals_manual(spark):
     assert cm == ca
 
 
+def test_shingle_index_rebuilt_after_corpus_overwrite(spark, tmp_path):
+    """Overwriting a corpus path in-session and re-reading it must not
+    meet the old shingle index: the new index covers the new ids, and
+    the pairs equal a cold build."""
+    from datatools_spark.operators import dedup as D
+    from datatools_spark.operators import memo
+    path = str(tmp_path / "corpus")
+
+    def write(n):
+        rows = [(i, f"alpha beta gamma delta doc {i % 3} tail {i % 5}")
+                for i in range(n)]
+        spark.createDataFrame(rows, "doc_id long, text string") \
+            .coalesce(1).write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    def ids(sh):
+        return {r[0] for r in sh.select("doc_id").distinct().collect()}
+
+    sh1, _ = D.shingle_index(write(10), "text", "doc_id", 3)
+    assert ids(sh1) == set(range(10))
+    docs = write(20)
+    sh2, _ = D.shingle_index(docs, "text", "doc_id", 3)
+    assert sh2 is not sh1 and ids(sh2) == set(range(20))
+    warm = sorted(map(tuple, D.ngram_jaccard_pairs(
+        docs, threshold=0.3, max_df=100).collect()))
+    memo.clear()
+    cold = sorted(map(tuple, D.ngram_jaccard_pairs(
+        docs, threshold=0.3, max_df=100).collect()))
+    assert warm == cold and any(b >= 10 for _, b, _ in warm)
+
+
+def test_memo_is_lru_capped_and_thread_safe(spark):
+    """The session memo keeps the CAP most recently used entries, and
+    concurrent get/put from more threads than cores never loses or
+    corrupts an entry (streaming batches call it from their own
+    thread)."""
+    import sys
+    import threading
+    from datatools_spark.operators import memo
+    memo.clear()
+    errors = []
+
+    def work(t):
+        try:
+            for i in range(500):
+                k = ("stress", (t + i) % (2 * memo.CAP))
+                if memo.get(spark, k, lambda: k) != k:
+                    errors.append(k)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads) and not errors
+    for i in range(memo.CAP + 1):
+        memo.put(spark, ("lru", i), i)
+    assert memo.get(spark, ("lru", 0), lambda: "rebuilt") == "rebuilt"
+    assert memo.get(spark, ("lru", memo.CAP), lambda: None) == memo.CAP
+    memo.clear()
+
+
 def test_ngram_pairs_auto_refuses_dup_heavy(spark):
     """A corpus of near-identical docs: every shingle's df ~ n_docs, so
     candidate mass is quadratic and no guard keeps coverage — the auto

@@ -99,11 +99,10 @@ def test_minhash_identical_docs_identical_signatures(spark):
     assert sigs[1] == sigs[2] != sigs[3]
 
 
-def test_ngram_prefix_equals_inverted(spark):
-    """Prefix-filtered AllPairs and the inverted-index join are two
-    physical plans for the same exact Jaccard semantics."""
-    from datatools_spark.operators.dedup import (
-        ngram_jaccard_pairs, ngram_jaccard_pairs_prefix)
+def test_ngram_pairs_equal_python_jaccard(spark):
+    """The inverted-index join returns exactly the pairs a pure-Python
+    exact word-3-shingle Jaccard finds, at every threshold."""
+    from datatools_spark.operators.dedup import ngram_jaccard_pairs
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
     docs = [(i, " ".join(rng.choices(vocab, k=rng.randint(2, 40))))
@@ -113,12 +112,23 @@ def test_ngram_prefix_equals_inverted(spark):
         base = docs[i - 40][1]
         docs.append((i, base + " extra" if i % 2 else base))
     df = spark.createDataFrame(docs, ["doc_id", "text"])
+
+    def shingles(text):
+        w = text.split()
+        return {" ".join(w[j:j + 3]) for j in range(len(w) - 2)}
+
+    sets = {i: shingles(t) for i, t in docs}
     for t in (0.2, 0.5, 0.8):
-        a = {(r.a_id, r.b_id, round(r.jaccard, 9))
-             for r in ngram_jaccard_pairs(df, threshold=t).collect()}
-        b = {(r.a_id, r.b_id, round(r.jaccard, 9))
-             for r in ngram_jaccard_pairs_prefix(df, threshold=t).collect()}
-        assert a == b and (t > 0.2 or a)
+        want = set()
+        for a, sa in sets.items():
+            for b, sb in sets.items():
+                if a < b and sa and sb:
+                    j = len(sa & sb) / len(sa | sb)
+                    if j >= t:
+                        want.add((a, b, round(j, 9)))
+        got = {(r.a_id, r.b_id, round(r.jaccard, 9))
+               for r in ngram_jaccard_pairs(df, threshold=t).collect()}
+        assert got == want and (t > 0.2 or got)
 
 
 def test_approx_aggregates_within_error_bounds(spark):
@@ -142,7 +152,8 @@ def test_ann_recall_floor_vs_brute_force(spark):
     """LSH and IVF are approximate — pin their recall@10 against the
     exact brute-force baseline on the driver testdata (deterministic
     planes/centroids ⇒ deterministic recall). Also regression-guards
-    knn_lsh end-to-end (a query-side bucket/rename bug once broke it)."""
+    knn_lsh_multi end-to-end (a query-side bucket/rename bug once broke
+    the LSH path)."""
     import pyspark.sql.functions as F
     import datatools_spark.operators.similarity as SIM
     from datatools_spark.queries import _t

@@ -3,16 +3,18 @@ exact-pair trio (ngram Jaccard / containment / weighted Jaccard) must
 share ONE corpus explode per session instead of re-running
 tokenize+explode per operator.
 
-Sharing keys on Spark's canonicalized plan equality (semanticHash),
-which holds across independent reads of the same parquet path — the
-shape every query path has — but NOT across separately-built local
-relations (each createDataFrame is a distinct plan), so these tests
-run on parquet-backed corpora."""
+Sharing keys on Spark's canonicalized plan equality (semanticHash) plus
+the plan's input files, which holds across independent reads of the
+same parquet path — the shape every query path has — but NOT across
+separately-built local relations (each createDataFrame is a distinct
+plan), so these tests run on parquet-backed corpora. The index lives in
+the session memo (operators/memo.py)."""
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
 from datatools_spark.operators import dedup as D
+from datatools_spark.operators import memo
 
 from .conftest import count_jobs
 
@@ -23,9 +25,9 @@ pytestmark = __import__("pytest").mark.slow
 
 @pytest.fixture(autouse=True)
 def _fresh_cache():
-    D.clear_shingle_index_cache()
+    memo.clear()
     yield
-    D.clear_shingle_index_cache()
+    memo.clear()
 
 
 def _write_docs(spark, path, n=30, tag=""):
@@ -75,13 +77,6 @@ def test_distinct_corpora_do_not_collide(spark, tmp_path):
     assert c is not a
 
 
-def test_cache_is_lru_capped(spark, tmp_path):
-    for i in range(D._SHINGLE_INDEX_CAP + 2):
-        D.shingle_index(_docs(spark, tmp_path, tag=f"T{i}"), "text",
-                        "doc_id", 3)
-    assert len(D._SHINGLE_INDEX_CACHE) == D._SHINGLE_INDEX_CAP
-
-
 def test_pair_results_identical_shared_vs_cold(spark, tmp_path):
     # sharing is an optimization only: the trio's outputs must be
     # byte-identical whether the index came warm from another operator
@@ -90,7 +85,7 @@ def test_pair_results_identical_shared_vs_cold(spark, tmp_path):
     cold = sorted(map(tuple, D.ngram_jaccard_pairs(
         d, threshold=0.05, max_df=100).collect()))
     # warm: containment ran first and left the index cached
-    D.clear_shingle_index_cache()
+    memo.clear()
     D.containment_pairs(d, threshold=0.5, max_df=100).collect()
     warm = sorted(map(tuple, D.ngram_jaccard_pairs(
         d, threshold=0.05, max_df=100).collect()))

@@ -1,13 +1,19 @@
 """Incremental signature store: idempotent appends; batch-vs-store LSH
 pairs equal the full-corpus LSH restricted to the batch."""
 
+import os
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
+from datatools_spark.operators import memo
 from datatools_spark.operators.dedup import minhash_lsh_pairs
+from datatools_spark.operators.multimodal import ahash_pairs, raw8_ahash
 from datatools_spark.operators.sigstore import (
-
-    lsh_pairs_against_store, update_signature_store)
+    _projection, ahash_pairs_against_store, compact_signature_store,
+    lsh_pairs_against_store, resolve_signature_root, signed_image_ids,
+    update_image_signature_store, update_signature_store)
 
 from .conftest import count_jobs
 
@@ -23,8 +29,25 @@ def _docs(spark, rows):
 def _read_store(spark, path):
     """The live signature table (a store is generational from its first
     write, so the table is under a committed gen-N, not at ``path``)."""
-    from datatools_spark.operators.sigstore import resolve_signature_root
     return spark.read.parquet(resolve_signature_root(spark, path))
+
+
+@pytest.fixture
+def mk(spark):
+    """``mk(rows)``: an image batch ``(media_id, payload)``."""
+    return lambda rows: spark.createDataFrame(
+        rows, "media_id long, payload binary")
+
+
+def _img(seed=None, near_of=None):
+    """A random 256-byte image, or a hamming-near copy of ``near_of``
+    (one-pixel change)."""
+    if near_of is not None:
+        b = list(near_of)
+        b[0] = (b[0] + 120) % 256
+        return bytes(b)
+    r = random.Random(seed)
+    return bytes(r.randrange(256) for _ in range(256))
 
 
 def _corpus(tag, base, n, dup_of=None):
@@ -62,26 +85,11 @@ def test_incremental_store_equals_full_lsh(spark, tmp_path):
     assert any(v == 1.0 for v in got.values())
 
 
-def test_image_store_equals_full_ahash_pairs(spark, tmp_path):
-    import random
-    from datatools_spark.operators.multimodal import ahash_pairs, raw8_ahash
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, update_image_signature_store)
-
-    def img(seed=None, near_of=None):
-        if near_of is not None:
-            b = list(near_of)
-            b[0] = (b[0] + 120) % 256   # one-pixel change: hamming-near
-            return bytes(b)
-        r = random.Random(seed)
-        return bytes(r.randrange(256) for _ in range(256))
-
-    b1_rows = [(i, img(seed=i)) for i in range(20)]
+def test_image_store_equals_full_ahash_pairs(spark, mk, tmp_path):
+    b1_rows = [(i, _img(seed=i)) for i in range(20)]
     # batch 2: new images + near-copies of batch-1 images (cross-batch)
-    b2_rows = [(100 + i, img(seed=1000 + i)) for i in range(10)] \
-        + [(200 + k, img(near_of=p)) for k, (_, p) in enumerate(b1_rows[:4])]
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
+    b2_rows = [(100 + i, _img(seed=1000 + i)) for i in range(10)] \
+        + [(200 + k, _img(near_of=p)) for k, (_, p) in enumerate(b1_rows[:4])]
     b1, b2 = mk(b1_rows), mk(b2_rows)
 
     path = str(tmp_path / "imgstore")
@@ -101,24 +109,14 @@ def test_image_store_equals_full_ahash_pairs(spark, tmp_path):
     assert any(a < 100 and b >= 200 for a, b in got)  # cross-batch dup seen
 
 
-def test_image_store_tombstones_undecodable_ids(spark, tmp_path,
+def test_image_store_tombstones_undecodable_ids(spark, mk, tmp_path,
                                                 monkeypatch):
     """Ids whose payload cannot be signed (sub-width) are tombstoned
     (NULL hash, _pp=-1) so a later batch carrying them never re-decodes;
     tombstones are invisible to pairing and to signed_image_ids."""
-    import random
     from datatools_spark.operators import multimodal as MM
-    from datatools_spark.operators.multimodal import ahash_pairs, raw8_ahash
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, signed_image_ids,
-        update_image_signature_store)
-    r = random.Random(7)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
-    full = [bytes(r.randrange(256) for _ in range(256)) for _ in range(6)]
-    near = list(full[0])
-    near[0] = (near[0] + 120) % 256      # hamming-near copy → ≥1 pair
-    rows = [(i, p) for i, p in enumerate(full)] + [(50, bytes(near))] \
+    full = [_img(700 + i) for i in range(6)]
+    rows = list(enumerate(full)) + [(50, _img(near_of=full[0]))] \
         + [(100 + i, b"xy") for i in range(4)]          # 4 sub-width
     b = mk(rows)
     path = str(tmp_path / "imgstore")
@@ -159,88 +157,93 @@ def test_image_store_tombstones_undecodable_ids(spark, tmp_path,
     assert dict(d3.dtypes)["ahash_w"] == "array<bigint>"
 
 
-def test_image_store_snapshot_shares_one_read(spark, tmp_path):
-    """A caller-held ImageStoreSnapshot drives update + signed-ids +
-    pairs off ONE materialized store read, with outputs identical to
-    the per-call reads; a cold update (n > 0) invalidates it."""
-    import random
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, signed_image_ids, snapshot_image_store,
-        update_image_signature_store)
-    r = random.Random(11)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
-    imgs = [bytes(r.randrange(256) for _ in range(256)) for _ in range(8)]
-    near = list(imgs[0])
-    near[0] = (near[0] + 120) % 256
-    b1 = mk([(i, p) for i, p in enumerate(imgs)] + [(40, bytes(near))]
-            + [(90, b"no")])
+def test_image_store_readers_share_the_update_read(spark, mk, tmp_path):
+    """After a warm update, signed_image_ids and ahash_pairs_against_store
+    read the store off the update's memoized read — no job for the
+    store read — with outputs identical to a cold read. A cold update,
+    an extra file in the live generation, or a compaction each makes
+    the next reader see the new state."""
+    imgs = [_img(1100 + i) for i in range(8)]
+    b1 = mk(list(enumerate(imgs)) + [(40, _img(near_of=imgs[0])),
+                                     (90, b"no")])
     path = str(tmp_path / "imgstore")
-    assert snapshot_image_store(spark, path) is None   # missing → None
+
+    def signed():
+        return {x[0] for x in signed_image_ids(spark, path).collect()}
+
+    def pairs(batch):
+        return sorted(map(tuple, ahash_pairs_against_store(
+            spark, batch.select("media_id"), path).collect()))
+
     assert update_image_signature_store(spark, b1, path) == 9
 
-    # warm: snapshot serves all three consumers, results unchanged
-    snap = snapshot_image_store(spark, path)
-    assert update_image_signature_store(spark, b1, path,
-                                        store_snap=snap) == 0
-    assert ({x[0] for x in
-             signed_image_ids(spark, path, store_snap=snap).collect()}
-            == {x[0] for x in signed_image_ids(spark, path).collect()})
-    with_snap = sorted(map(tuple, ahash_pairs_against_store(
-        spark, b1, path, store_snap=snap).collect()))
-    without = sorted(map(tuple, ahash_pairs_against_store(
-        spark, b1, path).collect()))
-    assert with_snap == without and with_snap
+    # warm: the update re-reads and memoizes; the readers reuse it
+    assert update_image_signature_store(spark, b1, path) == 0
+    ids, n_jobs = count_jobs(spark, lambda: signed_image_ids(spark, path))
+    warm_ids, warm = {x[0] for x in ids.collect()}, pairs(b1)
+    memo.clear()
+    assert n_jobs == 0 and warm_ids == signed() == set(range(8)) | {40}
+    assert warm == pairs(b1) and warm
 
-    # cold: the update appends PAST the snapshot — n > 0 is the caller's
-    # signal to drop it; a fresh read then sees the new signatures
-    b2 = mk([(200, imgs[1])])
-    snap2 = snapshot_image_store(spark, path)
-    assert update_image_signature_store(spark, b2, path,
-                                        store_snap=snap2) == 1
-    fresh = {tuple(x) for x in
-             ahash_pairs_against_store(spark, b2, path).collect()}
-    assert any(a == 1 and b == 200 for a, b, _ in fresh)  # new vs corpus
+    # cold update: the append changes the listing, so the next reader
+    # reads the POST-update store
+    assert update_image_signature_store(
+        spark, mk([(200, imgs[1])]), path) == 1
+    assert 200 in signed()
+    assert any(a == 1 and b == 200 for a, b, _ in pairs(mk([(200, b"")])))
+
+    # an extra file in the live generation (another writer's append)
+    root = resolve_signature_root(spark, path)
+    src = spark.read.parquet(root)
+    spark.createDataFrame(
+        src.where("media_id = 200")
+        .withColumn("media_id", F.lit(300).cast("long")).collect(),
+        src.schema).write.mode("append").parquet(root)
+    assert 300 in signed()
+    assert (200, 300, 0) in pairs(mk([(300, b"")]))
+
+    # a compaction commits a new generation: the next reader reads it
+    before = signed()
+    compact_signature_store(spark, path)
+    assert resolve_signature_root(spark, path) != root
+    _, n_jobs = count_jobs(spark, lambda: signed_image_ids(spark, path))
+    assert n_jobs > 0 and signed() == before   # not the old read
 
 
-def test_snapshot_stats_serve_audit_and_pair_corners(spark, tmp_path):
-    """The snapshot's one-job nbits stats must preserve the jobful
+def test_memoized_stats_serve_audit_and_pair_corners(spark, mk, tmp_path):
+    """The store read's one-job nbits stats must preserve the jobful
     corners: an all-tombstone store still refuses a different geometry
     on update (tombstone widths count) and still yields zero pairs (not
-    an 'empty store' error) from the pair reader."""
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, snapshot_image_store,
-        update_image_signature_store)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
+    an 'empty store' error) from the pair reader; a dir that is not a
+    packed image store raises."""
     path = str(tmp_path / "imgstore")
     # all-tombstone grid-8 store (one sub-width payload)
     assert update_image_signature_store(spark, mk([(5, b"zz")]), path) == 0
-    snap = snapshot_image_store(spark, path)
-    assert snap.nbits_stats and all(t for _, t, _ in snap.nbits_stats)
     with pytest.raises(ValueError, match="one store, one geometry"):
         update_image_signature_store(spark, mk([(6, bytes(256))]), path,
-                                     grid=16, store_snap=snap)
-    out = ahash_pairs_against_store(spark, mk([(5, b"zz")]), path,
-                                    store_snap=snap)
+                                     grid=16)
+    out = ahash_pairs_against_store(spark, mk([(5, b"zz")]), path)
     assert out.columns == ["a_id", "b_id", "hamming"]
     assert out.count() == 0
-    # a signed store's snapshot carries per-width counts the pair reader
-    # budgets from — same rows as the jobful path (covered by
-    # test_image_store_snapshot_shares_one_read); here pin the stats
-    # shape itself: (nbits, is_tombstone, count)
+    # a signed store's stats carry per-width counts the pair reader
+    # budgets from: (nbits, is_tombstone, count)
     assert update_image_signature_store(spark, mk(
         [(1, bytes(range(256))), (2, b"q")]), path) == 1
-    snap2 = snapshot_image_store(spark, path)
-    assert sorted(snap2.nbits_stats) == [(64, False, 1), (64, True, 2)]
+    _, _, stats = _projection(spark, path, "media_id")
+    assert sorted(stats) == [(64, False, 1), (64, True, 2)]
+    # a generation without _nbits is not an image signature store
+    foreign = str(tmp_path / "foreign")
+    spark.createDataFrame([(1, 7)], "media_id long, ahash64 long") \
+        .write.parquet(f"{foreign}/gen-000000")
+    open(f"{foreign}/gen-000000/_COMMIT", "w").close()
+    with pytest.raises(ValueError, match="no _nbits column"):
+        update_image_signature_store(spark, mk([(1, bytes(256))]), foreign)
 
 
 def test_store_empty_dir_propagates_not_first_write(spark, tmp_path):
     # a committed generation holding no data files (partially written or
     # emptied) must RAISE, not be silently treated as first write (which
     # would append duplicate signatures)
-    import os
-    import pytest
     from pyspark.errors import AnalysisException
     path = str(tmp_path / "emptystore")
     os.makedirs(f"{path}/gen-000000")
@@ -250,51 +253,28 @@ def test_store_empty_dir_propagates_not_first_write(spark, tmp_path):
         update_signature_store(spark, b, path)
 
 
-def test_image_store_is_packed_and_width_checked(spark, tmp_path):
-    import pytest
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, update_image_signature_store)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
-    import random
-    r = random.Random(2)
-    b1 = mk([(i, bytes(r.randrange(256) for _ in range(256)))
-             for i in range(5)])
+def test_image_store_is_packed_and_width_checked(spark, mk, tmp_path):
+    b1 = mk([(i, _img(200 + i)) for i in range(5)])
     path = str(tmp_path / "imgstore")
     assert update_image_signature_store(spark, b1, path) == 5
     df = _read_store(spark, path)
     assert dict(df.dtypes)["ahash64"] == "bigint"   # packed, not string
     # a second geometry is rejected at WRITE time (r4: fail before the
     # store is poisoned, not on the next read)
-    b2 = mk([(10, bytes(r.randrange(256) for _ in range(256)))])
+    b2 = mk([(10, _img(210))])
     with pytest.raises(ValueError, match="one store, one"):
         update_image_signature_store(spark, b2, path, width=16, grid=4)
     # and the store still reads fine afterwards
     assert ahash_pairs_against_store(spark, b1, path).count() >= 0
 
 
-def test_image_store_wide_256bit_equals_full_pairs(spark, tmp_path):
+def test_image_store_wide_256bit_equals_full_pairs(spark, mk, tmp_path):
     # grid=16 -> 256-bit signatures in the array-of-words store layout;
     # incremental batch-vs-store pairs must equal the full-corpus wide
     # engine restricted to the batch
-    import random
-    from datatools_spark.operators.multimodal import ahash_pairs, raw8_ahash
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, update_image_signature_store)
-
-    def img(seed=None, near_of=None):
-        if near_of is not None:
-            b = list(near_of)
-            b[0] = (b[0] + 120) % 256
-            return bytes(b)
-        r = random.Random(seed)
-        return bytes(r.randrange(256) for _ in range(256))
-
-    b1_rows = [(i, img(seed=i)) for i in range(12)]
-    b2_rows = [(100 + i, img(seed=700 + i)) for i in range(6)] \
-        + [(200 + k, img(near_of=p)) for k, (_, p) in enumerate(b1_rows[:3])]
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
+    b1_rows = [(i, _img(seed=i)) for i in range(12)]
+    b2_rows = [(100 + i, _img(seed=700 + i)) for i in range(6)] \
+        + [(200 + k, _img(near_of=p)) for k, (_, p) in enumerate(b1_rows[:3])]
     b1, b2 = mk(b1_rows), mk(b2_rows)
 
     path = str(tmp_path / "widestore")
@@ -316,13 +296,7 @@ def test_image_store_wide_256bit_equals_full_pairs(spark, tmp_path):
     assert any(a < 100 and b >= 200 for a, b in got)
 
 
-def test_store_rejects_bad_geometry_and_mixed_append(spark, tmp_path):
-    import pytest
-    from datatools_spark.operators.sigstore import (
-        update_image_signature_store)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
-    import random
+def test_store_rejects_bad_geometry_and_mixed_append(spark, mk, tmp_path):
     r = random.Random(9)
     b = mk([(1, bytes(r.randrange(256) for _ in range(600)))])
     path = str(tmp_path / "geom")
@@ -330,7 +304,6 @@ def test_store_rejects_bad_geometry_and_mixed_append(spark, tmp_path):
     # BEFORE anything persists
     with pytest.raises(ValueError, match="straddle"):
         update_image_signature_store(spark, b, path, width=24, grid=24)
-    import os
     assert not os.path.exists(path)
     # a second geometry cannot be appended into an existing store
     assert update_image_signature_store(spark, b, path) == 1
@@ -339,7 +312,7 @@ def test_store_rejects_bad_geometry_and_mixed_append(spark, tmp_path):
 
 
 def test_compact_image_store_preserves_pairs_and_bounds_files(
-        spark, tmp_path):
+        spark, mk, tmp_path):
     """compact_signature_store: N updates leave ~N files in the live
     generation; compaction rewrites them into right-sized files in a
     fresh committed generation, pair results are identical, later
@@ -347,31 +320,15 @@ def test_compact_image_store_preserves_pairs_and_bounds_files(
     the previous generation (two-snapshot policy), and a markerless
     (crashed) generation stays invisible. The first update already
     wrote gen-000000, so compactions number from gen-000001."""
-    import os
-    import random
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, compact_signature_store,
-        resolve_signature_root, update_image_signature_store)
-
-    def img(seed, near_of=None):
-        if near_of is not None:
-            b = list(near_of)
-            b[0] = (b[0] + 120) % 256   # one-pixel change: hamming-near
-            return bytes(b)
-        r = random.Random(seed)
-        return bytes(r.randrange(256) for _ in range(256))
-
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
     path = str(tmp_path / "imgstore")
-    base = [(b * 100 + i, img(b * 100 + i)) for b in range(4)
+    base = [(b * 100 + i, _img(b * 100 + i)) for b in range(4)
             for i in range(10)]
     # cross-batch near-dups: each batch b>0 carries near-copies of
     # batch-0 images, so compaction has real pairs to preserve
     rows_by_batch = [[r for r in base if r[0] // 100 == b]
                      for b in range(4)]
     for b in range(1, 4):
-        rows_by_batch[b] += [(b * 100 + 50 + k, img(0, near_of=p))
+        rows_by_batch[b] += [(b * 100 + 50 + k, _img(0, near_of=p))
                              for k, (_, p) in
                              enumerate(rows_by_batch[0][:3])]
     batches = [mk(rows) for rows in rows_by_batch]
@@ -392,7 +349,7 @@ def test_compact_image_store_preserves_pairs_and_bounds_files(
                        .collect()))
     assert after == before and before
     # updates append into the live generation; pairs see the new batch
-    nb = mk([(900 + i, img(7000 + i)) for i in range(5)])
+    nb = mk([(900 + i, _img(7000 + i)) for i in range(5)])
     assert update_image_signature_store(spark, nb, path) == 5
     assert update_image_signature_store(spark, nb, path) == 0
     assert ahash_pairs_against_store(spark, nb, path).count() >= 0
@@ -413,9 +370,6 @@ def test_compact_image_store_preserves_pairs_and_bounds_files(
 def test_compact_text_store_preserves_lsh_pairs(spark, tmp_path):
     """The MinHash text store compacts through the same generation
     protocol: identical lsh pairs, one file per partition after."""
-    from datatools_spark.operators.sigstore import (
-        compact_signature_store, lsh_pairs_against_store,
-        update_signature_store)
     path = str(tmp_path / "sigstore")
     b1 = _docs(spark, _corpus("w", 0, 30))
     b2 = _docs(spark, _corpus("x", 1000, 20, dup_of=_corpus("w", 0, 30)[:5]))
@@ -438,7 +392,6 @@ def test_mm_store_twin_reseeds_partial_store(spark, tmp_path, monkeypatch):
     marker, signatures missing — must be rebuilt from scratch, not
     trusted as complete because the directory exists (the old bare
     isdir gate silently diverged from the oracle forever after)."""
-    import os
     import shutil
     import tempfile
     from datatools_spark import queries as Q
@@ -450,7 +403,6 @@ def test_mm_store_twin_reseeds_partial_store(spark, tmp_path, monkeypatch):
     assert os.path.isfile(os.path.join(root, "_SEEDED"))
     # crash injection: marker gone + a signature data file lost (data
     # files live in the live generation under the root)
-    from datatools_spark.operators.sigstore import resolve_signature_root
     live = resolve_signature_root(spark, root)
     os.remove(os.path.join(root, "_SEEDED"))
     part = [f for f in os.listdir(live) if f.startswith("part-")][0]
@@ -465,7 +417,6 @@ def test_mm_corpus_fingerprint_changes_on_regeneration(tmp_path):
     """A REGENERATED corpus at the same path (same name, new mtime)
     must map to a different store root — the fingerprint keys the root,
     so stale signatures are never consulted for new data."""
-    import os
     import shutil
     from datatools_spark import queries as Q
     corpus = tmp_path / "corpus"
@@ -485,7 +436,6 @@ def test_ivf_index_search_equals_inline_and_prunes(spark, tmp_path):
     ivf_search computes from the same centroids, incremental appends are
     idempotent, and the data scan's plan carries a centroid_id
     PartitionFilter (cells prune before IO)."""
-    import random
     from datatools_spark.operators.ivfstore import (
         build_ivf_index, ivf_index_search, update_ivf_index)
     from datatools_spark.operators.similarity import ivf_search
@@ -524,8 +474,6 @@ def test_ivf_index_crashed_rebuild_invisible(spark, tmp_path):
     marker leaves readers on the previous committed index (the old
     two-overwrite layout made the torn state silently readable), and a
     committed rebuild supersedes and retires."""
-    import os
-    import random
     from datatools_spark.operators import storage
     from datatools_spark.operators.ivfstore import (
         build_ivf_index, ivf_index_search, ivf_index_stats,
@@ -573,29 +521,19 @@ def test_ivf_index_crashed_rebuild_invisible(spark, tmp_path):
     assert os.path.isdir(f"{path}/gen-000002")
 
 
-def test_image_store_flat_layout(spark, tmp_path):
+def test_image_store_flat_layout(spark, mk, tmp_path):
     """r12 store layout: image stores write FLAT right-sized files
     (_pp as a plain column — no reader ever partition-prunes on it, and
     the hive fan-out cost every scan ~0.55 s of per-file opens at
     sf0.1) into the live generation."""
-    import os
-    import random
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, resolve_signature_root,
-        update_image_signature_store)
 
-    def img(seed):
-        r = random.Random(seed)
-        return bytes(r.randrange(256) for _ in range(256))
 
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
 
     # flat — one data file per small update, no _pp= dirs, _pp present
     # as a data column
     store = str(tmp_path / "flatstore")
     assert update_image_signature_store(
-        spark, mk([(i, img(i)) for i in range(8)]), store) == 8
+        spark, mk([(i, _img(i)) for i in range(8)]), store) == 8
     flat = resolve_signature_root(spark, store)
     assert flat.endswith("gen-000000")
     assert not [d for d in os.listdir(flat) if d.startswith("_pp=")]
@@ -603,40 +541,38 @@ def test_image_store_flat_layout(spark, tmp_path):
                 if f.startswith("part-")]) == 1
     assert "_pp" in spark.read.parquet(flat).columns
     assert update_image_signature_store(
-        spark, mk([(8, img(8))]), store) == 1
+        spark, mk([(8, _img(8))]), store) == 1
     assert len([f for f in os.listdir(flat)
                 if f.startswith("part-")]) == 2
     assert ahash_pairs_against_store(
-        spark, mk([(8, img(8))]).select("media_id"), store).count() >= 0
+        spark, mk([(8, _img(8))]).select("media_id"), store).count() >= 0
 
 
-def test_warm_batch_job_floor_pinned(spark, tmp_path):
+def test_warm_batch_job_floor_pinned(spark, mk, tmp_path):
     """r11 VERDICT #4: pin the store twins' per-warm-batch blocking-job
     floor so it is measured, not re-argued. Counts are AQE
     stage-jobs + driver collects on a warm (all-seen) batch; a
     regression that adds a store re-scan or an extra driver roundtrip
-    trips these bounds."""
-    import random
-    from datatools_spark.operators.sigstore import (
-        ahash_pairs_against_store, snapshot_image_store,
-        update_image_signature_store)
-    r = random.Random(3)
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "media_id long, payload binary")
-    imgs = [bytes(r.randrange(256) for _ in range(256)) for _ in range(30)]
+    trips these bounds. No handle is passed: the pair reader reuses the
+    update's store read by itself."""
+    imgs = [_img(300 + i) for i in range(30)]
     path = str(tmp_path / "imgstore")
     update_image_signature_store(spark, mk(list(enumerate(imgs))), path)
     batch = mk([(i, imgs[i]) for i in range(10)])
-    snap, n_snap = count_jobs(spark,
-                              lambda: snapshot_image_store(spark, path))
     _, n_upd = count_jobs(spark, lambda: update_image_signature_store(
-        spark, batch, path, store_snap=snap))
+        spark, batch, path))
+    _, n_upd2 = count_jobs(spark, lambda: update_image_signature_store(
+        spark, batch, path))
     _, n_pairs = count_jobs(spark, lambda: ahash_pairs_against_store(
-        spark, batch.select("media_id"), path, store_snap=snap))
-    # measured shape (local[*]/AQE): snapshot 3 (schema job + stats agg
-    # materializing the lazy checkpoint), warm update 3 (anti-join
-    # count), pairs construction 12 (batch_n count materializes the
-    # lazy bsig checkpoint + mass pre-flight)
-    assert n_snap <= 4
-    assert n_upd <= 4
+        spark, batch.select("media_id"), path))
+    # measured shape (local[*]/AQE), with a caller-held snapshot before:
+    # snapshot 3 (schema job + stats agg materializing the lazy
+    # checkpoint), warm update 3 (anti-join count), pairs construction
+    # 12 (batch_n count materializes the lazy bsig checkpoint + mass
+    # pre-flight). The update now takes the store read itself: bound =
+    # snapshot + update + 1 (the AQE headroom its siblings carry).
+    assert n_upd <= 3 + 3 + 1
+    # every warm update reads the store afresh — never an earlier
+    # batch's read — so two in a row cost the same
+    assert n_upd2 == n_upd
     assert n_pairs <= 14

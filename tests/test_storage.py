@@ -277,6 +277,32 @@ def test_crash_before_commit_and_before_retire(spark, tmp_path,
     assert 1 <= len(st.gens()) <= storage.RETAIN
 
 
+def test_init_merge_store_retries_after_failed_init(spark, tmp_path,
+                                                   monkeypatch):
+    """A rejected load (duplicate keys) or an init crashed at its commit
+    leaves no committed generation, so the corrected retry at the same
+    root succeeds and reads back exactly; a committed store still
+    refuses a second init."""
+    clean = _upserts(spark, 0)
+    root = str(tmp_path / "dup")
+    dup = spark.createDataFrame([(1, 10), (1, 11), (2, 20)],
+                                "id long, v long")
+    with pytest.raises(ValueError, match="duplicate-key"):
+        MS.init_merge_store(spark, dup, root, ["id"])
+    MS.init_merge_store(spark, clean, root, ["id"])
+    assert _rows(MS.read_merge_store(spark, root)) == _rows(clean)
+    with pytest.raises(ValueError, match="already holds"):
+        MS.init_merge_store(spark, clean, root, ["id"])
+
+    root = str(tmp_path / "crash")
+    with monkeypatch.context() as m:
+        m.setattr(storage, "commit", _crash)
+        with pytest.raises(_Crash):
+            MS.init_merge_store(spark, _upserts(spark, 5), root, ["id"])
+    MS.init_merge_store(spark, clean, root, ["id"])
+    assert _rows(MS.read_merge_store(spark, root)) == _rows(clean)
+
+
 def test_lister_skips_foreign_dirs(spark, tmp_path):
     layout = storage.Layout("kmv-b", "_SUCCESS")
     for name in ("kmv-b0", "kmv-b1", "kmv-b2", "kmv-b0.bak", "kmv-b1-tmp",
