@@ -354,8 +354,7 @@ def streaming_text_ingest_components(docs: DataFrame, store_dir: str,
         update_signature_store(sess, batch_df, store_dir,
                                text_col=text_col, id_col=id_col)
         pairs = lsh_pairs_against_store(sess, batch_df.select(id_col),
-                                        store_dir, text_col=text_col,
-                                        id_col=id_col,
+                                        store_dir, id_col=id_col,
                                         threshold=threshold)
         update_component_store(sess, batch_df.select(id_col), pairs,
                                comp_dir, id_col=id_col)

@@ -1282,6 +1282,36 @@ def test_minhash_lsh_pairs_validates_banding(spark):
         minhash_lsh_pairs(df, num_hashes=16, bands=5)
 
 
+def test_text_store_tombstones_unsignable_docs(spark, tmp_path):
+    """A doc MinHash cannot sign (NULL, empty, under 3 words: no
+    shingles) is stored once as a tombstone (NULL _sig, _pp = -1), so a
+    replayed batch carrying it returns 0 at the cost of a warm all-seen
+    update instead of signing it again; pairing skips tombstones."""
+    from datatools_spark.operators.sigstore import (
+        lsh_pairs_against_store, resolve_signature_root,
+        update_signature_store)
+    from .conftest import count_jobs
+    words = " ".join(f"w{j}" for j in range(12))
+    ok = [(1, words), (2, words), (3, "x y z " + words)]
+    bad = [(7, None), (8, ""), (9, "two words")]
+    batch = spark.createDataFrame(ok + bad, "doc_id bigint, text string")
+    path = str(tmp_path / "sigstore")
+    assert update_signature_store(spark, batch, path) == 3
+    store = spark.read.parquet(resolve_signature_root(spark, path))
+    assert {(r["doc_id"], r["_pp"]) for r in store.where("_sig is null")
+            .collect()} == {(7, -1), (8, -1), (9, -1)}
+    warm = spark.createDataFrame(ok, "doc_id bigint, text string")
+    _, n_warm = count_jobs(spark, lambda: update_signature_store(
+        spark, warm, path))
+    n, n_replay = count_jobs(spark, lambda: update_signature_store(
+        spark, batch, path))
+    assert n == 0 and n_replay <= n_warm
+    got = {(r["a_id"], r["b_id"]): r["jaccard_est"] for r in
+           lsh_pairs_against_store(spark, batch.select("doc_id"),
+                                   path).collect()}
+    assert got[(1, 2)] == 1.0 and set(got) <= {(1, 2), (1, 3), (2, 3)}
+
+
 def test_selectk_heavy_duplicate_short_circuit_equals_builtin(spark):
     """Module-contract worst case: a group dominated by one repeated
     value (whose bin holds the median) resolves WITHOUT ranking — the
