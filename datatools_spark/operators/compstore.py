@@ -84,14 +84,7 @@ def _merge_map(spark: SparkSession, path: str) -> dict:
     rows = spark.read.parquet(_merges_path(path)).collect()
     parent: dict = {}
     for r in rows:
-        c, p = r["child"], r["parent"]
-        parent.setdefault(c, c)
-        parent.setdefault(p, p)
-        # union by value: the smaller id is always the surviving root
-        rc, rp = _find(parent, c), _find(parent, p)
-        if rc != rp:
-            lo, hi = (rc, rp) if rc < rp else (rp, rc)
-            parent[hi] = lo
+        _union(parent, r["child"], r["parent"])
     return {x: _find(parent, x) for x in parent}
 
 
@@ -102,6 +95,15 @@ def _find(parent: dict, x):
     while parent[x] != r:            # path compression
         parent[x], x = r, parent[x]
     return r
+
+
+def _union(parent: dict, a, b) -> None:
+    """Union by value: the smaller id is always the surviving root."""
+    parent.setdefault(a, a)
+    parent.setdefault(b, b)
+    ra, rb = _find(parent, a), _find(parent, b)
+    if ra != rb:
+        parent[max(ra, rb)] = min(ra, rb)
 
 
 def _state(spark: SparkSession, path: str, fresh: bool = False):
@@ -255,14 +257,7 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
     # driver union-find over CURRENT roots (merge map applied first)
     parent: dict = {}
     for r in adj:
-        ca = mm.get(r["ca"], r["ca"])
-        cb = mm.get(r["cb"], r["cb"])
-        parent.setdefault(ca, ca)
-        parent.setdefault(cb, cb)
-        ra, rb = _find(parent, ca), _find(parent, cb)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
+        _union(parent, mm.get(r["ca"], r["ca"]), mm.get(r["cb"], r["cb"]))
     group_root = {x: _find(parent, x) for x in parent}
 
     # merge events: every EXISTING root that lost. New ids' labels are

@@ -706,13 +706,6 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
 _ROLLUP = storage.Layout("rollup-g", "_SUCCESS")
 
 
-def _write_rollup(spark: SparkSession, df: DataFrame, state_dir: str,
-                  gen: int) -> None:
-    snap = _ROLLUP.dir(state_dir, gen)
-    storage.write_unmarked(df, snap)
-    storage.commit(spark, snap, _ROLLUP.marker)
-
-
 def _applied_through(spark: SparkSession, state_dir: str) -> int:
     g = storage.latest(spark, state_dir, _ROLLUP)
     if g is None:
@@ -752,8 +745,8 @@ def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     # recovery path; the committed-snapshot guard above already
     # protects committed snapshots from clobbering (same rationale as
     # refresh_feed_rollup's overwrite)
-    _write_rollup(spark, _rollup_agg(base, group_cols, val_col),
-                  state_dir, g_now)
+    storage.write_generation(spark, _rollup_agg(base, group_cols, val_col),
+                             state_dir, _ROLLUP, g_now)
     return {"applied_through": g_now}
 
 
@@ -786,35 +779,21 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
         F.when(F.col("_change_type").isin("insert", "update_postimage"),
                F.lit(1)).otherwise(F.lit(-1)))
     delta = _rollup_agg(signed, group_cols, val_col)
-    cur = spark.read.parquet(_ROLLUP.dir(state_dir, applied)) \
-        .alias("_cur")
-    d = delta.select(*group_cols, F.col("s").alias("_ds"),
-                     F.col("n").alias("_dn")).localCheckpoint(eager=True) \
-        .alias("_d")
-    # eqNullSafe, not a name-list join: a NULL group key is a legitimate
-    # group, and plain equality (NULL != NULL) would fork it into two
-    # rows on every refresh — the snapshot would accrete conflicting
-    # duplicates for that group forever
-    on = None
-    for g in group_cols:
-        c = F.col(f"_cur.{g}").eqNullSafe(F.col(f"_d.{g}"))
-        on = c if on is None else on & c
-    merged = (cur.join(d, on, "full")
-              .select(*[F.coalesce(F.col(f"_cur.{g}"), F.col(f"_d.{g}"))
-                        .alias(g) for g in group_cols],
-                      (F.coalesce("s", F.lit(0).cast("decimal(30,6)"))
-                       + F.coalesce("_ds",
-                                    F.lit(0).cast("decimal(30,6)")))
-                      .cast("decimal(30,6)").alias("s"),
-                      (F.coalesce("n", F.lit(0))
-                       + F.coalesce("_dn", F.lit(0))).cast("long")
-                      .alias("n"))
-              .where(F.col("n") > 0))
+    cur = spark.read.parquet(_ROLLUP.dir(state_dir, applied))
+    d = delta.localCheckpoint(eager=True)
+    # null-safe fold: a NULL group key is one group, never a new row per
+    # refresh; a group absent on one side contributes zero
+    zero = F.lit(0).cast("decimal(30,6)")
+    merged = storage.fold_keyed(cur, d, group_cols, {
+        "s": lambda old, new: (F.coalesce(old, zero)
+                               + F.coalesce(new, zero)).cast("decimal(30,6)"),
+        "n": lambda old, new: (F.coalesce(old, F.lit(0))
+                               + F.coalesce(new, F.lit(0))).cast("long"),
+    }).where(F.col("n") > 0)
     # overwrite handles a markerless orphan from a crashed prior try;
     # the source snapshot (rollup-g<applied>) is a DIFFERENT directory,
     # so this write never reads the path it replaces
-    _write_rollup(spark, merged, state_dir, g_now)
-    storage.retire(spark, state_dir, _ROLLUP)
+    storage.write_generation(spark, merged, state_dir, _ROLLUP, g_now)
     return {"applied_from": applied + 1, "applied_through": g_now,
             "groups_touched": int(d.count())}
 

@@ -25,7 +25,7 @@ of the SKETCH ITSELF matters (incremental stores, federation audits).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import storage
@@ -257,35 +257,16 @@ def kmv_sketch(df: DataFrame, group_cols, item_col: str, k: int = 64,
     (:func:`kmv_merge_col`) — no engine-native state.
 
     Scale shape: one distinct exchange over (group, hash) — the same
-    exchange any exact count-distinct pays — then the bottom-k is
-    ranked over SURVIVORS of a per-group threshold ``margin·k/ndv``
-    (hashes are uniform, so ~margin·k rows per group survive; the
-    full-ndv per-group sort never happens). Groups where the filter
-    under-collected (< k survivors despite ndv ≥ k —
-    Chernoff-improbable at the default margin but handled, not assumed
-    away) are re-ranked without the filter via a lazy union branch
-    that stays empty in every normal run (the tests force it with a
-    degenerate margin). Output:
+    exchange any exact count-distinct pays — then the bottom-k core
+    shared with :func:`value_sample_sketch` (``_bottom_k``): a
+    per-group survivor threshold ``margin·k/ndv`` and the rank on the
+    same group exchange, eagerly localCheckpointed, with a lazy redo for
+    groups the filter under-collected — so this call RUNS the sketch job
+    (it is an aggregation, not a plan fragment). Output:
     ``<group_cols>, hs array<bigint>`` with ``size(hs) = min(k, ndv)``.
 
     ndv here counts distinct HASHES (52-bit collisions are the standard
     KMV error term, negligible under ~2^26 distinct items per group).
-
-    Plan shape (r8, closing the r7 +56 % recompute): the fast path is
-    ONE heavy pass — distinct exchange, then per-group count/min as
-    window functions over one group exchange (no pairs⨝counts
-    self-join), then the survivor filter and rank on the SAME exchange
-    — eagerly localCheckpointed (group-sized: ≤ groups × k hashes, the
-    r5 hygiene rule's no-session-cache medium). Keeping each group's
-    MINIMUM hash unconditionally (it is rank 1 by definition, so the
-    result is unchanged) guarantees every group survives into the fast
-    frame, so the exactness check reads the materialized fast ALONE —
-    no second pass over the corpus. The redo branch is gated by a
-    driver-side count on that group-sized frame; it recomputes only in
-    the Chernoff-improbable under-collection case (tests force it with
-    a degenerate margin). Consequence: this call RUNS the sketch job
-    eagerly (it is an aggregation, not a plan fragment) — the judge-
-    directed trade (r7 VERDICT #1) that makes the normal path one pass.
 
     ``include_ndv=True`` appends the EXACT per-group distinct-hash
     count as ``ndv`` — the sketch already pays the full distinct
@@ -293,7 +274,6 @@ def kmv_sketch(df: DataFrame, group_cols, item_col: str, k: int = 64,
     both (sketch + exact, e.g. an estimate-vs-truth audit) should take
     it here instead of paying a second tokenize+distinct pass.
     """
-    from pyspark.sql import Window
     g = _group_cols_list(group_cols)
     # Internal grouping runs on ONE struct surrogate key: struct
     # equality is null-safe in Spark (row-ordering semantics), so a NULL
@@ -323,36 +303,51 @@ def kmv_sketch(df: DataFrame, group_cols, item_col: str, k: int = 64,
              .select("_gk", kmv_hash52(F.col("_w"), salt).alias("_h"))
              .repartition("_gk")
              .distinct())
+    out = _bottom_k(pairs, k, margin, F.col("_h"), ["_h"], "hs")
+    return out.select(F.col("_gk.*"), "hs",
+                      *([F.col("_n").alias("ndv")] if include_ndv else []))
+
+
+def _bottom_k(rows: DataFrame, k: int, margin: float, elem: Column,
+              order: list, name: str) -> DataFrame:
+    """The bottom-k core of :func:`kmv_sketch` and
+    :func:`value_sample_sketch`: per group ``_gk`` of ``rows`` (which
+    carry a uniform 52-bit hash ``_h``), the array ``name`` of ``elem``
+    over the ``k`` rows first by ``order``, plus the group's row count
+    ``_n``.
+
+    One heavy pass: per-group count and min as window functions over one
+    group exchange, the survivor filter ``_h < margin·k/_n`` (≈margin·k
+    rows per group; the group's minimum-hash row always survives, so
+    every group reaches the fast frame), and the rank on the same
+    exchange — eagerly localCheckpointed, group-sized. Groups the filter
+    under-collected (fewer than ``min(k, _n)`` survivors —
+    Chernoff-improbable at the default margin; tests force it with a
+    degenerate one) are re-ranked unfiltered in a lazy redo branch, gated
+    by a driver-side check on the checkpointed frame."""
     wg = Window.partitionBy("_gk")
-    j = pairs.select("_gk", "_h",
-                     F.count(F.lit(1)).over(wg).alias("_nd"),
-                     F.min("_h").over(wg).alias("_hmin"))
-    thresh = F.lit(margin * k) / F.col("_nd") * F.lit(float(_H52))
-    surv = j.where((F.col("_nd") <= F.lit(margin * k))
+    j = rows.select("*", F.count(F.lit(1)).over(wg).alias("_n"),
+                    F.min("_h").over(wg).alias("_hmin"))
+    thresh = F.lit(margin * k) / F.col("_n") * F.lit(float(_H52))
+    surv = j.where((F.col("_n") <= F.lit(margin * k))
                    | (F.col("_h") < thresh)
                    | (F.col("_h") == F.col("_hmin")))
-    w = Window.partitionBy("_gk").orderBy("_h")
+    w = Window.partitionBy("_gk").orderBy(*order)
 
-    def _bottom_k(rows: DataFrame) -> DataFrame:
-        return (rows.withColumn("_rn", F.row_number().over(w))
+    def rank(rows_: DataFrame) -> DataFrame:
+        return (rows_.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") <= k)
                 .groupBy("_gk")
-                .agg(F.array_sort(F.collect_list("_h")).alias("hs"),
-                     F.max("_nd").alias("_nd")))
+                .agg(F.array_sort(F.collect_list(elem)).alias(name),
+                     F.max("_n").alias("_n")))
 
-    out_cols = ([F.col("_gk.*"), "hs", F.col("_nd").alias("ndv")]
-                if include_ndv else [F.col("_gk.*"), "hs"])
-    fast = _bottom_k(surv).localCheckpoint(eager=True)
-    # exactness net: every group must surface min(k, ndv) hashes. Every
-    # group IS in fast (its min-hash row always survives), so the check
-    # and the gate both run on the checkpointed group-sized frame.
-    short = fast.where(F.size("hs") < F.least(F.lit(k), F.col("_nd")))
+    fast = rank(surv).localCheckpoint(eager=True)
+    short = fast.where(F.size(name) < F.least(F.lit(k), F.col("_n")))
     if short.limit(1).count() == 0:
-        return fast.select(*out_cols)
+        return fast
     sg = short.select("_gk")
-    redo = _bottom_k(j.join(sg, "_gk", "left_semi"))
-    return (fast.join(sg, "_gk", "left_anti").unionByName(redo)
-            .select(*out_cols))
+    return (fast.join(sg, "_gk", "left_anti")
+            .unionByName(rank(j.join(sg, "_gk", "left_semi"))))
 
 
 def kmv_estimate_col(hs: Column, k: int) -> Column:
@@ -382,10 +377,8 @@ def value_sample_sketch(df: DataFrame, group_cols, key_col: str,
     :func:`sample_quantile_col` (percentile_cont lerp over the sampled
     values; standard uniform-sample error ~1/√k on the rank).
 
-    Same survivors shape as :func:`kmv_sketch` (and the same r8 one-
-    pass plan: window count/min over one group exchange, min-hash row
-    kept unconditionally, eager group-sized localCheckpoint, driver-
-    gated redo — this call RUNS the sketch job eagerly). Contract:
+    Built by the same bottom-k core as :func:`kmv_sketch`, so this
+    call RUNS the sketch job eagerly. Contract:
     ``key_col`` unique per row (duplicate keys collapse to one hash and
     bias the sample) — pass ``check_keys=True`` to enforce it with one
     extra count aggregate that raises instead of silently biasing (the
@@ -394,7 +387,6 @@ def value_sample_sketch(df: DataFrame, group_cols, key_col: str,
     ``<group_cols>, n_rows, vs array<struct<h bigint, v double>>``
     sorted by hash, ``size(vs) = min(k, n_rows)``.
     """
-    from pyspark.sql import Window
     g = _group_cols_list(group_cols)
     # struct surrogate key: null-safe group equality (see kmv_sketch)
     gk = F.struct(*[F.col(c) for c in g]).alias("_gk")
@@ -411,34 +403,10 @@ def value_sample_sketch(df: DataFrame, group_cols, key_col: str,
                 "the sample; deduplicate or choose a row-unique key")
     rows = base.select(gk, kmv_hash52(F.col(key_col), salt).alias("_h"),
                        F.col(value_col).cast("double").alias("_v"))
-    wg = Window.partitionBy("_gk")
-    j = rows.select("_gk", "_h", "_v",
-                    F.count(F.lit(1)).over(wg).alias("_n"),
-                    F.min("_h").over(wg).alias("_hmin"))
-    thresh = F.lit(margin * k) / F.col("_n") * F.lit(float(_H52))
-    surv = j.where((F.col("_n") <= F.lit(margin * k))
-                   | (F.col("_h") < thresh)
-                   | (F.col("_h") == F.col("_hmin")))
-    w = Window.partitionBy("_gk").orderBy("_h", "_v")
-
-    def _bottom(rows_: DataFrame) -> DataFrame:
-        return (rows_.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k)
-                .groupBy("_gk")
-                .agg(F.array_sort(F.collect_list(
-                         F.struct(F.col("_h").alias("h"),
-                                  F.col("_v").alias("v")))).alias("vs"),
-                     F.max("_n").alias("_n")))
-
-    fast = _bottom(surv).localCheckpoint(eager=True)
-    short = fast.where(F.size("vs") < F.least(F.lit(k), F.col("_n")))
-    if short.limit(1).count() == 0:
-        return fast.select(F.col("_gk.*"), F.col("_n").alias("n_rows"),
-                           "vs")
-    sg = short.select("_gk")
-    redo = _bottom(j.join(sg, "_gk", "left_semi"))
-    return (fast.join(sg, "_gk", "left_anti").unionByName(redo)
-            .select(F.col("_gk.*"), F.col("_n").alias("n_rows"), "vs"))
+    out = _bottom_k(rows, k, margin,
+                    F.struct(F.col("_h").alias("h"), F.col("_v").alias("v")),
+                    ["_h", "_v"], "vs")
+    return out.select(F.col("_gk.*"), F.col("_n").alias("n_rows"), "vs")
 
 
 def value_sample_merge_col(a: Column, b: Column, k: int) -> Column:
@@ -489,7 +457,7 @@ def kmv_jaccard_col(a: Column, b: Column, k: int) -> Column:
                   both.cast("double") / F.size(u).cast("double"))
 
 
-# ------------------------------------------- incremental KMV store
+# ------------------------------------------- incremental sketch stores
 
 # snapshot dirs committed by a _SUCCESS marker (storage protocol); the
 # next snapshot number is latest committed + 1, so a retry overwrites
@@ -497,16 +465,6 @@ def kmv_jaccard_col(a: Column, b: Column, k: int) -> Column:
 _KMV = storage.Layout("kmv-b", "_SUCCESS")
 _VS = storage.Layout("vs-b", "_SUCCESS")
 _CMS = storage.Layout("cms-b", "_SUCCESS")
-
-
-def _write_snapshot(spark, merged: DataFrame, path: str,
-                    layout: storage.Layout, nxt: int) -> None:
-    """Write one single-file snapshot table, commit it, retire the
-    superseded ones."""
-    snap = layout.dir(path, nxt)
-    storage.write_unmarked(merged.coalesce(1), snap)
-    storage.commit(spark, snap, layout.marker)
-    storage.retire(spark, path, layout)
 
 
 def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
@@ -531,39 +489,34 @@ def update_kmv_store(spark, batch: DataFrame, path: str, group_cols,
     truncating a larger-k store to a smaller k, silently corrupts every
     estimate (the r9 CMS-geometry fix, applied to the whole sketch
     store family). Returns ``{"batch", "groups"}``."""
-    group_cols = _group_cols_list(group_cols)
-    last = storage.latest(spark, path, _KMV)
-    bsk = kmv_sketch(batch, group_cols, item_col, k=k, salt=salt)
+    g = _group_cols_list(group_cols)
+    return _update_sample_store(
+        spark, kmv_sketch(batch, g, item_col, k=k, salt=salt), path, g,
+        _KMV, "hs", kmv_merge_col, k, salt)
+
+
+def _update_sample_store(spark, sketch: DataFrame, path: str,
+                         group_cols: list, layout: storage.Layout,
+                         col: str, merge_col, k: int, salt: str) -> dict:
+    """Fold a batch's ``<group_cols>, <col>`` sketch table into the
+    sample store at ``path`` (the KMV and value-sample stores): keyed on
+    the group columns, a group only one side holds keeps that side's
+    sketch, a group both hold merges with ``merge_col``. The next
+    generation carries the ``(k, salt)`` stamp."""
+    last = storage.latest(spark, path, layout)
+    merged, nxt = sketch, 0
     if last is not None:
-        cur = spark.read.parquet(_KMV.dir(path, last))
+        cur = spark.read.parquet(layout.dir(path, last))
         _check_sketch_geometry(cur, path, k=k, salt=salt)
-        cur = cur.drop("_k", "_salt") \
-            .withColumnRenamed("hs", "_old").alias("_c")
-        new = bsk.withColumnRenamed("hs", "_new").alias("_b")
-        # eqNullSafe, not a name-list join: a NULL group key is a
-        # legitimate group, and plain equality (NULL != NULL) would fork
-        # it into two store rows on every update instead of merging its
-        # sketches — the store would accrete conflicting duplicates
-        on = None
-        for g in group_cols:
-            c = F.col(f"_c.{g}").eqNullSafe(F.col(f"_b.{g}"))
-            on = c if on is None else on & c
-        merged = (cur.join(new, on, "full")
-                  .select(*[F.coalesce(F.col(f"_c.{g}"), F.col(f"_b.{g}"))
-                            .alias(g) for g in group_cols],
-                          F.when(F.col("_old").isNull(), F.col("_new"))
-                          .when(F.col("_new").isNull(), F.col("_old"))
-                          .otherwise(kmv_merge_col(F.col("_old"),
-                                                   F.col("_new"), k))
-                          .alias("hs")))
+        merged = storage.fold_keyed(
+            cur.drop("_k", "_salt"), sketch, group_cols,
+            {col: lambda old, new: F.when(old.isNull(), new)
+             .when(new.isNull(), old).otherwise(merge_col(old, new, k))})
         nxt = last + 1
-    else:
-        merged, nxt = bsk, 0
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
-    _write_snapshot(spark, merged, path, _KMV, nxt)
-    n = merged.count()
-    return {"batch": nxt, "groups": int(n)}
+    storage.write_generation(spark, merged.coalesce(1), path, layout, nxt)
+    return {"batch": nxt, "groups": int(merged.count())}
 
 
 def _check_sketch_geometry(snapshot: DataFrame, path: str, **want) -> None:
@@ -601,11 +554,21 @@ def read_kmv_store(spark, path: str, k: int | None = None,
     """The newest committed sketch table: ``<group_cols>, hs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry matches what
     the reader's estimates assume."""
-    last = storage.latest(spark, path, _KMV)
+    return _read_sample_store(spark, path, _KMV, "KMV",
+                              "update_kmv_store", k, salt)
+
+
+def _read_sample_store(spark, path: str, layout: storage.Layout,
+                       label: str, updater: str, k: int | None,
+                       salt: str | None) -> DataFrame:
+    """The newest committed table of a sample store, its geometry
+    checked against whichever of ``k``/``salt`` is given and the stamp
+    columns dropped."""
+    last = storage.latest(spark, path, layout)
     if last is None:
-        raise ValueError(f"KMV store at {path} has no committed "
-                         "snapshots — update_kmv_store first")
-    out = spark.read.parquet(_KMV.dir(path, last))
+        raise ValueError(f"{label} store at {path} has no committed "
+                         f"snapshots — {updater} first")
+    out = spark.read.parquet(layout.dir(path, last))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -632,53 +595,19 @@ def update_value_sample_store(spark, batch: DataFrame, path: str,
     Geometry ``(k, salt)`` is stamped on every snapshot row and a
     mismatched update raises — same guard as the KMV/CMS stores (r9).
     Returns ``{"batch", "groups"}``."""
-    group_cols = _group_cols_list(group_cols)
-    last = storage.latest(spark, path, _VS)
-    bsk = value_sample_sketch(batch, group_cols, key_col, value_col,
-                              k=k, salt=salt).drop("n_rows")
-    if last is not None:
-        cur = spark.read.parquet(_VS.dir(path, last))
-        _check_sketch_geometry(cur, path, k=k, salt=salt)
-        cur = cur.drop("_k", "_salt") \
-            .withColumnRenamed("vs", "_old").alias("_c")
-        new = bsk.withColumnRenamed("vs", "_new").alias("_b")
-        # eqNullSafe join: a NULL group key merges, never forks (the
-        # same rule update_kmv_store applies — r7 advice class)
-        on = None
-        for g in group_cols:
-            c = F.col(f"_c.{g}").eqNullSafe(F.col(f"_b.{g}"))
-            on = c if on is None else on & c
-        merged = (cur.join(new, on, "full")
-                  .select(*[F.coalesce(F.col(f"_c.{g}"), F.col(f"_b.{g}"))
-                            .alias(g) for g in group_cols],
-                          F.when(F.col("_old").isNull(), F.col("_new"))
-                          .when(F.col("_new").isNull(), F.col("_old"))
-                          .otherwise(value_sample_merge_col(
-                              F.col("_old"), F.col("_new"), k))
-                          .alias("vs")))
-        nxt = last + 1
-    else:
-        merged, nxt = bsk, 0
-    merged = merged.withColumn("_k", F.lit(int(k))) \
-        .withColumn("_salt", F.lit(salt))
-    _write_snapshot(spark, merged, path, _VS, nxt)
-    n = merged.count()
-    return {"batch": nxt, "groups": int(n)}
+    g = _group_cols_list(group_cols)
+    bsk = value_sample_sketch(batch, g, key_col, value_col, k=k,
+                              salt=salt).drop("n_rows")
+    return _update_sample_store(spark, bsk, path, g, _VS, "vs",
+                                value_sample_merge_col, k, salt)
 
 
 def read_value_sample_store(spark, path: str, k: int | None = None,
                             salt: str | None = None) -> DataFrame:
     """The newest committed sample table: ``<group_cols>, vs``. Pass
     ``k``/``salt`` to assert the store's stamped geometry."""
-    last = storage.latest(spark, path, _VS)
-    if last is None:
-        raise ValueError(f"value-sample store at {path} has no committed "
-                         "snapshots — update_value_sample_store first")
-    out = spark.read.parquet(_VS.dir(path, last))
-    if k is not None or salt is not None:
-        _check_sketch_geometry(out, path, **{
-            n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
-    return out.drop("_k", "_salt")
+    return _read_sample_store(spark, path, _VS, "value-sample",
+                              "update_value_sample_store", k, salt)
 
 
 def _cms_batch_cells(batch: DataFrame, item_col: str, depth: int,
@@ -694,6 +623,41 @@ def _cms_batch_cells(batch: DataFrame, item_col: str, depth: int,
     counts = batch.groupBy(F.col(item_col)).agg(F.count("*").alias("_n"))
     return cms_build_from_counts(counts, item_col, "_n", depth, width,
                                  salt)
+
+
+def _cms_state(spark, path: str, base: str, **want) -> list:
+    """The rows of generation ``base``'s ``state/`` ledger — one per
+    writer, carrying the geometry — after two refusals: a pre-watermark
+    generation (no ``state/`` table at all, or a bare batch-id set) and
+    a stored geometry that differs from any non-None
+    ``depth``/``width``/``salt`` in ``want``. ONE collect of the
+    writers-sized table serves the geometry check, the watermark lookup
+    and the carried-forward ledger rows."""
+    from pyspark.errors import AnalysisException
+    try:
+        # catch the missing path: reading first would surface an opaque
+        # PATH_NOT_FOUND before the rebuild guidance
+        state = spark.read.parquet(f"{base}/state")
+    except AnalysisException:
+        state = None
+    if state is None or "app_id" not in state.columns:
+        raise ValueError(
+            f"CMS store at {path} uses the pre-watermark ledger "
+            "layout (bare batch_id set) — rebuild the store; the "
+            "old layout can neither scope writers nor bound ledger "
+            "growth")
+    rows = state.collect()
+    geo = {n: rows[0][n] for n in ("depth", "width", "salt")}
+    if any(v is not None and geo[n] != v for n, v in want.items()):
+        raise ValueError(
+            f"CMS store at {path} was built with geometry "
+            f"(depth={geo['depth']}, width={geo['width']}, "
+            f"salt={geo['salt']!r}); caller expected "
+            + ", ".join(f"{n}={v!r}" for n, v in want.items()
+                        if v is not None)
+            + " — a different (row,bucket) space corrupts counts and "
+            "probe estimates")
+    return rows
 
 
 def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
@@ -753,34 +717,8 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
     last = storage.latest(spark, path, _CMS)
     if last is not None:
         base = _CMS.dir(path, last)
-        # pre-watermark snapshots have no state/ table at all (bare
-        # batches/ id set), so the layout check must catch the missing
-        # path — reading first would surface an opaque PATH_NOT_FOUND
-        # before the rebuild guidance
-        from pyspark.errors import AnalysisException
-        try:
-            state = spark.read.parquet(f"{base}/state")
-        except AnalysisException:
-            state = None
-        if state is None or "app_id" not in state.columns:
-            raise ValueError(
-                f"CMS store at {path} uses the pre-watermark ledger "
-                "layout (bare batch_id set) — rebuild the store; the "
-                "old layout can neither scope writers nor bound ledger "
-                "growth")
-        # ONE collect of the (writers-sized) state table serves the
-        # geometry check, the watermark lookup, and the carry-forward
-        # rows — three separate jobs cost ~0.3 s/update at 1e3 batches
-        rows = state.collect()
-        geo = rows[0]
-        if (geo["depth"], geo["width"], geo["salt"]) != (depth, width,
-                                                         salt):
-            raise ValueError(
-                f"CMS store at {path} was built with geometry "
-                f"(depth={geo['depth']}, width={geo['width']}, "
-                f"salt={geo['salt']!r}); update called with "
-                f"(depth={depth}, width={width}, salt={salt!r}) — "
-                "folding mismatched (row,bucket) spaces corrupts counts")
+        rows = _cms_state(spark, path, base, depth=depth, width=width,
+                          salt=salt)
         prev = [r["last_id"] for r in rows if r["app_id"] == app_id]
         if prev and bid <= prev[0]:
             return {"batch": last, "skipped": True}
@@ -833,21 +771,5 @@ def read_cms_store(spark, path: str, depth: int | None = None,
                          "snapshots — update_cms_store first")
     base = _CMS.dir(path, last)
     if depth is not None or width is not None or salt is not None:
-        from pyspark.errors import AnalysisException
-        try:
-            state = spark.read.parquet(f"{base}/state")
-        except AnalysisException:
-            state = None  # pre-watermark snapshots have no state/ table
-        if state is None or "app_id" not in state.columns:
-            raise ValueError(
-                f"CMS store at {path} uses the pre-watermark ledger "
-                "layout — rebuild the store")
-        geo = state.select("depth", "width", "salt").limit(1).collect()[0]
-        want = {"depth": depth, "width": width, "salt": salt}
-        for k, v in want.items():
-            if v is not None and geo[k] != v:
-                raise ValueError(
-                    f"CMS store at {path} has {k}={geo[k]!r}; reader "
-                    f"expected {v!r} — probe hashing would use a "
-                    "different (row,bucket) space")
+        _cms_state(spark, path, base, depth=depth, width=width, salt=salt)
     return spark.read.parquet(f"{base}/sketch")

@@ -14,20 +14,27 @@ finds it on disk, and the next commit retires it.
 This module is the only place that talks to the Hadoop FileSystem API
 for the stores. Each store declares its :class:`Layout` (prefix,
 marker, zero-pad width) and owns its numbering rule; the on-disk names
-are the stores' own and unchanged.
+are the stores' own and unchanged. :func:`write_generation` is the
+write-commit-retire sequence of a one-table generation, and
+:func:`fold_keyed` the null-safe keyed merge the stores fold a batch
+into their live table with.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 __all__ = ["Layout", "GEN", "RETAIN", "fs", "exists", "numbers",
            "listing", "is_committed", "committed", "latest",
            "next_number", "live_dir", "commit", "retire",
-           "write_unmarked", "is_path_missing"]
+           "write_unmarked", "write_generation", "fold_keyed",
+           "is_path_missing"]
 
 RETAIN = 2   # committed generations kept by retire: live + previous
 
@@ -157,6 +164,35 @@ def write_unmarked(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write ``df`` as parquet at ``path`` without Spark's ``_SUCCESS``
     file (for stores whose :func:`commit` marker carries that name)."""
     df.write.mode(mode).option(_MARK_SUCCESS, "false").parquet(path)
+
+
+def write_generation(spark: SparkSession, df: DataFrame, path: str,
+                     layout: Layout, n: int) -> None:
+    """Write ``df`` as generation ``n`` of the store at ``path`` — the
+    table unmarked, then its commit marker — and retire the generations
+    it supersedes."""
+    gen = layout.dir(path, n)
+    write_unmarked(df, gen)
+    commit(spark, gen, layout.marker)
+    retire(spark, path, layout)
+
+
+def fold_keyed(cur: DataFrame, delta: DataFrame, keys: list[str],
+               combine: dict) -> DataFrame:
+    """Fold ``delta`` into a keyed store table ``cur``: a full outer
+    join on ``keys``, then ``combine[col](old, new)`` for every value
+    column (either side is NULL where its table lacks the key). The join
+    is null-safe — a NULL key is one group, where plain equality
+    (NULL != NULL) would fork it into a new row on every fold. Output:
+    ``<keys>, <combine's columns>``."""
+    c, d = cur.alias("_cur"), delta.alias("_new")
+    on = reduce(operator.and_, [
+        F.col(f"_cur.{k}").eqNullSafe(F.col(f"_new.{k}")) for k in keys])
+    return c.join(d, on, "full").select(
+        *[F.coalesce(F.col(f"_cur.{k}"), F.col(f"_new.{k}")).alias(k)
+          for k in keys],
+        *[fn(F.col(f"_cur.{v}"), F.col(f"_new.{v}")).alias(v)
+          for v, fn in combine.items()])
 
 
 def is_path_missing(exc: AnalysisException) -> bool:

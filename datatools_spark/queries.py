@@ -4169,9 +4169,10 @@ def doc_cms_store_estimate(spark, sf_dir):
     def _eq(term):
         return lambda x: x == F.lit(term)
 
+    # coalesce: on an empty corpus every sum is NULL, the oracle's count 0
     cnt = d.agg(*[
-        F.sum(F.size(F.filter(warr, _eq(w)))).cast("bigint")
-        .alias(f"_c{i}") for i, w in enumerate(_CMS_PROBES)])
+        F.coalesce(F.sum(F.size(F.filter(warr, _eq(w)))), F.lit(0))
+        .cast("bigint").alias(f"_c{i}") for i, w in enumerate(_CMS_PROBES)])
     exact = (probes.crossJoin(F.broadcast(cnt))
              .select("word", F.coalesce(*[
                  F.when(F.col("word") == F.lit(w), F.col(f"_c{i}"))

@@ -885,51 +885,123 @@ class TestKMV:
         assert {r["g"]: r["hs"]
                 for r in read_kmv_store(spark, path).collect()} == got
 
+    @staticmethod
+    def _sample_store(kind):
+        """``(update, read, sketch, col, salt)`` of one sample-store kind
+        over a ``g, key, item, v`` frame: KMV sketches ``item``, the
+        value sample samples ``v`` by ``key``."""
+        from datatools_spark.operators import sketches as SK
+        if kind == "kmv":
+            return (lambda spark, b, path, k: SK.update_kmv_store(
+                        spark, b, path, ["g"], "item", k=k),
+                    SK.read_kmv_store,
+                    lambda b, k: SK.kmv_sketch(b, ["g"], "item", k=k),
+                    "hs", "kmv")
+        return (lambda spark, b, path, k: SK.update_value_sample_store(
+                    spark, b, path, ["g"], "key", "v", k=k),
+                SK.read_value_sample_store,
+                lambda b, k: SK.value_sample_sketch(b, ["g"], "key", "v",
+                                                    k=k),
+                "vs", "vsmpl")
+
+    @pytest.mark.parametrize("kind", ["kmv", "value_sample"])
     def test_kmv_store_null_group_key_merges_not_forks(self, spark,
-                                                       tmp_path):
+                                                       tmp_path, kind):
         """A NULL group key is a legitimate group: the snapshot⨝batch
         merge must be null-safe (r6-advice medium finding 3) — plain
         equality would fork the NULL group into a new store row on
         every update instead of merging its sketches."""
-        from datatools_spark.operators.sketches import (
-            kmv_sketch, read_kmv_store, update_kmv_store)
-        path = str(tmp_path / "kmv_null_store")
+        update, read, sketch, col, _ = self._sample_store(kind)
+        path = str(tmp_path / "null_store")
         k = 16
+        schema = "g string, key long, item string, v double"
         b1 = spark.createDataFrame(
-            [(None, "w1"), (None, "w2"), ("g1", "w3")],
-            "g string, item string")
+            [(None, 1, "w1", 1.0), (None, 2, "w2", 2.0),
+             ("g1", 3, "w3", 3.0)], schema)
         b2 = spark.createDataFrame(
-            [(None, "w2"), (None, "w4"), ("g1", "w5")],
-            "g string, item string")
+            [(None, 4, "w2", 4.0), (None, 5, "w4", 5.0),
+             ("g1", 6, "w5", 6.0)], schema)
         for b in (b1, b2):
-            update_kmv_store(spark, b, path, ["g"], "item", k=k)
-        rows = read_kmv_store(spark, path).collect()
+            update(spark, b, path, k)
+        rows = read(spark, path).collect()
         assert len(rows) == 2, f"NULL group forked: {rows}"
-        got = {r["g"]: r["hs"] for r in rows}
-        want = {r["g"]: r["hs"] for r in kmv_sketch(
-            b1.unionByName(b2), ["g"], "item", k=k).collect()}
+        got = {r["g"]: r[col] for r in rows}
+        want = {r["g"]: r[col]
+                for r in sketch(b1.unionByName(b2), k).collect()}
         assert got == want
 
-    def test_kmv_store_survives_empty_first_batch(self, spark, tmp_path):
+    @pytest.mark.parametrize("kind", ["kmv", "value_sample"])
+    def test_kmv_store_survives_empty_first_batch(self, spark, tmp_path,
+                                                  kind):
         """A committed ZERO-ROW first snapshot (e.g. an empty streaming
         micro-batch) must not brick the store: the row-literal geometry
         stamp is vacuous on an empty table, so later updates and reads
         accept it and proceed (pre-fix: IndexError on every subsequent
         call, permanently)."""
-        from datatools_spark.operators.sketches import (
-            kmv_sketch, read_kmv_store, update_kmv_store)
-        path = str(tmp_path / "kmv_empty_store")
-        empty = spark.createDataFrame([], "g long, item string")
-        update_kmv_store(spark, empty, path, ["g"], "item", k=16)
+        update, read, sketch, col, salt = self._sample_store(kind)
+        path = str(tmp_path / "empty_store")
+        empty = spark.createDataFrame(
+            [], "g long, key long, item string, v double")
+        update(spark, empty, path, 16)
         b = spark.range(0, 100).select(
-            (F.col("id") % 2).alias("g"),
-            F.concat(F.lit("w"), F.col("id").cast("string")).alias("item"))
-        update_kmv_store(spark, b, path, ["g"], "item", k=16)
-        got = {r["g"]: r["hs"] for r in
-               read_kmv_store(spark, path, k=16, salt="kmv").collect()}
-        want = {r["g"]: r["hs"] for r in
-                kmv_sketch(b, ["g"], "item", k=16).collect()}
+            (F.col("id") % 2).alias("g"), F.col("id").alias("key"),
+            F.concat(F.lit("w"), F.col("id").cast("string")).alias("item"),
+            (F.col("id") * 1.5).alias("v"))
+        update(spark, b, path, 16)
+        got = {r["g"]: r[col] for r in
+               read(spark, path, k=16, salt=salt).collect()}
+        want = {r["g"]: r[col] for r in sketch(b, 16).collect()}
         assert got == want
+
+    # Spark jobs per builder call. The forced redo path (margin=1e-9)
+    # runs no more than the fast path: its re-rank stays lazy until the
+    # caller's action.
+    @pytest.mark.parametrize("kind,margin,jobs", [
+        ("kmv", 4.0, 5), ("kmv", 1e-9, 5),
+        ("value_sample", 4.0, 4), ("value_sample", 1e-9, 4)])
+    def test_sketch_builder_job_count(self, spark, kind, margin, jobs):
+        from datatools_spark.operators.sketches import (kmv_sketch,
+                                                        value_sample_sketch)
+        from .conftest import count_jobs
+        df = spark.range(0, 1500).select(
+            (F.col("id") % 3).alias("g"), F.col("id").alias("key"),
+            F.concat(F.lit("w"), (F.col("id") % 300).cast("string"))
+            .alias("item"), (F.col("id") % 17).cast("double").alias("v"))
+        if kind == "kmv":
+            def build():
+                return kmv_sketch(df, ["g"], "item", k=16, margin=margin)
+        else:
+            def build():
+                return value_sample_sketch(df, ["g"], "key", "v", k=16,
+                                           margin=margin)
+        _, n = count_jobs(spark, build)
+        assert n == jobs
+
+    def test_store_update_job_counts(self, spark, tmp_path):
+        """Spark jobs of a warm update of each sketch store and of a
+        geometry-checked CMS read."""
+        from datatools_spark.operators.sketches import (read_cms_store,
+                                                        update_cms_store)
+        from .conftest import count_jobs
+        b = lambda i: spark.range(i * 50, i * 50 + 80).select(  # noqa: E731
+            (F.col("id") % 3).alias("g"), F.col("id").alias("key"),
+            F.concat(F.lit("w"), (F.col("id") % 41).cast("string"))
+            .alias("item"), (F.col("id") % 7).cast("double").alias("v"))
+        got = {}
+        for kind in ("kmv", "value_sample"):
+            update = self._sample_store(kind)[0]
+            path = str(tmp_path / kind)
+            update(spark, b(0), path, 8)
+            got[kind] = count_jobs(spark,
+                                   lambda: update(spark, b(1), path, 8))[1]
+        path = str(tmp_path / "cms")
+        update_cms_store(spark, b(0), path, "item", 0)
+        got["cms"] = count_jobs(spark, lambda: update_cms_store(
+            spark, b(1), path, "item", 1))[1]
+        got["cms_read"] = count_jobs(spark, lambda: read_cms_store(
+            spark, path, depth=4, width=1024, salt="cms"))[1]
+        assert got == {"kmv": 14, "value_sample": 13, "cms": 8,
+                       "cms_read": 3}
 
     def test_cms_store_pre_watermark_layout_message(self, spark,
                                                     tmp_path):

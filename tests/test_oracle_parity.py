@@ -25,3 +25,30 @@ def test_query_matches_oracle(spark, con, name):
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLE)))
 def test_rows_only_queries_run(spark, name):
     assert QUERIES[name](spark, SF_DIR).count() >= 0
+
+
+def test_cms_store_estimate_on_empty_corpus(spark, tmp_path):
+    """An empty documents table: every probe's estimate and exact count
+    is 0 — the rows the oracle's ``count(tok.w)`` returns — not NULL."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datatools_spark.queries import _mm_store_root
+    sf = str(tmp_path)
+    pq.write_table(pa.table({"doc_id": pa.array([], pa.int64()),
+                             "text": pa.array([], pa.string())}),
+                   f"{sf}/documents.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet')")
+    name = "doc_cms_store_estimate"
+    try:
+        rows = QUERIES[name](spark, sf).collect()
+        assert len(rows) == 4
+        assert {(r["cms_est"], r["exact"]) for r in rows} == {(0, 0)}
+        assert not compare(spark, con, QUERIES[name], ORACLE[name], sf)
+    finally:
+        shutil.rmtree(_mm_store_root(sf, "cms4x1024"), ignore_errors=True)
