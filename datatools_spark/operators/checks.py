@@ -33,6 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = ["not_null", "unique", "in_range", "accepted_values",
            "matches_regex", "row_count_between", "check_suite",
            "assert_checks"]
@@ -128,9 +130,9 @@ def check_suite(df: DataFrame, checks: Sequence) -> DataFrame:
         observed = float(row[f"_c{i}"]) if row[f"_c{i}"] is not None else 0.0
         out.append((name, observed, float(bound),
                     int(bool(ok(observed, bound)))))
-    return df.sparkSession.createDataFrame(
-        out, "check_name string, observed double, bound double, "
-             "passed int")
+    return local_frame(df.sparkSession, out,
+                       "check_name string, observed double, bound double, "
+                       "passed int")
 
 
 def assert_checks(df: DataFrame, checks: Sequence) -> None:

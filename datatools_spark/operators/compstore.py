@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import memo, storage
 
 __all__ = ["update_component_store", "read_components",
@@ -81,7 +82,7 @@ def _merge_map(spark: SparkSession, path: str) -> dict:
     lookup."""
     if not storage.exists(spark, _merges_path(path)):
         return {}
-    rows = spark.read.parquet(_merges_path(path)).collect()
+    rows = storage.read_parquet(spark, _merges_path(path)).collect()
     parent: dict = {}
     for r in rows:
         _union(parent, r["child"], r["parent"])
@@ -120,7 +121,7 @@ def _state(spark: SparkSession, path: str, fresh: bool = False):
     def build():
         members = None
         if storage.exists(spark, mp):
-            members = spark.read.parquet(mp)
+            members = storage.read_parquet(spark, mp)
             if fresh:
                 members = members.localCheckpoint(eager=True)
         return members, _merge_map(spark, path)
@@ -139,12 +140,11 @@ def read_components(spark: SparkSession, path: str) -> DataFrame:
     members, mm = _state(spark, path)
     if members is None:
         # raise the missing-store error a plain read raises
-        members = spark.read.parquet(_members_path(path))
+        members = storage.read_parquet(spark, _members_path(path))
     remap = [(c, r) for c, r in mm.items() if c != r]
     if not remap:
         return members.select("id", F.col("comp").alias("component"))
-    remap_df = F.broadcast(spark.createDataFrame(
-        remap, "comp long, _root long"))
+    remap_df = F.broadcast(local_frame(spark, remap, "comp long, _root long"))
     return (members.join(remap_df, "comp", "left")
             .select("id", F.coalesce("_root", "comp").alias("component")))
 
@@ -266,15 +266,14 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
     # semi-join, not a driver collect of the whole batch.
     losers = [x for x, root in group_root.items() if x != root]
     if losers and members is not None:
-        losers_df = spark.createDataFrame([(x,) for x in losers],
-                                          "child long")
+        losers_df = local_frame(spark, [(x,) for x in losers], "child long")
         existing = {r["child"] for r in
                     losers_df.join(members.select(F.col("id")
                                                   .alias("child")),
                                    "child", "left_semi").collect()}
         merges = [(x, group_root[x]) for x in losers if x in existing]
         if merges:
-            (spark.createDataFrame(merges, "child long, parent long")
+            (local_frame(spark, merges, "child long, parent long")
              .coalesce(1).write.mode("append")
              .parquet(_merges_path(path)))
 
@@ -282,8 +281,8 @@ def update_component_store(spark: SparkSession, ids: DataFrame,
     if n_new:
         bmap = [(x, r) for x, r in group_root.items() if x != r]
         if bmap:
-            remap = F.broadcast(spark.createDataFrame(
-                bmap, "id long, _root long"))
+            remap = F.broadcast(local_frame(spark, bmap,
+                                            "id long, _root long"))
             rows = (new_ids.join(remap, "id", "left")
                     .select("id", F.coalesce("_root", "id").alias("comp")))
         else:
@@ -309,4 +308,4 @@ def compact_component_store(spark: SparkSession, path: str,
     resolved = read_components(spark, path) \
         .select("id", F.col("component").alias("comp"))
     resolved.write.mode("overwrite").parquet(_members_path(out_path))
-    return spark.read.parquet(_members_path(out_path)).count()
+    return storage.read_parquet(spark, _members_path(out_path)).count()

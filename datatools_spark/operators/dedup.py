@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import memo
 from .partitioning import ensure_parallelism
 from .text import fingerprint_col, word_shingles, words_col
@@ -1156,10 +1157,9 @@ def embedding_dup_pairs(df: DataFrame, vec_col: str = "embedding",
         if dim is None:
             first = df.select(F.size(F.col(vec_col))).first()
             if first is None:
-                return work.sparkSession.createDataFrame(
-                    [], f"a_id {df.schema[id_col].dataType.simpleString()},"
-                        f" b_id {df.schema[id_col].dataType.simpleString()},"
-                        " cosine double")
+                idt = df.schema[id_col].dataType.simpleString()
+                return local_frame(work.sparkSession, [],
+                                   f"a_id {idt}, b_id {idt}, cosine double")
             dim = first[0]
         bucket = md5_bucket_col(vec_col, bucket_hyperplanes, dim)
     elif plane_family == "sin":

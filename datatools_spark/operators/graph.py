@@ -26,10 +26,20 @@ row per node — never materializing components as rows of pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DoubleType, StructField, StructType
 
-__all__ = ["connected_components", "pagerank", "triangle_stats"]
+from ..session import local_frame
+
+__all__ = ["connected_components", "pagerank", "triangle_stats",
+           "SMALL_GRAPH_THRESHOLD"]
+
+# Graphs of at most this many edge rows are solved on the driver:
+# connected_components counts the caller's OCCURRENCE rows (duplicates
+# and both directions) and pagerank the edge list its rounds would read;
+# 0 sends every non-empty graph to the distributed path.
+SMALL_GRAPH_THRESHOLD = 100_000
 
 
 # triangle counting lives in graph_triangle.py (two physical plans —
@@ -80,6 +90,13 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
     partitionings (the same fixed-decimal discipline as
     operators/classifier.py) — which is what lets an unrolled SQL
     oracle hash-match the full iteration.
+
+    Size gate: the edge count comes with N, from the degree frame,
+    and an edge list of at most ``SMALL_GRAPH_THRESHOLD`` rows (read at
+    call time) is collected as Arrow and iterated on the driver
+    (:func:`_pagerank_local`, the same rounds in numpy and the same
+    rounding), the ranks returned as a ``LocalRelation``. A bigger
+    graph runs the distributed rounds job for job as without a gate.
     """
     from ..plans.chooser import is_checkpoint_backed
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -110,7 +127,17 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
     # blocks than the dedicated checkpoint job costs.
     deg = (e.groupBy("u").agg(F.count("*").alias("_outdeg"))
            .localCheckpoint(eager=True))
-    n = deg.count()
+    # N and the edge count in the one job that counted N alone: the
+    # size gate costs a bigger graph nothing
+    n, m = deg.agg(F.count("*"), F.sum("_outdeg")).first()
+    if (m or 0) <= SMALL_GRAPH_THRESHOLD:
+        tbl = e.toArrow()
+        # a NULL id is a node the joins never match: left to the
+        # distributed path, which defines it
+        if not (tbl["u"].null_count or tbl["v"].null_count):
+            return _pagerank_local(e.sparkSession, tbl,
+                                   e.schema["u"].dataType, iters, damping,
+                                   round_dp)
     # (1-d)/n is built from the SAME primitive ops an external SQL twin
     # would use — literal subtraction and division in the engine, never
     # a Python-folded constant (1.0-0.85 != the SQL literal 0.15 at the
@@ -150,10 +177,77 @@ def pagerank(edges: DataFrame, src: str = "u", dst: str = "v",
     return pr.select("id", "pr")
 
 
+def _pagerank_local(spark: SparkSession, tbl, id_type: DataType,
+                    iters: int, damping: float, round_dp: int) -> DataFrame:
+    """:func:`pagerank`'s rounds over the collected edge list ``tbl``
+    (``u, v``, deduplicated or not as the distributed rounds read it),
+    with numpy. Every value is computed by the same double
+    operations as the distributed plan and rounded by
+    :func:`_round_half_up`, so the ranks are bit-identical to it except
+    where a sum of three or more contributions lies within float error
+    of a rounding half: there the order of the distributed sum (its
+    partitioning) decides."""
+    import numpy as np
+    schema = StructType([StructField("id", id_type),
+                         StructField("pr", DoubleType())])
+    if not tbl.num_rows:
+        return local_frame(spark, [], schema)
+    u, v = tbl["u"].to_numpy(), tbl["v"].to_numpy()
+    ids = np.unique(np.concatenate([u, v]))
+    ui, vi = np.searchsorted(ids, u), np.searchsorted(ids, v)
+    outdeg = np.bincount(ui, minlength=len(ids)).astype(np.float64)
+    node = outdeg > 0       # deg: the nodes with an out-edge
+    n = float(node.sum())
+    base = (1.0 - damping) / n
+    pr = np.full(len(ids),
+                 _round_half_up(spark, np.array([1.0 / n]), round_dp)[0])
+    for _ in range(iters):
+        s = np.bincount(vi, weights=pr[ui] / outdeg[ui], minlength=len(ids))
+        pr = _round_half_up(
+            spark, base + damping * _round_half_up(spark, s, round_dp),
+            round_dp)
+    return local_frame(spark, zip(ids[node].tolist(), pr[node].tolist()),
+                       schema)
+
+
+def _round_half_up(spark: SparkSession, x, dp: int):
+    """Spark's ``round(x, dp)`` of a double array:
+    ``BigDecimal.valueOf(x).setScale(dp, HALF_UP)`` — HALF_UP on the
+    decimal form ``Double.toString`` gives. Away from a half, that is
+    ``floor(|x|·10^dp)`` plus one above the half, divided back by
+    ``10^dp`` (one correctly rounded division, as ``doubleValue`` is).
+    Within the float error of a half — where the JVM's decimal form
+    decides, and JDK 17's is not always the shortest — and past 2^52,
+    the decimal form is the JVM's own ``Double.toString``."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+    scale = 10.0 ** dp
+    t = np.abs(x) * scale
+    ok = np.isfinite(t) & (t < 2.0 ** 52)
+    t = np.where(ok, t, 0.0)
+    whole = np.floor(t)
+    frac = t - whole
+    k = (whole + (frac > 0.5)).astype(np.int64)
+    out = np.where(x < 0, -k, k) / scale
+    near_half = ~(np.abs(frac - 0.5) > 1e-12 * np.maximum(t, 1.0))
+    out = np.where(np.isfinite(x), out, x)
+    idx = np.flatnonzero((near_half | ~ok) & np.isfinite(x))
+    if idx.size:
+        vals, inv = np.unique(x[idx], return_inverse=True)
+        to_string = spark._jvm.java.lang.Double.toString
+        q = Decimal(1).scaleb(-dp)
+        out[idx] = np.array([float(Decimal(to_string(float(v)))
+                                   .quantize(q, ROUND_HALF_UP))
+                             for v in vals])[inv]
+    return out
+
+
 def connected_components(edges: DataFrame, src: str = "a_id",
                          dst: str = "b_id",
                          max_iter: int = 25,
-                         small_graph_threshold: int = 100_000) -> DataFrame:
+                         small_graph_threshold: int = SMALL_GRAPH_THRESHOLD
+                         ) -> DataFrame:
     """Component labels for every node appearing in ``edges``
     (undirected). Output: ``id, component`` where component = min node
     id reachable; deterministic regardless of partitioning.
@@ -181,17 +275,21 @@ def connected_components(edges: DataFrame, src: str = "a_id",
     # posting-list pair frame that is the candidate join + verify
     # twice. The checkpoint is LAZY with the gate's count as its
     # materializing action (one blocking job — the r12 store-path
-    # shape). DELIBERATE trade (r11 ADVICE): the checkpoint stores the
-    # pre-distinct OCCURRENCE-sized multiset — for a duplicate-heavy
-    # pair generator that is more executor storage than the distinct
-    # set, and localCheckpoint blocks are lost on executor failure;
-    # callers with heavy duplication should distinct() before calling.
-    e0 = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-          .localCheckpoint(eager=False))
-    # the gate counts OCCURRENCE rows (r12): driver union-find needs
+    # shape), and skipped when the edge plan already reads only
+    # checkpoint blocks. DELIBERATE trade (r11 ADVICE): the checkpoint
+    # stores the pre-distinct OCCURRENCE-sized multiset — for a
+    # duplicate-heavy pair generator that is more executor storage than
+    # the distinct set, and localCheckpoint blocks are lost on executor
+    # failure; callers with heavy duplication should distinct() first.
+    # The gate counts OCCURRENCE rows (r12): driver union-find needs
     # neither the symmetrizing union nor a distinct, so the small path
-    # no longer pays a full-edge distinct EXCHANGE to bound the collect
+    # pays no full-edge distinct EXCHANGE to bound the collect.
+    from ..plans.chooser import is_checkpoint_backed
+    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if not is_checkpoint_backed(e0):
+        e0 = e0.localCheckpoint(eager=False)
     if e0.count() <= small_graph_threshold:
+        tbl = e0.toArrow()
         parent: dict = {}
 
         def find(x):
@@ -202,8 +300,7 @@ def connected_components(edges: DataFrame, src: str = "a_id",
                 parent[x], x = r, parent[x]
             return r
 
-        for row in e0.collect():
-            u, v = row["u"], row["v"]
+        for u, v in zip(tbl["u"].to_pylist(), tbl["v"].to_pylist()):
             parent.setdefault(u, u)
             parent.setdefault(v, v)
             ru, rv = find(u), find(v)
@@ -213,8 +310,8 @@ def connected_components(edges: DataFrame, src: str = "a_id",
                 parent[rv] = ru
         rows = [(x, find(x)) for x in parent]
         dtype = dict(e0.dtypes)["u"]
-        return e0.sparkSession.createDataFrame(
-            rows, f"id {dtype}, component {dtype}")
+        return local_frame(e0.sparkSession, rows,
+                           f"id {dtype}, component {dtype}")
     # distributed path: symmetrize + distinct off the materialized
     # occurrence blocks (both union branches are memory scans), then
     # checkpoint eagerly — every iteration's prop join reads it

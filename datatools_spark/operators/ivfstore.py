@@ -62,7 +62,7 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
         .select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col))
     assigned.write.mode("overwrite").partitionBy(centroid_id_col) \
         .parquet(f"{gen}/data")
-    data = spark.read.parquet(f"{gen}/data")
+    data = storage.read_parquet(spark, f"{gen}/data")
     c = F.broadcast(centroids.select(F.col(centroid_id_col),
                                      F.col(vec_col).alias("_cv")))
     baseline = (data.join(c, on=centroid_id_col)
@@ -92,8 +92,8 @@ def update_ivf_index(spark: SparkSession, batch: DataFrame, path: str,
     the anti-join's read of the files it appends to. Returns the number
     of newly indexed vectors."""
     root = storage.live_dir(spark, path, storage.GEN)
-    cents = spark.read.parquet(f"{root}/centroids")
-    existing = spark.read.parquet(f"{root}/data").select(id_col)
+    cents = storage.read_parquet(spark, f"{root}/centroids")
+    existing = storage.read_parquet(spark, f"{root}/data").select(id_col)
     new = batch.join(existing, id_col, "left_anti")
     assigned = ivf_assign(new, cents, vec_col, id_col, centroid_id_col,
                           keep_vec=True) \
@@ -120,7 +120,7 @@ def ivf_index_search(spark: SparkSession, path: str, query: DataFrame,
     the same centroids (equality-tested).
     Output: ``query_id, vec_id, cosine, rank``."""
     root = storage.live_dir(spark, path, storage.GEN)
-    cents = spark.read.parquet(f"{root}/centroids")
+    cents = storage.read_parquet(spark, f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))
     qs = (query.select(F.col(query_id_col), F.col(vec_col).alias("_qv"))
@@ -139,7 +139,7 @@ def ivf_index_search(spark: SparkSession, path: str, query: DataFrame,
     probe_cells = sorted({r[0] for r in
                           probes.select(centroid_id_col).distinct()
                           .collect()})
-    data = (spark.read.parquet(f"{root}/data")
+    data = (storage.read_parquet(spark, f"{root}/data")
             .where(F.col(centroid_id_col).isin(probe_cells)))
     # gate the broadcast hint on a metadata-known small QUERY input:
     # probes carries one full query embedding per (query, probe) row,
@@ -202,10 +202,10 @@ def ivf_index_stats(spark: SparkSession, path: str,
     Output: ``centroid_id, n_vectors, mean_residual, fill_skew,
     drift_ratio, needs_recluster, needs_retrain``."""
     root = storage.live_dir(spark, path, storage.GEN)
-    cents = spark.read.parquet(f"{root}/centroids")
+    cents = storage.read_parquet(spark, f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))
-    data = spark.read.parquet(f"{root}/data")
+    data = storage.read_parquet(spark, f"{root}/data")
     res = (data.join(c, on=centroid_id_col)
            .withColumn("_res",
                        F.lit(1.0) - cosine_expr(F.col(vec_col),

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import storage
 from .skipping import build_file_stats
 
@@ -103,7 +104,7 @@ def _write_gen_stats(spark: SparkSession, root: str, gen: int,
         # an all-delete merge can write an empty generation; its stats
         # are an empty manifest in the LIVE manifest's exact schema, so
         # the _stats/* union read stays type-consistent
-        stats = spark.createDataFrame([], empty_schema)
+        stats = local_frame(spark, [], empty_schema)
     stats.coalesce(1).write.mode("overwrite") \
         .parquet(f"{root}/_stats/{_GEN}{gen}")
 
@@ -113,9 +114,7 @@ def _commit(spark: SparkSession, root: str, gen: int,
     """The commit point: tombstoned source paths (possibly none) land at
     ``_log/gen-<n>``; the generation becomes visible when the log's
     _SUCCESS marker is written after them."""
-    rows = [(f,) for f in tombstones]
-    df = spark.createDataFrame(rows, "file string") if rows \
-        else spark.createDataFrame([], "file string")
+    df = local_frame(spark, [(f,) for f in tombstones], "file string")
     log = _GENS.dir(f"{root}/_log", gen)
     storage.write_unmarked(df.coalesce(1), log)
     storage.commit(spark, log, _GENS.marker)
@@ -126,8 +125,8 @@ def _tombstoned(spark: SparkSession, root: str,
     paths = [f"{root}/_log/{_GEN}{g}" for g in gens]
     paths = [p for p in paths if _parquet_files(spark, p)]
     if not paths:
-        return spark.createDataFrame([], "file string")
-    return spark.read.parquet(*paths).select("file")
+        return local_frame(spark, [], "file string")
+    return storage.read_parquet(spark, *paths).select("file")
 
 
 def _latest_gen(spark: SparkSession, root: str) -> int | None:
@@ -150,7 +149,7 @@ def _vacuum_watermark(spark: SparkSession, root: str) -> int:
     wm = ck if ck is not None else 0
     p = f"{root}/_vacuum"
     if _parquet_files(spark, p):
-        wm = max(wm, int(spark.read.parquet(p)
+        wm = max(wm, int(storage.read_parquet(spark, p)
                          .agg(F.max("min_readable_gen")).collect()[0][0]))
     return wm
 
@@ -185,11 +184,11 @@ def merge_store_stats(spark: SparkSession, root: str,
         # tombstones) apply on top — per-read metadata cost is bounded
         # by the retain window, not the store's lifetime gen count
         gens = [g for g in gens if g > ck]
-        base = spark.read.parquet(f"{root}/{_CKPT}/{_GEN}{ck}")
+        base = storage.read_parquet(spark, f"{root}/{_CKPT}/{_GEN}{ck}")
         paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
         paths = [p for p in paths if _parquet_files(spark, p)]
         stats = base if not paths \
-            else base.unionByName(spark.read.parquet(*paths))
+            else base.unionByName(storage.read_parquet(spark, *paths))
         return stats.join(_tombstoned(spark, root, gens), "file",
                           "left_anti")
     paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
@@ -197,7 +196,7 @@ def merge_store_stats(spark: SparkSession, root: str,
     if not paths:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — init_merge_store first")
-    stats = spark.read.parquet(*paths)
+    stats = storage.read_parquet(spark, *paths)
     return stats.join(_tombstoned(spark, root, gens), "file", "left_anti")
 
 
@@ -226,11 +225,11 @@ def read_merge_store(spark: SparkSession, root: str,
                 _tombstoned(spark, root, gens).collect()]
         for f in sorted(dead):
             if storage.exists(spark, f):
-                return spark.read.parquet(f).where(F.lit(False))
+                return storage.read_parquet(spark, f).where(F.lit(False))
         raise ValueError(f"merge store at {root} is empty and every "
                          "historical file was vacuumed — nothing to "
                          "infer a schema from")
-    return spark.read.parquet(*files)
+    return storage.read_parquet(spark, *files)
 
 
 def vacuum_merge_store(spark: SparkSession, root: str,
@@ -265,7 +264,7 @@ def vacuum_merge_store(spark: SparkSession, root: str,
         if fs.exists(p):
             fs.delete(p, False)
             deleted += 1
-    (spark.createDataFrame([(wm,)], "min_readable_gen long")
+    (local_frame(spark, [(wm,)], "min_readable_gen long")
      .coalesce(1).write.mode("append").parquet(f"{root}/_vacuum"))
     return {"watermark": wm, "files_deleted": deleted,
             "files_retained_dead": int(dead_all - len(dead_old))}
@@ -332,7 +331,7 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     # to answer "was generation g <= wm committed" for the change feed
     roster = sorted(set(covered)
                     | set(_roster_gens(spark, root, ck_old)))
-    (spark.createDataFrame([(g,) for g in roster] or [], "gen long")
+    (local_frame(spark, [(g,) for g in roster], "gen long")
      .coalesce(1).write.mode("errorifexists")
      .parquet(f"{root}/{_ROSTER}/{_GEN}{wm}"))
     snapshot = merge_store_stats(spark, root, at_generation=wm)
@@ -392,7 +391,7 @@ def _roster_gens(spark: SparkSession, root: str,
     if not _parquet_files(spark, p):
         return []
     return sorted(int(r["gen"])
-                  for r in spark.read.parquet(p).collect())
+                  for r in storage.read_parquet(spark, p).collect())
 
 
 def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
@@ -426,7 +425,7 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
     # generation readers never see.
     anynull = F.greatest(*[F.col(k).isNull() for k in key_cols]) \
         if len(key_cols) > 1 else F.col(key_cols[0]).isNull()
-    chk = (spark.read.parquet(gen_dir).select(*key_cols)
+    chk = (storage.read_parquet(spark, gen_dir).select(*key_cols)
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.when(anynull, 1).otherwise(0)).alias("nn"),
                 F.count_distinct(*[F.col(k) for k in key_cols])
@@ -492,7 +491,7 @@ def read_change_feed(spark: SparkSession, root: str,
     if not gens:
         raise ValueError(f"merge store at {root}: no committed "
                          "generations in the requested feed range")
-    parts = [spark.read.parquet(f"{root}/_changes/{_GEN}{g}")
+    parts = [storage.read_parquet(spark, f"{root}/_changes/{_GEN}{g}")
              .withColumn("_generation", F.lit(g)) for g in gens]
     out = parts[0]
     for p in parts[1:]:
@@ -552,7 +551,7 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
     stats = merge_store_stats(spark, root)
     first = stats.select("file").limit(1).collect()
     if first:   # schema from one live file — no second manifest assembly
-        store_cols = spark.read.parquet(first[0]["file"]).columns
+        store_cols = storage.read_parquet(spark, first[0]["file"]).columns
     else:       # fully-deleted store: schema via the dead-file fallback
         store_cols = read_merge_store(spark, root).columns
     if when_matched == "update" and set(updates.columns) != set(store_cols):
@@ -615,7 +614,7 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
                 "files_live_before": files_live_before,
                 "rows_matched": 0, "rows_inserted": 0, "rows_deleted": 0}
     if cand_files:
-        touched = spark.read.parquet(*cand_files)
+        touched = storage.read_parquet(spark, *cand_files)
         if change_feed:
             # the feed reads touched twice (pre-images + survivors);
             # checkpoint so the candidate files are scanned once
@@ -657,7 +656,7 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
         if when_matched == "update":
             pre = None if matched_pre is None else \
                 matched_pre.withColumn(ct, F.lit("update_preimage"))
-            matched_keys = (spark.createDataFrame([], keys.schema)
+            matched_keys = (local_frame(spark, [], keys.schema)
                             if matched_pre is None
                             else matched_pre.select(*key_cols))
             ordered = updates.select(*store_cols)
@@ -679,7 +678,7 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
         checkpoint_merge_store(spark, root,
                                retain_generations=retain_generations,
                                min_advance=retain_generations)
-    gen_stats = spark.read.parquet(f"{root}/_stats/{_GEN}{gen}")
+    gen_stats = storage.read_parquet(spark, f"{root}/_stats/{_GEN}{gen}")
     gen_rows = (gen_stats.agg(F.coalesce(F.sum("n_rows"), F.lit(0)))
                 .collect()[0][0])
     if when_matched == "update":
@@ -779,7 +778,7 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
         F.when(F.col("_change_type").isin("insert", "update_postimage"),
                F.lit(1)).otherwise(F.lit(-1)))
     delta = _rollup_agg(signed, group_cols, val_col)
-    cur = spark.read.parquet(_ROLLUP.dir(state_dir, applied))
+    cur = storage.read_parquet(spark, _ROLLUP.dir(state_dir, applied))
     d = delta.localCheckpoint(eager=True)
     # null-safe fold: a NULL group key is one group, never a new row per
     # refresh; a group absent on one side contributes zero
@@ -803,7 +802,7 @@ def read_feed_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
     ``n_rows``, ``avg_val`` — derived off the retraction-safe
     partials, read from the newest committed snapshot."""
     g = _applied_through(spark, state_dir)
-    r = spark.read.parquet(_ROLLUP.dir(state_dir, g))
+    r = storage.read_parquet(spark, _ROLLUP.dir(state_dir, g))
     gcols = [c for c in r.columns if c not in ("s", "n")]
     return r.select(*gcols,
                     F.col("s").cast("double").alias("sum_val"),

@@ -66,6 +66,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import memo, storage
 from .dedup import (MASS_BUDGET_FACTOR, MASS_SLACK_FACTOR,
                     STRUCTURAL_CAP_PER_HASH, minhash_signature)
@@ -221,7 +222,7 @@ def compact_signature_store(spark: SparkSession, path: str) -> dict:
     Returns ``{"rows", "files_before", "files_after", "generation"}``.
     """
     root = resolve_signature_root(spark, path)
-    src = spark.read.parquet(root)
+    src = storage.read_parquet(spark, root)
 
     def data_files(d: str) -> int:   # markers and checksum sidecars aside
         return sum(not p.rsplit("/", 1)[-1].startswith(("_", "."))
@@ -235,7 +236,7 @@ def compact_signature_store(spark: SparkSession, path: str) -> dict:
     src.coalesce(nf).write.mode("overwrite").parquet(gen)
     # equality gate BEFORE the commit point: a short write must never
     # become the live store
-    n_new = spark.read.parquet(gen).count()
+    n_new = storage.read_parquet(spark, gen).count()
     if n_src != n_new:
         raise RuntimeError(
             f"compact_signature_store: compacted generation holds "
@@ -254,8 +255,8 @@ def _projection(spark: SparkSession, codec: _Codec, path: str,
     ``frame`` is the ``(id_col, signature, *stamps)`` projection,
     localCheckpointed; ``stats`` its ``(geometry, is_tombstone, count)``
     rows. The checkpoint is lazy and the stats aggregation is its
-    materializing action, so both cost ONE job (plus the parquet schema
-    job). A checkpoint, not a cached plan: a store append triggers
+    materializing action, so both cost ONE job (the schema comes from a
+    footer read, :func:`storage.read_parquet`). A checkpoint, not a cached plan: a store append triggers
     Spark's recache of any cached plan reading the store path, which
     would recompute the updater's anti-join against the post-write
     store. Raises PATH_NOT_FOUND for a missing store, and ValueError for
@@ -270,7 +271,7 @@ def _projection(spark: SparkSession, codec: _Codec, path: str,
            storage.listing(spark, root))
 
     def build():
-        raw = spark.read.parquet(root)
+        raw = storage.read_parquet(spark, root)
         if codec.mark not in raw.columns:
             raise ValueError(
                 f"store at {root} has no {codec.mark} column — it is not "
@@ -375,8 +376,8 @@ def _pairs(spark: SparkSession, codec: _Codec, batch: DataFrame,
             # every row is a tombstone: a VALID store that has signed
             # nothing pairable yet — zero pairs, not an error
             idt = dict(raw.dtypes)[id_col]
-            return spark.createDataFrame(
-                [], f"a_id {idt}, b_id {idt}, {codec.sim}")
+            return local_frame(spark, [],
+                               f"a_id {idt}, b_id {idt}, {codec.sim}")
         raise ValueError(
             f"signature store at {path} is empty — run {codec.updater} "
             "on the batch first (the pair reader joins batch signatures "

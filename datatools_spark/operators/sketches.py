@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import storage
+from ..session import local_frame
+from . import memo, storage
 
 __all__ = ["cms_bucket_col", "cms_build", "cms_estimate",
            "cms_inner_product",
@@ -506,7 +507,7 @@ def _update_sample_store(spark, sketch: DataFrame, path: str,
     last = storage.latest(spark, path, layout)
     merged, nxt = sketch, 0
     if last is not None:
-        cur = spark.read.parquet(layout.dir(path, last))
+        cur = storage.read_parquet(spark, layout.dir(path, last))
         _check_sketch_geometry(cur, path, k=k, salt=salt)
         merged = storage.fold_keyed(
             cur.drop("_k", "_salt"), sketch, group_cols,
@@ -516,7 +517,10 @@ def _update_sample_store(spark, sketch: DataFrame, path: str,
     merged = merged.withColumn("_k", F.lit(int(k))) \
         .withColumn("_salt", F.lit(salt))
     storage.write_generation(spark, merged.coalesce(1), path, layout, nxt)
-    return {"batch": nxt, "groups": int(merged.count())}
+    # count the one-file generation just written: counting ``merged``
+    # would run the whole keyed fold (live read + outer join) again
+    groups = storage.read_parquet(spark, layout.dir(path, nxt)).count()
+    return {"batch": nxt, "groups": int(groups)}
 
 
 def _check_sketch_geometry(snapshot: DataFrame, path: str, **want) -> None:
@@ -568,7 +572,7 @@ def _read_sample_store(spark, path: str, layout: storage.Layout,
     if last is None:
         raise ValueError(f"{label} store at {path} has no committed "
                          f"snapshots — {updater} first")
-    out = spark.read.parquet(layout.dir(path, last))
+    out = storage.read_parquet(spark, layout.dir(path, last))
     if k is not None or salt is not None:
         _check_sketch_geometry(out, path, **{
             n: v for n, v in (("k", k), ("salt", salt)) if v is not None})
@@ -625,6 +629,10 @@ def _cms_batch_cells(batch: DataFrame, item_col: str, depth: int,
                                  salt)
 
 
+def _cms_state_key(spark, base: str) -> tuple:
+    return ("cms_state", base, storage.listing(spark, f"{base}/state"))
+
+
 def _cms_state(spark, path: str, base: str, **want) -> list:
     """The rows of generation ``base``'s ``state/`` ledger — one per
     writer, carrying the geometry — after two refusals: a pre-watermark
@@ -632,21 +640,27 @@ def _cms_state(spark, path: str, base: str, **want) -> list:
     a stored geometry that differs from any non-None
     ``depth``/``width``/``salt`` in ``want``. ONE collect of the
     writers-sized table serves the geometry check, the watermark lookup
-    and the carried-forward ledger rows."""
+    and the carried-forward ledger rows; it is memoized on the
+    ledger's file listing, so the warm reads of one generation run no
+    job."""
     from pyspark.errors import AnalysisException
-    try:
-        # catch the missing path: reading first would surface an opaque
-        # PATH_NOT_FOUND before the rebuild guidance
-        state = spark.read.parquet(f"{base}/state")
-    except AnalysisException:
-        state = None
-    if state is None or "app_id" not in state.columns:
-        raise ValueError(
-            f"CMS store at {path} uses the pre-watermark ledger "
-            "layout (bare batch_id set) — rebuild the store; the "
-            "old layout can neither scope writers nor bound ledger "
-            "growth")
-    rows = state.collect()
+
+    def collect():
+        try:
+            # catch the missing path: reading first would surface an
+            # opaque PATH_NOT_FOUND before the rebuild guidance
+            state = storage.read_parquet(spark, f"{base}/state")
+        except AnalysisException:
+            state = None
+        if state is None or "app_id" not in state.columns:
+            raise ValueError(
+                f"CMS store at {path} uses the pre-watermark ledger "
+                "layout (bare batch_id set) — rebuild the store; the "
+                "old layout can neither scope writers nor bound ledger "
+                "growth")
+        return state.collect()
+
+    rows = memo.get(spark, _cms_state_key(spark, base), collect)
     geo = {n: rows[0][n] for n in ("depth", "width", "salt")}
     if any(v is not None and geo[n] != v for n, v in want.items()):
         raise ValueError(
@@ -722,7 +736,7 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
         prev = [r["last_id"] for r in rows if r["app_id"] == app_id]
         if prev and bid <= prev[0]:
             return {"batch": last, "skipped": True}
-        merged = (spark.read.parquet(f"{base}/sketch")
+        merged = (storage.read_parquet(spark, f"{base}/sketch")
                   .unionByName(_cms_batch_cells(batch, item_col, depth,
                                                 width, salt))
                   .groupBy("row", "bucket").agg(F.sum("c").alias("c")))
@@ -733,19 +747,10 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
         merged = _cms_batch_cells(batch, item_col, depth, width, salt)
         others = []
         nxt = 0
-    # JVM-side literal rows, NOT createDataFrame(list): a Python-list
-    # parallelize writes through defaultParallelism Python-worker tasks
-    # and measured ~4 s per 1-row ledger write; range(1)+lit writes in
-    # ~0.2 s (F.lit also escapes app_id/salt safely)
-    from functools import reduce
-    ledger = reduce(DataFrame.unionByName, [
-        spark.range(1).select(
-            F.lit(a).alias("app_id"),
-            F.lit(i).cast("long").alias("last_id"),
-            F.lit(depth).cast("int").alias("depth"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(salt).alias("salt"))
-        for a, i in others + [(app_id, bid)]])
+    ledger = local_frame(
+        spark, [(a, i, depth, width, salt)
+                for a, i in others + [(app_id, bid)]],
+        "app_id string, last_id long, depth int, width int, salt string")
     gen = _CMS.dir(path, nxt)
     merged.coalesce(1).write.mode("overwrite").parquet(f"{gen}/sketch")
     ledger.coalesce(1).write.mode("overwrite").parquet(f"{gen}/state")
@@ -753,6 +758,8 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
     # SNAPSHOT-level marker lands only after both tables committed
     storage.commit(spark, gen, _CMS.marker)
     storage.retire(spark, path, _CMS)
+    # the ledger just written is the next call's read (a local collect)
+    memo.put(spark, _cms_state_key(spark, gen), ledger.collect())
     return {"batch": nxt, "skipped": False}
 
 
@@ -772,4 +779,4 @@ def read_cms_store(spark, path: str, depth: int | None = None,
     base = _CMS.dir(path, last)
     if depth is not None or width is not None or salt is not None:
         _cms_state(spark, path, base, depth=depth, width=width, salt=salt)
-    return spark.read.parquet(f"{base}/sketch")
+    return storage.read_parquet(spark, f"{base}/sketch")

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import storage
 
 __all__ = ["build_file_stats", "update_file_stats", "prune_files",
@@ -43,7 +44,7 @@ def build_file_stats(spark: SparkSession, path: str,
     metadata. Columns with no non-null values in a file yield null
     min/max — :func:`prune_files` drops such files for range predicates
     on that column (a range predicate cannot match null)."""
-    return _stats_from(spark.read.parquet(path), cols)
+    return _stats_from(storage.read_parquet(spark, path), cols)
 
 
 def _stats_from(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -62,7 +63,7 @@ def update_file_stats(spark: SparkSession, path: str, cols: list[str],
     input_file_name, so the old shape paid a full O(table) data pass
     per refresh, defeating the function at the 1e5-file scale this
     module targets); the union is the refreshed manifest."""
-    listed = set(spark.read.parquet(path).inputFiles())
+    listed = set(storage.read_parquet(spark, path).inputFiles())
     known = {r["file"] for r in manifest.select("file").collect()}
     new = sorted(listed - known)
     if not new:
@@ -211,8 +212,7 @@ def plan_compaction(manifest: DataFrame,
             plans.append((f, n, gid))
             gid += 1
     spark = manifest.sparkSession
-    out = spark.createDataFrame(
-        plans, "file string, n_rows long, group_id long")
+    out = local_frame(spark, plans, "file string, n_rows long, group_id long")
     from pyspark.sql import Window
     g = Window.partitionBy("group_id")
     return (out.withColumn("group_rows",
@@ -282,7 +282,7 @@ def apply_compaction(spark: SparkSession, plan: DataFrame,
     replaced = [(f, int(row["group_id"]))
                 for row in groups for f in row["files"]]
     if replaced:
-        (spark.createDataFrame(replaced, "file string, group_id long")
+        (local_frame(spark, replaced, "file string, group_id long")
          .coalesce(1).write.mode("overwrite")
          .parquet(f"{out_path}/_replaced"))
     return len(groups)
@@ -299,7 +299,8 @@ def refresh_manifest_after_compaction(spark: SparkSession,
     compacted table with no duplicated and no stale rows."""
     if not storage.exists(spark, f"{out_path}/_replaced"):
         return manifest   # nothing was rewritten (all-singleton plan)
-    replaced = spark.read.parquet(f"{out_path}/_replaced").select("file")
+    replaced = storage.read_parquet(spark, f"{out_path}/_replaced") \
+        .select("file")
     kept = manifest.join(replaced, "file", "left_anti")
     fresh = build_file_stats(spark, out_path, cols)
     return kept.unionByName(fresh)

@@ -26,7 +26,8 @@ import operator
 from functools import reduce
 from typing import NamedTuple
 
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +35,7 @@ __all__ = ["Layout", "GEN", "RETAIN", "fs", "exists", "numbers",
            "listing", "is_committed", "committed", "latest",
            "next_number", "live_dir", "commit", "retire",
            "write_unmarked", "write_generation", "fold_keyed",
-           "is_path_missing"]
+           "read_parquet", "is_path_missing"]
 
 RETAIN = 2   # committed generations kept by retire: live + previous
 
@@ -193,6 +194,73 @@ def fold_keyed(cur: DataFrame, delta: DataFrame, keys: list[str],
           for k in keys],
         *[fn(F.col(f"_cur.{v}"), F.col(f"_new.{v}")).alias(v)
           for v, fn in combine.items()])
+
+
+def _footer_schema(spark: SparkSession, paths: tuple):
+    """The schema Spark's parquet inference would give ``paths``, read
+    on the driver from one footer, or None where inference could differ
+    or fail. The files are listed by Spark's own ``InMemoryFileIndex``
+    (its hidden-file and partition rules), and the file inference would
+    read is chosen by Spark's own ``ParquetUtils.splitFiles`` (private,
+    so called by reflection) in ``inferSchema``'s order: a
+    ``_common_metadata``, a ``_metadata``, else the first data file by
+    path. Its footer is converted by Spark's ``readSchema`` under the
+    session's type settings. Every step is one call into the JVM, so
+    the cost does not grow with the file count. None for:
+    ``mergeSchema`` on, a glob, partition columns, no file (a missing
+    path), or any call that fails."""
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower()
+            == "true" or any(c in p for p in paths for c in "*?[{")):
+        return None
+    jvm, jss = spark._jvm, spark._jsparkSession
+    gw = spark.sparkContext._gateway
+    ds = jvm.org.apache.spark.sql.execution.datasources
+    try:
+        none = jvm.scala.Option.empty()
+        index = ds.InMemoryFileIndex(
+            jss, jvm.PythonUtils.toSeq(
+                [jvm.org.apache.hadoop.fs.Path(p) for p in paths]),
+            jvm.PythonUtils.toScalaMap({}), none,
+            getattr(getattr(ds, "NoopCache$"), "MODULE$"), none, none)
+        if not index.partitionSchema().isEmpty():
+            return None
+        utils = getattr(getattr(ds.parquet, "ParquetUtils$"), "MODULE$")
+        arg_types = gw.new_array(jvm.java.lang.Class, 1)
+        arg_types[0] = jvm.java.lang.Class.forName(
+            "scala.collection.immutable.Seq")
+        split = utils.getClass().getDeclaredMethod("splitFiles", arg_types)
+        split.setAccessible(True)
+        args = gw.new_array(jvm.java.lang.Object, 1)
+        args[0] = index.allFiles()
+        kinds = split.invoke(utils, args)
+        first = next((k.head() for k in (kinds.commonMetadata(),
+                                          kinds.metadata(), kinds.data())
+                      if k.nonEmpty()), None)
+        if first is None:
+            return None
+        pff = getattr(getattr(ds.parquet, "ParquetFileFormat$"), "MODULE$")
+        ignore = spark.conf.get("spark.sql.files.ignoreCorruptFiles",
+                                "false").lower() == "true"
+        footers = pff.readParquetFootersInParallel(
+            jss.sessionState().newHadoopConf(),
+            jvm.PythonUtils.toSeq([first]), ignore)
+        schema = pff.readSchema(footers, jss)
+    except (Py4JError, PySparkException):   # Spark's own read raises it
+        return None
+    if schema.isEmpty():
+        return None
+    from pyspark.sql.types import _parse_datatype_json_string
+    return _parse_datatype_json_string(schema.get().json())
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job:
+    the schema comes from one footer read on the driver (see
+    :func:`_footer_schema`) and is handed to the reader. Where it cannot
+    be, this is the plain inferring read, so every error is Spark's."""
+    schema = _footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def is_path_missing(exc: AnalysisException) -> bool:

@@ -39,6 +39,8 @@ from .operators import plotsink as PS
 from .operators import resample as RS
 from .operators import rolling as RL
 from .operators import similarity as SIM
+from .operators import storage
+from .session import local_frame
 from .operators import text as TX
 from .operators import velocity as V
 from .functions import timeutils as TU
@@ -61,7 +63,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # set at runtime — the driver's session may not have it) and
         # truncate to microseconds, matching DuckDB's ns→us cast.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = storage.read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -76,7 +78,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # guard pays only where heavy CPU runs PRE-shuffle (md5/shingle
         # doc ops — guarded at the operator layer).
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return storage.read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # The oracle views see events.ts at nanosecond precision; shadow the view
@@ -354,7 +356,8 @@ def ts_interval_lookup(spark, sf_dir):
     """J2: piecewise sensor-height assignment via broadcast interval join
     (hydrotools.py:351-366, 449-463 re-expressed as a time schedule)."""
     ev = _t(spark, sf_dir, "events")
-    sched = spark.createDataFrame(
+    sched = local_frame(
+        spark,
         [("2024-01-01", "2024-01-10", 1.0),
          ("2024-01-10", "2024-01-20", 2.0),
          ("2024-01-20", "2024-02-01", 3.0)],
@@ -4103,8 +4106,7 @@ def doc_cms_estimate(spark, sf_dir):
     wc = tok.groupBy("w").agg(F.count("*").alias("_n")) \
         .localCheckpoint(eager=True)
     sketch = SK.cms_build_from_counts(wc, "w", "_n")
-    probes = spark.createDataFrame([(w,) for w in _CMS_PROBES],
-                                   "word string")
+    probes = local_frame(spark, [(w,) for w in _CMS_PROBES], "word string")
     est = SK.cms_estimate(sketch, probes, "word")
     # inner broadcast join (buildRight legal) — the hint on the
     # preserved side of a left join was silently ignored and shuffled
@@ -4151,8 +4153,7 @@ def doc_cms_store_estimate(spark, sf_dir):
                         app_id="seed")
     sketch = SK.read_cms_store(spark, store, depth=4, width=1024,
                                salt="cms")
-    probes = spark.createDataFrame([(w,) for w in _CMS_PROBES],
-                                   "word string")
+    probes = local_frame(spark, [(w,) for w in _CMS_PROBES], "word string")
     est = SK.cms_estimate(sketch, probes, "word")
     # exact probe counts WITHOUT materializing the token multiset
     # (r12, guide §4.1/§2.3): the old shape exploded every token of
@@ -4466,8 +4467,7 @@ def doc_bpe_train(spark, sf_dir):
     d = ensure_parallelism_docs(_t(spark, sf_dir, "documents"))
     merges, toks = TX.bpe_train(d, rounds=3)
     toks.unpersist()
-    return spark.createDataFrame(
-        [(r, p, n) for r, p, n in merges], "round int, pair string, n long")
+    return local_frame(spark, merges, "round int, pair string, n long")
 
 
 def _bpe_encode_sql(rounds: int = 3) -> str:
@@ -9770,9 +9770,9 @@ def ts_dtw_pairs(spark, sf_dir):
     types = [r[0] for r in
              ev.select("event_type").distinct().orderBy("event_type")
              .collect()]
-    pairs = spark.createDataFrame(
-        [(a, b) for i, a in enumerate(types) for b in types[i + 1:]],
-        ["a", "b"])
+    pairs = local_frame(
+        spark, [(a, b) for i, a in enumerate(types) for b in types[i + 1:]],
+        "a string, b string")
     out = CO.dtw_pair_distances(ev, pairs, series_col="event_type",
                                 grain="HOUR", band=48)
     return out.select("a", "b", "n_a", "n_b",

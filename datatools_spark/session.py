@@ -10,7 +10,9 @@ scale-oriented defaults:
   (gpstools.py:698, diurnal.py:233-234); we pin UTC so timestamp semantics
   are deterministic across engines (DuckDB oracle reads naive timestamps).
 - Arrow enabled for the few pandas-interop boundaries (multimodal UDFs,
-  ``toPandas`` at viz sinks) — never on the parity hot path.
+  ``toPandas`` at viz sinks) — never on the parity hot path. Driver-side
+  rows become frames through :func:`local_frame`, an Arrow-built
+  ``LocalRelation``.
 - ``shuffle.partitions`` defaults sized for local test runs; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
 """
@@ -19,9 +21,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["get_spark", "ship_package_to_workers",
+__all__ = ["get_spark", "ship_package_to_workers", "local_frame",
            "DEFAULT_SHUFFLE_PARTITIONS"]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -60,6 +62,33 @@ def ship_package_to_workers(spark: SparkSession) -> None:
                 z.write(full, arc)
     sc.addPyFile(zpath)
     sc._datatools_shipped = True
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema``'s field
+    order; ``schema`` a DDL string or StructType), built through an
+    Arrow table so its plan is a ``LocalRelation``. A Python list given
+    to ``createDataFrame`` becomes an RDD of pickled rows instead, and
+    every action on it starts Python-worker tasks. Naive datetimes are
+    read as local time, as ``createDataFrame`` reads them (and passed to
+    Arrow in UTC, the one zone it converts from correctly)."""
+    from datetime import timezone
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for col, field in zip(cols, schema.fields):
+        if isinstance(field.dataType, TimestampType):
+            col = [None if v is None else v.astimezone(timezone.utc)
+                   for v in col]
+        arrays.append(pa.array(col, type=to_arrow_type(field.dataType)))
+    return spark.createDataFrame(pa.table(arrays, names=schema.names),
+                                 schema)
 
 
 def get_spark(app_name: str = "datatools-spark", master: str | None = None,

@@ -161,6 +161,7 @@ def streaming_upsert(spark: SparkSession, changes: DataFrame,
     import os
     import shutil
 
+    from ..operators import storage
     from ..operators.intervals import apply_changes
 
     def _merge(batch_df: DataFrame, batch_id: int):
@@ -189,7 +190,7 @@ def streaming_upsert(spark: SparkSession, changes: DataFrame,
                 # snapshot as live, then merge normally.
                 os.rename(os.path.join(parent, old[-1]), base)
         if os.path.exists(os.path.join(base, "_SUCCESS")):
-            snap = sess.read.parquet(snapshot_dir)
+            snap = storage.read_parquet(sess, snapshot_dir)
             merged = apply_changes(snap, batch, list(key_cols), ts_col,
                                    list(tiebreak_cols))
         else:  # genuinely first batch: no snapshot was ever committed

@@ -514,7 +514,15 @@ def test_pagerank_uniform_on_regular_graph(spark):
     assert abs(pr[0] - 1 / 6) < 1e-6
 
 
-def test_pagerank_iteration_job_budget(spark):
+@pytest.fixture
+def distributed_pagerank(monkeypatch):
+    """Every graph takes pagerank's distributed path, whose job budget
+    the tests below pin (their graphs are under the driver-path gate)."""
+    from datatools_spark.operators import graph
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)
+
+
+def test_pagerank_iteration_job_budget(spark, distributed_pagerank):
     # r11 VERDICT #3: pin the jobs-per-iteration floor so it is
     # measured, not re-argued. Construction runs a FIXED per-round job
     # budget, and the last round (returned lazy) adds ZERO construction
@@ -534,7 +542,8 @@ def test_pagerank_iteration_job_budget(spark):
     # + 1 checkpointed round; the lazy last round contributes nothing
 
 
-def test_pagerank_checkpoints_only_unmaterialized_edges(spark):
+def test_pagerank_checkpoints_only_unmaterialized_edges(
+        spark, distributed_pagerank):
     # pagerank decides the edge checkpoint from the plan: a union of
     # projections over a checkpoint (the ss_pagerank shape) is read as
     # it is, while the same edges computed from spark.range pay exactly
@@ -559,7 +568,7 @@ def test_pagerank_checkpoints_only_unmaterialized_edges(spark):
             == sorted((r["id"], r["pr"]) for r in pr_c.collect()))
 
 
-def test_pagerank_default_runs_each_round_once(spark):
+def test_pagerank_default_runs_each_round_once(spark, distributed_pagerank):
     # every round but the last is eagerly materialized at construction
     # (executing the nested lazy tree paid ~1 s of AQE re-planning at
     # sf0.1), so an action on the result runs ONE round's jobs — the
@@ -572,6 +581,86 @@ def test_pagerank_default_runs_each_round_once(spark):
     n_action = {iters: count_jobs(spark, pagerank(e, iters=iters).collect)[1]
                 for iters in (1, 3)}
     assert n_action[3] == n_action[1] <= 6
+
+
+def test_pagerank_small_graph_driver_path_job_count(spark):
+    # the driver path over a checkpointed distinct edge list (the
+    # ss_pagerank shape): the degree checkpoint and its N-and-edge-count
+    # aggregate (2 AQE stage-jobs each; the distributed path runs the
+    # same two) and the Arrow collect; the ranks are a LocalRelation,
+    # so an action on them runs no job
+    from datatools_spark.operators.graph import pagerank
+    e = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)], "u long, v long"
+    ).localCheckpoint(eager=True)
+    pr, n_build = count_jobs(
+        spark, lambda: pagerank(e, iters=3, assume_distinct=True))
+    assert n_build <= 5          # measured 5 on local[*]/AQE
+    rows, n_action = count_jobs(spark, pr.collect)
+    assert n_action == 0
+    assert {r["pr"] for r in rows} == {0.166666667}
+
+
+def _ranks(df):
+    return sorted((r["id"], r["pr"]) for r in df.collect())
+
+
+def _random_graph(rnd):
+    """Edges over up to 60 nodes with duplicates, self-loops and
+    dst-only nodes."""
+    n = rnd.randrange(2, 60)
+    return [(rnd.randrange(n), rnd.randrange(n + 5))
+            for _ in range(rnd.randrange(1, 4 * n))]
+
+
+def _half_graph(rnd):
+    """Out-degree 1 or 2 and in-degree at most 2 (a permutation cycle
+    plus a partial second permutation): every contribution sum has at
+    most two terms, so its double does not depend on summation order,
+    and a rank with an odd 9th decimal halved lands on a 9-dp half."""
+    n = rnd.randrange(3, 40)
+    p, q = list(range(n)), list(range(n))
+    rnd.shuffle(p)
+    rnd.shuffle(q)
+    return ([(i, p[i]) for i in range(n)]
+            + [(i, q[i]) for i in range(n) if rnd.random() < 0.5])
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_pagerank_driver_path_equals_distributed(spark, seed, monkeypatch):
+    """Bit for bit, on seeded random graphs and on graphs whose
+    contributions land on rounding halves (where ``Double.toString``
+    decides HALF_UP), and on 1024 nodes, whose first rank 1/1024 is
+    itself a 9-dp half."""
+    from datatools_spark.operators import graph
+    rnd = random.Random(seed)
+    edges = (_random_graph(rnd), _half_graph(rnd),
+             [(i, (i * 7 + 1) % 1024) for i in range(1024)])[seed % 3]
+    df = spark.createDataFrame(edges, "u long, v long")
+    iters = rnd.randrange(1, 5)
+    fast = graph.pagerank(df, iters=iters)
+    assert fast._jdf.queryExecution().analyzed().getClass() \
+        .getSimpleName() == "LocalRelation"
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)
+    assert _ranks(fast) == _ranks(graph.pagerank(df, iters=iters))
+
+
+def test_pagerank_rounding_equals_spark_round(spark):
+    """The driver path's HALF_UP rounding equals Spark's ``round`` on
+    exact 9-dp halves, their neighbouring doubles, negatives, zero and
+    values past 2^52 at 9 dp."""
+    np = pytest.importorskip("numpy")
+    from datatools_spark.operators.graph import _round_half_up
+    rnd = random.Random(5)
+    halves = [(2 * rnd.randrange(10 ** 6) + 1) * 5e-10 for _ in range(200)]
+    xs = np.array(halves + [0.0009765625, 0.0, -0.0, 1e7 + 5e-10, 3.5e12]
+                  + [rnd.uniform(-2, 2) for _ in range(200)])
+    xs = np.concatenate([xs, np.nextafter(xs, np.inf),
+                         np.nextafter(xs, -np.inf), -xs])
+    want = [r[0] for r in spark.createDataFrame(
+        [(float(x),) for x in xs], "x double")
+        .select(F.round("x", 9)).collect()]
+    assert _round_half_up(spark, xs, 9).tolist() == want
 
 
 # ------------------------------------------------------------- whitening

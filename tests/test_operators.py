@@ -4,6 +4,7 @@ the reference algorithm re-run faithfully in pandas vs the Spark operator)."""
 
 import datetime as dt
 import math
+from decimal import Decimal
 
 import pandas as pd
 import pytest
@@ -979,7 +980,8 @@ class TestKMV:
 
     def test_store_update_job_counts(self, spark, tmp_path):
         """Spark jobs of a warm update of each sketch store and of a
-        geometry-checked CMS read."""
+        geometry-checked CMS read. The read runs none: the update
+        memoized the ledger it wrote, and the sketch read is lazy."""
         from datatools_spark.operators.sketches import (read_cms_store,
                                                         update_cms_store)
         from .conftest import count_jobs
@@ -1000,8 +1002,8 @@ class TestKMV:
             spark, b(1), path, "item", 1))[1]
         got["cms_read"] = count_jobs(spark, lambda: read_cms_store(
             spark, path, depth=4, width=1024, salt="cms"))[1]
-        assert got == {"kmv": 14, "value_sample": 13, "cms": 8,
-                       "cms_read": 3}
+        assert got == {"kmv": 11, "value_sample": 10, "cms": 5,
+                       "cms_read": 0}
 
     def test_cms_store_pre_watermark_layout_message(self, spark,
                                                     tmp_path):
@@ -1761,3 +1763,35 @@ def test_table_stats_shapes_identical(spark, tmp_path):
     finally:
         CH.TABLE_STATS_FUSE_MAX_ROWS = old
     assert fused == percol and len(fused) == 4
+
+
+# ---------------------------------------------------------- local_frame
+
+@pytest.mark.parametrize("ddl, rows", [
+    ("a long", [(1,), (None,), (2 ** 40,)]),
+    ("a int", [(1,), (None,), (-7,)]),
+    ("a double", [(1.5,), (None,), (-0.0,)]),
+    ("a string", [("x",), (None,), ("",)]),
+    ("a decimal(12,3)", [(Decimal("1.250"),), (None,), (Decimal("-3"),)]),
+    ("a timestamp", [(dt.datetime(2024, 1, 1, 3, 4, 5),), (None,),
+                     (dt.datetime(2024, 7, 1, 3, 4, 5, 6,
+                                        dt.timezone.utc),)]),
+    ("a long, b string, c double", []),
+    ("a long, b string, c double", [(1, "p", 0.25), (2, None, None)]),
+])
+def test_local_frame_equals_create_data_frame(spark, ddl, rows):
+    """Row for row and type for type what ``createDataFrame`` gives the
+    same list, as a ``LocalRelation`` whose actions run no job."""
+    from datatools_spark.session import local_frame
+    from .conftest import count_jobs
+    want = spark.createDataFrame(rows, ddl)
+    for schema in (ddl, want.schema):
+        got = local_frame(spark, rows, schema)
+        assert got.schema == want.schema
+        assert got._jdf.queryExecution().analyzed().getClass() \
+            .getSimpleName() == "LocalRelation"
+        got_rows, n_jobs = count_jobs(spark, got.collect)
+        assert n_jobs == 0
+        assert got_rows == want.collect()
+        assert [tuple(map(type, r)) for r in got_rows] \
+            == [tuple(map(type, r)) for r in want.collect()]

@@ -15,17 +15,21 @@ most two committed generations.
 import ast
 import pathlib
 import random
+import shutil
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 import datatools_spark
+from datatools_spark.operators import compstore as CS
 from datatools_spark.operators import ivfstore as IV
 from datatools_spark.operators import mergestore as MS
 from datatools_spark.operators import sigstore as SS
 from datatools_spark.operators import sketches as SK
 from datatools_spark.operators import storage
+
+from .conftest import count_jobs
 
 STEPS = 3
 
@@ -317,12 +321,16 @@ def test_lister_skips_foreign_dirs(spark, tmp_path):
     assert storage.live_dir(spark, path, layout).endswith("kmv-b1")
 
 
+def _sources() -> dict:
+    pkg = pathlib.Path(datatools_spark.__file__).parent
+    return {p.relative_to(pkg).as_posix(): p.read_text()
+            for p in pkg.rglob("*.py")}
+
+
 def test_commit_protocol_lives_in_storage_only():
     """The Hadoop FS handle is opened in operators/storage.py alone, and
     no module reaches into another store module's privates."""
-    pkg = pathlib.Path(datatools_spark.__file__).parent
-    sources = {p.relative_to(pkg).as_posix(): p.read_text()
-               for p in pkg.rglob("*.py")}
+    sources = _sources()
     assert [p for p, src in sources.items()
             if "getFileSystem(" in src] == ["operators/storage.py"]
     stores = {"storage", "sigstore", "ivfstore", "compstore", "mergestore",
@@ -335,4 +343,202 @@ def test_commit_protocol_lives_in_storage_only():
                     and node.module.split(".")[-1] != pathlib.Path(p).stem):
                 bad += [f"{p}:{node.lineno} {a.name}" for a in node.names
                         if a.name.startswith("_")]
+    assert not bad
+
+
+# ------------------------------------------------ job-free parquet reads
+
+# byte copies of the sf0.001 testdata tables, kept with the benchmark
+FIXTURE = pathlib.Path(__file__).parents[1] / "perfbench" / "data" / "sf0.001"
+
+
+def _assert_reads_like_spark(spark, *paths):
+    """``storage.read_parquet`` gives Spark's inferred schema and, for
+    a flat table, runs no Spark job."""
+    got, n_jobs = count_jobs(spark,
+                             lambda: storage.read_parquet(spark, *paths))
+    assert got.schema == spark.read.parquet(*paths).schema, paths
+    assert n_jobs == 0, paths
+
+
+@pytest.mark.parametrize("nanos_as_long", ["true", "false"])
+def test_read_parquet_schema_equals_inference(spark, tmp_path,
+                                              nanos_as_long):
+    """Every fixture table (``events`` carries TIMESTAMP(NANOS), read as
+    ``bigint`` or ``timestamp_ntz`` by the session setting), and a
+    Spark-written table of decimal, array, struct and map columns with
+    non-null fields, over several files."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, nanos_as_long)
+    try:
+        tables = sorted(FIXTURE.glob("*.parquet"))
+        assert len(tables) == 9
+        for t in tables:
+            _assert_reads_like_spark(spark, str(t))
+        nested = str(tmp_path / "nested")
+        spark.range(40).repartition(3).select(
+            F.col("id"),
+            (F.col("id") / 7).cast("decimal(12,3)").alias("d"),
+            F.array(F.col("id"), F.lit(None).cast("long")).alias("a"),
+            F.struct(F.col("id").alias("x"),
+                     F.lit("s").alias("y")).alias("st"),
+            F.create_map(F.lit("k"), F.col("id")).alias("m")) \
+            .write.parquet(nested)
+        assert spark.read.parquet(nested).schema["id"].nullable
+        _assert_reads_like_spark(spark, nested)
+        files = sorted(str(f) for f in pathlib.Path(nested).glob("*.parquet"))
+        _assert_reads_like_spark(spark, *files[::-1])
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _table_dirs(root: str) -> list[str]:
+    return sorted({str(f.parent) for f in pathlib.Path(root).rglob("*.parquet")
+                   if not f.name.startswith(".")})
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_read_parquet_schema_equals_inference_on_stores(spark, tmp_path,
+                                                        kind):
+    """Every table of a committed generation of each store kind."""
+    store = KINDS[kind](spark, str(tmp_path / "store"))
+    store.prep(0)
+    store.step(0)
+    dirs = _table_dirs(str(tmp_path))
+    assert dirs
+    for d in dirs:
+        _assert_reads_like_spark(spark, d)
+
+
+def test_read_parquet_schema_equals_inference_on_component_store(
+        spark, tmp_path):
+    root = str(tmp_path / "comp")
+    ids = lambda xs: spark.createDataFrame(  # noqa: E731
+        [(x,) for x in xs], "doc_id long")
+    CS.update_component_store(
+        spark, ids([1, 2]), spark.createDataFrame([], "a_id long, b_id long"),
+        root)
+    CS.update_component_store(
+        spark, ids([3]),
+        spark.createDataFrame([(1, 3), (2, 3)], "a_id long, b_id long"), root)
+    dirs = _table_dirs(root)
+    assert [d.rsplit("/", 1)[-1] for d in dirs] == ["members", "merges"]
+    for d in dirs:
+        _assert_reads_like_spark(spark, d)
+
+
+def test_read_parquet_driver_cost_does_not_grow_with_files(
+        spark, tmp_path, monkeypatch):
+    """The footer read's driver-side calls into the JVM are the same for
+    a table of 1 file and of 300 files: the listing and the choice of
+    file run inside the JVM, not once per file from Python."""
+    src = FIXTURE / "nation.parquet"
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def round_trips(n):
+        t = tmp_path / f"t{len(list(tmp_path.iterdir()))}"
+        t.mkdir()
+        for i in range(n):
+            shutil.copy(src, t / f"part-{i:05d}.parquet")
+        calls = []
+
+        def counted(cmd, *a, **k):
+            # py4j's deletes of collected proxies ("m") come at GC time
+            calls.append(cmd.split("\n", 1)[0])
+            return send(cmd, *a, **k)
+
+        monkeypatch.setattr(client, "send_command", counted)
+        try:
+            df = storage.read_parquet(spark, str(t))
+        finally:
+            monkeypatch.setattr(client, "send_command", send)
+        assert df.schema == spark.read.parquet(str(src)).schema
+        return sum(c != "m" for c in calls)
+
+    round_trips(1)     # a first read makes one-time lookups
+    assert round_trips(300) == round_trips(1)
+
+
+def test_read_parquet_falls_back_to_spark(spark, tmp_path):
+    """Where a footer cannot stand for Spark's inference, the read is
+    Spark's own: a missing path and an empty table raise Spark's
+    exception, a partitioned table keeps its partition column, and
+    ``mergeSchema`` merges every file. Without it, both take the schema
+    of the first data file by path."""
+    def raised(read):
+        with pytest.raises(AnalysisException) as exc:
+            read()
+        return type(exc.value), exc.value.getCondition()
+
+    missing = str(tmp_path / "missing")
+    assert raised(lambda: storage.read_parquet(spark, missing)) \
+        == raised(lambda: spark.read.parquet(missing))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    assert raised(lambda: storage.read_parquet(spark, str(empty))) \
+        == raised(lambda: spark.read.parquet(str(empty)))
+
+    part = str(tmp_path / "part")
+    spark.range(6).select("id", (F.col("id") % 2).alias("p")) \
+        .write.partitionBy("p").parquet(part)
+    assert storage.read_parquet(spark, part).schema \
+        == spark.read.parquet(part).schema
+    assert "p" in storage.read_parquet(spark, part).columns
+
+    # two schemas in one table: the first data file by path decides,
+    # whichever name it has
+    narrow, wide = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    spark.range(3).coalesce(1).write.parquet(narrow)
+    spark.range(3).select("id", F.lit(1).alias("extra")).coalesce(1) \
+        .write.parquet(wide)
+    for names in (("a", "b"), ("b", "a")):
+        t = tmp_path / "two" / "".join(names)
+        t.mkdir(parents=True)
+        for src, name in zip((narrow, wide), names):
+            shutil.copy(next(pathlib.Path(src).glob("*.parquet")),
+                        t / f"{name}.parquet")
+        assert storage.read_parquet(spark, str(t)).columns \
+            == spark.read.parquet(str(t)).columns \
+            == (["id"] if names[0] == "a" else ["id", "extra"])
+    spark.range(3).write.mode("append").parquet(wide)
+    key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try:
+        got = storage.read_parquet(spark, wide).schema
+        assert got == spark.read.parquet(wide).schema
+        assert got.names == ["id", "extra"]
+    finally:
+        spark.conf.unset(key)
+
+
+def _calls(tree):
+    """``(top-level function name, call)`` for every call in a module."""
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                yield getattr(top, "name", None), node
+
+
+def test_parquet_reads_and_driver_rows_use_the_helpers():
+    """Every ``.read.parquet(`` in the package is
+    ``storage.read_parquet``'s, so no read pays a schema-inference job,
+    and every ``createDataFrame`` is ``session.local_frame``'s, so no
+    frame of driver rows is an RDD of pickled rows."""
+    allowed = {"parquet": ("operators/storage.py", "read_parquet"),
+               "createDataFrame": ("session.py", "local_frame")}
+    bad = []
+    for p, src in _sources().items():
+        for fn, call in _calls(ast.parse(src)):
+            f = call.func
+            if not isinstance(f, ast.Attribute) or f.attr not in allowed:
+                continue
+            if f.attr == "parquet" and not (
+                    isinstance(f.value, ast.Attribute)
+                    and f.value.attr == "read"):
+                continue
+            if (p, fn) != allowed[f.attr]:
+                bad.append(f"{p}:{call.lineno} {f.attr}")
     assert not bad
