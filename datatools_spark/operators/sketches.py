@@ -32,7 +32,7 @@ from ..session import local_frame
 from . import memo, storage
 
 __all__ = ["cms_bucket_col", "cms_build", "cms_estimate",
-           "cms_inner_product",
+           "cms_inner_product", "cms_inner_product_from_counts",
            "hll_bucket_rho", "hll_registers",
            "hll_estimate", "hll_estimate_col",
            "hll_estimate_from_registers", "hll_merge",
@@ -70,6 +70,19 @@ def cms_bucket_col(col: Column, row: int, width: int,
     return F.pmod(_hash32(col, f"{salt}:{row}"), F.lit(width))
 
 
+def _cms_cells(item: Column, depth: int, width: int, salt: str) -> Column:
+    """``_cell``: ``item``'s ``depth`` (row, bucket) cells, exploded."""
+    return F.explode(F.array(*[
+        F.struct(F.lit(r).alias("row"),
+                 cms_bucket_col(item, r, width, salt).alias("bucket"))
+        for r in range(depth)])).alias("_cell")
+
+
+def _by_cell(cells: DataFrame):
+    return cells.groupBy(F.col("_cell.row").alias("row"),
+                         F.col("_cell.bucket").alias("bucket"))
+
+
 def cms_build(items: DataFrame, item_col: str, depth: int = 4,
               width: int = 1024, salt: str = "cms") -> DataFrame:
     """Sketch from a multiset of items (one DataFrame row = one
@@ -77,14 +90,8 @@ def cms_build(items: DataFrame, item_col: str, depth: int = 4,
     cells, count — a single map-side-combinable aggregate whose exchange
     is bounded by d·w cells, never by corpus size. Output:
     ``row, bucket, c``."""
-    cells = items.select(F.explode(F.array(*[
-        F.struct(F.lit(r).alias("row"),
-                 cms_bucket_col(F.col(item_col), r, width, salt)
-                 .alias("bucket"))
-        for r in range(depth)])).alias("_cell"))
-    return (cells.groupBy(F.col("_cell.row").alias("row"),
-                          F.col("_cell.bucket").alias("bucket"))
-            .agg(F.count("*").alias("c")))
+    cells = items.select(_cms_cells(F.col(item_col), depth, width, salt))
+    return _by_cell(cells).agg(F.count("*").alias("c"))
 
 
 def cms_build_from_counts(counts: DataFrame, item_col: str,
@@ -98,16 +105,9 @@ def cms_build_from_counts(counts: DataFrame, item_col: str,
     Zipf token stream that is a vocab/corpus-sized cut in hashing).
     Callers that already hold per-item counts (a groupBy they need
     anyway) should build from them. Output: ``row, bucket, c``."""
-    cells = counts.select(
-        F.col(count_col).alias("_w"),
-        F.explode(F.array(*[
-            F.struct(F.lit(r).alias("row"),
-                     cms_bucket_col(F.col(item_col), r, width, salt)
-                     .alias("bucket"))
-            for r in range(depth)])).alias("_cell"))
-    return (cells.groupBy(F.col("_cell.row").alias("row"),
-                          F.col("_cell.bucket").alias("bucket"))
-            .agg(F.sum("_w").alias("c")))
+    cells = counts.select(F.col(count_col).alias("_w"),
+                          _cms_cells(F.col(item_col), depth, width, salt))
+    return _by_cell(cells).agg(F.sum("_w").alias("c"))
 
 
 def cms_estimate(sketch: DataFrame, probes: DataFrame, probe_col: str,
@@ -117,13 +117,8 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, probe_col: str,
     min over the d probed counters; absent cells count 0. Never
     underestimates; overestimates by collision mass only."""
     pr = probes.select(F.col(probe_col)).distinct()
-    keyed = pr.select(
-        probe_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(r).alias("row"),
-                     cms_bucket_col(F.col(probe_col), r, width, salt)
-                     .alias("bucket"))
-            for r in range(depth)])).alias("_cell")) \
+    keyed = pr.select(probe_col,
+                      _cms_cells(F.col(probe_col), depth, width, salt)) \
         .select(probe_col, "_cell.row", "_cell.bucket")
     joined = (F.broadcast(keyed)
               .join(sketch, ["row", "bucket"], "left")
@@ -156,6 +151,26 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
                       .alias("_ip")))
     return filled.agg(F.coalesce(F.min("_ip"), F.lit(0).cast("bigint"))
                       .alias("join_size_est"))
+
+
+def cms_inner_product_from_counts(counts: DataFrame, item_col: str,
+                                  a_col: str, b_col: str) -> DataFrame:
+    """:func:`cms_inner_product` of the two default-shaped sketches
+    :func:`cms_build_from_counts` builds from the non-negative
+    ``a_col`` and ``b_col`` of ONE per-item count frame, in one cell
+    aggregate instead of two builds and a join: each non-NULL item is
+    exploded to its cells once, and a cell carries both sums. A cell of
+    one side only has a zero on the other, so its product adds nothing,
+    as the join dropped it. One-row output: ``join_size_est``."""
+    cells = (counts.where(F.col(item_col).isNotNull())
+             .select(F.col(a_col).alias("_a"), F.col(b_col).alias("_b"),
+                     _cms_cells(F.col(item_col), 4, 1024, "cms")))
+    per_cell = _by_cell(cells).agg(F.sum("_a").alias("_ca"),
+                                   F.sum("_b").alias("_cb"))
+    per_row = per_cell.groupBy("row").agg(
+        F.sum(F.col("_ca") * F.col("_cb")).alias("_ip"))
+    return per_row.agg(F.coalesce(F.min("_ip"), F.lit(0).cast("bigint"))
+                       .alias("join_size_est"))
 
 
 # ---------------------------------------------------------- HyperLogLog

@@ -75,7 +75,7 @@ def update_file_stats(spark: SparkSession, path: str, cols: list[str],
     # reads the table root). basePath restores them; it is a no-op for
     # flat layouts.
     fresh = _stats_from(
-        spark.read.option("basePath", path).parquet(*new), cols)
+        storage.read_parquet(spark, *new, base_path=path), cols)
     return manifest.unionByName(fresh)
 
 
@@ -159,15 +159,14 @@ def skipping_read(spark: SparkSession, manifest: DataFrame,
                 "skipping_read: the manifest lists no files at all — "
                 "the table's schema is unknowable from an empty "
                 "manifest; build_file_stats the table first")
-        bp = _infer_base_path(any_file)
-        reader = spark.read.option("basePath", bp) if bp else spark.read
-        return reader.parquet(*any_file).where(F.lit(False))
+        return storage.read_parquet(
+            spark, *any_file, base_path=_infer_base_path(any_file)) \
+            .where(F.lit(False))
     # hive layouts: a leaf-path read without basePath drops the
     # partition-directory columns, so a residual predicate on a
     # partition column would throw UNRESOLVED_COLUMN
-    bp = _infer_base_path(files)
-    reader = spark.read.option("basePath", bp) if bp else spark.read
-    df = reader.parquet(*files)
+    df = storage.read_parquet(spark, *files,
+                              base_path=_infer_base_path(files))
     for c, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.where(F.col(c) >= F.lit(lo))
@@ -272,10 +271,8 @@ def apply_compaction(spark: SparkSession, plan: DataFrame,
                 "reading leaf files without a basePath drops the "
                 "partition columns from the compacted output — pass "
                 "base_path=<table root>")
-    reader = spark.read.option("basePath", base_path) if base_path \
-        else spark.read
     for row in sorted(groups, key=lambda r: r["group_id"]):
-        (reader.parquet(*row["files"])
+        (storage.read_parquet(spark, *row["files"], base_path=base_path)
          .coalesce(1)
          .write.mode("overwrite")
          .parquet(f"{out_path}/cg={row['group_id']}"))

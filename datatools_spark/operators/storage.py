@@ -196,21 +196,29 @@ def fold_keyed(cur: DataFrame, delta: DataFrame, keys: list[str],
           for v, fn in combine.items()])
 
 
-def _footer_schema(spark: SparkSession, paths: tuple):
-    """The schema Spark's parquet inference would give ``paths``, read
-    on the driver from one footer, or None where inference could differ
-    or fail. The files are listed by Spark's own ``InMemoryFileIndex``
-    (its hidden-file and partition rules), and the file inference would
+def _footer_schema(spark: SparkSession, paths: tuple, options: dict):
+    """The schema Spark's parquet inference would give ``paths`` under
+    the reader ``options``, read on the driver from one footer, or None
+    where inference could differ or fail. The files are listed by
+    Spark's own ``InMemoryFileIndex`` (its hidden-file and partition
+    rules, given the same options), and the file inference would
     read is chosen by Spark's own ``ParquetUtils.splitFiles`` (private,
     so called by reflection) in ``inferSchema``'s order: a
     ``_common_metadata``, a ``_metadata``, else the first data file by
     path. Its footer is converted by Spark's ``readSchema`` under the
     session's type settings. Every step is one call into the JVM, so
     the cost does not grow with the file count. None for:
-    ``mergeSchema`` on, a glob, partition columns, no file (a missing
-    path), or any call that fails."""
+    ``mergeSchema`` on, a glob, more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold``, partition
+    columns, no file (a missing path), or any call that fails. Above that
+    threshold Spark lists the paths in a job of one task per path, and
+    the reader lists them again, so a second listing would cost more
+    than the one-task inference job it replaces."""
+    threshold = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"))
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower()
-            == "true" or any(c in p for p in paths for c in "*?[{")):
+            == "true" or len(paths) > threshold
+            or any(c in p for p in paths for c in "*?[{")):
         return None
     jvm, jss = spark._jvm, spark._jsparkSession
     gw = spark.sparkContext._gateway
@@ -220,7 +228,7 @@ def _footer_schema(spark: SparkSession, paths: tuple):
         index = ds.InMemoryFileIndex(
             jss, jvm.PythonUtils.toSeq(
                 [jvm.org.apache.hadoop.fs.Path(p) for p in paths]),
-            jvm.PythonUtils.toScalaMap({}), none,
+            jvm.PythonUtils.toScalaMap(options), none,
             getattr(getattr(ds, "NoopCache$"), "MODULE$"), none, none)
         if not index.partitionSchema().isEmpty():
             return None
@@ -253,13 +261,20 @@ def _footer_schema(spark: SparkSession, paths: tuple):
     return _parse_datatype_json_string(schema.get().json())
 
 
-def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+def read_parquet(spark: SparkSession, *paths: str,
+                 base_path: str | None = None) -> DataFrame:
     """``spark.read.parquet(*paths)`` without the schema-inference job:
     the schema comes from one footer read on the driver (see
     :func:`_footer_schema`) and is handed to the reader. Where it cannot
-    be, this is the plain inferring read, so every error is Spark's."""
-    schema = _footer_schema(spark, paths)
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    be, this is the plain inferring read, so every error is Spark's.
+    ``base_path`` is the reader's ``basePath`` option (the table root of
+    leaf-file paths, so that hive partition columns are kept): a flat
+    table still takes the footer path, a partitioned one Spark's read."""
+    options = {"basePath": base_path} if base_path else {}
+    schema = _footer_schema(spark, paths, options)
+    reader = spark.read.options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.parquet(*paths)
 
 

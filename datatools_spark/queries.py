@@ -4662,7 +4662,7 @@ SELECT join_size_exact, join_size_est FROM ex, est
 """)
 def ss_join_size_estimate(spark, sf_dir):
     """Join-size estimation via the CMS inner product (AMS/Cormode-
-    Muthukrishnan; operators/sketches.py:cms_inner_product):
+    Muthukrishnan; operators/sketches.py:cms_inner_product_from_counts):
     |A⋈B on user_id| ≈ min_r Σ_b cA[r,b]·cB[r,b] — two 4×1024 integer
     sketches size the click⋈purchase join in O(d·w) work and never
     underestimate. THE pre-flight a planner runs before committing to a
@@ -4676,7 +4676,8 @@ def ss_join_size_estimate(spark, sf_dir):
     # worst-case exploding join, guide §3.3). Per-user counts feed (a)
     # the exact size as Σ na·nb — identical to the inner-join count,
     # which drops NULL keys, hence the isNotNull gate — and (b) both
-    # sketches via the count-weighted CMS build (bit-identical cells).
+    # sketches in one cell aggregate over the same counts (the cells of
+    # the count-weighted CMS builds, bit-identical).
     base = (ev.where(F.col("event_type").isin("click", "purchase"))
             .groupBy("user_id")
             .agg(F.count(F.when(F.col("event_type") == "click", 1))
@@ -4684,11 +4685,7 @@ def ss_join_size_estimate(spark, sf_dir):
                  F.count(F.when(F.col("event_type") == "purchase", 1))
                  .alias("_nb"))
             .localCheckpoint(eager=True))
-    est = SK.cms_inner_product(
-        SK.cms_build_from_counts(base.where(F.col("_na") > 0),
-                                 "user_id", "_na"),
-        SK.cms_build_from_counts(base.where(F.col("_nb") > 0),
-                                 "user_id", "_nb"))
+    est = SK.cms_inner_product_from_counts(base, "user_id", "_na", "_nb")
     exact = (base.where(F.col("user_id").isNotNull())
              .agg(F.coalesce(F.sum(F.col("_na") * F.col("_nb")),
                              F.lit(0)).alias("join_size_exact")))

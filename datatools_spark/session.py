@@ -15,6 +15,27 @@ scale-oriented defaults:
   ``LocalRelation``.
 - ``shuffle.partitions`` defaults sized for local test runs; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
+- ``spark.sql.codegen.cache.maxEntries=2048`` — Spark's cache of
+  compiled generated classes keeps 100 by default, fewer than one pass
+  of the engine's queries or store updates compiles, so a session
+  recompiled its classes on every pass (``perfbench`` at sf0.01 on 4
+  vCPUs, warm session: 109–126 Janino compiles and about 1.2 s in a
+  ``driver_sf0.01`` measured window, 330 compiles and 2.0–2.4 s in a
+  ``store_ingest`` pass; with 2048 entries 0, and 4 once the ingest
+  pass has run once). A repeated plan then compiles nothing, on the
+  driver and in local executor tasks alike. A static conf: it holds
+  only when this call creates the SparkContext.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` — PySpark's
+  DataFrame call-site capture costs every Column function about ten
+  py4j round trips and a Python stack walk (``F.col("a")`` sends 13
+  commands instead of 4, a one-expression ``select`` 44 instead of 14;
+  a ``store_ingest`` pass 20,400 instead of 15,000). The trade-off: a
+  runtime error keeps its error class, message and SQLSTATE, but its
+  ``== DataFrame ==`` context names a JVM frame instead of the Python
+  ``file:line``. PySpark reads the flag once per process, from the
+  session active at the first Column call.
+
+Callers override any of these through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -120,6 +141,10 @@ def get_spark(app_name: str = "datatools-spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # keep the session's compiled classes and skip Python call-site
+        # capture (module docstring: measured reasons and trade-off)
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

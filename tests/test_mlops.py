@@ -1009,6 +1009,27 @@ def test_cms_inner_product_zero_overlap_and_empty(spark):
     assert est2[0]["join_size_est"] == 0
 
 
+def test_cms_inner_product_from_counts_equals_two_sketches(spark):
+    """The one-aggregate estimate equals the two-sketch path over the
+    same per-item counts: with NULL items (the two-sketch path keeps
+    their NULL-bucket rows, which join nothing), NULL items only, an
+    item of one side only, and on an empty frame."""
+    from datatools_spark.operators.sketches import (
+        cms_build_from_counts, cms_inner_product,
+        cms_inner_product_from_counts)
+    rnd = random.Random(5)
+    rows = [(k, rnd.randrange(4), rnd.randrange(4)) for k in range(300)]
+    rows += [(None, 3, 2), (None, 0, 5), (1000, 7, 0)]
+    for data in (rows, [(None, 2, 3)], []):
+        counts = spark.createDataFrame(data, "k long, a long, b long")
+        two = cms_inner_product(
+            cms_build_from_counts(counts.where(F.col("a") > 0), "k", "a"),
+            cms_build_from_counts(counts.where(F.col("b") > 0), "k", "b"))
+        one = cms_inner_product_from_counts(counts, "k", "a", "b")
+        assert one.collect() == two.collect()
+        assert one.schema == two.schema
+
+
 def test_kmv_sketch_accepts_bare_string_group_col(spark):
     """list('source') explodes into characters — a bare column NAME must
     be accepted as one group column across the sketch family."""

@@ -460,6 +460,19 @@ def test_mm_curation_pipeline_no_cartesian(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_join_size_estimate_job_count(spark):
+    """``ss_join_size_estimate`` builds both CMS sketches in one cell
+    aggregate over its checkpointed per-user counts: the build is the
+    checkpoint (2 jobs), and the one-row result runs 6 jobs (12 with two
+    sketch builds and their join)."""
+    from .conftest import count_jobs
+    df, n_build = count_jobs(
+        spark, lambda: QUERIES["ss_join_size_estimate"](spark, SF))
+    assert n_build <= 2
+    _, n_execute = count_jobs(spark, df.collect)
+    assert n_execute <= 6
+
+
 def test_bench_forcing_retains_computation(spark):
     """bench.force_value must execute the WHOLE plan. Round 4's judge
     audit proved count() lets ColumnPruning drop window-only computation

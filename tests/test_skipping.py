@@ -285,6 +285,27 @@ def test_update_file_stats_hive_partitioned(spark, tmp_path):
     assert got.count() == 300  # ids ≡ 2 (mod 3) in [0, 900)
 
 
+def test_manifest_reads_take_the_schema_from_a_footer(spark, tmp_path):
+    """On a flat table the by-path reads of ``skipping_read`` (with and
+    without survivors) and ``update_file_stats`` run no schema-inference
+    job: each build runs only its manifest collects (two for a read
+    with no survivor, which also picks a file for the schema)."""
+    from .conftest import count_jobs
+    base = str(tmp_path / "flat")
+    spark.range(0, 400).select(F.col("id"), (F.col("id") * 2).alias("v")) \
+        .repartitionByRange(4, "v").write.parquet(base)
+    man = build_file_stats(spark, base, ["v"]).localCheckpoint(eager=True)
+    jobs = {}
+    for name, ranges in (("hit", {"v": (0, 10)}), ("miss", {"v": (-9, -1)})):
+        _, jobs[name] = count_jobs(
+            spark, lambda r=ranges: skipping_read(spark, man, r))
+    spark.range(400, 500).select(F.col("id"), (F.col("id") * 2).alias("v")) \
+        .coalesce(1).write.mode("append").parquet(base)
+    _, jobs["update"] = count_jobs(
+        spark, lambda: update_file_stats(spark, base, ["v"], man))
+    assert jobs == {"hit": 1, "miss": 2, "update": 1}
+
+
 def test_infer_base_path_rules():
     from datatools_spark.operators.skipping import _infer_base_path
     # pure hive tree -> table root

@@ -514,16 +514,58 @@ def test_read_parquet_falls_back_to_spark(spark, tmp_path):
         spark.conf.unset(key)
 
 
+def test_read_parquet_of_many_paths_is_sparks_read(spark, tmp_path):
+    """Above ``parallelPartitionDiscovery.threshold`` paths Spark lists
+    them in a job, so the footer path would list them twice: the read
+    is Spark's own, with Spark's schema."""
+    base = str(tmp_path / "flat")
+    spark.range(40).repartition(4).write.parquet(base)
+    files = tuple(sorted(str(f) for f in pathlib.Path(base).glob("*.parquet")))
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(key, str(len(files) - 1))
+    try:
+        assert storage._footer_schema(spark, files, {}) is None
+        assert storage.read_parquet(spark, *files).schema \
+            == spark.read.parquet(*files).schema
+    finally:
+        spark.conf.unset(key)
+    _assert_reads_like_spark(spark, *files)
+
+
 def _calls(tree):
-    """``(top-level function name, call)`` for every call in a module."""
+    """``(top-level statement, call)`` for every call in a module."""
     for top in tree.body:
         for node in ast.walk(top):
             if isinstance(node, ast.Call):
-                yield getattr(top, "name", None), node
+                yield top, node
+
+
+def _attrs(node) -> set:
+    return {n.attr for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+
+
+def _is_batch_read(top, receiver) -> bool:
+    """Whether ``receiver.parquet(`` reads through ``spark.read``: the
+    receiver chain (``spark.read``, ``spark.read.option(…)``) or, for a
+    name such as ``reader``, a value assigned to it in the same
+    top-level function names ``.read``. A ``.write`` chain and a
+    ``readStream`` (whose schema is given) are not batch reads."""
+    attrs = _attrs(receiver)
+    root = receiver
+    while isinstance(root, (ast.Attribute, ast.Call)):
+        root = root.value if isinstance(root, ast.Attribute) else root.func
+    if isinstance(root, ast.Name):
+        for node in ast.walk(top):
+            if isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == root.id
+                    for t in node.targets):
+                attrs |= _attrs(node.value)
+    return "read" in attrs and "write" not in attrs
 
 
 def test_parquet_reads_and_driver_rows_use_the_helpers():
-    """Every ``.read.parquet(`` in the package is
+    """Every batch parquet read in the package (``.read.parquet(``,
+    ``.read.option(…).parquet(``, ``reader.parquet(``) is
     ``storage.read_parquet``'s, so no read pays a schema-inference job,
     and every ``createDataFrame`` is ``session.local_frame``'s, so no
     frame of driver rows is an RDD of pickled rows."""
@@ -531,14 +573,12 @@ def test_parquet_reads_and_driver_rows_use_the_helpers():
                "createDataFrame": ("session.py", "local_frame")}
     bad = []
     for p, src in _sources().items():
-        for fn, call in _calls(ast.parse(src)):
+        for top, call in _calls(ast.parse(src)):
             f = call.func
             if not isinstance(f, ast.Attribute) or f.attr not in allowed:
                 continue
-            if f.attr == "parquet" and not (
-                    isinstance(f.value, ast.Attribute)
-                    and f.value.attr == "read"):
+            if f.attr == "parquet" and not _is_batch_read(top, f.value):
                 continue
-            if (p, fn) != allowed[f.attr]:
+            if (p, getattr(top, "name", None)) != allowed[f.attr]:
                 bad.append(f"{p}:{call.lineno} {f.attr}")
     assert not bad
