@@ -75,14 +75,15 @@ def _merges_path(path: str) -> str:
     return f"{path}/merges"
 
 
-def _merge_map(spark: SparkSession, path: str) -> dict:
-    """Driver-side closure of the merge log: ``{stale_root: true_root}``.
-    Sized by merge events since compaction (see module docstring), with
-    path compression so chained merges across batches resolve in one
-    lookup."""
-    if not storage.exists(spark, _merges_path(path)):
+def _merge_map(spark: SparkSession, t: storage.Tree) -> dict:
+    """Driver-side closure of the merge log: ``{stale_root: true_root}``,
+    from the walk ``t`` of the store. Sized by merge events since
+    compaction (see module docstring), with path compression so chained
+    merges across batches resolve in one lookup."""
+    mp = _merges_path(t.root)
+    if mp not in t.dirs:
         return {}
-    rows = storage.read_parquet(spark, _merges_path(path)).collect()
+    rows = storage.read_parquet(spark, mp).collect()
     parent: dict = {}
     for r in rows:
         _union(parent, r["child"], r["parent"])
@@ -110,21 +111,22 @@ def _union(parent: dict, a, b) -> None:
 def _state(spark: SparkSession, path: str, fresh: bool = False):
     """``(members, merge_map)``: the members table (None when the store
     does not exist yet) and the driver-side merge-log closure, memoized
-    on the ``members/`` and ``merges/`` listings. ``fresh`` is the
-    updater's read: always taken (a batch never runs off an earlier
-    batch's read) and with members eagerly localCheckpointed — the
-    members APPEND must never recompute through the members path (the
-    r4 recache lesson). A reader's miss keeps the plain lazy scan."""
-    mp, gp = _members_path(path), _merges_path(path)
-    key = ("compstore", path, storage.listing(spark, mp, gp))
+    on the ``members/`` and ``merges/`` listings of one walk of
+    ``path``. ``fresh`` is the updater's read: always taken (a batch
+    never runs off an earlier batch's read) and with members eagerly
+    localCheckpointed — the members APPEND must never recompute through
+    the members path (the r4 recache lesson). A reader's miss keeps the
+    plain lazy scan."""
+    t, mp = storage.tree(spark, path), _members_path(path)
+    key = ("compstore", path, storage.listing(t))
 
     def build():
         members = None
-        if storage.exists(spark, mp):
+        if mp in t.dirs:
             members = storage.read_parquet(spark, mp)
             if fresh:
                 members = members.localCheckpoint(eager=True)
-        return members, _merge_map(spark, path)
+        return members, _merge_map(spark, t)
 
     return memo.put(spark, key, build()) if fresh \
         else memo.get(spark, key, build)
@@ -299,8 +301,8 @@ def compact_component_store(spark: SparkSession, path: str,
     future resolution maps. Returns the number of member rows written.
     The source store is untouched (swap directories at the catalog
     level, the standard metadata flip)."""
-    fs, jp = storage.fs(spark, out_path)
-    if fs.exists(jp) and len(fs.listStatus(jp)) > 0:
+    t = storage.tree(spark, out_path, 1)
+    if t.dirs or t.files:
         raise ValueError(
             f"compact_component_store: out_path {out_path} is not empty "
             "— mixing two compactions' members is unreadable; use a "

@@ -71,34 +71,30 @@ _ROSTER = "_ckpt_roster"  # committed-generation roster ≤ each snapshot
 _GENS = storage.Layout(_GEN, "_SUCCESS")
 
 
-def _committed_gens(spark: SparkSession, root: str) -> list[int]:
-    """Generations visible to readers: data dir AND a COMPLETE commit
-    record exist. Completeness is gated on the log's _SUCCESS marker
-    (written last, by :func:`_commit`) AND its parquet payload — bare
-    directory existence is NOT commit: Spark creates the output dir at
-    job start, so a crash mid-log-write would otherwise leave a
+def _committed_gens(t: storage.Tree) -> list[int]:
+    """Generations visible to readers, read from a walk ``t`` of the
+    store root: data dir AND a COMPLETE commit record exist.
+    Completeness is the log's _SUCCESS marker (written last, by
+    :func:`_commit`) AND a data file beside it, both found by the walk —
+    bare directory existence is NOT commit: Spark creates the output
+    dir at job start, so a crash mid-log-write would otherwise leave a
     generation whose data is reader-visible while its tombstones are
     lost, and every rewritten row double-counts forever (the exact
     failure the module contract rules out). Orphan data dirs (crash
     before the log write starts) are likewise invisible."""
-    logs = f"{root}/_log"
-    done = {g for g in storage.committed(spark, logs, _GENS)
-            if _parquet_files(spark, _GENS.dir(logs, g))}
-    return [g for g in storage.numbers(spark, root, _GENS) if g in done]
-
-
-def _parquet_files(spark: SparkSession, path: str) -> list[str]:
-    fs, jpath = storage.fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return sorted(str(st.getPath()) for st in fs.listStatus(jpath)
-                  if st.getPath().getName().endswith(".parquet"))
+    logs = f"{t.root}/_log"
+    done = {g for g in storage.committed(t, _GENS, logs)
+            if storage.data_files(t, _GENS.dir(logs, g))}
+    return [g for g in storage.numbers(t, _GENS) if g in done]
 
 
 def _write_gen_stats(spark: SparkSession, root: str, gen: int,
                      key_cols: list[str], empty_schema=None) -> None:
+    """``empty_schema`` is for a generation that may hold no file (a
+    walk tells); without it the generation is known to hold files."""
     gen_dir = f"{root}/{_GEN}{gen}"
-    if _parquet_files(spark, gen_dir):
+    if empty_schema is None \
+            or storage.data_files(storage.tree(spark, gen_dir)):
         stats = build_file_stats(spark, gen_dir, key_cols)
     else:
         # an all-delete merge can write an empty generation; its stats
@@ -120,35 +116,44 @@ def _commit(spark: SparkSession, root: str, gen: int,
     storage.commit(spark, log, _GENS.marker)
 
 
-def _tombstoned(spark: SparkSession, root: str,
+def _with_data(t: storage.Tree, sub: str, gens) -> list[str]:
+    """The ``{sub}/gen-<g>`` dirs of ``gens`` that hold a data file."""
+    paths = [f"{t.root}/{sub}/{_GEN}{g}" for g in gens]
+    return [p for p in paths if storage.data_files(t, p)]
+
+
+def _tombstoned(spark: SparkSession, t: storage.Tree,
                 gens: list[int]) -> DataFrame:
-    paths = [f"{root}/_log/{_GEN}{g}" for g in gens]
-    paths = [p for p in paths if _parquet_files(spark, p)]
+    paths = _with_data(t, "_log", gens)
     if not paths:
         return local_frame(spark, [], "file string")
     return storage.read_parquet(spark, *paths).select("file")
 
 
-def _latest_gen(spark: SparkSession, root: str) -> int | None:
+def _checkpoint(t: storage.Tree) -> int | None:
+    """The latest committed checkpoint generation."""
+    return storage.latest(t, _GENS, f"{t.root}/{_CKPT}")
+
+
+def _latest_gen(t: storage.Tree) -> int | None:
     """Latest committed generation, whether its own log still exists or
     it has been consolidated into a checkpoint."""
-    gens = _committed_gens(spark, root)
-    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
-    cands = gens + ([ck] if ck is not None else [])
+    ck = _checkpoint(t)
+    cands = _committed_gens(t) + ([ck] if ck is not None else [])
     return max(cands) if cands else None
 
 
-def _vacuum_watermark(spark: SparkSession, root: str) -> int:
+def _vacuum_watermark(spark: SparkSession, t: storage.Tree) -> int:
     """Lowest generation still time-travel-readable (0 until a vacuum
     or checkpoint physically reclaims history). A committed checkpoint
     at gen n IS a watermark record (its snapshot replaced the history
     below it), so checkpoints don't append to ``_vacuum`` — a
     1e3-batch auto-checkpoint loop would otherwise accrete one tiny
     parquet file per batch here and every read would reopen them all."""
-    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
+    ck = _checkpoint(t)
     wm = ck if ck is not None else 0
-    p = f"{root}/_vacuum"
-    if _parquet_files(spark, p):
+    p = f"{t.root}/_vacuum"
+    if storage.data_files(t, p):
         wm = max(wm, int(storage.read_parquet(spark, p)
                          .agg(F.max("min_readable_gen")).collect()[0][0]))
     return wm
@@ -163,11 +168,18 @@ def merge_store_stats(spark: SparkSession, root: str,
     both truncated to generations ≤ it, which reconstructs that commit's
     exact state (a file tombstoned later is live again; a file written
     later never existed)."""
-    gens = _committed_gens(spark, root)
-    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
-    latest = _latest_gen(spark, root)
+    return _stats(spark, storage.tree(spark, root), at_generation)
+
+
+def _stats(spark: SparkSession, t: storage.Tree,
+           at_generation: int | None) -> DataFrame:
+    """:func:`merge_store_stats` from a walk ``t`` of the store root."""
+    root = t.root
+    gens = _committed_gens(t)
+    ck = _checkpoint(t)
+    latest = _latest_gen(t)
     if at_generation is not None:
-        wm = _vacuum_watermark(spark, root)
+        wm = _vacuum_watermark(spark, t)
         if at_generation < wm:
             raise ValueError(
                 f"merge store at {root}: generation {at_generation} was "
@@ -178,26 +190,22 @@ def merge_store_stats(spark: SparkSession, root: str,
                 f"merge store at {root}: generation {at_generation} does "
                 f"not exist yet (latest committed is {latest})")
         gens = [g for g in gens if g <= at_generation]
+    stats = None
     if ck is not None and (at_generation is None or ck <= at_generation):
         # checkpointed store: the snapshot IS the exact live state at
         # generation ck, so only post-checkpoint deltas (stats +
         # tombstones) apply on top — per-read metadata cost is bounded
         # by the retain window, not the store's lifetime gen count
         gens = [g for g in gens if g > ck]
-        base = storage.read_parquet(spark, f"{root}/{_CKPT}/{_GEN}{ck}")
-        paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
-        paths = [p for p in paths if _parquet_files(spark, p)]
-        stats = base if not paths \
-            else base.unionByName(storage.read_parquet(spark, *paths))
-        return stats.join(_tombstoned(spark, root, gens), "file",
-                          "left_anti")
-    paths = [f"{root}/_stats/{_GEN}{g}" for g in gens]
-    paths = [p for p in paths if _parquet_files(spark, p)]
-    if not paths:
+        stats = storage.read_parquet(spark, f"{root}/{_CKPT}/{_GEN}{ck}")
+    paths = _with_data(t, "_stats", gens)
+    if paths:
+        delta = storage.read_parquet(spark, *paths)
+        stats = delta if stats is None else stats.unionByName(delta)
+    if stats is None:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — init_merge_store first")
-    stats = storage.read_parquet(spark, *paths)
-    return stats.join(_tombstoned(spark, root, gens), "file", "left_anti")
+    return stats.join(_tombstoned(spark, t, gens), "file", "left_anti")
 
 
 def merge_store_live_files(spark: SparkSession, root: str,
@@ -216,20 +224,27 @@ def read_merge_store(spark: SparkSession, root: str,
     directory glob, so orphan and tombstoned files are never scanned.
     Time travel is free metadata work because data files are immutable;
     it reaches back to the last :func:`vacuum_merge_store` watermark."""
-    files = merge_store_live_files(spark, root, at_generation)
-    if not files:
-        # fully-deleted store: recover the schema from any tombstoned
-        # file that vacuum hasn't reclaimed yet
-        gens = _committed_gens(spark, root)
-        dead = [r["file"] for r in
-                _tombstoned(spark, root, gens).collect()]
-        for f in sorted(dead):
-            if storage.exists(spark, f):
-                return storage.read_parquet(spark, f).where(F.lit(False))
-        raise ValueError(f"merge store at {root} is empty and every "
-                         "historical file was vacuumed — nothing to "
-                         "infer a schema from")
-    return storage.read_parquet(spark, *files)
+    return _read(spark, storage.tree(spark, root), at_generation)
+
+
+def _read(spark: SparkSession, t: storage.Tree,
+          at_generation: int | None) -> DataFrame:
+    """:func:`read_merge_store` from a walk ``t`` of the store root."""
+    files = [r["file"] for r in _stats(spark, t, at_generation)
+             .select("file").collect()]
+    if files:
+        return storage.read_parquet(spark, *sorted(files))
+    # fully-deleted store: recover the schema from any tombstoned file
+    # that vacuum hasn't reclaimed yet. A data file lives directly in
+    # its gen-<n> dir, so the walk knows it by its last two names.
+    dead = [r["file"] for r in
+            _tombstoned(spark, t, _committed_gens(t)).collect()]
+    for f in sorted(dead):
+        if f"{t.root}/{'/'.join(f.rsplit('/', 2)[-2:])}" in t.files:
+            return storage.read_parquet(spark, f).where(F.lit(False))
+    raise ValueError(f"merge store at {t.root} is empty and every "
+                     "historical file was vacuumed — nothing to "
+                     "infer a schema from")
 
 
 def vacuum_merge_store(spark: SparkSession, root: str,
@@ -248,22 +263,17 @@ def vacuum_merge_store(spark: SparkSession, root: str,
     feeds are always retained (they are copies, not references — the
     IVM log survives history reclamation). Returns
     ``{"watermark", "files_deleted", "files_retained_dead"}``."""
-    latest = _latest_gen(spark, root)
+    t = storage.tree(spark, root)
+    latest = _latest_gen(t)
     if latest is None:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — nothing to vacuum")
-    gens = _committed_gens(spark, root)
+    gens = _committed_gens(t)
     wm = max(0, latest - retain_generations)
     dead_old = [r["file"] for r in _tombstoned(
-        spark, root, [g for g in gens if g <= wm]).collect()]
-    dead_all = _tombstoned(spark, root, gens).count()
-    fs, _ = storage.fs(spark, root)
-    deleted = 0
-    for f in sorted(dead_old):
-        p = spark._jvm.org.apache.hadoop.fs.Path(f)
-        if fs.exists(p):
-            fs.delete(p, False)
-            deleted += 1
+        spark, t, [g for g in gens if g <= wm]).collect()]
+    dead_all = _tombstoned(spark, t, gens).count()
+    deleted = storage.delete(spark, *sorted(dead_old))
     (local_frame(spark, [(wm,)], "min_readable_gen long")
      .coalesce(1).write.mode("append").parquet(f"{root}/_vacuum"))
     return {"watermark": wm, "files_deleted": deleted,
@@ -304,11 +314,12 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
         raise ValueError("checkpoint_merge_store: retain_generations "
                          "must be >= 1 — consolidating the latest "
                          "generation itself would regress numbering")
-    latest = _latest_gen(spark, root)
+    t = storage.tree(spark, root)
+    latest = _latest_gen(t)
     if latest is None:
         raise ValueError(f"merge store at {root} has no committed "
                          "generations — nothing to checkpoint")
-    ck_old = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
+    ck_old = _checkpoint(t)
     wm = latest - retain_generations
     # min_advance amortizes the pass for per-batch callers: merge_into
     # passes retain_generations here, so a merge loop consolidates once
@@ -318,26 +329,23 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     if wm < 0 or wm < floor:
         return {"watermark": None, "files_deleted": 0,
                 "gens_consolidated": 0}
-    gens = _committed_gens(spark, root)
-    covered = [g for g in gens if g <= wm]
+    covered = [g for g in _committed_gens(t) if g <= wm]
     # debris from a crashed prior attempt at this watermark: the
     # checkpoint was never committed (ck_old < wm), so anything already
     # at gen-<wm> is invisible garbage blocking errorifexists
-    fs, _ = storage.fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    for sub in (_CKPT, _ROSTER):
-        fs.delete(jvm_path(f"{root}/{sub}/{_GEN}{wm}"), True)
+    ck_dir = f"{root}/{_CKPT}/{_GEN}{wm}"
+    storage.delete(spark, ck_dir, f"{root}/{_ROSTER}/{_GEN}{wm}")
     # roster BEFORE manifest: a committed checkpoint must always be able
     # to answer "was generation g <= wm committed" for the change feed
-    roster = sorted(set(covered)
-                    | set(_roster_gens(spark, root, ck_old)))
+    roster = sorted(set(covered) | set(_roster_gens(spark, t, ck_old)))
     (local_frame(spark, [(g,) for g in roster], "gen long")
      .coalesce(1).write.mode("errorifexists")
      .parquet(f"{root}/{_ROSTER}/{_GEN}{wm}"))
-    snapshot = merge_store_stats(spark, root, at_generation=wm)
-    ck_dir = f"{root}/{_CKPT}/{_GEN}{wm}"
+    # the walk predates the debris delete and the roster write, neither
+    # of which a manifest read looks at
+    snapshot = _stats(spark, t, wm)
     storage.write_unmarked(snapshot.coalesce(1), ck_dir, "errorifexists")
-    if not _parquet_files(spark, ck_dir):
+    if not storage.data_files(storage.tree(spark, ck_dir)):
         # a checkpoint without payload must never commit: the cleanup
         # below would delete the only remaining representation
         raise RuntimeError(
@@ -348,47 +356,42 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
 
     # physically reclaim dead files <= wm (the vacuum semantics)
     dead_old = [r["file"] for r in _tombstoned(
-        spark, root, covered).collect()]
-    deleted = 0
-    for f in sorted(dead_old):
-        p = jvm_path(f)
-        if fs.exists(p):
-            fs.delete(p, False)
-            deleted += 1
+        spark, t, covered).collect()]
+    deleted = storage.delete(spark, *sorted(dead_old))
     # no _vacuum append: the committed checkpoint at wm IS the
     # watermark record (_vacuum_watermark reads it) — appending here
     # would accrete one parquet file per auto-checkpointing batch
 
     # metadata cleanup — everything below is covered by the committed
-    # checkpoint, so deletion order no longer matters
-    for g in covered:
-        fs.delete(jvm_path(f"{root}/_stats/{_GEN}{g}"), True)
-        fs.delete(jvm_path(f"{root}/_log/{_GEN}{g}"), True)
-    for g in storage.numbers(spark, root, _GENS):
-        # drained data dirs: only generations the committed checkpoint
-        # covers (g <= wm). An all-delete merge legitimately commits an
-        # EMPTY generation (no parquet files, only _log tombstones);
-        # above the watermark its presence is what keeps _committed_gens
-        # applying its tombstones — deleting it would resurrect rows.
-        if g <= wm and not _parquet_files(spark, f"{root}/{_GEN}{g}"):
-            fs.delete(jvm_path(f"{root}/{_GEN}{g}"), True)
-    for old in (storage.numbers(spark, f"{root}/{_CKPT}", _GENS)
-                + storage.numbers(spark, f"{root}/{_ROSTER}", _GENS)):
-        if old < wm:
-            fs.delete(jvm_path(f"{root}/{_CKPT}/{_GEN}{old}"), True)
-            fs.delete(jvm_path(f"{root}/{_ROSTER}/{_GEN}{old}"), True)
+    # checkpoint, so deletion order no longer matters. The walk is
+    # retaken: the reclaim just drained data dirs.
+    t = storage.tree(spark, root)
+    stale = [f"{root}/{sub}/{_GEN}{g}" for g in covered
+             for sub in ("_stats", "_log")]
+    # drained data dirs: only generations the committed checkpoint
+    # covers (g <= wm). An all-delete merge legitimately commits an
+    # EMPTY generation (no parquet files, only _log tombstones); above
+    # the watermark its presence is what keeps _committed_gens applying
+    # its tombstones — deleting it would resurrect rows.
+    stale += [d for d in (f"{root}/{_GEN}{g}"
+                          for g in storage.numbers(t, _GENS) if g <= wm)
+              if not storage.data_files(t, d)]
+    stale += [f"{root}/{sub}/{_GEN}{old}" for sub in (_CKPT, _ROSTER)
+              for old in storage.numbers(t, _GENS, f"{root}/{sub}")
+              if old < wm]
+    storage.delete(spark, *stale)
     return {"watermark": wm, "files_deleted": deleted,
             "gens_consolidated": len(covered)}
 
 
-def _roster_gens(spark: SparkSession, root: str,
+def _roster_gens(spark: SparkSession, t: storage.Tree,
                  ck: int | None) -> list[int]:
     """Committed generations consolidated into checkpoint ``ck`` (empty
     when no checkpoint)."""
     if ck is None:
         return []
-    p = f"{root}/{_ROSTER}/{_GEN}{ck}"
-    if not _parquet_files(spark, p):
+    p = f"{t.root}/{_ROSTER}/{_GEN}{ck}"
+    if not storage.data_files(t, p):
         return []
     return sorted(int(r["gen"])
                   for r in storage.read_parquet(spark, p).collect())
@@ -402,16 +405,16 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
     meaning). An uncommitted generation 0 — left by a failed or crashed
     init — is deleted first, so the init can simply be retried.
     Returns the number of data files written."""
-    if _latest_gen(spark, root) is not None:
+    if _latest_gen(storage.tree(spark, root)) is not None:
         raise ValueError(f"init_merge_store: {root} already holds "
                          "generations — point each store at a fresh root")
     _check_keys(df, key_cols, "init_merge_store")
     gen_dir = f"{root}/{_GEN}0"
-    for orphan in (gen_dir, f"{root}/_stats/{_GEN}0", f"{root}/_log/{_GEN}0"):
-        f, jp = storage.fs(spark, orphan)
-        f.delete(jp, True)
+    storage.delete(spark, gen_dir, f"{root}/_stats/{_GEN}0",
+                   f"{root}/_log/{_GEN}0")
     df.write.mode("errorifexists").parquet(gen_dir)
-    if not _parquet_files(spark, gen_dir):
+    files = storage.data_files(storage.tree(spark, gen_dir))
+    if not files:
         raise ValueError("init_merge_store: the frame wrote no data "
                          "files — an empty store has no key types to "
                          "manifest; load at least one row")
@@ -441,7 +444,7 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
             "assume one store row per key; dedup the load first")
     _write_gen_stats(spark, root, 0, key_cols)
     _commit(spark, root, 0, [])
-    return len(_parquet_files(spark, gen_dir))
+    return len(files)
 
 
 def _check_keys(df: DataFrame, key_cols: list[str], who: str) -> None:
@@ -465,13 +468,20 @@ def read_change_feed(spark: SparkSession, root: str,
     ``change_feed=True`` record changes; a generation in range without
     them RAISES — silently skipping a gap would hand consumers a
     feed that no longer reconciles to the table."""
+    return _change_feed(spark, storage.tree(spark, root), from_generation,
+                        to_generation)
+
+
+def _change_feed(spark: SparkSession, t: storage.Tree, from_generation: int,
+                 to_generation: int | None) -> DataFrame:
+    """:func:`read_change_feed` from a walk ``t`` of the store root."""
+    root = t.root
     # committed set = live logs ∪ the checkpoint roster: consolidation
     # removes a generation's log but its _changes are data (never
     # reclaimed), and the roster preserves which gens ≤ ckpt were
     # actually committed (an orphaned crash dir must stay invisible)
-    ck = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
-    committed = sorted(set(_committed_gens(spark, root))
-                       | set(_roster_gens(spark, root, ck)))
+    committed = sorted(set(_committed_gens(t))
+                       | set(_roster_gens(spark, t, _checkpoint(t))))
     gens = [g for g in committed
             if g >= max(1, from_generation)
             and (to_generation is None or g <= to_generation)]
@@ -481,8 +491,8 @@ def read_change_feed(spark: SparkSession, root: str,
                 f"merge store at {root}: change feed requested through "
                 f"generation {to_generation}, but latest committed is "
                 f"{committed[-1] if committed else 'none'}")
-    missing = [g for g in gens
-               if not _parquet_files(spark, f"{root}/_changes/{_GEN}{g}")]
+    missing = [g for g in gens if not storage.data_files(
+        t, f"{root}/_changes/{_GEN}{g}")]
     if missing:
         raise ValueError(
             f"merge store at {root}: generations {missing} have no "
@@ -548,12 +558,13 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
         raise ValueError("merge_into: retain_generations must be >= 1 "
                          "(the latest generation is never consolidated)")
     _check_keys(updates, key_cols, "merge_into")
-    stats = merge_store_stats(spark, root)
+    t = storage.tree(spark, root)
+    stats = _stats(spark, t, None)
     first = stats.select("file").limit(1).collect()
     if first:   # schema from one live file — no second manifest assembly
         store_cols = storage.read_parquet(spark, first[0]["file"]).columns
     else:       # fully-deleted store: schema via the dead-file fallback
-        store_cols = read_merge_store(spark, root).columns
+        store_cols = _read(spark, t, None).columns
     if when_matched == "update" and set(updates.columns) != set(store_cols):
         raise ValueError(
             f"merge_into(update): updates columns {sorted(updates.columns)} "
@@ -601,9 +612,9 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
     touched_rows = sum(int(r["n_rows"]) for r in cand_rows)
     files_live_before = stats.count()
 
-    ck_anchor = storage.latest(spark, f"{root}/{_CKPT}", _GENS)
-    gen = max(storage.next_number(spark, root, _GENS),
-              storage.next_number(spark, f"{root}/_log", _GENS),
+    ck_anchor = _checkpoint(t)
+    gen = max(storage.next_number(t, _GENS),
+              storage.next_number(t, _GENS, f"{root}/_log"),
               ck_anchor + 1 if ck_anchor is not None else 0)
     gen_dir = f"{root}/{_GEN}{gen}"
 
@@ -706,7 +717,7 @@ _ROLLUP = storage.Layout("rollup-g", "_SUCCESS")
 
 
 def _applied_through(spark: SparkSession, state_dir: str) -> int:
-    g = storage.latest(spark, state_dir, _ROLLUP)
+    g = storage.latest(storage.tree(spark, state_dir), _ROLLUP)
     if g is None:
         raise ValueError(f"feed rollup at {state_dir} not initialized — "
                          "init_feed_rollup first")
@@ -733,11 +744,12 @@ def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     read avg off them) — min/max cannot be maintained under deletes
     without a recompute, so they are deliberately absent."""
     group_cols = list(group_cols)
-    if storage.committed(spark, state_dir, _ROLLUP):
+    if storage.committed(storage.tree(spark, state_dir), _ROLLUP):
         raise ValueError(f"feed rollup at {state_dir} already "
                          "initialized — point each view at a fresh dir")
-    g_now = _latest_gen(spark, root)
-    base = read_merge_store(spark, root).withColumn("_sign", F.lit(1))
+    t = storage.tree(spark, root)
+    g_now = _latest_gen(t)
+    base = _read(spark, t, None).withColumn("_sign", F.lit(1))
     # overwrite, not errorifexists: a crashed init leaves a markerless
     # orphan dir that reads as uninitialized — but an errorifexists
     # retry then failed with PATH_ALREADY_EXISTS and there was no
@@ -768,11 +780,12 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     previous one are pruned."""
     group_cols = list(group_cols)
     applied = _applied_through(spark, state_dir)
-    g_now = _latest_gen(spark, root)
+    t = storage.tree(spark, root)
+    g_now = _latest_gen(t)
     if g_now <= applied:
         return {"applied_from": None, "applied_through": applied,
                 "groups_touched": 0}
-    feed = read_change_feed(spark, root, applied + 1, g_now)
+    feed = _change_feed(spark, t, applied + 1, g_now)
     signed = feed.withColumn(
         "_sign",
         F.when(F.col("_change_type").isin("insert", "update_postimage"),

@@ -245,8 +245,8 @@ def apply_compaction(spark: SparkSession, plan: DataFrame,
     directory-glob rescan — and the ``coalesce(1)`` single task is
     bounded: multi-file groups are < target + one file's rows by the
     next-fit construction."""
-    fs, jpath = storage.fs(spark, out_path)
-    if fs.exists(jpath) and len(fs.listStatus(jpath)) > 0:
+    t = storage.tree(spark, out_path, 1)
+    if t.dirs or t.files:
         raise ValueError(
             f"apply_compaction: out_path {out_path} is not empty — group "
             "ids are plan-positional, so mixing runs leaves stale cg= "
@@ -294,7 +294,7 @@ def refresh_manifest_after_compaction(spark: SparkSession,
     the ``cg=`` files — one stats pass over the compacted bytes only.
     ``prune_files`` / ``skipping_read`` over the result read the
     compacted table with no duplicated and no stale rows."""
-    if not storage.exists(spark, f"{out_path}/_replaced"):
+    if not storage.tree(spark, f"{out_path}/_replaced").files:
         return manifest   # nothing was rewritten (all-singleton plan)
     replaced = storage.read_parquet(spark, f"{out_path}/_replaced") \
         .select("file")

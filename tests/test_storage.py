@@ -28,8 +28,11 @@ from datatools_spark.operators import mergestore as MS
 from datatools_spark.operators import sigstore as SS
 from datatools_spark.operators import sketches as SK
 from datatools_spark.operators import storage
+from datatools_spark.operators.mergestore import (
+    init_merge_store, merge_into, read_merge_store)
 
-from .conftest import count_jobs
+from .conftest import count_commands, count_jobs, method_calls
+from .test_mergestore import KEY, _as_dict, _base_df
 
 STEPS = 3
 
@@ -103,7 +106,8 @@ class SigFirstWrite(_Kind):
         return _live_table(self.spark, self.root)
 
     def gens(self):
-        return storage.committed(self.spark, self.root, storage.GEN)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 storage.GEN)
 
 
 class SigCompaction(_Kind):
@@ -118,7 +122,8 @@ class SigCompaction(_Kind):
         return _live_table(self.spark, self.root)
 
     def gens(self):
-        return storage.committed(self.spark, self.root, storage.GEN)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 storage.GEN)
 
 
 class IvfBuild(_Kind):
@@ -140,7 +145,8 @@ class IvfBuild(_Kind):
                                          nprobe=3))
 
     def gens(self):
-        return storage.committed(self.spark, self.root, storage.GEN)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 storage.GEN)
 
 
 def _items(spark, i):
@@ -159,7 +165,8 @@ class Kmv(_Kind):
         return _rows(SK.read_kmv_store(self.spark, self.root))
 
     def gens(self):
-        return storage.committed(self.spark, self.root, SK._KMV)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 SK._KMV)
 
 
 class ValueSample(_Kind):
@@ -171,7 +178,8 @@ class ValueSample(_Kind):
         return _rows(SK.read_value_sample_store(self.spark, self.root))
 
     def gens(self):
-        return storage.committed(self.spark, self.root, SK._VS)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 SK._VS)
 
 
 class Cms(_Kind):
@@ -183,7 +191,8 @@ class Cms(_Kind):
         return _rows(SK.read_cms_store(self.spark, self.root))
 
     def gens(self):
-        return storage.committed(self.spark, self.root, SK._CMS)
+        return storage.committed(storage.tree(self.spark, self.root),
+                                 SK._CMS)
 
 
 def _upserts(spark, i):
@@ -207,7 +216,7 @@ class MergeInto(_Kind):
         return _rows(MS.read_merge_store(self.spark, self.root))
 
     def gens(self):
-        return MS._committed_gens(self.spark, self.root)
+        return MS._committed_gens(storage.tree(self.spark, self.root))
 
 
 class FeedRollup(_Kind):
@@ -232,7 +241,8 @@ class FeedRollup(_Kind):
         return _rows(MS.read_feed_rollup(self.spark, self.state))
 
     def gens(self):
-        return storage.committed(self.spark, self.state, MS._ROLLUP)
+        return storage.committed(storage.tree(self.spark, self.state),
+                                 MS._ROLLUP)
 
 
 KINDS = {k.__name__: k for k in (SigFirstWrite, SigCompaction, IvfBuild,
@@ -314,11 +324,208 @@ def test_lister_skips_foreign_dirs(spark, tmp_path):
         (tmp_path / name).mkdir()
     (tmp_path / "kmv-b1" / "_SUCCESS").touch()
     (tmp_path / "kmv-b0.bak" / "_SUCCESS").touch()
-    path = str(tmp_path)
-    assert storage.numbers(spark, path, layout) == [0, 1, 2]
-    assert storage.committed(spark, path, layout) == [1]
-    assert storage.next_number(spark, path, layout) == 3
-    assert storage.live_dir(spark, path, layout).endswith("kmv-b1")
+    t = storage.tree(spark, str(tmp_path))
+    assert storage.numbers(t, layout) == [0, 1, 2]
+    assert storage.committed(t, layout) == [1]
+    assert storage.next_number(t, layout) == 3
+    assert storage.live_dir(t, layout).endswith("kmv-b1")
+
+
+# ------------------------------------------------------- the one walk
+
+def _list_files(spark, d):
+    """The ``listFiles`` walk ``storage.listing`` replaced, kept as its
+    reference: ``(path, length, mtime)`` of every file below ``d``."""
+    jp = spark._jvm.org.apache.hadoop.fs.Path(d)
+    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = []
+    if fs.exists(jp):
+        it = fs.listFiles(jp, True)
+        while it.hasNext():
+            st = it.next()
+            out.append((str(st.getPath()), st.getLen(),
+                        st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def test_listing_equals_list_files(spark, tmp_path):
+    """The walk's listing is the ``listFiles`` triples the memo keys
+    were built from, over markers, checksum sidecars, an empty orphan
+    generation, a ``_temporary`` dir and a hive-partitioned table; its
+    data files are the ``part-*`` files alone."""
+    root = str(tmp_path / "store")
+    gen = storage.GEN.dir(root, 0)
+    spark.range(6).repartition(2).write.parquet(gen)
+    storage.commit(spark, gen, storage.GEN.marker)
+    (tmp_path / "store" / "gen-000001").mkdir()
+    tmp = tmp_path / "store" / "gen-000002" / "_temporary" / "0"
+    tmp.mkdir(parents=True)
+    (tmp / "part-00000.parquet").write_bytes(b"torn")
+    spark.range(6).select("id", (F.col("id") % 2).alias("p")) \
+        .write.partitionBy("p").parquet(f"{root}/data")
+    assert list((tmp_path / "store").rglob("*.crc"))
+
+    t = storage.tree(spark, root)
+    assert storage.listing(t) == _list_files(spark, root)
+    for d in (gen, f"{root}/data", f"{root}/gen-000001", f"{root}/none"):
+        assert storage.listing(t, d) == _list_files(spark, d), d
+    assert storage.listing(storage.tree(spark, f"{root}/none")) == ()
+    parts = sorted(str(f) for f in (tmp_path / "store").rglob("part-*")
+                   if f.suffix == ".parquet" and "_temporary" not in str(f))
+    assert [p.split(":", 1)[1] for p in storage.data_files(t)] == parts
+    assert storage.data_files(t, f"{root}/gen-000002") == []
+    assert storage.numbers(t, storage.GEN) == [0, 1, 2]
+    assert storage.committed(t, storage.GEN) == [0]
+    # two levels reach every generation dir and its marker, no deeper
+    shallow = storage.tree(spark, root, 2)
+    assert storage.committed(shallow, storage.GEN) == [0]
+    assert f"{root}/gen-000002/_temporary" in shallow.dirs
+    assert f"{root}/gen-000002/_temporary/0" not in shallow.dirs
+    assert f"{root}/data/p=0" in shallow.dirs
+    assert not [f for f in shallow.files if f.startswith(f"{root}/data/p=")]
+
+
+def _merge_store(spark, root):
+    """A merge store of three generations."""
+    MS.init_merge_store(spark, _upserts(spark, 10), root, ["id"])
+    for i in range(2):
+        MS.merge_into(spark, root, _upserts(spark, i), ["id"])
+    return root
+
+
+def test_store_reads_send_no_exists_or_list_files(spark, tmp_path):
+    """Every layout question of a store read comes from its walk: no
+    ``exists`` and no ``listFiles`` command."""
+    merge = _merge_store(spark, str(tmp_path / "merge"))
+    cms = str(tmp_path / "cms")
+    SK.update_cms_store(spark, _items(spark, 0), cms, "item", 0,
+                        depth=2, width=16)
+    sig = str(tmp_path / "sig")
+    SS.update_signature_store(spark, _docs(spark, 0), sig)
+    read_cms = lambda: SK.read_cms_store(  # noqa: E731
+        spark, cms, depth=2, width=16)
+    read_cms()
+    for read in (lambda: MS.read_merge_store(spark, merge), read_cms,
+                 lambda: SS.resolve_signature_root(spark, sig),
+                 lambda: storage.committed(storage.tree(spark, cms),
+                                           SK._CMS)):
+        _, sent = count_commands(spark, read)
+        assert method_calls(sent, "exists") == 0
+        assert method_calls(sent, "listFiles") == 0
+        assert method_calls(sent, "listStatus") > 0
+
+
+def test_merge_store_reads_walk_the_root_once(spark, tmp_path,
+                                              monkeypatch):
+    root = _merge_store(spark, str(tmp_path / "merge"))
+    walks, walk = [], storage.tree
+    monkeypatch.setattr(storage, "tree",
+                        lambda s, r, *a: walks.append(r) or walk(s, r, *a))
+    for read in (MS.read_merge_store, MS.merge_store_stats):
+        for at in (None, 1):
+            walks.clear()
+            read(spark, root, at)
+            assert walks == [root], (read, at)
+
+
+# ------------------------------------ the merge store's commit gate
+# (test_mergestore.py is slow as a whole; these two pin the rules the
+# gate reads from the walk: the log's marker + payload, and the
+# drained-dir reclaim that stops at the watermark)
+
+@pytest.fixture()
+def store(spark, tmp_path):
+    root = str(tmp_path / "store")
+    init_merge_store(spark, _base_df(spark), root, KEY)
+    return root
+
+
+def test_crashed_commit_log_is_invisible(spark, store):
+    """The r6-advice crash window: Spark creates the _log/gen-<n> dir at
+    job start, so a crash DURING the log write leaves a generation whose
+    data exists but whose tombstones are lost. Bare dir existence must
+    not count as commit — otherwise every rewritten row double-counts.
+    Commit is gated on the log's _SUCCESS marker + parquet payload."""
+    import os
+    import shutil
+    before = _as_dict(read_merge_store(spark, store))
+    upd = spark.createDataFrame(
+        [(10, -1, "upd"), (5000, -2, "new")], "id long, v long, tag string")
+    res = merge_into(spark, store, upd, KEY, "update")
+    gen = res["generation"]
+    log_dir = f"{store}/_log/gen-{gen}"
+    # crash flavor 1: log dir created, nothing written yet (empty dir)
+    saved = f"{store}/_saved_log"
+    shutil.move(log_dir, saved)
+    os.makedirs(log_dir)
+    got = _as_dict(read_merge_store(spark, store))
+    assert got == before, "bare log dir must not commit the generation"
+    assert len(got) == len(before), "no double-counted rewritten rows"
+    # crash flavor 2: partial payload, no _SUCCESS marker yet
+    shutil.rmtree(log_dir)
+    shutil.copytree(saved, log_dir)
+    os.remove(f"{log_dir}/_SUCCESS")
+    got = _as_dict(read_merge_store(spark, store))
+    assert got == before
+    # the completed log commits: full post-merge state, counted once
+    shutil.rmtree(log_dir)
+    shutil.move(saved, log_dir)
+    want = dict(before)
+    want.update({10: (-1, "upd"), 5000: (-2, "new")})
+    assert _as_dict(read_merge_store(spark, store)) == want
+
+
+def test_checkpoint_keeps_empty_committed_gen_above_watermark(
+        spark, tmp_path):
+    """An all-delete merge commits an EMPTY generation (zero parquet
+    files, tombstones only). If that generation sits ABOVE the
+    checkpoint watermark, its data dir is the committed-ness witness
+    _committed_gens relies on — reclaiming it as "drained" drops its
+    tombstones and silently resurrects the deleted rows (r10 ADVICE
+    high). The drained-dir reclaim must stop at the watermark."""
+    import os
+    from datatools_spark.operators.mergestore import checkpoint_merge_store
+    root = str(tmp_path / "emptygen")
+    init_merge_store(spark, _base_df(spark, n=10, files=1), root, KEY)
+    # gen 1, 2: updates so the watermark has history to consolidate
+    for i in (1, 2):
+        u = spark.createDataFrame([(i, -i, f"g{i}")],
+                                  "id long, v long, tag string")
+        merge_into(spark, root, u, KEY, "update")
+    # gen 3: delete EVERY row -> empty generation. This Spark version
+    # happens to emit one zero-row part file for an empty write; that
+    # is not contractual (other versions emit none — the case
+    # _write_gen_stats's empty-manifest branch exists for), so strip
+    # the empty part file to pin the file-less-committed-gen shape.
+    all_keys = spark.range(0, 10).select("id")
+    r = merge_into(spark, root, all_keys, KEY, "delete")
+    assert r["generation"] == 3 and r["rows_deleted"] == 10
+    g3 = os.path.join(root, "gen-3")
+    for f in os.listdir(g3):
+        if f.endswith(".parquet") or f.endswith(".parquet.crc"):
+            os.remove(os.path.join(g3, f))
+    # file-less committed gen is still committed: reads stay exact
+    assert read_merge_store(spark, root).count() == 0
+    # gen 4: fresh inserts so latest(4) > empty gen(3) > wm(2)
+    ins = spark.createDataFrame([(100, 1, "new"), (101, 2, "new")],
+                                "id long, v long, tag string")
+    merge_into(spark, root, ins, KEY, "update")
+    res = checkpoint_merge_store(spark, root, retain_generations=2)
+    assert res["watermark"] == 2
+    # the empty committed gen-3 above the watermark must survive so its
+    # tombstones keep applying: no resurrection of the deleted 10 rows
+    assert os.path.isdir(os.path.join(root, "gen-3"))
+    assert _as_dict(read_merge_store(spark, root)) == {
+        100: (1, "new"), 101: (2, "new")}
+    # time travel at the empty generation reads empty, not resurrected
+    assert read_merge_store(spark, root, at_generation=3).count() == 0
+    # a later checkpoint that moves the watermark PAST the empty gen may
+    # then reclaim it; reads stay exact
+    merge_into(spark, root, spark.createDataFrame(
+        [(102, 3, "new")], "id long, v long, tag string"), KEY, "update")
+    checkpoint_merge_store(spark, root, retain_generations=2)  # wm=3
+    assert _as_dict(read_merge_store(spark, root)) == {
+        100: (1, "new"), 101: (2, "new"), 102: (3, "new")}
 
 
 def _sources() -> dict:
@@ -328,11 +535,14 @@ def _sources() -> dict:
 
 
 def test_commit_protocol_lives_in_storage_only():
-    """The Hadoop FS handle is opened in operators/storage.py alone, and
-    no module reaches into another store module's privates."""
+    """The Hadoop FS is opened, listed and walked in operators/storage.py
+    alone, and no module reaches into another store module's
+    privates."""
     sources = _sources()
-    assert [p for p, src in sources.items()
-            if "getFileSystem(" in src] == ["operators/storage.py"]
+    for call in ("getFileSystem(", "listStatus", "listFiles"):
+        assert [p for p, src in sources.items() if call in src] \
+            == ["operators/storage.py"], call
+    assert not [p for p, src in sources.items() if "storage.fs(" in src]
     stores = {"storage", "sigstore", "ivfstore", "compstore", "mergestore",
               "sketches"}
     bad = []
@@ -429,33 +639,21 @@ def test_read_parquet_schema_equals_inference_on_component_store(
 
 
 def test_read_parquet_driver_cost_does_not_grow_with_files(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path):
     """The footer read's driver-side calls into the JVM are the same for
     a table of 1 file and of 300 files: the listing and the choice of
     file run inside the JVM, not once per file from Python."""
     src = FIXTURE / "nation.parquet"
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
 
     def round_trips(n):
         t = tmp_path / f"t{len(list(tmp_path.iterdir()))}"
         t.mkdir()
         for i in range(n):
             shutil.copy(src, t / f"part-{i:05d}.parquet")
-        calls = []
-
-        def counted(cmd, *a, **k):
-            # py4j's deletes of collected proxies ("m") come at GC time
-            calls.append(cmd.split("\n", 1)[0])
-            return send(cmd, *a, **k)
-
-        monkeypatch.setattr(client, "send_command", counted)
-        try:
-            df = storage.read_parquet(spark, str(t))
-        finally:
-            monkeypatch.setattr(client, "send_command", send)
+        df, sent = count_commands(
+            spark, lambda: storage.read_parquet(spark, str(t)))
         assert df.schema == spark.read.parquet(str(src)).schema
-        return sum(c != "m" for c in calls)
+        return len(sent)
 
     round_trips(1)     # a first read makes one-time lookups
     assert round_trips(300) == round_trips(1)

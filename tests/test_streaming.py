@@ -454,9 +454,9 @@ def test_streaming_embedding_ingest_finds_cross_batch_neardups(spark, tmp_path):
                                    threshold=0.95)
     q.awaitTermination(180)
     from datatools_spark.operators import storage
+    live = storage.live_dir(storage.tree(spark, idx), storage.GEN)
     idx_ids = {r["vec_id"] for r in
-               spark.read.parquet(
-                   f"{storage.live_dir(spark, idx, storage.GEN)}/data")
+               spark.read.parquet(f"{live}/data")
                .select("vec_id").collect()}
     assert idx_ids == {i for i, _ in b1} | {i for i, _ in b2}
     got = spark.read.parquet(matches).collect()
@@ -981,7 +981,7 @@ def test_streaming_cms_restart_replays_uncommitted_batch_exactly_once(
            for r in read_cms_store(spark, store).collect()}
     assert got == want  # replayed batch 0 skipped, batch 1 folded once
 
-    last = storage.latest(spark, store,
+    last = storage.latest(storage.tree(spark, store),
                           storage.Layout("cms-b", "_SUCCESS"))
     state = spark.read.parquet(f"{store}/cms-b{last}/state").collect()
     assert [(r["app_id"], r["last_id"]) for r in state] == [(ck, 1)]
