@@ -301,7 +301,7 @@ def compact_component_store(spark: SparkSession, path: str,
     future resolution maps. Returns the number of member rows written.
     The source store is untouched (swap directories at the catalog
     level, the standard metadata flip)."""
-    t = storage.tree(spark, out_path, 1)
+    t = storage.tree(spark, out_path)
     if t.dirs or t.files:
         raise ValueError(
             f"compact_component_store: out_path {out_path} is not empty "

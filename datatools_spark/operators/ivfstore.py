@@ -56,7 +56,7 @@ def build_ivf_index(spark: SparkSession, df: DataFrame,
     generation into FileNotFound); the next rebuild retires it.
     Returns the number of indexed vectors."""
     gen = storage.GEN.dir(path, storage.next_number(
-        storage.tree(spark, path, 2), storage.GEN))
+        storage.tree(spark, path, only=storage.GEN.marker), storage.GEN))
     assigned = ivf_assign(df, centroids, vec_col, id_col, centroid_id_col,
                           keep_vec=True) \
         .select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col))
@@ -91,7 +91,8 @@ def update_ivf_index(spark: SparkSession, batch: DataFrame, path: str,
     anti-join + assignment plan, and the write cannot reach back into
     the anti-join's read of the files it appends to. Returns the number
     of newly indexed vectors."""
-    root = storage.live_dir(storage.tree(spark, path, 2), storage.GEN)
+    root = storage.live_dir(
+        storage.tree(spark, path, only=storage.GEN.marker), storage.GEN)
     cents = storage.read_parquet(spark, f"{root}/centroids")
     existing = storage.read_parquet(spark, f"{root}/data").select(id_col)
     new = batch.join(existing, id_col, "left_anti")
@@ -119,7 +120,8 @@ def ivf_index_search(spark: SparkSession, path: str, query: DataFrame,
     probed cells. Identical results to `similarity.ivf_search` run over
     the same centroids (equality-tested).
     Output: ``query_id, vec_id, cosine, rank``."""
-    root = storage.live_dir(storage.tree(spark, path, 2), storage.GEN)
+    root = storage.live_dir(
+        storage.tree(spark, path, only=storage.GEN.marker), storage.GEN)
     cents = storage.read_parquet(spark, f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))
@@ -201,7 +203,8 @@ def ivf_index_stats(spark: SparkSession, path: str,
     re-clustering on ``needs_recluster``/``needs_retrain``.
     Output: ``centroid_id, n_vectors, mean_residual, fill_skew,
     drift_ratio, needs_recluster, needs_retrain``."""
-    root = storage.live_dir(storage.tree(spark, path, 2), storage.GEN)
+    root = storage.live_dir(
+        storage.tree(spark, path, only=storage.GEN.marker), storage.GEN)
     cents = storage.read_parquet(spark, f"{root}/centroids")
     c = F.broadcast(cents.select(F.col(centroid_id_col),
                                  F.col(vec_col).alias("_cv")))

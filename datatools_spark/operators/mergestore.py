@@ -69,6 +69,16 @@ _ROSTER = "_ckpt_roster"  # committed-generation roster ≤ each snapshot
 # _ckpt_roster) is gen-<n>; log and checkpoint records commit with the
 # _SUCCESS marker
 _GENS = storage.Layout(_GEN, "_SUCCESS")
+# the metadata dirs a store call walks (:func:`_walk`); the data dirs'
+# files are named by the manifest, and a generation's _changes are
+# walked by the change feed alone
+_META = frozenset({"_log", "_stats", _CKPT, _ROSTER, "_vacuum"})
+
+
+def _walk(spark: SparkSession, root: str) -> storage.Tree:
+    """One walk of the store root: its gen-<n> dirs, not their files,
+    and every metadata dir with all it holds."""
+    return storage.tree(spark, root, into=_META)
 
 
 def _committed_gens(t: storage.Tree) -> list[int]:
@@ -86,23 +96,6 @@ def _committed_gens(t: storage.Tree) -> list[int]:
     done = {g for g in storage.committed(t, _GENS, logs)
             if storage.data_files(t, _GENS.dir(logs, g))}
     return [g for g in storage.numbers(t, _GENS) if g in done]
-
-
-def _write_gen_stats(spark: SparkSession, root: str, gen: int,
-                     key_cols: list[str], empty_schema=None) -> None:
-    """``empty_schema`` is for a generation that may hold no file (a
-    walk tells); without it the generation is known to hold files."""
-    gen_dir = f"{root}/{_GEN}{gen}"
-    if empty_schema is None \
-            or storage.data_files(storage.tree(spark, gen_dir)):
-        stats = build_file_stats(spark, gen_dir, key_cols)
-    else:
-        # an all-delete merge can write an empty generation; its stats
-        # are an empty manifest in the LIVE manifest's exact schema, so
-        # the _stats/* union read stays type-consistent
-        stats = local_frame(spark, [], empty_schema)
-    stats.coalesce(1).write.mode("overwrite") \
-        .parquet(f"{root}/_stats/{_GEN}{gen}")
 
 
 def _commit(spark: SparkSession, root: str, gen: int,
@@ -168,7 +161,7 @@ def merge_store_stats(spark: SparkSession, root: str,
     both truncated to generations ≤ it, which reconstructs that commit's
     exact state (a file tombstoned later is live again; a file written
     later never existed)."""
-    return _stats(spark, storage.tree(spark, root), at_generation)
+    return _stats(spark, _walk(spark, root), at_generation)
 
 
 def _stats(spark: SparkSession, t: storage.Tree,
@@ -212,8 +205,12 @@ def merge_store_live_files(spark: SparkSession, root: str,
                            at_generation: int | None = None) -> list[str]:
     """Live data file paths (the legitimate metadata-sized collect —
     it feeds the reader's path list, like a catalog partition listing)."""
-    return sorted(r["file"] for r in
-                  merge_store_stats(spark, root, at_generation)
+    return _live_files(spark, _walk(spark, root), at_generation)
+
+
+def _live_files(spark: SparkSession, t: storage.Tree,
+                at_generation: int | None) -> list[str]:
+    return sorted(r["file"] for r in _stats(spark, t, at_generation)
                   .select("file").collect())
 
 
@@ -224,24 +221,23 @@ def read_merge_store(spark: SparkSession, root: str,
     directory glob, so orphan and tombstoned files are never scanned.
     Time travel is free metadata work because data files are immutable;
     it reaches back to the last :func:`vacuum_merge_store` watermark."""
-    return _read(spark, storage.tree(spark, root), at_generation)
+    return _read(spark, _walk(spark, root), at_generation)
 
 
 def _read(spark: SparkSession, t: storage.Tree,
           at_generation: int | None) -> DataFrame:
     """:func:`read_merge_store` from a walk ``t`` of the store root."""
-    files = [r["file"] for r in _stats(spark, t, at_generation)
-             .select("file").collect()]
+    files = _live_files(spark, t, at_generation)
     if files:
-        return storage.read_parquet(spark, *sorted(files))
+        return storage.read_parquet(spark, *files)
     # fully-deleted store: recover the schema from any tombstoned file
-    # that vacuum hasn't reclaimed yet. A data file lives directly in
-    # its gen-<n> dir, so the walk knows it by its last two names.
-    dead = [r["file"] for r in
-            _tombstoned(spark, t, _committed_gens(t)).collect()]
-    for f in sorted(dead):
-        if f"{t.root}/{'/'.join(f.rsplit('/', 2)[-2:])}" in t.files:
-            return storage.read_parquet(spark, f).where(F.lit(False))
+    # that vacuum hasn't reclaimed yet, walking its gen-<n> dir
+    dead = {r["file"] for r in
+            _tombstoned(spark, t, _committed_gens(t)).collect()}
+    for d in sorted({f.rsplit("/", 1)[0] for f in dead}):
+        found = sorted(dead & storage.tree(spark, d).files.keys())
+        if found:
+            return storage.read_parquet(spark, found[0]).where(F.lit(False))
     raise ValueError(f"merge store at {t.root} is empty and every "
                      "historical file was vacuumed — nothing to "
                      "infer a schema from")
@@ -263,7 +259,7 @@ def vacuum_merge_store(spark: SparkSession, root: str,
     feeds are always retained (they are copies, not references — the
     IVM log survives history reclamation). Returns
     ``{"watermark", "files_deleted", "files_retained_dead"}``."""
-    t = storage.tree(spark, root)
+    t = _walk(spark, root)
     latest = _latest_gen(t)
     if latest is None:
         raise ValueError(f"merge store at {root} has no committed "
@@ -314,7 +310,7 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
         raise ValueError("checkpoint_merge_store: retain_generations "
                          "must be >= 1 — consolidating the latest "
                          "generation itself would regress numbering")
-    t = storage.tree(spark, root)
+    t = _walk(spark, root)
     latest = _latest_gen(t)
     if latest is None:
         raise ValueError(f"merge store at {root} has no committed "
@@ -363,9 +359,8 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     # would accrete one parquet file per auto-checkpointing batch
 
     # metadata cleanup — everything below is covered by the committed
-    # checkpoint, so deletion order no longer matters. The walk is
-    # retaken: the reclaim just drained data dirs.
-    t = storage.tree(spark, root)
+    # checkpoint, so deletion order no longer matters. The reclaim just
+    # drained data dirs, so each one at or below wm is walked now.
     stale = [f"{root}/{sub}/{_GEN}{g}" for g in covered
              for sub in ("_stats", "_log")]
     # drained data dirs: only generations the committed checkpoint
@@ -375,7 +370,7 @@ def checkpoint_merge_store(spark: SparkSession, root: str,
     # its tombstones — deleting it would resurrect rows.
     stale += [d for d in (f"{root}/{_GEN}{g}"
                           for g in storage.numbers(t, _GENS) if g <= wm)
-              if not storage.data_files(t, d)]
+              if not storage.data_files(storage.tree(spark, d))]
     stale += [f"{root}/{sub}/{_GEN}{old}" for sub in (_CKPT, _ROSTER)
               for old in storage.numbers(t, _GENS, f"{root}/{sub}")
               if old < wm]
@@ -405,7 +400,7 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
     meaning). An uncommitted generation 0 — left by a failed or crashed
     init — is deleted first, so the init can simply be retried.
     Returns the number of data files written."""
-    if _latest_gen(storage.tree(spark, root)) is not None:
+    if _latest_gen(_walk(spark, root)) is not None:
         raise ValueError(f"init_merge_store: {root} already holds "
                          "generations — point each store at a fresh root")
     _check_keys(df, key_cols, "init_merge_store")
@@ -442,7 +437,8 @@ def init_merge_store(spark: SparkSession, df: DataFrame, root: str,
             f"init_merge_store: initial load has {chk['n'] - chk['nk']} "
             "duplicate-key rows — merge_into's matched/inserted counters "
             "assume one store row per key; dedup the load first")
-    _write_gen_stats(spark, root, 0, key_cols)
+    build_file_stats(spark, gen_dir, key_cols).coalesce(1) \
+        .write.mode("overwrite").parquet(f"{root}/_stats/{_GEN}0")
     _commit(spark, root, 0, [])
     return len(files)
 
@@ -468,7 +464,7 @@ def read_change_feed(spark: SparkSession, root: str,
     ``change_feed=True`` record changes; a generation in range without
     them RAISES — silently skipping a gap would hand consumers a
     feed that no longer reconciles to the table."""
-    return _change_feed(spark, storage.tree(spark, root), from_generation,
+    return _change_feed(spark, _walk(spark, root), from_generation,
                         to_generation)
 
 
@@ -492,7 +488,7 @@ def _change_feed(spark: SparkSession, t: storage.Tree, from_generation: int,
                 f"generation {to_generation}, but latest committed is "
                 f"{committed[-1] if committed else 'none'}")
     missing = [g for g in gens if not storage.data_files(
-        t, f"{root}/_changes/{_GEN}{g}")]
+        storage.tree(spark, f"{root}/_changes/{_GEN}{g}"))]
     if missing:
         raise ValueError(
             f"merge store at {root}: generations {missing} have no "
@@ -558,7 +554,7 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
         raise ValueError("merge_into: retain_generations must be >= 1 "
                          "(the latest generation is never consolidated)")
     _check_keys(updates, key_cols, "merge_into")
-    t = storage.tree(spark, root)
+    t = _walk(spark, root)
     stats = _stats(spark, t, None)
     first = stats.select("file").limit(1).collect()
     if first:   # schema from one live file — no second manifest assembly
@@ -657,8 +653,15 @@ def merge_into(spark: SparkSession, root: str, updates: DataFrame,
     out = out.repartitionByRange(n_out, *key_cols) \
         .sortWithinPartitions(*key_cols)
     out.write.mode("errorifexists").parquet(gen_dir)
-    _write_gen_stats(spark, root, gen, key_cols,
-                     empty_schema=stats.schema)
+    if storage.data_files(storage.tree(spark, gen_dir)):
+        new_stats = build_file_stats(spark, gen_dir, key_cols)
+    else:
+        # an all-delete merge can write an empty generation; its stats
+        # are an empty manifest in the LIVE manifest's exact schema, so
+        # the _stats/* union read stays type-consistent
+        new_stats = local_frame(spark, [], stats.schema)
+    new_stats.coalesce(1).write.mode("overwrite") \
+        .parquet(f"{root}/_stats/{_GEN}{gen}")
     if change_feed:
         ct = "_change_type"
         matched_pre = (touched.join(F.broadcast(keys), key_cols,
@@ -717,7 +720,8 @@ _ROLLUP = storage.Layout("rollup-g", "_SUCCESS")
 
 
 def _applied_through(spark: SparkSession, state_dir: str) -> int:
-    g = storage.latest(storage.tree(spark, state_dir), _ROLLUP)
+    g = storage.latest(storage.tree(spark, state_dir, only=_ROLLUP.marker),
+                       _ROLLUP)
     if g is None:
         raise ValueError(f"feed rollup at {state_dir} not initialized — "
                          "init_feed_rollup first")
@@ -744,10 +748,11 @@ def init_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     read avg off them) — min/max cannot be maintained under deletes
     without a recompute, so they are deliberately absent."""
     group_cols = list(group_cols)
-    if storage.committed(storage.tree(spark, state_dir), _ROLLUP):
+    if storage.committed(storage.tree(spark, state_dir,
+                                      only=_ROLLUP.marker), _ROLLUP):
         raise ValueError(f"feed rollup at {state_dir} already "
                          "initialized — point each view at a fresh dir")
-    t = storage.tree(spark, root)
+    t = _walk(spark, root)
     g_now = _latest_gen(t)
     base = _read(spark, t, None).withColumn("_sign", F.lit(1))
     # overwrite, not errorifexists: a crashed init leaves a markerless
@@ -780,7 +785,7 @@ def refresh_feed_rollup(spark: SparkSession, root: str, state_dir: str,
     previous one are pruned."""
     group_cols = list(group_cols)
     applied = _applied_through(spark, state_dir)
-    t = storage.tree(spark, root)
+    t = _walk(spark, root)
     g_now = _latest_gen(t)
     if g_now <= applied:
         return {"applied_from": None, "applied_through": applied,

@@ -201,7 +201,8 @@ def resolve_signature_root(spark: SparkSession, path: str) -> str:
     so a read fails with PATH_NOT_FOUND as for a missing store. Readers
     resolve once per call, so a compaction committed mid-session is
     picked up on the next call."""
-    return storage.live_dir(storage.tree(spark, path), storage.GEN)
+    return storage.live_dir(
+        storage.tree(spark, path, only=storage.GEN.marker), storage.GEN)
 
 
 def compact_signature_store(spark: SparkSession, path: str) -> dict:
@@ -221,10 +222,10 @@ def compact_signature_store(spark: SparkSession, path: str) -> dict:
     Single writer assumed (the stores' standing contract).
     Returns ``{"rows", "files_before", "files_after", "generation"}``.
     """
-    t = storage.tree(spark, path)
+    t = storage.tree(spark, path, only=storage.GEN.marker)
     root = storage.live_dir(t, storage.GEN)
     src = storage.read_parquet(spark, root)
-    files_before = len(storage.data_files(t, root))
+    files_before = len(storage.data_files(storage.tree(spark, root)))
     gen = storage.GEN.dir(path, storage.next_number(t, storage.GEN))
     n_src = src.count()
     nf = max(1, -(-int(n_src) // _ROWS_PER_FILE))
@@ -239,9 +240,8 @@ def compact_signature_store(spark: SparkSession, path: str) -> dict:
             f"(orphan left at {gen} for inspection)")
     storage.commit(spark, gen, storage.GEN.marker)
     storage.retire(spark, path, storage.GEN)
-    files_after = len(storage.data_files(storage.tree(spark, gen)))
     return {"rows": int(n_src), "files_before": files_before,
-            "files_after": files_after,
+            "files_after": len(storage.data_files(storage.tree(spark, gen))),
             "generation": gen.rsplit("/", 1)[-1]}
 
 
@@ -258,14 +258,13 @@ def _projection(spark: SparkSession, codec: _Codec, path: str,
     store. Raises PATH_NOT_FOUND for a missing store, and ValueError for
     a generation that is not a store of this kind.
 
-    Memoized on the kind, the generation dir and its file listing, both
-    read from one walk of ``path``. ``fresh`` always reads and memoizes
-    the read — the updater's rule, so a batch never runs off an earlier
-    batch's read; readers reuse the memoized read while the listing is
-    unchanged."""
-    t = storage.tree(spark, path)
-    root = storage.live_dir(t, storage.GEN)
-    key = ("sigstore", codec.name, root, id_col, storage.listing(t, root))
+    Memoized on the kind, the generation dir and its file listing.
+    ``fresh`` always reads and memoizes the read — the updater's rule,
+    so a batch never runs off an earlier batch's read; readers reuse the
+    memoized read while the listing is unchanged."""
+    root = resolve_signature_root(spark, path)
+    key = ("sigstore", codec.name, root, id_col,
+           storage.listing(storage.tree(spark, root)))
 
     def build():
         raw = storage.read_parquet(spark, root)

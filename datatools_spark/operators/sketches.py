@@ -519,7 +519,8 @@ def _update_sample_store(spark, sketch: DataFrame, path: str,
     the group columns, a group only one side holds keeps that side's
     sketch, a group both hold merges with ``merge_col``. The next
     generation carries the ``(k, salt)`` stamp."""
-    last = storage.latest(storage.tree(spark, path), layout)
+    last = storage.latest(storage.tree(spark, path, only=layout.marker),
+                          layout)
     merged, nxt = sketch, 0
     if last is not None:
         cur = storage.read_parquet(spark, layout.dir(path, last))
@@ -583,7 +584,8 @@ def _read_sample_store(spark, path: str, layout: storage.Layout,
     """The newest committed table of a sample store, its geometry
     checked against whichever of ``k``/``salt`` is given and the stamp
     columns dropped."""
-    last = storage.latest(storage.tree(spark, path), layout)
+    last = storage.latest(storage.tree(spark, path, only=layout.marker),
+                          layout)
     if last is None:
         raise ValueError(f"{label} store at {path} has no committed "
                          f"snapshots — {updater} first")
@@ -645,10 +647,11 @@ def _cms_batch_cells(batch: DataFrame, item_col: str, depth: int,
 
 
 def _cms_state_key(t: storage.Tree, base: str) -> tuple:
-    return ("cms_state", base, storage.listing(t, f"{base}/state"))
+    """The memo key of ``base``'s ledger, from a walk ``t`` of it."""
+    return ("cms_state", base, storage.listing(t))
 
 
-def _cms_state(spark, t: storage.Tree, base: str, **want) -> list:
+def _cms_state(spark, path: str, base: str, **want) -> list:
     """The rows of generation ``base``'s ``state/`` ledger — one per
     writer, carrying the geometry — after two refusals: a pre-watermark
     generation (no ``state/`` table at all, or a bare batch-id set) and
@@ -656,15 +659,16 @@ def _cms_state(spark, t: storage.Tree, base: str, **want) -> list:
     ``depth``/``width``/``salt`` in ``want``. ONE collect of the
     writers-sized table serves the geometry check, the watermark lookup
     and the carried-forward ledger rows; it is memoized on the
-    ledger's file listing, read from the walk ``t`` of the store, so
-    the warm reads of one generation run no job."""
-    path, state = t.root, f"{base}/state"
+    ledger's file listing, so the warm reads of one generation run no
+    job."""
+    state = f"{base}/state"
+    t = storage.tree(spark, state)
 
     def collect():
         # a walk, not a failed read, finds a missing ledger: reading it
         # would surface an opaque PATH_NOT_FOUND before the guidance
         ledger = storage.read_parquet(spark, state) \
-            if storage.data_files(t, state) else None
+            if storage.data_files(t) else None
         if ledger is None or "app_id" not in ledger.columns:
             raise ValueError(
                 f"CMS store at {path} uses the pre-watermark ledger "
@@ -741,11 +745,11 @@ def update_cms_store(spark, batch: DataFrame, path: str, item_col: str,
             f"update_cms_store: batch_id must be an integer monotonic "
             f"per app_id (got {batch_id!r}) — a counter store cannot be "
             "made replay-safe without one; use the set sketches")
-    t = storage.tree(spark, path)
-    last = storage.latest(t, _CMS)
+    last = storage.latest(storage.tree(spark, path, only=_CMS.marker),
+                          _CMS)
     if last is not None:
         base = _CMS.dir(path, last)
-        rows = _cms_state(spark, t, base, depth=depth, width=width,
+        rows = _cms_state(spark, path, base, depth=depth, width=width,
                           salt=salt)
         prev = [r["last_id"] for r in rows if r["app_id"] == app_id]
         if prev and bid <= prev[0]:
@@ -787,12 +791,12 @@ def read_cms_store(spark, path: str, depth: int | None = None,
     geometry matches what the reader's probe hashing assumes — a
     mismatched reader computes probe buckets in a different space and
     silently breaks the never-undercount guarantee (r8 ADVICE)."""
-    t = storage.tree(spark, path)
-    last = storage.latest(t, _CMS)
+    last = storage.latest(storage.tree(spark, path, only=_CMS.marker),
+                          _CMS)
     if last is None:
         raise ValueError(f"CMS store at {path} has no committed "
                          "snapshots — update_cms_store first")
     base = _CMS.dir(path, last)
     if depth is not None or width is not None or salt is not None:
-        _cms_state(spark, t, base, depth=depth, width=width, salt=salt)
+        _cms_state(spark, path, base, depth=depth, width=width, salt=salt)
     return storage.read_parquet(spark, f"{base}/sketch")

@@ -245,7 +245,7 @@ def apply_compaction(spark: SparkSession, plan: DataFrame,
     directory-glob rescan — and the ``coalesce(1)`` single task is
     bounded: multi-file groups are < target + one file's rows by the
     next-fit construction."""
-    t = storage.tree(spark, out_path, 1)
+    t = storage.tree(spark, out_path)
     if t.dirs or t.files:
         raise ValueError(
             f"apply_compaction: out_path {out_path} is not empty — group "

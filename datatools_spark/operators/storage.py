@@ -15,7 +15,8 @@ This is the only module that talks to the Hadoop FileSystem API. A
 store call walks its root once per phase (:func:`tree`, one recursive
 ``listStatus`` walk) and answers every layout question from that walk:
 the generations and which carry their marker (:func:`committed`,
-:func:`latest`, :func:`live_dir`, :func:`next_number`), the file
+:func:`latest`, :func:`live_dir`, :func:`next_number`; a walk that
+lists only the markers below the root is enough), the file
 :func:`listing` the session memo keys on, and a dir's
 :func:`data_files` — Spark's hidden-file rule: no name on the path
 below the dir starts with ``_`` or ``.``, so markers, ``_temporary``
@@ -85,14 +86,19 @@ def _fs(spark: SparkSession, path: str):
     return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
-def tree(spark: SparkSession, root: str, depth: int | None = None) -> Tree:
-    """Walk ``root`` with ``listStatus``, recursively down to ``depth``
-    levels below it (None: all; 2 reaches every generation dir and its
-    marker, which is all a store's generation questions need); a
-    missing root (or a dir deleted mid-walk) is empty. ``listStatus``
+def tree(spark: SparkSession, root: str, into: frozenset | None = None,
+         only: str | None = None) -> Tree:
+    """Walk ``root`` with ``listStatus``: every dir and file below it,
+    walking, of the root's own dirs, only into those named in ``into``
+    (None: all), and listing below the root only the entries named
+    ``only`` (None: all; filtered in the JVM). A store's generation
+    questions need the generation dirs and their markers alone, so a
+    walk with ``only`` the marker costs per generation, not per file.
+    A missing root (or a dir deleted mid-walk) is empty. ``listStatus``
     hides the local FS's ``.crc`` sidecars as ``listFiles`` does, and
     unlike it loads no owner or permission per file."""
     f, jp = _fs(spark, root)
+    named = only and spark._jvm.org.apache.hadoop.fs.GlobFilter(only)
     # reflect.Array.get sends one command an entry; JavaArray indexing two
     array = spark._jvm.java.lang.reflect.Array
     length, item = array.getLength, array.get
@@ -100,7 +106,8 @@ def tree(spark: SparkSession, root: str, depth: int | None = None) -> Tree:
     while todo:
         d, jdir, level = todo.pop()
         try:
-            entries = f.listStatus(jdir)
+            entries = f.listStatus(jdir, named) if named and level > 1 \
+                else f.listStatus(jdir)
         except Py4JJavaError as exc:
             if not is_instance_of(spark.sparkContext._gateway,
                                   exc.java_exception,
@@ -111,10 +118,11 @@ def tree(spark: SparkSession, root: str, depth: int | None = None) -> Tree:
             st = item(entries, i)
             jpath = st.getPath()
             path = jpath.toString()
-            name = f"{d}/{path.rsplit('/', 1)[-1]}"
+            base = path.rsplit("/", 1)[-1]
+            name = f"{d}/{base}"
             if st.isDirectory():
                 dirs.add(name)
-                if depth is None or level < depth:
+                if into is None or level > 1 or base in into:
                     todo.append((name, jpath, level + 1))
             else:
                 files[name] = (path, st.getLen(), st.getModificationTime())
@@ -201,7 +209,7 @@ def retire(spark: SparkSession, path: str, layout: Layout) -> None:
     committed ones — superseded generations and orphans of crashed
     attempts below them — from one walk of ``path``. A crash mid-retire
     leaves only garbage the next retire removes."""
-    t = tree(spark, path, 2)
+    t = tree(spark, path, only=layout.marker)
     keep = committed(t, layout)[-RETAIN:]
     if len(keep) == RETAIN:
         delete(spark, *[layout.dir(path, n) for n in numbers(t, layout)

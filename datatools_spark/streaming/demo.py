@@ -245,8 +245,8 @@ def streaming_image_ingest_dedup(media: DataFrame, store_dir: str,
     def _process(batch_df: DataFrame, batch_id: int):
         sess = batch_df.sparkSession
         # a listing check, no store scan
-        had_store = storage.latest(storage.tree(sess, store_dir),
-                                   storage.GEN) is not None
+        had_store = storage.latest(storage.tree(
+            sess, store_dir, only=storage.GEN.marker), storage.GEN) is not None
         # ONE store read per micro-batch: the updater's read serves its
         # anti-join and layout audit and, when the batch signs nothing
         # new (a retried batch finds everything stored), the pair
@@ -311,8 +311,8 @@ def streaming_image_ingest_components(media: DataFrame, store_dir: str,
             return   # an empty trigger must not pay the store scans
         # one store read per micro-batch — see
         # streaming_image_ingest_dedup
-        had_store = storage.latest(storage.tree(sess, store_dir),
-                                   storage.GEN) is not None
+        had_store = storage.latest(storage.tree(
+            sess, store_dir, only=storage.GEN.marker), storage.GEN) is not None
         n = update_image_signature_store(sess, batch_df, store_dir,
                                          grid=grid,
                                          payload_col=payload_col,

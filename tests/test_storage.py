@@ -376,13 +376,15 @@ def test_listing_equals_list_files(spark, tmp_path):
     assert storage.data_files(t, f"{root}/gen-000002") == []
     assert storage.numbers(t, storage.GEN) == [0, 1, 2]
     assert storage.committed(t, storage.GEN) == [0]
-    # two levels reach every generation dir and its marker, no deeper
-    shallow = storage.tree(spark, root, 2)
-    assert storage.committed(shallow, storage.GEN) == [0]
-    assert f"{root}/gen-000002/_temporary" in shallow.dirs
-    assert f"{root}/gen-000002/_temporary/0" not in shallow.dirs
-    assert f"{root}/data/p=0" in shallow.dirs
-    assert not [f for f in shallow.files if f.startswith(f"{root}/data/p=")]
+    # a walk for the markers lists the root and, below it, the markers
+    marks = storage.tree(spark, root, only=storage.GEN.marker)
+    assert storage.committed(marks, storage.GEN) == [0]
+    assert storage.numbers(marks, storage.GEN) == [0, 1, 2]
+    assert set(marks.files) == {f"{gen}/{storage.GEN.marker}"}
+    assert marks.dirs == {f"{root}/{d}" for d in (
+        "gen-000000", "gen-000001", "gen-000002", "data")}
+    # a walk into none of the root's dirs lists the root alone
+    assert storage.tree(spark, root, into=frozenset()).dirs == marks.dirs
 
 
 def _merge_store(spark, root):
@@ -415,12 +417,45 @@ def test_store_reads_send_no_exists_or_list_files(spark, tmp_path):
         assert method_calls(sent, "listStatus") > 0
 
 
+def test_generation_walk_cost_does_not_grow_with_files(spark, tmp_path):
+    """A signature store's live generation resolves from the generation
+    dirs and their markers: after a compaction, the retained previous
+    generation's files cost no command, and neither do the live one's."""
+    def resolve_commands(name, n_files):
+        path = str(tmp_path / name)
+        SS.update_signature_store(spark, _docs(spark, 0).repartition(
+            n_files), path)
+        SS.compact_signature_store(spark, path)
+        _, sent = count_commands(
+            spark, lambda: SS.resolve_signature_root(spark, path))
+        return len(sent)
+
+    resolve_commands("warm", 1)   # a first walk makes one-time lookups
+    assert resolve_commands("many", 6) == resolve_commands("one", 1)
+
+
+def test_merge_store_walk_skips_data_files(spark, tmp_path):
+    """The merge store's walk lists its data dirs but none of their
+    files: its commands are the same for a store of 1 and of 4 data
+    files per generation."""
+    def walk(name, n):
+        root = str(tmp_path / name)
+        MS.init_merge_store(spark, _upserts(spark, 10).repartition(n),
+                            root, ["id"])
+        MS.merge_into(spark, root, _upserts(spark, 0), ["id"])
+        t, sent = count_commands(spark, lambda: MS._walk(spark, root))
+        assert not [f for f in t.files if f.startswith(f"{root}/gen-")]
+        return len(sent)
+
+    assert walk("many", 4) == walk("one", 1)
+
+
 def test_merge_store_reads_walk_the_root_once(spark, tmp_path,
                                               monkeypatch):
     root = _merge_store(spark, str(tmp_path / "merge"))
     walks, walk = [], storage.tree
-    monkeypatch.setattr(storage, "tree",
-                        lambda s, r, *a: walks.append(r) or walk(s, r, *a))
+    monkeypatch.setattr(storage, "tree", lambda s, r, *a, **k: (
+        walks.append(r) or walk(s, r, *a, **k)))
     for read in (MS.read_merge_store, MS.merge_store_stats):
         for at in (None, 1):
             walks.clear()
